@@ -458,6 +458,21 @@ def q_bm25_topk_docs(spark, sf_dir):
     )
 
 
+# index roots whose removal at interpreter exit is already registered:
+# atexit is process-wide, and one session may run a query many times
+_RMTREE_AT_EXIT: set = set()
+
+
+def _rmtree_at_exit(root: str) -> None:
+    """Remove ``root`` when the interpreter exits; registered once per root."""
+    import atexit
+    import shutil
+
+    if root not in _RMTREE_AT_EXIT:
+        _RMTREE_AT_EXIT.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+
+
 def q_update_delta_topk(spark, sf_dir):
     """r7 LSM delta-segment update path driven END-TO-END through the
     PHYSICAL engine (not a logical-plan restatement): build a compressed
@@ -497,9 +512,7 @@ def q_update_delta_topk(spark, sf_dir):
     # the returned DataFrame reads lazily from it, so cleanup is deferred
     # to interpreter exit instead of leaking the index in /tmp
     shutil.rmtree(root, ignore_errors=True)
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    _rmtree_at_exit(root)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     url = F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))

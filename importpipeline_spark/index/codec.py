@@ -5,9 +5,10 @@ Implements the storage layer the reference delegated to ElasticSearch/Lucene
 per (term, shard) are delta-encoded and varint-compressed in fixed-size
 blocks, with per-block max TF and max BM25 score for block-max WAND pruning.
 
-All encode/decode paths are numpy-vectorized (≤10 vector passes per batch,
-one per possible varint byte) — no per-value Python loops — because they run
-inside Arrow UDFs on the hot path.
+All encode/decode paths are numpy-vectorized — no per-value Python loops —
+because they run inside Arrow UDFs and on the serving hot path. Encoding
+makes one vector pass per possible varint byte (≤10); decoding is one pass
+over the stream.
 
 doc keys are uint64 ``u = bits(doc_id) XOR 1<<63`` (order-preserving for
 signed doc_id), so deltas are non-negative and shard-local.
@@ -63,22 +64,41 @@ def varint_encode(values: np.ndarray) -> bytes:
 
 
 def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Decode a LEB128 varint stream → uint64 array (vectorized)."""
+    """Decode a LEB128 varint stream → uint64 array (vectorized, one pass:
+    each byte's 7 payload bits are shifted by 7 × its position inside its
+    value, then OR-reduced per value — OR is exact, unlike a float sum).
+
+    Hard errors (not asserts: stripped under python -O) — a truncated or
+    corrupt postings buffer must fail loudly, never silently mis-score: a
+    stream that ends inside a value, a value longer than the 10 bytes a
+    uint64 needs, or a value count other than ``count``."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if len(b) == 0:
-        return np.empty(0, dtype=np.uint64)
-    ends = np.nonzero((b & 0x80) == 0)[0]
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    lengths = ends - starts + 1
-    n = len(ends)
-    if count is not None and n != count:
-        # hard error (not assert: stripped under python -O) — a truncated or
-        # corrupt postings buffer must fail loudly, never silently mis-score
-        raise ValueError(f"varint stream has {n} values, expected {count}")
-    vals = np.zeros(n, dtype=np.uint64)
-    for k in range(int(lengths.max())):
-        mask = lengths > k
-        vals[mask] |= (b[starts[mask] + k] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * k)
+    n_bytes = len(b)
+    if n_bytes == 0:
+        vals = np.empty(0, dtype=np.uint64)
+    else:
+        ends = np.flatnonzero(b < 0x80)
+        if len(ends) == 0 or ends[-1] != n_bytes - 1:
+            raise ValueError("varint stream ends inside a value")
+        if len(ends) == n_bytes:  # every value is one byte (e.g. most tfs)
+            vals = b.astype(np.uint64)
+        else:
+            starts = np.empty(len(ends), dtype=np.intp)
+            starts[0] = 0
+            starts[1:] = ends[:-1] + 1
+            lengths = ends - starts + 1
+            if lengths.max() > 10:
+                raise ValueError("varint value longer than 10 bytes")
+            shift = np.arange(n_bytes, dtype=np.uint64)
+            shift -= np.repeat(starts, lengths).astype(np.uint64)
+            shift *= np.uint64(7)
+            vals = np.bitwise_or.reduceat(
+                (b & 0x7F).astype(np.uint64) << shift, starts
+            )
+    if count is not None and len(vals) != count:
+        raise ValueError(
+            f"varint stream has {len(vals)} values, expected {count}"
+        )
     return vals
 
 

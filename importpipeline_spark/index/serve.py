@@ -152,11 +152,16 @@ class LocalSearcher:
 
         terms = _read_parquet_dir(self.pidx.terms_path, columns=["term", "df"])
         self._df: Dict[str, int] = dict(zip(terms["term"], terms["df"].astype(int)))
-        # cross-query raw block decode cache (doc_u, tf, dl per block row)
+        # cross-query raw block decode cache: (doc ordinal, tf, dl) per block
+        # row; ordinals index self._dl_u, fixed for this snapshot
         self._raw_cache: Dict[int, tuple] = {}
-        # cross-query term-run cache: concatenated (doc_u, contrib) per term
-        # block run — contributions are constants of this snapshot (r8)
+        # cross-query term-run cache: concatenated (doc ordinal, contrib) per
+        # term block run — contributions are constants of this snapshot (r8)
         self._term_cache: Dict[tuple, tuple] = {}
+        # dense per-doc score buffer (one slot per doc ordinal) reused by
+        # every query; all zero between queries, so one searcher serves one
+        # query at a time
+        self._acc = np.zeros(len(self._dl_u))
 
     def idf(self, term: str) -> float:
         df = self._df.get(term, 0)
@@ -181,13 +186,14 @@ class LocalSearcher:
             self.last_stats = {"blocks_total": 0, "blocks_decoded": 0,
                                "postings_total": 0, "postings_decoded": 0}
             return []
-        docs, scores = _sweep(si, np.arange(len(si.ns)), k)
-        decoded = list(si._decoded)
+        sel = np.arange(len(si.ns))
+        docs, scores = _sweep(si, sel, k)
+        decoded = sel if si.scored_all else list(si._decoded)
         self.last_stats = {
             "blocks_total": int(len(si.ns)),
             "blocks_decoded": len(decoded),
             "postings_total": int(si.ns.sum()),
-            "postings_decoded": int(si.ns[decoded].sum()) if decoded else 0,
+            "postings_decoded": int(si.ns[decoded].sum()),
         }
         return list(zip(from_u64(docs).tolist(), scores.tolist()))
 
@@ -227,5 +233,6 @@ class LocalSearcher:
             gens=self._gens[rows] if self._gens is not None else None,
             tomb_u=self._tomb_u,
             tomb_g=self._tomb_g,
+            acc=self._acc,
         )
         return si

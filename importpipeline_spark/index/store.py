@@ -241,25 +241,6 @@ def _postings_from_sharded(sharded: DataFrame) -> DataFrame:
     )
 
 
-def build_postings_df(tf: DataFrame, doclen: DataFrame, n_shards: int) -> DataFrame:
-    """tf ⋈(cogroup by shard) doclen → encoded blocks.
-
-    Exactly one wide exchange: both sides repartition by shard (doc-range).
-    No join row-expansion, no per-term groups, no dictionary needed at build
-    time (block bounds are stats-independent: max_tf + min_dl).
-    """
-    tf_s = tf.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-    dl_s = (
-        doclen.select(F.col("doc_id").alias("dl_doc_id"), "doc_len")
-        .withColumn("shard", shard_of(F.col("dl_doc_id"), n_shards))
-    )
-    return (
-        tf_s.groupBy("shard")
-        .cogroup(dl_s.groupBy("shard"))
-        .applyInPandas(lambda l, r: _encode_shard(l, r), POSTINGS_SCHEMA)
-    )
-
-
 def _session_uuid(spark: SparkSession) -> str:
     """Stable per-SparkSession identifier (distinguishes newSession()
     siblings that share one applicationId). Falls back to the shared

@@ -22,9 +22,17 @@ vectorized accumulation per chunk — an interval-at-a-time loop measured 2-6×
 slower than exhaustive scoring on flat-bound corpora); the running top-k
 threshold θ is re-derived between chunks and everything bounding below it is
 skipped, including whole undecoded blocks (bounds carry a 1+1e-12 margin
-against float summation-order effects). Scores accumulate per doc in
-ascending term order, strictly sequentially, in float64 — bit-identical to
-the exhaustive oracle. Ties break (score DESC, doc_id ASC).
+against float summation-order effects).
+
+Accumulation is by dense doc ordinal: decoding a block maps each posting's
+doc to its index in the shard's sorted doclen keys (the lookup that fetches
+its doc length anyway), and per-doc scores are summed in a float64 buffer
+with one slot per doc — direct addressing, with no sort, hash or np.unique.
+Parts are added one at a time in ascending term order, so each doc's sum is
+strictly sequential in that order — bit-identical to the exhaustive oracle —
+and only the touched slots are read back and re-zeroed. Top-k is a
+partition at the k-th score plus a lexsort of the entries at or above it;
+ordinal order is doc_id order, so ties break (score DESC, doc_id ASC).
 
 The batch path scores a whole query *set* in one index pass: per shard, all
 queries share the block arrays and the decode cache, so a hot term decoded
@@ -34,6 +42,7 @@ for one query is free for the rest.
 from __future__ import annotations
 
 import math
+from functools import cached_property
 from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
@@ -99,7 +108,7 @@ def _lucene_idf(df: int, n: int) -> float:
 
 class _ShardIndex:
     """Decoded view of one shard's candidate postings + doclen lookup, with a
-    block decode cache shared across queries."""
+    block decode cache and a dense score buffer shared across queries."""
 
     def __init__(self, post_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                  tcode_map: Dict[str, int], idf_arr: np.ndarray,
@@ -133,7 +142,7 @@ class _ShardIndex:
     def _init(self, *, min_u, max_u, ns, tcodes, docs_enc, tfs_enc,
               max_tf, min_dl, dl_u, dl_v, idf_arr, avgdl, k1, b,
               block_keys=None, raw_cache=None, term_cache=None,
-              gens=None, tomb_u=None, tomb_g=None):
+              gens=None, tomb_u=None, tomb_g=None, acc=None):
         # delta-segment state: per-block generation + the shadowed-doc
         # lookup (docs owned by a generation > 0; see resolve_doclen).
         # None on a pure-base index — decode() takes the unmasked fast path.
@@ -141,16 +150,19 @@ class _ShardIndex:
         self.tomb_u = tomb_u if tomb_u is not None and len(tomb_u) else None
         self.tomb_g = tomb_g
         # optional cross-query raw-decode cache (serving path): maps an
-        # external stable block key → (doc_u, tf, dl); contributions are
-        # recomputed per query (idf/stats may differ) but varint decode +
-        # doclen lookup — the expensive part — happens once per block ever
+        # external stable block key → (doc ordinal, tf, dl); contributions
+        # are recomputed per query (idf/stats may differ) but varint decode
+        # + doclen lookup — the expensive part — happens once per block ever.
+        # Ordinals index dl_u, so a cache is only valid for one dl_u (one
+        # searcher snapshot).
         self._block_keys = block_keys
         self._raw_cache = raw_cache
         # optional cross-query TERM-RUN cache (serving path): concatenated
-        # (doc_u, contrib) for a whole term's block run. Contributions are
-        # constants of the index snapshot (idf/stats fixed per searcher), so
-        # caching them is exactly recomputation; ~500 per-block Python calls
-        # per head query collapse to one dict hit per term (r8).
+        # (doc ordinal, contrib) for a whole term's block run. Contributions
+        # are constants of the index snapshot (idf/stats fixed per
+        # searcher), so caching them is exactly recomputation; ~500
+        # per-block Python calls per head query collapse to one dict hit
+        # per term (r8).
         self._term_cache = term_cache
         self.dl_u = dl_u
         self.dl_v = dl_v
@@ -160,20 +172,36 @@ class _ShardIndex:
         self.tcodes = tcodes
         self.docs_enc = docs_enc
         self.tfs_enc = tfs_enc
-        # stats-independent per-block bound: score(max_tf, min_dl)
-        self.ub = (
-            idf_arr[tcodes]
-            * max_tf
-            * (k1 + 1.0)
-            / (max_tf + k1 * (1.0 - b + b * min_dl / avgdl))
-        ) * _UB_MARGIN
+        self.max_tf = max_tf
+        self.min_dl = min_dl
         self.idf_arr = idf_arr
         self.avgdl = avgdl
         self.k1 = k1
         self.b = b
+        # dense per-doc score buffer, one float64 slot per doc ordinal (index
+        # into dl_u), all zero between accumulations (see _accumulate); the
+        # serving path passes one buffer owned by its searcher
+        self.acc = np.zeros(len(dl_u)) if acc is None else acc
         self._decoded: Dict[int, tuple] = {}
+        # set by _score_all: every selected block was decoded, so the
+        # pruning stats count them all without per-block bookkeeping
+        self.scored_all = False
+
+    @cached_property
+    def ub(self) -> np.ndarray:
+        """Stats-independent per-block bound score(max_tf, min_dl); only
+        the pruning sweep reads it, so it is computed on first use."""
+        k1, b = self.k1, self.b
+        return (
+            self.idf_arr[self.tcodes]
+            * self.max_tf
+            * (k1 + 1.0)
+            / (self.max_tf + k1 * (1.0 - b + b * self.min_dl / self.avgdl))
+        ) * _UB_MARGIN
 
     def decode(self, bi: int) -> Tuple[np.ndarray, np.ndarray]:
+        """Block ``bi`` → (doc ordinal, contrib): each live posting's index
+        into dl_u (ascending, like the doc ids) and its BM25 contribution."""
         got = self._decoded.get(bi)
         if got is not None:
             return got
@@ -199,22 +227,23 @@ class _ShardIndex:
                 if shadowed.any():
                     keep = ~shadowed
                     du, tf = du[keep], tf[keep]
-            dl = self.dl_v[np.searchsorted(self.dl_u, du)]
+            ords = np.searchsorted(self.dl_u, du)
+            dl = self.dl_v[ords]
             if self._raw_cache is not None:
-                self._raw_cache[key] = (du, tf, dl)
+                self._raw_cache[key] = (ords, tf, dl)
         else:
-            du, tf, dl = raw
+            ords, tf, dl = raw
         idf = self.idf_arr[self.tcodes[bi]]
         contrib = (
             idf * tf * (self.k1 + 1.0)
             / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
         )
-        self._decoded[bi] = (du, contrib)
+        self._decoded[bi] = (ords, contrib)
         return self._decoded[bi]
 
     def decode_run(self, rows: np.ndarray):
-        """Concatenated (doc_u, contrib) for a run of same-term blocks in
-        ascending block order — identical to decoding each block and
+        """Concatenated (doc ordinal, contrib) for a run of same-term blocks
+        in ascending block order — identical to decoding each block and
         concatenating (which is what it does on a cache miss). Cached
         cross-query when a term_cache is attached (the serving path)."""
         key = None
@@ -224,58 +253,73 @@ class _ShardIndex:
                    int(self._block_keys[rows[-1]]), len(rows))
             got = self._term_cache.get(key)
             if got is not None:
-                # the per-query decoded map must still see these blocks for
-                # the pruning-stats accounting (value None: decode() treats
-                # a None entry as absent, so a later direct decode of the
-                # same block still computes real arrays)
-                for bi in rows:
-                    self._decoded.setdefault(int(bi), None)
                 return got
-        ds, cs = [], []
+        o_parts, c_parts = [], []
         for bi in rows:
-            du, contrib = self.decode(int(bi))
-            ds.append(du)
-            cs.append(contrib)
+            o, contrib = self.decode(int(bi))
+            o_parts.append(o)
+            c_parts.append(contrib)
         out = (
-            np.concatenate(ds) if ds else np.empty(0, dtype=np.uint64),
-            np.concatenate(cs) if cs else np.empty(0, dtype=np.float64),
+            np.concatenate(o_parts) if o_parts else np.empty(0, dtype=np.intp),
+            np.concatenate(c_parts) if c_parts else np.empty(0, dtype=np.float64),
         )
         if key is not None:
             self._term_cache[key] = out
         return out
 
 
-def _accumulate(d_parts, c_parts):
-    """Shared bit-identical accumulation: parts (already in ascending term
-    order per doc) are stable-sorted by doc and summed strictly sequentially
-    per doc segment. Returns (seg_docs, seg_scores)."""
-    if len(d_parts) == 1:
+def _accumulate(o_parts, c_parts, acc):
+    """Shared bit-identical accumulation → (doc ordinals, scores), one entry
+    per doc, unordered.
+
+    Each part is a run of distinct doc ordinals; the parts come in ascending
+    term order per doc. Part by part, contributions are added into the dense
+    buffer ``acc`` (all zero on entry), so every doc's sum is strictly
+    sequential in ascending term order — np.add.reduceat would be pairwise
+    and drift a ulp from the oracle. The touched slots are then read back
+    and re-zeroed: a doc read in an earlier part reads 0 in a later one, so
+    each doc is reported once (every contribution is > 0, as idf > 0). No
+    sort or np.unique is needed."""
+    if len(o_parts) == 1:
         # single sorted run of unique docs (one term): per-doc sums are the
-        # contributions themselves — skip the argsort + segment loop (r8)
-        return d_parts[0], c_parts[0]
-    docs = np.concatenate(d_parts)
-    contribs = np.concatenate(c_parts)
-    if docs.size == 0:  # every candidate masked by delta-segment shadowing
-        return docs, contribs
-    srt = np.argsort(docs, kind="stable")
-    docs = docs[srt]
-    contribs = contribs[srt]
-    starts = np.nonzero(np.concatenate(([True], docs[1:] != docs[:-1])))[0]
-    seg_docs = docs[starts]
-    lengths = np.diff(np.concatenate((starts, [len(docs)])))
-    seg_scores = np.zeros(len(starts), dtype=np.float64)
-    for p in range(int(lengths.max())):
-        m = lengths > p
-        seg_scores[m] += contribs[starts[m] + p]
-    return seg_docs, seg_scores
+        # contributions themselves — skip the buffer (r8)
+        return o_parts[0], c_parts[0]
+    try:
+        for o, c in zip(o_parts, c_parts):
+            acc[o] += c
+        ords, scores = [], []
+        for o in o_parts:
+            s = acc[o]
+            hit = s != 0.0
+            ords.append(o[hit])
+            scores.append(s[hit])
+            acc[o] = 0.0
+    except BaseException:
+        # never leave a dirty buffer behind for the next query
+        for o in o_parts:
+            acc[o] = 0.0
+        raise
+    return np.concatenate(ords), np.concatenate(scores)
+
+
+def _topk(ords: np.ndarray, scores: np.ndarray, k: int):
+    """≤ k entries ranked (score DESC, doc ordinal ASC) — ordinal order is
+    doc_id order. A partition finds the k-th score; only the entries scoring
+    at least that (the top k plus any ties at the cut) are lexsorted."""
+    n = len(scores)
+    if n > k:
+        kth = np.partition(scores, n - k)[n - k]
+        keep = scores >= kth
+        ords, scores = ords[keep], scores[keep]
+    top = np.lexsort((ords, -scores))[:k]
+    return ords[top], scores[top]
 
 
 def _score_all(si: _ShardIndex, sel: np.ndarray, k: int):
     """Fully-vectorized exhaustive scoring of the selected blocks — faster
     than interval pruning when the candidate set is modest or bounds are
-    flat (uniform head-term disjunctions). Bit-identical accumulation: parts
-    are gathered in ascending term order, stable-sorted by doc, summed
-    sequentially per doc."""
+    flat (uniform head-term disjunctions). Bit-identical accumulation: one
+    part per term, added in ascending term order (_accumulate)."""
     order = np.argsort(si.tcodes[sel], kind="stable")
     sel_o = sel[order]
     tc_o = si.tcodes[sel_o]
@@ -286,14 +330,14 @@ def _score_all(si: _ShardIndex, sel: np.ndarray, k: int):
     # calls per head query into one dict hit per term
     runs = np.nonzero(np.concatenate(([True], tc_o[1:] != tc_o[:-1])))[0]
     ends = np.concatenate((runs[1:], [len(sel_o)]))
-    d_parts, c_parts = [], []
+    o_parts, c_parts = [], []
     for a, b in zip(runs, ends):
-        du, contrib = si.decode_run(sel_o[a:b])
-        d_parts.append(du)
+        o, contrib = si.decode_run(sel_o[a:b])
+        o_parts.append(o)
         c_parts.append(contrib)
-    seg_docs, seg_scores = _accumulate(d_parts, c_parts)
-    top = np.lexsort((seg_docs, -seg_scores))[:k]
-    return seg_docs[top], seg_scores[top]
+    si.scored_all = True
+    ords, scores = _topk(*_accumulate(o_parts, c_parts, si.acc), k)
+    return si.dl_u[ords], scores
 
 
 # below this many candidate postings, exhaustive vectorized scoring beats
@@ -346,7 +390,7 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
     # gap intervals (no covering block → bound 0) sort to the tail; only
     # positive-bound intervals are ever candidates
     n_pos_iv = int(np.count_nonzero(sorted_bounds > 0.0))
-    top_docs = np.empty(0, dtype=np.uint64)
+    top_ords = np.empty(0, dtype=np.intp)
     top_scores = np.empty(0, dtype=np.float64)
     theta = -np.inf
     block_order = np.argsort(tc, kind="stable")  # ascending term order
@@ -372,11 +416,17 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
         brk = np.nonzero(np.diff(batch_iv) > 1)[0]
         run_lo = points[batch_iv[np.concatenate(([0], brk + 1))]]
         run_hi = points[batch_iv[np.concatenate((brk, [len(batch_iv) - 1]))] + 1]
-        d_parts, c_parts = [], []
+        # the same runs as doc-ordinal ranges: every decoded doc is in dl_u,
+        # so doc ≥ lo ⟺ its ordinal ≥ searchsorted(dl_u, lo) (same for hi)
+        ord_lo = np.searchsorted(si.dl_u, run_lo, side="left")
+        ord_hi = np.searchsorted(si.dl_u, run_hi, side="left")
         # blocks visited in ascending term order; each doc lives in exactly
         # one interval (hence one run, in one chunk), so its contributions
         # accumulate term-ascending — the canonical order, bit-identical to
-        # an interval-at-a-time sweep and to _score_all
+        # an interval-at-a-time sweep and to _score_all. A term's slices
+        # are disjoint doc sets, so they join into one part per term.
+        o_parts, c_parts = [], []
+        part_t = None
         for x in block_order:
             # metadata reject: block entirely outside this chunk's runs —
             # this is where pruning skips DECODES, not just score work
@@ -384,29 +434,31 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
             r1 = int(np.searchsorted(run_lo, max_u[x], side="right"))
             if r0 >= r1:
                 continue
-            du, contrib = si.decode(int(sel[x]))
+            o, contrib = si.decode(int(sel[x]))
+            if tc[x] != part_t:
+                part_t = tc[x]
+                o_parts.append([])
+                c_parts.append([])
             for ri in range(r0, r1):
-                s0 = np.searchsorted(du, run_lo[ri], side="left")
-                s1 = np.searchsorted(du, run_hi[ri], side="left")
+                s0 = np.searchsorted(o, ord_lo[ri], side="left")
+                s1 = np.searchsorted(o, ord_hi[ri], side="left")
                 if s0 < s1:
-                    d_parts.append(du[s0:s1])
-                    c_parts.append(contrib[s0:s1])
-        if d_parts:
-            # strictly sequential per-doc summation in term order —
-            # np.add.reduceat would use pairwise reduction and drift a ulp
-            # from the oracle's accumulation order
-            seg_docs, seg_scores = _accumulate(d_parts, c_parts)
+                    o_parts[-1].append(o[s0:s1])
+                    c_parts[-1].append(contrib[s0:s1])
+        o_parts = [np.concatenate(p) for p in o_parts if p]
+        if o_parts:
+            c_parts = [np.concatenate(p) for p in c_parts if p]
+            ords, scores = _accumulate(o_parts, c_parts, si.acc)
             # merge into running top-k (tie-break: score DESC, doc ASC)
-            all_docs = np.concatenate([top_docs, seg_docs])
-            all_scores = np.concatenate([top_scores, seg_scores])
-            ord2 = np.lexsort((all_docs, -all_scores))[:k]
-            top_docs = all_docs[ord2]
-            top_scores = all_scores[ord2]
+            top_ords, top_scores = _topk(
+                np.concatenate([top_ords, ords]),
+                np.concatenate([top_scores, scores]), k,
+            )
             if len(top_scores) == k:
                 theta = top_scores[-1]
         pos += take
         chunk *= _CHUNK_GROWTH
-    return top_docs, top_scores
+    return si.dl_u[top_ords], top_scores
 
 
 def make_wand_kernel(

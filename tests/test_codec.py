@@ -36,7 +36,70 @@ def test_varint_roundtrip_mixed():
 @given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=300))
 def test_varint_roundtrip_property(xs):
     vals = np.array(xs, dtype=np.uint64)
-    assert np.array_equal(varint_decode(varint_encode(vals)), vals)
+    enc = varint_encode(vals)
+    assert np.array_equal(varint_decode(enc), vals)
+    assert _leb128_ref(enc) == xs
+
+
+def _leb128_ref(buf: bytes) -> list:
+    """Scalar LEB128 reference decoder (byte at a time)."""
+    out, val, shift = [], 0, 0
+    for byte in buf:
+        val |= (byte & 0x7F) << shift
+        shift += 7
+        if byte < 0x80:
+            out.append(val)
+            val, shift = 0, 0
+    assert shift == 0, "stream ends inside a value"
+    return out
+
+
+def test_varint_full_64bit_values():
+    # values with bit 63 set need the full 10 bytes; the top byte carries a
+    # single payload bit at shift 63
+    rng = np.random.default_rng(11)
+    vals = np.concatenate((
+        np.array([2**63, 2**64 - 1, 2**63 + 1, 2**64 - 2], dtype=np.uint64),
+        rng.integers(0, 2**63, 60, dtype=np.uint64) | np.uint64(2**63),
+        rng.integers(0, 2**14, 60, dtype=np.uint64),
+    ))
+    enc = varint_encode(vals)
+    assert len(varint_encode(vals[:1])) == 10
+    got = varint_decode(enc, len(vals))
+    assert got.dtype == np.uint64
+    assert np.array_equal(got, vals)
+    assert got.tolist() == _leb128_ref(enc)
+
+
+def test_varint_all_one_byte_stream():
+    vals = np.arange(128, dtype=np.uint64)
+    enc = varint_encode(vals)
+    assert len(enc) == len(vals)
+    got = varint_decode(enc, len(vals))
+    assert got.dtype == np.uint64
+    assert np.array_equal(got, vals)
+
+
+@pytest.mark.parametrize("buf,count", [
+    (b"\x80", 1),                     # lone continuation byte
+    (b"\x05\xac", 2),                 # complete value, then a cut-off one
+    (b"\x01\x02" + b"\xff" * 9, 3),   # cut inside a 10-byte value
+])
+def test_varint_truncated_stream_raises(buf, count):
+    # a truncated block must fail loudly: ValueError, never IndexError, and
+    # never a silently dropped tail — with or without the expected count
+    with pytest.raises(ValueError):
+        varint_decode(buf)
+    with pytest.raises(ValueError):
+        varint_decode(buf, count)
+
+
+def test_varint_count_mismatch_raises():
+    enc = varint_encode(np.array([1, 300, 2**40], dtype=np.uint64))
+    with pytest.raises(ValueError):
+        varint_decode(enc, 2)
+    with pytest.raises(ValueError):
+        varint_decode(b"", 1)
 
 
 def test_u64_mapping_order_preserving():

@@ -81,3 +81,16 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["rank", "doc_id", "score"]
+
+
+def test_rmtree_at_exit_registers_once_per_root(monkeypatch):
+    """q_update_delta_topk rebuilds the same root on every call; its exit
+    cleanup must be registered once per root, not once per call."""
+    import atexit
+
+    calls = []
+    monkeypatch.setattr(atexit, "register", lambda *a, **kw: calls.append(a))
+    monkeypatch.setattr(entry_mod, "_RMTREE_AT_EXIT", set())
+    for root in ("/nonexistent/a", "/nonexistent/a", "/nonexistent/b"):
+        entry_mod._rmtree_at_exit(root)
+    assert [a[1] for a in calls] == ["/nonexistent/a", "/nonexistent/b"]

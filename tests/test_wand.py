@@ -152,3 +152,69 @@ def test_repeat_wand_query_identical_through_dict_memo(spark, physical):
         got = [(r.doc_id, r.score)
                for r in bm25_topk_wand(spark, pidx, q, k=10).collect()]
         assert got == oracle.topk(analyze_query(q), k=10), q
+
+
+def _tie_pages(spark):
+    """Pages whose texts repeat exactly, so whole groups of docs score the
+    same to the last bit: 260 × "alpha beta gamma", 150 × "alpha gamma
+    delta", 90 × "beta zeta", plus 100 distinct filler pages. Doc ids come
+    from url hashes, so each tie group is scattered over shards and blocks."""
+    from datetime import datetime
+
+    from importpipeline_spark.index.pagesgen import PAGES_SCHEMA
+
+    texts = (["alpha beta gamma"] * 260 + ["alpha gamma delta"] * 150
+             + ["beta zeta"] * 90
+             + [f"filler{i} gamma word{i % 7} more{i % 3}" for i in range(100)])
+    ts = datetime(2020, 1, 1)
+    rows = [(f"http://tie{i % 5}.example/p{i}", ts, t.encode(), t, "en")
+            for i, t in enumerate(texts)]
+    return spark.createDataFrame(rows, PAGES_SCHEMA)
+
+
+def test_topk_ties_at_k_boundary(spark, tmp_path_factory, monkeypatch):
+    """Top-k selection partitions at the k-th score and orders only the
+    entries at or above it: every k that cuts through a group of docs tied
+    at exactly the k-th score must still return the oracle's (score DESC,
+    doc_id ASC) prefix — LocalSearcher on both branches and bm25_topk_wand."""
+    from importpipeline_spark.index import wand as wand_mod
+    from importpipeline_spark.index.serve import LocalSearcher
+
+    root = str(tmp_path_factory.mktemp("ties"))
+    pages = _tie_pages(spark)
+    pidx = write_index(spark, pages, root, n_shards=4)
+    idx = build_logical_index(pages, cache=False)
+    oracle = OracleIndex([
+        (r.doc_id, r.tokens or [])
+        for r in idx.docs.select("doc_id", "tokens").collect()
+    ])
+
+    cases = []
+    for q in ("alpha beta", "gamma", "beta zeta delta"):
+        ranked = oracle.topk(analyze_query(q), k=oracle.n)
+        scores = [s for _, s in ranked]
+        # cut each tie group of ≥ 2 docs after its first member and
+        # in its middle
+        ks = []
+        for i in range(len(scores)):
+            start = i == 0 or scores[i - 1] != scores[i]
+            size = sum(1 for s in scores[i:] if s == scores[i]) if start else 0
+            if size >= 2:
+                ks += [i + 1, i + size // 2]
+        assert len(ks) >= 4, (q, ks)
+        for k in ks:
+            assert scores[k - 1] == scores[k], (q, k)  # the cut splits a tie
+            cases.append((q, k, ranked[:k]))
+
+    searcher = LocalSearcher(root)
+    for q, k, want in cases:
+        assert searcher.search(q, k) == want, (q, k)
+    for q, k, want in cases[::3]:
+        got = [(r.doc_id, r.score)
+               for r in bm25_topk_wand(spark, pidx, q, k=k).collect()]
+        assert got == want, (q, k)
+
+    monkeypatch.setattr(wand_mod, "_EXHAUSTIVE_CUTOFF", 0)
+    sweeper = LocalSearcher(root)
+    for q, k, want in cases:
+        assert sweeper.search(q, k) == want, (q, k)
