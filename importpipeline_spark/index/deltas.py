@@ -49,7 +49,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import build_tf, shard_of
-from .store import POSTINGS_SCHEMA, _encode_shard
+from .store import encode_postings
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
 
@@ -212,25 +212,16 @@ def stage_update_delta(
         "shard", shard_of(F.col("doc_id"), n_shards)
     ).persist()
     tf.count()
-    # BOTH dl-side key columns renamed: tf and dl share the cached
-    # changed-docs parent, whose lineage contains the classification join —
-    # Spark's ambiguous-self-join check rejects the cogroup otherwise (same
-    # constraint as the full build's single-exchange cogroup).
-    dl = changed_docs_tok.select(
-        F.col("doc_id").alias("dl_doc_id"), "doc_len"
-    ).withColumn("dl_shard", shard_of(F.col("dl_doc_id"), n_shards))
+    # tf and dl share the cached changed-docs parent, whose lineage contains
+    # the classification join — encode_postings renames the dl side's keys
+    dl = changed_docs_tok.select("doc_id", "doc_len").withColumn(
+        "shard", shard_of(F.col("doc_id"), n_shards)
+    )
 
     def _w_postings():
-        out = (
-            tf.groupBy("shard")
-            .cogroup(dl.groupBy("dl_shard"))
-            .applyInPandas(lambda l, r: _encode_shard(l, r), POSTINGS_SCHEMA)
-        )
-        # no projection between the cogroup and its sink (Spark 4.1 prunes
-        # the cogroup INPUT columns otherwise); shard partitions out at write
-        out.write.mode("overwrite").partitionBy("shard").parquet(
-            staging_path(root, "delta_postings")
-        )
+        # no term-df sidecars here: a generation's delta_termdf is the
+        # signed adjustment written by _w_termdf
+        encode_postings(tf, dl, staging_path(root, "delta_postings"))
 
     def _w_doclen():
         (

@@ -9,17 +9,19 @@ incremental ExistState skip logic
 gate Datasources/StreamDatasourceBase.cs:110-134) as snapshot anti-joins.
 
 Build shape:
-  phase A (once per run): docs + doclen + terms + stats written to the index
+  phase A (once per run): docs + doclen + stats written to the index
   root — the global-stats pass.
   phase B (resumable loop): segments (= doc-range shards) are encoded in
   BATCHES of ``batch_size`` per Spark job — one cogroup keyed by shard, so a
   batch of K segments runs as K parallel tasks (a cluster stays busy), while
-  each segment still commits its own lineage row (resume granularity stays
-  per-segment). A restarted run reads the lineage, skips finished segments,
-  and rebuilds only the missing ones — final index bit-identical to an
-  uninterrupted run, including kills mid-batch (files land before lineage;
-  an un-lineaged segment is deterministically re-encoded on resume).
-  Verified in tests.
+  each segment still commits its postings, term-df sidecar and lineage row
+  (resume granularity stays per-segment). A restarted run reads the
+  lineage, skips finished segments, and rebuilds only the missing ones —
+  final index bit-identical to an uninterrupted run, including kills
+  mid-batch (files land before lineage; an un-lineaged segment is
+  deterministically re-encoded on resume). Verified in tests.
+  Finally the dictionary derives from the segments' sidecars — on every
+  run, including a resume with nothing left to encode.
 
 Errors are quarantined per record (mirrors ESEndpoint.SaveError,
 Endpoints/ESEndpoint.cs:457-471) into <root>/errors/.
@@ -35,27 +37,26 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..text.tokenizer import ANALYZER_VERSION
 from . import deltas as _deltas
 from .build import (
-    K1,
-    B,
     build_docs_and_tf_safe,
     build_docs_safe,
     build_tf,
-    corpus_stats,
     doc_id_expr,
     shard_of,
 )
-from .codec import BLOCK_SIZE
 from .store import (
-    POSTINGS_SCHEMA,
     PhysicalIndex,
-    _encode_shard,
-    termdf_from_postings,
-    termdf_from_tf,
-    write_termdf_sidecars,
-    write_terms_dictionary_from_termdf,
+    _derive_dictionary_from_sidecars,
+    encode_postings,
+    index_stats,
+    read_docs,
+    read_parquet_or_none,
+    read_stats,
+    shard_totals,
+    tf_from_pairs,
+    totals_fields,
+    write_stats,
 )
 
 SEGMENTS_SCHEMA = (
@@ -73,73 +74,16 @@ def _count_error_urls(spark: SparkSession, root: str) -> int:
     recorded); the COUNTER must not inflate under the retry workflows
     crash-recovery encourages, so it counts distinct urls, not log rows."""
     p = os.path.join(root, "errors")
-    if not os.path.exists(p):
-        return 0
-    try:
-        return int(spark.read.parquet(p).select("url").distinct().count())
-    except Exception as e:
-        # only the empty-quarantine case (no parquet footers yet → schema
-        # inference fails) legitimately means zero; a corrupt/unreadable
-        # quarantine must NOT silently report n_errors=0
-        if not any(f.endswith(".parquet") for f in os.listdir(p)):
-            return 0
-        raise RuntimeError(
-            f"error quarantine at {p} exists but could not be read"
-        ) from e
-
-
-def _write_stats_atomic(root: str, stats: dict) -> None:
-    tmp = os.path.join(root, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, os.path.join(root, "stats.json"))
+    # an empty quarantine means zero; a corrupt one must NOT silently
+    # report n_errors=0 (read_parquet_or_none raises)
+    errors = read_parquet_or_none(spark, p) if os.path.exists(p) else None
+    return 0 if errors is None else int(
+        errors.select("url").distinct().count()
+    )
 
 
 def _seg_dir(root: str) -> str:
     return os.path.join(root, "segments")
-
-
-def _seg_path(root: str, segment_id: int) -> str:
-    return os.path.join(root, "postings", f"shard={segment_id}")
-
-
-def _encode_shard_with_counters(tf_pdf, dl_pdf, counters_dir: str):
-    """Cogrouped encode kernel that also emits this segment's lineage
-    counters as a tiny sidecar JSON, written executor-side next to the batch
-    output. This folds what used to be a separate per-batch Spark job (a
-    full re-read + aggregation of batch_tmp) into the encode pass itself:
-    the counters are aggregates of the kernel's own output (blocks, Σn,
-    distinct terms) plus the doclen side's row count (= the segment's doc
-    count, killing the former up-front per-shard count job too). Content is
-    deterministic and the rename is atomic, so task retries and speculative
-    duplicates are harmless; the tmp name carries the pid so two concurrent
-    attempts never collide mid-write.
-
-    Filesystem assumption: the sidecars land under the index root, which
-    must be a filesystem BOTH driver and executors see — the same contract
-    this layout already requires everywhere (the driver os.rename()s
-    executor-written parquet into place at every segment commit), so no new
-    deployment constraint. _read_counters refuses to silently zero a
-    segment that visibly produced postings."""
-    out = _encode_shard(tf_pdf, dl_pdf)
-    shard = None
-    if not tf_pdf.empty:
-        shard = int(tf_pdf["shard"].iloc[0])
-    elif not dl_pdf.empty:
-        shard = int(dl_pdf["shard"].iloc[0])
-    if shard is not None:
-        rec = {
-            "blocks": int(len(out)),
-            "postings": int(out["n"].sum()) if len(out) else 0,
-            "terms": int(out["term"].nunique()) if len(out) else 0,
-            "n_docs": int(len(dl_pdf)),
-        }
-        os.makedirs(counters_dir, exist_ok=True)
-        tmp = os.path.join(counters_dir, f".shard_{shard}.{os.getpid()}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
-    return out
 
 
 def _read_counters(counters_dir: str, segment_id: int,
@@ -232,25 +176,24 @@ def build_index_resumable(
     (lineage status=ok for the same input_snapshot) are skipped.
     """
     os.makedirs(root, exist_ok=True)
-    stats_path = os.path.join(root, "stats.json")
     docs_path = os.path.join(root, "docs")
-    phase_a_done = os.path.exists(stats_path) and os.path.exists(docs_path)
+    phase_a_done = (os.path.exists(os.path.join(root, "stats.json"))
+                    and os.path.exists(docs_path))
+    stats = None
     if phase_a_done:
-        with open(stats_path) as f:
-            prev = json.load(f)
-        if prev.get("input_snapshot") != input_snapshot:
+        stats = read_stats(root)
+        if stats.get("input_snapshot") != input_snapshot:
             raise ValueError(
                 f"index at {root} was built from input_snapshot="
-                f"{prev.get('input_snapshot')!r}, not {input_snapshot!r}; "
+                f"{stats.get('input_snapshot')!r}, not {input_snapshot!r}; "
                 "use update_index for incremental changes or a fresh root"
             )
-        if prev.get("doc_id_mode", "hash") != doc_id_mode:
+        if stats["doc_id_mode"] != doc_id_mode:
             raise ValueError(
                 f"index at {root} was built with doc_id_mode="
-                f"{prev.get('doc_id_mode', 'hash')!r}, not {doc_id_mode!r}"
+                f"{stats['doc_id_mode']!r}, not {doc_id_mode!r}"
             )
 
-    docs_cached = None
     docs = None
     pool = None
     phase_a_futures = None
@@ -262,7 +205,7 @@ def build_index_resumable(
         # gets cached so docs and errors writes don't re-extract
         docs, errors, raw = build_docs_and_tf_safe(pages, doc_id_mode)
         raw = raw.persist()
-        docs_cached = raw
+        docs = docs.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
         # the four phase-A outputs are independent jobs over the cached raw
         # AND independent of phase B's posting batches: submit them
         # concurrently (job submission is thread-safe) and only JOIN them
@@ -274,7 +217,6 @@ def build_index_resumable(
             # so later update/delete merges stage per shard (COW)
             (
                 docs.drop("tf_pairs")
-                .withColumn("shard", shard_of(F.col("doc_id"), n_shards))
                 .repartition(n_shards, "shard")
                 .write.mode("overwrite")
                 .partitionBy("shard")
@@ -286,8 +228,7 @@ def build_index_resumable(
 
         def _w_doclen():
             (
-                docs.select("doc_id", "doc_len")
-                .withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+                docs.select("doc_id", "doc_len", "shard")
                 .repartition(n_shards, "shard")
                 .sortWithinPartitions("doc_id")
                 .write.mode("overwrite")
@@ -300,14 +241,12 @@ def build_index_resumable(
             pool.submit(_w_docs),
             pool.submit(_w_errors),
             pool.submit(_w_doclen),
-            pool.submit(corpus_stats, docs),
+            pool.submit(shard_totals, docs),
         ]
-        stats = None
-    else:
-        with open(stats_path) as f:
-            stats = json.load(f)
 
     batch_tmp = os.path.join(root, "postings_batch_tmp")
+    termdf_tmp = os.path.join(root, "termdf_batch_tmp")
+    counters_dir = os.path.join(root, "postings_batch_counters")
 
     def _finalize_phase_a(block: bool) -> dict | None:
         """Join the concurrent phase-A jobs and write stats.json (the
@@ -326,33 +265,23 @@ def build_index_resumable(
         pool.shutdown()
         if errs:
             raise errs[0]
-        cs = phase_a_futures[3].result()
-        s = dict(
-            cs,
-            analyzer=ANALYZER_VERSION,
-            k1=K1,
-            b=B,
-            n_shards=n_shards,
-            block_size=BLOCK_SIZE,
-            doc_id_mode=doc_id_mode,
+        s = index_stats(
+            phase_a_futures[3].result(), n_shards, doc_id_mode,
             run_id=run_id,
             input_snapshot=input_snapshot,
             # run-level error counter (ImportReport.cs:92-209 'errors')
             n_errors=_count_error_urls(spark, root),
         )
-        _write_stats_atomic(root, s)
+        write_stats(root, s)
         return s
 
     # EVERYTHING phase-B — including its setup Spark jobs (docs re-read on
-    # resume, the per-shard doc-count job) — runs inside one guard: any exit,
-    # success or failure, first joins the concurrent phase-A futures (a
-    # caller that immediately resumes must not race still-running background
-    # writes) and releases the caches.
+    # resume) — runs inside one guard: any exit, success or failure, first
+    # joins the concurrent phase-A futures (a caller that immediately
+    # resumes must not race still-running background writes) and releases
+    # the caches.
     tf_cached = None
     pos = 0
-    dict_done = False
-    dict_future = None
-    dict_pool = None
     try:
         # phase B: per-segment postings (segment == doc-range shard); only
         # segments recorded ok FOR THIS INPUT SNAPSHOT count as finished
@@ -360,27 +289,22 @@ def build_index_resumable(
         if docs is not None:
             # fresh run: phase A's fused pass is still cached — tf is a
             # plain JVM explode of its tf_pairs (no second Python pass)
-            tf = docs.select(
-                "doc_id", F.explode("tf_pairs").alias("p")
-            ).select(
-                "doc_id", F.col("p.term").alias("term"), F.col("p.tf").alias("tf")
-            )
-            dl_src = docs
+            tf = tf_from_pairs(docs)
+            dl = docs.select("shard", "doc_id", "doc_len")
         else:
             # resume: tf is recomputed from the persisted docs' text (docs
             # parquet stores text, not tokens, to stay lean; only the
             # missing segments' shards are actually encoded below)
             from ..text.tokenizer import tokenize_udf
-            from .store import read_docs
 
             docs_df = read_docs(spark, root)
             docs_tok = docs_df.withColumn("tokens", tokenize_udf(F.col("text")))
-            tf = build_tf(docs_tok)
-            dl_src = docs_df
-        tf = tf.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-        dl = dl_src.select(
-            F.col("doc_id").alias("dl_doc_id"), "doc_len"
-        ).withColumn("shard", shard_of(F.col("dl_doc_id"), n_shards))
+            tf = build_tf(docs_tok).withColumn(
+                "shard", shard_of(F.col("doc_id"), n_shards)
+            )
+            dl = docs_df.select("doc_id", "doc_len").withColumn(
+                "shard", shard_of(F.col("doc_id"), n_shards)
+            )
 
         todo = [s for s in range(n_shards) if s not in done]
         if batch_size is None:
@@ -394,73 +318,26 @@ def build_index_resumable(
         if docs is None and len(todo) > batch_size:
             tf = tf.persist()
             tf_cached = tf
-        counters_dir = os.path.join(root, "postings_batch_counters")
-        if todo:
-            # dictionary + term-df sidecars depend only on the tf relation,
-            # not on any posting batch — run the chain CONCURRENTLY with the
-            # batch loop (r8; it used to run after it, two full explode+agg
-            # passes on the critical path). ONE termdf aggregation feeds
-            # both outputs: sidecars first, then the global dictionary from
-            # the skinny persisted termdf (byte-compatible with the
-            # from-tf/from-postings derivations — asserted in
-            # tests/test_segments.py). Crash windows are unchanged: termdf
-            # lands via tmp + atomic rename, and a run that dies with
-            # either output missing re-derives on resume (dict_done stays
-            # False until the chain joins cleanly).
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            def _dict_chain():
-                termdf = termdf_from_tf(tf).persist()
-                try:
-                    td_tmp = os.path.join(root, "termdf.tmp")
-                    shutil.rmtree(td_tmp, ignore_errors=True)
-                    write_termdf_sidecars(termdf, td_tmp, n_shards)
-                    td_path = os.path.join(root, "termdf")
-                    shutil.rmtree(td_path, ignore_errors=True)
-                    os.rename(td_tmp, td_path)
-                    write_terms_dictionary_from_termdf(
-                        termdf, os.path.join(root, "terms"), dict_files
-                    )
-                finally:
-                    termdf.unpersist()
-
-            dict_pool = _TPE(max_workers=1)
-            dict_future = dict_pool.submit(_dict_chain)
+        # lineaged segments keep their sidecars across resumes
+        os.makedirs(os.path.join(root, "termdf"), exist_ok=True)
         for start in range(0, len(todo), batch_size):
             batch = todo[start:start + batch_size]
             started = datetime.now(timezone.utc).isoformat()
-            seg_tf = tf.where(F.col("shard").isin(batch))
-            seg_dl = dl.where(F.col("shard").isin(batch))
-            # ONE cogroup job for the whole batch: keyed by shard, so the K
-            # segments encode as K parallel tasks. The kernel's output keeps
-            # the shard column and is written partitionBy(shard) with NO
-            # projection in between — Spark 4.1's optimizer would push a
-            # .drop/.select through FlatMapCoGroupsInPandas and strip needed
-            # columns from the cogroup INPUT pdfs (observed: doc_id
-            # vanishing from the dl side).
-            out = (
-                seg_tf.groupBy("shard")
-                .cogroup(seg_dl.groupBy("shard"))
-                .applyInPandas(
-                    lambda l, r: _encode_shard_with_counters(l, r, counters_dir),
-                    POSTINGS_SCHEMA,
-                )
+            # ONE encode job for the whole batch: keyed by shard, so the K
+            # segments encode as K parallel tasks, each also writing its
+            # term-df sidecar and lineage counters
+            encode_postings(
+                tf.where(F.col("shard").isin(batch)),
+                dl.where(F.col("shard").isin(batch)),
+                batch_tmp, termdf_dir=termdf_tmp, counters_dir=counters_dir,
             )
-            shutil.rmtree(batch_tmp, ignore_errors=True)
-            out.write.mode("overwrite").partitionBy("shard").parquet(batch_tmp)
             # commit each segment: files into place FIRST, lineage row after
             # — a kill between the two just re-encodes that segment on
             # resume (deterministic, so the final bytes are identical).
-            # Counters come from the kernel's sidecars (no extra job).
             for seg in batch:
-                path = _seg_path(root, seg)
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                shutil.rmtree(path, ignore_errors=True)
-                src = os.path.join(batch_tmp, f"shard={seg}")
-                if os.path.exists(src):
-                    os.rename(src, path)
-                else:  # doc range with no postings at all
-                    os.makedirs(path, exist_ok=True)
+                path = _swap_shard_dir(batch_tmp, os.path.join(root, "postings"),
+                                       seg, keep_empty=True)
+                _swap_shard_dir(termdf_tmp, os.path.join(root, "termdf"), seg)
                 m = _read_counters(counters_dir, seg, seg_path=path)
                 _append_lineage(
                     root,
@@ -484,30 +361,16 @@ def build_index_resumable(
                 if fail_after_segment is not None and pos >= fail_after_segment:
                     raise RuntimeError(f"injected failure after segment {seg}")
                 pos += 1
-            shutil.rmtree(batch_tmp, ignore_errors=True)
             if stats is None:
                 stats = _finalize_phase_a(block=False)
-        shutil.rmtree(counters_dir, ignore_errors=True)
-        if dict_future is not None:
-            # join the overlapped dictionary/termdf chain (derived from the
-            # still-live tf relation — one aggregation over the cache, never
-            # a re-read of every posting segment from disk. Correct on
-            # partial resumes too: tf covers the WHOLE docs table, and every
-            # on-disk segment is an encode of this same input snapshot —
-            # _finished_segments filters by snapshot; a mismatch raises up
-            # front).
-            dict_future.result()
-            dict_done = True
+        for d in (batch_tmp, termdf_tmp, counters_dir):
+            shutil.rmtree(d, ignore_errors=True)
+        # every segment is committed: the dictionary derives from their
+        # sidecars (also on a resume with nothing left to encode)
+        _derive_dictionary_from_sidecars(
+            spark, root, os.path.join(root, "terms"), [], dict_files
+        )
     finally:
-        if dict_pool is not None:
-            if not dict_done and dict_future is not None:
-                # exception in flight: join quietly so the crash propagates
-                # unmasked; a half-written dictionary re-derives on resume
-                try:
-                    dict_future.result()
-                except Exception:
-                    pass
-            dict_pool.shutdown()
         # join the concurrent phase-A jobs BEFORE leaving (even on the
         # crash path: a caller that immediately resumes must not race
         # still-running background writes), then release the caches —
@@ -526,134 +389,35 @@ def build_index_resumable(
                 stats = _finalize_phase_a(block=True)
         if tf_cached is not None:
             tf_cached.unpersist()
-        if docs_cached is not None:
-            docs_cached.unpersist()
-
-    if not dict_done:
-        # nothing-to-do resume (all segments lineaged; e.g. the prior run
-        # died between the last segment commit and the dictionary write):
-        # derive from the on-disk posting segments — tf was never computed,
-        # and re-tokenizing the whole corpus just for the dictionary would
-        # cost more than the posting-metadata scan
-        _derive_dictionary(spark, root, dict_files)
-        _backfill_termdf(spark, root, n_shards)
+        if docs is not None:
+            raw.unpersist()
 
     return PhysicalIndex(root=root, stats=stats)
 
 
-def _derive_dictionary(spark: SparkSession, root: str, dict_files: int = 4,
-                       out_path: str | None = None) -> None:
-    """Dictionary from the on-disk posting segments. An index whose every
-    document quarantined (or was deleted) has posting dirs with no parquet
-    footers at all — schema inference fails, but the correct dictionary is
-    simply empty, so write one with the right schema instead of failing a
-    build that already committed its lineage."""
-    from .store import write_terms_dictionary
-
-    p = os.path.join(root, "postings")
-    target = out_path or os.path.join(root, "terms")
-    try:
-        postings = spark.read.option("basePath", p).parquet(p)
-    except Exception:
-        (
-            spark.createDataFrame(
-                [], "term string, df long, shards array<int>"
-            ).write.mode("overwrite").parquet(target)
-        )
-        return
-    write_terms_dictionary(postings, target, dict_files)
-
-
-def _backfill_termdf(spark: SparkSession, root: str, n_shards: int) -> None:
-    """(Re)derive ALL shards' term-df sidecars from on-disk posting block
-    metadata into root/termdf via tmp + atomic rename. Used to migrate a
-    pre-sidecar index at its first update and by the dictionary-from-disk
-    recovery path. Idempotent; a crash mid-write leaves termdf absent, which
-    simply re-triggers the backfill."""
-    p = os.path.join(root, "postings")
-    tmp = os.path.join(root, "termdf.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        postings = spark.read.option("basePath", p).parquet(p)
-    except Exception:
-        # an index whose every document quarantined/deleted: the correct
-        # sidecar state is "no rows" — an empty directory
-        os.makedirs(tmp, exist_ok=True)
-    else:
-        write_termdf_sidecars(termdf_from_postings(postings), tmp, n_shards)
-    target = os.path.join(root, "termdf")
-    shutil.rmtree(target, ignore_errors=True)
-    os.rename(tmp, target)
-
-
-def _derive_dictionary_from_sidecars(spark: SparkSession, root: str,
-                                     out_path: str,
-                                     dict_files: int = 4,
-                                     delta_gens=None) -> None:
-    """Dictionary from the per-shard term-df sidecars ONLY — never touches
-    the postings files (pinned in tests: derivation still works with the
-    postings directory moved away). The aggregation input is the skinny
-    (shard, term, df) table; the update path keeps it current per shard
-    (_rebuild_shards), so this is the O(affected-shards)-update dictionary
-    refresh VERDICT r5 #3 asked for.
-
-    With delta generations (r7 LSM update path) the base sidecars describe
-    the base postings' block metadata and each generation's sidecar carries
-    SIGNED adjustments (+new versions, -shadowed versions); the live df per
-    (shard, term) is their sum, and a shard drops out of a term's shard
-    list when its net df reaches 0 — exactly the state a full rebuild's
-    dictionary would record. Without deltas the base table is passed
-    through un-aggregated (the r6 fast path)."""
-    if delta_gens is None:
-        try:
-            with open(os.path.join(root, "stats.json")) as f:
-                delta_gens = json.load(f).get("delta_gens", [])
-        except FileNotFoundError:
-            delta_gens = []
-    frames = []
-    p = os.path.join(root, "termdf")
-    try:
-        frames.append(
-            spark.read.option("basePath", p).parquet(p)
-            .select("term", F.col("df").cast("long").alias("df"), "shard")
-        )
-    except Exception:
-        pass
-    dp = os.path.join(root, "delta_termdf")
-    if delta_gens and os.path.isdir(dp):
-        try:
-            d = spark.read.option("basePath", dp).parquet(dp)
-            frames.append(
-                d.where(F.col("gen").isin([int(g) for g in delta_gens]))
-                .select("term", F.col("df").cast("long").alias("df"), "shard")
-            )
-        except Exception:
-            pass
-    if not frames:
-        (
-            spark.createDataFrame([], "term string, df long, shards array<int>")
-            .write.mode("overwrite").parquet(out_path)
-        )
-        return
-    termdf = frames[0]
-    for extra in frames[1:]:
-        termdf = termdf.unionByName(extra)
-    if len(frames) > 1:
-        termdf = (
-            termdf.groupBy("shard", "term").agg(F.sum("df").alias("df"))
-            .where(F.col("df") > 0)
-            .select("term", "df", "shard")
-        )
-    write_terms_dictionary_from_termdf(termdf, out_path, dict_files)
+def _swap_shard_dir(src_root: str, dst_root: str, shard: int,
+                    keep_empty: bool = False) -> str:
+    """Move ``src_root/shard=N`` over ``dst_root/shard=N``. A shard the
+    source has no data for leaves an empty directory (``keep_empty``) or
+    none. Returns the destination path."""
+    dst = os.path.join(dst_root, f"shard={shard}")
+    shutil.rmtree(dst, ignore_errors=True)
+    src = os.path.join(src_root, f"shard={shard}")
+    if os.path.exists(src):
+        os.makedirs(dst_root, exist_ok=True)
+        os.rename(src, dst)
+    elif keep_empty:
+        os.makedirs(dst, exist_ok=True)
+    return dst
 
 
 # ---- incremental import (ExistState semantics) ----
 
 def _rebuild_shards(spark, root: str, affected, n_shards: int,
                     run_id: str, input_snapshot: str) -> None:
-    """Re-encode postings + doclen partitions for the given shards from the
-    CURRENT docs table. Idempotent (deterministic encode), so safe to re-run
-    during crash recovery.
+    """Re-encode postings + doclen + term-df sidecars for the given shards
+    from the CURRENT docs table. Idempotent (deterministic encode), so safe
+    to re-run during crash recovery.
 
     All affected shards encode in ONE cogroup job (keyed by shard → one
     parallel task per shard) and one doclen write; the per-shard directory
@@ -662,36 +426,22 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
     from ..text.tokenizer import tokenize_udf
 
     affected = sorted(int(s) for s in affected)
-    docs_df = spark.read.parquet(os.path.join(root, "docs"))
-    if "shard" in docs_df.columns:
-        # partitioned layout: the filter hits the physical partition
-        # column, so the scan lists/reads ONLY the affected shard dirs
-        docs_aff = docs_df.where(F.col("shard").isin(affected)).drop("shard")
-    else:
-        sh = shard_of(F.col("doc_id"), n_shards)
-        docs_aff = docs_df.where(sh.isin(affected))
+    # the filter hits the physical partition column, so the scan
+    # lists/reads ONLY the affected shard dirs
+    docs_aff = _docs_pruned_to_shards(spark, root, affected)
     docs_tok = docs_aff.withColumn("tokens", tokenize_udf(F.col("text")))
     tf = build_tf(docs_tok).withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-    dl = docs_aff.select(F.col("doc_id").alias("dl_doc_id"), "doc_len").withColumn(
-        "shard", shard_of(F.col("dl_doc_id"), n_shards)
+    dl = docs_aff.select("doc_id", "doc_len").withColumn(
+        "shard", shard_of(F.col("doc_id"), n_shards)
     )
 
     started = datetime.now(timezone.utc).isoformat()
-    # no projection between applyInPandas and the write (Spark 4.1 would push
-    # the pruning into the cogroup inputs); the shard column partitions out
-    out = (
-        tf.groupBy("shard")
-        .cogroup(dl.groupBy("shard"))
-        .applyInPandas(lambda l, r: _encode_shard(l, r), POSTINGS_SCHEMA)
-    )
     post_tmp = os.path.join(root, "postings_rebuild_tmp")
-    shutil.rmtree(post_tmp, ignore_errors=True)
-    out.write.mode("overwrite").partitionBy("shard").parquet(post_tmp)
+    termdf_tmp = os.path.join(root, "termdf_rebuild_tmp")
+    encode_postings(tf, dl, post_tmp, termdf_dir=termdf_tmp)
     dl_tmp = os.path.join(root, "doclen_rebuild_tmp")
-    shutil.rmtree(dl_tmp, ignore_errors=True)
     (
-        dl.select(F.col("dl_doc_id").alias("doc_id"), "doc_len", "shard")
-        .repartition(max(1, len(affected)), "shard")
+        dl.repartition(max(1, len(affected)), "shard")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .partitionBy("shard")
@@ -701,47 +451,14 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
         int(r.shard): int(r["count"])
         for r in dl.groupBy("shard").count().collect()
     }
-    # refresh the affected shards' term-df sidecars from the freshly encoded
-    # postings (block-metadata columns of post_tmp only — column-pruned,
-    # affected shards only). Skipped when the index predates sidecars: the
-    # caller's _refresh_stats_terms migration backfills ALL shards from the
-    # post-swap on-disk state instead, which is strictly fresher.
-    termdf_tmp = os.path.join(root, "termdf_rebuild_tmp")
-    shutil.rmtree(termdf_tmp, ignore_errors=True)
-    has_termdf = os.path.isdir(os.path.join(root, "termdf"))
-    if has_termdf:
-        try:
-            post_aff = spark.read.option("basePath", post_tmp).parquet(post_tmp)
-        except Exception:
-            post_aff = None  # every affected shard emptied → no sidecar rows
-        if post_aff is not None:
-            write_termdf_sidecars(
-                termdf_from_postings(post_aff), termdf_tmp,
-                max(1, len(affected)),
-            )
 
     for seg in affected:
-        path = _seg_path(root, seg)
-        shutil.rmtree(path, ignore_errors=True)
-        src = os.path.join(post_tmp, f"shard={seg}")
-        if os.path.exists(src):
-            os.rename(src, path)
-        else:  # every doc of this shard was deleted
-            os.makedirs(path, exist_ok=True)
-        dl_path = os.path.join(root, "doclen", f"shard={seg}")
-        shutil.rmtree(dl_path, ignore_errors=True)
-        dl_src = os.path.join(dl_tmp, f"shard={seg}")
-        if os.path.exists(dl_src):
-            os.rename(dl_src, dl_path)
-        else:
-            os.makedirs(dl_path, exist_ok=True)
-        if has_termdf:
-            td_path = os.path.join(root, "termdf", f"shard={seg}")
-            shutil.rmtree(td_path, ignore_errors=True)
-            td_src = os.path.join(termdf_tmp, f"shard={seg}")
-            if os.path.exists(td_src):
-                os.rename(td_src, td_path)
-            # an emptied shard's sidecar state is simply no directory
+        # an emptied shard keeps empty postings/doclen dirs and no sidecar
+        _swap_shard_dir(post_tmp, os.path.join(root, "postings"), seg,
+                        keep_empty=True)
+        _swap_shard_dir(dl_tmp, os.path.join(root, "doclen"), seg,
+                        keep_empty=True)
+        _swap_shard_dir(termdf_tmp, os.path.join(root, "termdf"), seg)
         _append_lineage(
             root,
             {
@@ -756,9 +473,8 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
                 "metrics": {"incremental": 1},
             },
         )
-    shutil.rmtree(post_tmp, ignore_errors=True)
-    shutil.rmtree(dl_tmp, ignore_errors=True)
-    shutil.rmtree(termdf_tmp, ignore_errors=True)
+    for d in (post_tmp, dl_tmp, termdf_tmp):
+        shutil.rmtree(d, ignore_errors=True)
     # the freshly encoded base now carries these shards' full live state —
     # their delta-segment data (postings/doclen/termdf across ALL
     # generations) is folded and must go, or queries would double-count.
@@ -767,42 +483,31 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
     _deltas.purge_shards(root, affected)
 
 
-def _docs_shard_totals(spark, root: str, n_shards: int, shards=None) -> dict:
-    """Per-shard (n_docs, total_tokens) from the CURRENT docs table —
-    recomputed from state, never delta-applied, so callers stay idempotent
-    under crash/retry. With the partitioned docs layout and ``shards``
-    given, the scan partition-prunes to those directories only."""
-    docs_df = spark.read.parquet(os.path.join(root, "docs"))
-    if "shard" in docs_df.columns:
-        key = F.col("shard")
-    else:
-        key = shard_of(F.col("doc_id"), n_shards)
-    if shards is not None:
-        docs_df = docs_df.where(key.isin([int(s) for s in shards]))
-    rows = docs_df.groupBy(key.alias("s")).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("t")
-    ).collect()
-    return {int(r.s): (int(r.n), int(r.t or 0)) for r in rows}
+def _docs_shard_totals(spark, root: str, shards) -> dict:
+    """Per-shard (n_docs, total_tokens) of the given shards from the
+    CURRENT docs table — recomputed from state, never delta-applied, so
+    callers stay idempotent under crash/retry. The scan partition-prunes to
+    those shard directories only."""
+    return shard_totals(
+        spark.read.parquet(os.path.join(root, "docs"))
+        .where(F.col("shard").isin([int(s) for s in shards]))
+    )
 
 
 def _refresh_stats_terms(spark, root: str, run_id: str, input_snapshot: str,
-                         affected=None, new_gen=None) -> dict:
-    """Recompute global stats (exact-int avgdl) and the dictionary from the
-    current docs table + posting block metadata. Idempotent.
+                         affected, new_gen=None) -> dict:
+    """Recompute global stats (exact-int avgdl) and the dictionary after an
+    update, delete or compaction of the ``affected`` shards. Idempotent.
 
-    Stats come from per-shard subtotals kept in stats.json (``shard_stats``):
-    with ``affected`` given, only those shards' subtotals are re-scanned
-    (partition-pruned) and the rest reused — the global agg per update was
-    an O(corpus) doc_len scan for two numbers. Recovery stays correct
-    because affected subtotals are recomputed FROM the current docs table,
-    not delta-applied; re-running produces identical values. An index
-    without recorded subtotals (pre-r5 stats.json) migrates with one full
-    per-shard scan."""
+    Stats come from the per-shard subtotals in stats.json (``shard_stats``):
+    only the affected shards' subtotals are re-scanned (partition-pruned)
+    and the rest reused — recovery stays correct because they are
+    recomputed FROM the current docs table, not delta-applied; re-running
+    produces identical values. The dictionary derives from the base +
+    committed delta term-df sidecars."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with open(os.path.join(root, "stats.json")) as f:
-        stats = json.load(f)
-    n_shards = int(stats["n_shards"])
+    stats = read_stats(root)
     # delta-generation bookkeeping first (driver-side directory walk — the
     # dictionary derivation below needs the final gen list): the atomic
     # stats.json replace below IS the reader-visible commit of ``new_gen``
@@ -816,54 +521,29 @@ def _refresh_stats_terms(spark, root: str, run_id: str, input_snapshot: str,
         stats["last_gen"] = max(int(stats.get("last_gen", 0)), int(new_gen))
     gens &= _deltas.live_gens_on_disk(root)
     stats["delta_gens"] = sorted(gens)
-    # a pre-sidecar index migrates with one full backfill from the on-disk
-    # postings BEFORE the fan-out (idempotent under crash/retry: both the
-    # backfill and the sidecar refresh recompute from state)
-    if not os.path.isdir(os.path.join(root, "termdf")):
-        _backfill_termdf(spark, root, n_shards)
 
     # the three Spark pieces — per-shard doc subtotals, the error-url count,
     # and the dictionary rebuild from the sidecars — are independent jobs:
     # submit them concurrently so their fixed job floors overlap (r8; they
     # ran back-to-back and were most of the per-update fixed cost)
+    affected = {int(s) for s in affected}
     shard_stats = {
-        int(k): (int(v[0]), int(v[1]))
-        for k, v in stats.get("shard_stats", {}).items()
+        int(k): tuple(v) for k, v in stats["shard_stats"].items()
+        if int(k) not in affected
     }
     terms_tmp = os.path.join(root, "terms.tmp")
     shutil.rmtree(terms_tmp, ignore_errors=True)
 
-    def _totals():
-        if affected is None or not shard_stats:
-            return _docs_shard_totals(spark, root, n_shards)
-        fresh = _docs_shard_totals(spark, root, n_shards, shards=affected)
-        merged = dict(shard_stats)
-        for s in affected:
-            merged.pop(int(s), None)
-        merged.update(fresh)
-        return merged
-
-    def _dict():
-        # dictionary from the per-shard term-df sidecars (kept current for
-        # affected shards by _rebuild_shards) — never a block-metadata scan
-        # of all shards
-        _derive_dictionary_from_sidecars(spark, root, out_path=terms_tmp,
-                                         delta_gens=stats["delta_gens"])
-
     with ThreadPoolExecutor(max_workers=3) as ex:
-        f_tot = ex.submit(_totals)
+        f_tot = ex.submit(_docs_shard_totals, spark, root, affected)
         f_err = ex.submit(_count_error_urls, spark, root)
-        f_dic = ex.submit(_dict)
-        shard_stats = f_tot.result()
+        f_dic = ex.submit(_derive_dictionary_from_sidecars, spark, root,
+                          terms_tmp, stats["delta_gens"])
+        shard_stats.update(f_tot.result())
         n_errors = f_err.result()
         f_dic.result()
-    n = sum(v[0] for v in shard_stats.values())
-    t = sum(v[1] for v in shard_stats.values())
     stats.update(
-        n_docs=n,
-        total_tokens=t,
-        avgdl=(t / n) if n else 0.0,
-        shard_stats={str(k): list(v) for k, v in sorted(shard_stats.items())},
+        totals_fields(shard_stats),
         run_id=run_id,
         input_snapshot=input_snapshot,
         n_errors=n_errors,
@@ -871,7 +551,7 @@ def _refresh_stats_terms(spark, root: str, run_id: str, input_snapshot: str,
     terms_path = os.path.join(root, "terms")
     shutil.rmtree(terms_path, ignore_errors=True)
     os.rename(terms_tmp, terms_path)
-    _write_stats_atomic(root, stats)
+    write_stats(root, stats)
     return stats
 
 
@@ -885,44 +565,31 @@ def _write_docs_tmp_cow(spark, docs_path: str, merged_affected,
     nothing that did not change.
 
     ``merged_affected`` must hold exactly the post-merge rows of the
-    ``affected`` shards (logical schema, no shard column). Partitioned
-    layout (docs/shard=N/): those rows are written partitioned and every
-    OTHER shard directory is hard-linked from the live table — the publish
-    path's copy-on-write (_copy_index_tree), so staging cost is O(affected
-    shards) + O(#files) link syscalls, not a corpus rewrite. A flat
-    (pre-partitioned) docs table cannot be merged per shard; the caller
-    passes the FULL merge as ``merged_affected`` with ``affected=None``
-    and this migrates it to the partitioned layout in one rewrite. Either
-    way the caller's whole-dir marker+rename swap — and recover_update —
-    apply unchanged on top: a crash mid-staging leaves docs.tmp garbage
-    that recovery sweeps, never a half-merged live table.
+    ``affected`` shards (logical schema, no shard column). Those rows are
+    written partitioned (docs/shard=N/) and every OTHER shard directory is
+    hard-linked from the live table — the publish path's copy-on-write
+    (_copy_index_tree), so staging cost is O(affected shards) + O(#files)
+    link syscalls, not a corpus rewrite. The caller's whole-dir
+    marker+rename swap — and recover_update — apply on top: a crash
+    mid-staging leaves docs.tmp garbage that recovery sweeps, never a
+    half-merged live table.
 
     (The hard-link copy is _copy_index_tree — the generation-publish COW
     primitive; on filesystems without links it degrades to file copies of
     the unchanged shards, still never a Spark job.)"""
-    from .store import docs_is_sharded
-
     docs_tmp = docs_path + ".tmp"
     shutil.rmtree(docs_tmp, ignore_errors=True)
-    out = merged_affected.withColumn(
-        "shard", shard_of(F.col("doc_id"), n_shards)
+    aff = {int(a) for a in affected}
+    (
+        merged_affected.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+        .repartition(max(1, len(aff)), "shard")
+        .write.mode("overwrite").partitionBy("shard").parquet(docs_tmp)
     )
-    if affected is not None and docs_is_sharded(docs_path):
-        aff = {int(a) for a in affected}
-        (
-            out.repartition(max(1, len(aff)), "shard")
-            .write.mode("overwrite").partitionBy("shard").parquet(docs_tmp)
-        )
-        for e in os.listdir(docs_path):
-            if e.startswith("shard=") and int(e.split("=", 1)[1]) not in aff:
-                _copy_index_tree(
-                    os.path.join(docs_path, e), os.path.join(docs_tmp, e)
-                )
-    else:
-        (
-            out.repartition(n_shards, "shard")
-            .write.mode("overwrite").partitionBy("shard").parquet(docs_tmp)
-        )
+    for e in os.listdir(docs_path):
+        if e.startswith("shard=") and int(e.split("=", 1)[1]) not in aff:
+            _copy_index_tree(
+                os.path.join(docs_path, e), os.path.join(docs_tmp, e)
+            )
 
 
 def _shards_of_urls(with_urls: DataFrame, doc_id_mode: str,
@@ -940,22 +607,15 @@ def _shards_of_urls(with_urls: DataFrame, doc_id_mode: str,
     )
 
 
-def _docs_pruned_to_shards(spark, root: str, old_docs: DataFrame,
-                           shards: list) -> DataFrame:
-    """The docs table restricted to the given shards — on the partitioned
-    layout the filter hits the physical partition column, so the scan
-    lists/reads ONLY those shard directories (update cost stays O(update),
-    not O(corpus)). Flat legacy layouts fall back to the full table."""
-    from .store import docs_is_sharded
-
-    docs_path = os.path.join(root, "docs")
-    if docs_is_sharded(docs_path):
-        return (
-            spark.read.parquet(docs_path)
-            .where(F.col("shard").isin([int(s) for s in shards]))
-            .drop("shard")
-        )
-    return old_docs
+def _docs_pruned_to_shards(spark, root: str, shards: list) -> DataFrame:
+    """The docs table (logical schema) restricted to the given shards — the
+    filter hits the physical partition column, so the scan lists/reads ONLY
+    those shard directories (update cost stays O(update), not O(corpus))."""
+    return (
+        spark.read.parquet(os.path.join(root, "docs"))
+        .where(F.col("shard").isin([int(s) for s in shards]))
+        .drop("shard")
+    )
 
 
 def recover_update(spark: SparkSession, root: str) -> bool:
@@ -1094,13 +754,9 @@ def update_index(
         raise ValueError(f"unknown update strategy: {strategy!r}")
     recover_update(spark, root)
 
-    with open(os.path.join(root, "stats.json")) as f:
-        stats = json.load(f)
+    stats = read_stats(root)
     n_shards = int(stats["n_shards"])
     docs_path = os.path.join(root, "docs")
-    from .store import docs_is_sharded, read_docs
-
-    old_docs = read_docs(spark, root)
 
     # the existence probe joins on url, and an incoming url's existing copy
     # can only live in the shard its (mode-recorded) id maps to — so the
@@ -1110,7 +766,7 @@ def update_index(
     in_shards = _shards_of_urls(
         new_pages, stats.get("doc_id_mode", "hash"), n_shards
     )
-    old_probe = _docs_pruned_to_shards(spark, root, old_docs, in_shards)
+    old_probe = _docs_pruned_to_shards(spark, root, in_shards)
     changed_pages = incremental_pages(new_pages, old_probe)
     # derive changed docs' ids the way THIS index was built (stats records
     # the mode): a hash-id derivation over a host_locality index would
@@ -1144,7 +800,7 @@ def update_index(
             stats.update(
                 n_errors=n_errors, run_id=run_id, input_snapshot=input_snapshot
             )
-            _write_stats_atomic(root, stats)
+            write_stats(root, stats)
         return PhysicalIndex(root=root, stats=stats)
 
     affected = sorted(
@@ -1158,11 +814,10 @@ def update_index(
     # shards' rows are merged and written — a changed url can never move
     # shards (doc_id = f(url) is deterministic), so per-shard merges are
     # closed and the staging helper hard-links everything else (COW):
-    # staging cost is O(affected shards), not a corpus rewrite. On a
-    # partitioned layout the filter is on the physical partition column,
-    # so the scan reads only the affected shard directories.
-    sharded = docs_is_sharded(docs_path)
-    old_aff = _docs_pruned_to_shards(spark, root, old_docs, affected)
+    # staging cost is O(affected shards), not a corpus rewrite. The filter
+    # is on the physical partition column, so the scan reads only the
+    # affected shard directories.
+    old_aff = _docs_pruned_to_shards(spark, root, affected)
 
     merged_aff = old_aff.join(
         changed_docs.select("url"), "url", "left_anti"
@@ -1185,8 +840,7 @@ def update_index(
             f_stage = _ex.submit(_deltas.stage_update_delta, spark, root,
                                  changed_docs, old_replaced, n_shards)
             f_cow = _ex.submit(_write_docs_tmp_cow, spark, docs_path,
-                               merged_aff, affected if sharded else None,
-                               n_shards)
+                               merged_aff, affected, n_shards)
             errs = []
             for f in (f_stage, f_cow):
                 try:
@@ -1196,8 +850,8 @@ def update_index(
             if errs:
                 raise errs[0]
     else:
-        _write_docs_tmp_cow(spark, docs_path, merged_aff,
-                            affected if sharded else None, n_shards)
+        _write_docs_tmp_cow(spark, docs_path, merged_aff, affected,
+                            n_shards)
     changed_docs.unpersist()
 
     payload = {"affected": affected, "n_shards": n_shards,
@@ -1249,13 +903,9 @@ def delete_from_index(
         raise ValueError(f"unknown delete strategy: {strategy!r}")
     recover_update(spark, root)
 
-    with open(os.path.join(root, "stats.json")) as f:
-        stats = json.load(f)
+    stats = read_stats(root)
     n_shards = int(stats["n_shards"])
     docs_path = os.path.join(root, "docs")
-    from .store import docs_is_sharded, read_docs
-
-    old_docs = read_docs(spark, root)
 
     urls_only = urls.select("url").distinct()
     # same pruning as update_index's existence probe: a doomed url's doc can
@@ -1263,7 +913,7 @@ def delete_from_index(
     cand_shards = _shards_of_urls(
         urls_only, stats.get("doc_id_mode", "hash"), n_shards
     )
-    probe = _docs_pruned_to_shards(spark, root, old_docs, cand_shards)
+    probe = _docs_pruned_to_shards(spark, root, cand_shards)
     doomed = probe.join(urls_only, "url", "left_semi").persist()
     affected = sorted(
         int(r.s)
@@ -1277,8 +927,7 @@ def delete_from_index(
 
     # survivors of the affected shards only; everything else hard-links
     # (COW staging — same shape as update_index's merge)
-    sharded = docs_is_sharded(docs_path)
-    base = _docs_pruned_to_shards(spark, root, old_docs, affected)
+    base = _docs_pruned_to_shards(spark, root, affected)
     merged_aff = base.join(urls_only, "url", "left_anti")
     gen = None
     if strategy == "delta":
@@ -1292,8 +941,7 @@ def delete_from_index(
             f_stage = _ex.submit(_deltas.stage_delete_delta, spark, root,
                                  doomed, n_shards)
             f_cow = _ex.submit(_write_docs_tmp_cow, spark, docs_path,
-                               merged_aff, affected if sharded else None,
-                               n_shards)
+                               merged_aff, affected, n_shards)
             errs = []
             for f in (f_stage, f_cow):
                 try:
@@ -1303,8 +951,8 @@ def delete_from_index(
             if errs:
                 raise errs[0]
     else:
-        _write_docs_tmp_cow(spark, docs_path, merged_aff,
-                            affected if sharded else None, n_shards)
+        _write_docs_tmp_cow(spark, docs_path, merged_aff, affected,
+                            n_shards)
     doomed.unpersist()
 
     payload = {"affected": affected, "n_shards": n_shards,
@@ -1347,8 +995,7 @@ def compact_deltas(
     repaired by recover_update re-running the rebuild, and the result is
     bit-identical to a fresh full build over the same corpus."""
     recover_update(spark, root)
-    with open(os.path.join(root, "stats.json")) as f:
-        stats = json.load(f)
+    stats = read_stats(root)
     n_shards = int(stats["n_shards"])
     sg = _deltas.shard_gen_map(root)
     todo = sorted(sg) if shards is None else sorted(
@@ -1407,6 +1054,29 @@ def _copy_index_tree(src: str, dst: str) -> None:
 def _new_gen_path(store_root: str) -> str:
     stamp = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
     return os.path.join(store_root, f"gen={stamp}")
+
+
+def _gc_generations(store_root: str, keep_generations: int,
+                    protected: set) -> None:
+    """Remove old generation dirs after a publish. NEVER removes the
+    ``protected`` ones — the generation just published and the one readers
+    may still hold (the pre-flip CURRENT): a hard-killed update can leave
+    an orphaned gen dir on disk, and counting it toward keep_generations
+    could otherwise evict the live predecessor. Beyond those, keep the
+    newest (keep_generations - len(protected)) others; the single-writer
+    contract makes everything else (older published gens, crash orphans)
+    disposable. keep_generations <= 0 disables GC."""
+    if keep_generations <= 0:
+        return
+    gens = sorted(
+        os.path.join(store_root, d)
+        for d in os.listdir(store_root)
+        if d.startswith("gen=") and os.path.isdir(os.path.join(store_root, d))
+    )
+    others = [g for g in gens if g not in protected]
+    spare = max(0, keep_generations - len(protected))
+    for g in others[: len(others) - spare if spare else None]:
+        shutil.rmtree(g, ignore_errors=True)
 
 
 def init_published_index(
@@ -1471,23 +1141,7 @@ def update_index_published(
         shutil.rmtree(new_gen, ignore_errors=True)
         raise
     publish_generation(store_root, new_gen)
-    # GC: NEVER remove the generation just published or the one readers may
-    # still hold (the pre-flip CURRENT) — a hard-killed update can leave an
-    # orphaned gen dir on disk, and counting it toward keep_generations could
-    # otherwise evict the live predecessor. Beyond those two protected dirs,
-    # keep the newest (keep_generations - 2) others; single-writer contract
-    # makes everything else (older published gens, crash orphans) disposable.
-    if keep_generations > 0:
-        gens = sorted(
-            os.path.join(store_root, d)
-            for d in os.listdir(store_root)
-            if d.startswith("gen=") and os.path.isdir(os.path.join(store_root, d))
-        )
-        protected = {new_gen, cur}
-        others = [g for g in gens if g not in protected]
-        spare = max(0, keep_generations - len(protected))
-        for g in others[: len(others) - spare if spare else None]:
-            shutil.rmtree(g, ignore_errors=True)
+    _gc_generations(store_root, keep_generations, {new_gen, cur})
     return pidx
 
 
@@ -1520,17 +1174,7 @@ def compact_index_published(
         shutil.rmtree(new_gen, ignore_errors=True)
         raise
     publish_generation(store_root, new_gen)
-    if keep_generations > 0:
-        gens = sorted(
-            os.path.join(store_root, d)
-            for d in os.listdir(store_root)
-            if d.startswith("gen=") and os.path.isdir(os.path.join(store_root, d))
-        )
-        protected = {new_gen, cur}
-        others = [g for g in gens if g not in protected]
-        spare = max(0, keep_generations - len(protected))
-        for g in others[: len(others) - spare if spare else None]:
-            shutil.rmtree(g, ignore_errors=True)
+    _gc_generations(store_root, keep_generations, {new_gen, cur})
     return pidx
 
 

@@ -8,14 +8,19 @@ cluster with an Iceberg catalog):
                         per shard with COW hard links; read via read_docs)
     <root>/doclen/      shard, doc_id, doc_len            (partitioned by shard)
     <root>/postings/    term, block_id, n, min_doc, max_doc, docs_enc,
-                        tfs_enc, max_tf, max_score        (partitioned by shard,
+                        tfs_enc, max_tf, min_dl           (partitioned by shard,
                         sorted by term within files → row-group term pruning)
-    <root>/terms/       term, df, shards                  (the dictionary)
     <root>/termdf/      term, df             (per-shard sidecars, partitioned
-                        by shard — the update path re-derives only affected
-                        shards' sidecars and aggregates these for the
-                        dictionary instead of re-reading all block metadata)
-    <root>/stats.json   n_docs, avgdl, total_tokens, analyzer, k1, b, n_shards
+                        by shard, written by the encode kernel: df = the
+                        term's Σ block n in that shard)
+    <root>/terms/       term, df, shards     (the dictionary, derived from the
+                        sidecars only — _derive_dictionary_from_sidecars)
+    <root>/stats.json   format_version, n_docs, avgdl, total_tokens,
+                        shard_stats (per-shard [n_docs, total_tokens]),
+                        analyzer, k1, b, n_shards, block_size, doc_id_mode
+                        (+ delta_gens/last_gen once updates commit; see
+                        deltas.py). read_stats refuses any other
+                        format_version.
 
 Replaces the ES index + mapping template of the reference
 (Endpoints/ESIndexDefinitions.cs:312-541). The "optimize to N segments" step
@@ -34,16 +39,22 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass, field
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..text.tokenizer import ANALYZER_VERSION
 from .build import K1, B, shard_of
 from .codec import BLOCK_SIZE, encode_shard_blocks, to_u64
+
+# stats.json layout version. Readers refuse any other value (and a missing
+# one): older layouts are rebuilt, never migrated in place.
+FORMAT_VERSION = 1
 
 POSTINGS_SCHEMA = (
     "term string, shard int, block_id int, n int, min_doc long, max_doc long, "
@@ -56,7 +67,9 @@ _POSTING_COLS = [
 ]
 
 
-def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
+def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
+                  termdf_dir: str | None = None,
+                  counters_dir: str | None = None) -> pd.DataFrame:
     """Cogrouped kernel: one doc-range shard's entire sub-index in one pass.
 
     One task per shard (not per term!): the tf rows are lexsorted by
@@ -65,179 +78,206 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
     magnitude slower at small scale and pure overhead at any scale. Shard
     count is the parallelism/memory knob: each task holds one doc-range's
     postings (bounded by shard width), which is what holds at 1000× data.
+
+    Each term's run length IS its df in this shard (one tf row per (doc,
+    term) pair), so with ``termdf_dir`` the kernel also writes the shard's
+    (term, df) sidecar; with ``counters_dir`` it writes the segment's
+    lineage counters. Both are written executor-side under a dot-prefixed
+    tmp name (Spark's readers skip it) and renamed into place: content is
+    deterministic and the rename atomic, so task retries and speculative
+    duplicates are harmless. The index root must be a filesystem the
+    driver and executors share, as every driver-side rename of
+    executor-written parquet already requires.
     """
     if tf_pdf.empty:
-        return pd.DataFrame(columns=_POSTING_COLS)
-    shard = int(tf_pdf["shard"].iloc[0])
-    u = to_u64(tf_pdf["doc_id"].to_numpy(dtype=np.int64))
-    tfs = tf_pdf["tf"].to_numpy(dtype=np.int64)
-    terms = tf_pdf["term"].to_numpy(dtype=object)
-    # doclen lookup for the shard (the dl side's key is renamed in-flight to
-    # dodge Spark's ambiguous-self-join analysis when tf and doclen derive
-    # from the same parent frame)
-    dl_key = "dl_doc_id" if "dl_doc_id" in dl_pdf.columns else "doc_id"
-    dlu = to_u64(dl_pdf[dl_key].to_numpy(dtype=np.int64))
-    dorder = np.argsort(dlu)
-    dlu = dlu[dorder]
-    dlv = dl_pdf["doc_len"].to_numpy(dtype=np.int64)[dorder]
-    dls = dlv[np.searchsorted(dlu, u)]
-    # sort by (term, doc_u); encode the whole shard in one vectorized pass
-    order = np.lexsort((u, terms))
-    u, tfs, dls, terms = u[order], tfs[order], dls[order], terms[order]
-    run_starts = np.nonzero(np.concatenate(([True], terms[1:] != terms[:-1])))[0]
-    (run_of_block, block_id, ns, min_doc, max_doc,
-     docs_enc, tfs_enc, max_tf, min_dl) = encode_shard_blocks(
-        u, tfs, dls, run_starts, BLOCK_SIZE
-    )
-    return pd.DataFrame(
-        {
-            "term": terms[run_starts[run_of_block]],
-            "shard": np.full(len(block_id), shard, dtype=np.int32),
-            "block_id": block_id.astype(np.int32),
-            "n": ns.astype(np.int32),
-            "min_doc": min_doc,
-            "max_doc": max_doc,
-            "docs_enc": docs_enc,
-            "tfs_enc": tfs_enc,
-            "max_tf": max_tf.astype(np.int32),
-            "min_dl": min_dl.astype(np.int32),
+        out = pd.DataFrame(columns=_POSTING_COLS)
+        shard = int(dl_pdf["dl_shard"].iloc[0])
+    else:
+        shard = int(tf_pdf["shard"].iloc[0])
+        u = to_u64(tf_pdf["doc_id"].to_numpy(dtype=np.int64))
+        tfs = tf_pdf["tf"].to_numpy(dtype=np.int64)
+        terms = tf_pdf["term"].to_numpy(dtype=object)
+        dlu = to_u64(dl_pdf["dl_doc_id"].to_numpy(dtype=np.int64))
+        dorder = np.argsort(dlu)
+        dlu = dlu[dorder]
+        dlv = dl_pdf["doc_len"].to_numpy(dtype=np.int64)[dorder]
+        dls = dlv[np.searchsorted(dlu, u)]
+        # sort by (term, doc_u); encode the whole shard in one vectorized pass
+        order = np.lexsort((u, terms))
+        u, tfs, dls, terms = u[order], tfs[order], dls[order], terms[order]
+        run_starts = np.nonzero(
+            np.concatenate(([True], terms[1:] != terms[:-1]))
+        )[0]
+        (run_of_block, block_id, ns, min_doc, max_doc,
+         docs_enc, tfs_enc, max_tf, min_dl) = encode_shard_blocks(
+            u, tfs, dls, run_starts, BLOCK_SIZE
+        )
+        out = pd.DataFrame(
+            {
+                "term": terms[run_starts[run_of_block]],
+                "shard": np.full(len(block_id), shard, dtype=np.int32),
+                "block_id": block_id.astype(np.int32),
+                "n": ns.astype(np.int32),
+                "min_doc": min_doc,
+                "max_doc": max_doc,
+                "docs_enc": docs_enc,
+                "tfs_enc": tfs_enc,
+                "max_tf": max_tf.astype(np.int32),
+                "min_dl": min_dl.astype(np.int32),
+            }
+        )
+        if termdf_dir is not None:
+            df = np.diff(np.append(run_starts, len(terms)))
+            sidecar = pa.table({
+                "term": pa.array(terms[run_starts], pa.string()),
+                "df": pa.array(df, pa.int64()),
+            })
+            d = os.path.join(termdf_dir, f"shard={shard}")
+            os.makedirs(d, exist_ok=True)
+            tmp = os.path.join(d, f".part.{os.getpid()}.tmp")
+            pq.write_table(sidecar, tmp, use_dictionary=False,
+                           store_schema=False)
+            os.replace(tmp, os.path.join(d, "part-0.parquet"))
+    if counters_dir is not None:
+        rec = {
+            "blocks": int(len(out)),
+            "postings": int(out["n"].sum()) if len(out) else 0,
+            "terms": int(out["term"].nunique()) if len(out) else 0,
+            "n_docs": int(len(dl_pdf)),
         }
+        os.makedirs(counters_dir, exist_ok=True)
+        tmp = os.path.join(counters_dir, f".shard_{shard}.{os.getpid()}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(rec, f)
+        os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
+    return out
+
+
+def tf_from_pairs(df: DataFrame) -> DataFrame:
+    """(shard, doc_id, term, tf) rows from the fused pass's ``tf_pairs``
+    column — a JVM-side explode, no second Python pass."""
+    return df.select(
+        "shard", "doc_id", F.explode("tf_pairs").alias("p")
+    ).select(
+        "shard", "doc_id",
+        F.col("p.term").alias("term"), F.col("p.tf").alias("tf"),
     )
 
 
-def write_terms_dictionary(postings: DataFrame, path: str, n_files: int = 4) -> None:
-    """Dictionary derived from posting block metadata: df = Σ block n per
-    term, plus the shard list for query-side partition pruning (no extra
-    planning job at query time). The SINGLE implementation used by the full
-    build, the resumable build, and the incremental refresh — they must stay
-    byte-compatible.
+def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
+                    termdf_dir: str | None = None,
+                    counters_dir: str | None = None) -> DataFrame:
+    """The one posting writer: encode ``tf`` (shard, doc_id, term, tf)
+    against ``dl`` (shard, doc_id, doc_len) per shard and, with ``path``,
+    write the blocks partitioned by shard. Returns the encode plan (with
+    ``path=None`` nothing runs — plan inspection only).
+
+    ``termdf_dir``: the kernel writes each shard's (term, df) sidecar to
+    ``termdf_dir/shard=N/``; the directory is cleared (and created, so it
+    exists even when no shard has postings) before the job.
+    ``counters_dir``: per-shard lineage counters (_encode_shard).
+
+    The dl side's key columns are BOTH renamed (dl_shard, dl_doc_id): tf
+    and dl usually share a parent, and Spark's ambiguous-self-join analysis
+    rejects the cogroup when the two sides share a column's exprId (it
+    surfaces when the parent contains a join); alias-aware output
+    partitioning still elides the exchange when that parent is already
+    hash-partitioned by shard (pinned in tests/test_plans.py). The output is
+    written with NO projection in between: Spark 4.1's optimizer would push
+    a .drop/.select through FlatMapCoGroupsInPandas and strip needed
+    columns from the cogroup INPUT pdfs (observed: doc_id vanishing from
+    the dl side)."""
+    dl = dl.select(
+        F.col("shard").alias("dl_shard"),
+        F.col("doc_id").alias("dl_doc_id"), "doc_len",
+    )
+    out = (
+        tf.groupBy("shard")
+        .cogroup(dl.groupBy("dl_shard"))
+        .applyInPandas(
+            lambda l, r: _encode_shard(l, r, termdf_dir, counters_dir),
+            POSTINGS_SCHEMA,
+        )
+    )
+    if path is not None:
+        if termdf_dir is not None:
+            shutil.rmtree(termdf_dir, ignore_errors=True)
+            os.makedirs(termdf_dir)
+        out.write.mode("overwrite").partitionBy("shard").parquet(path)
+    return out
+
+
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table (partitioned or not) at ``path``, or None when its
+    directory holds no parquet files at all (e.g. the term-df sidecars of
+    an index whose every document quarantined or was deleted — schema
+    inference has nothing to read). Any other read failure (a missing
+    directory, a corrupt file) raises: an empty or partial dictionary or
+    counter must never be derived silently."""
+    try:
+        return spark.read.option("basePath", path).parquet(path)
+    except Exception:
+        if os.path.isdir(path) and not any(
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            for _, _, files in os.walk(path) for f in files
+        ):
+            return None
+        raise
+
+
+def _derive_dictionary_from_sidecars(spark: SparkSession, root: str,
+                                     out_path: str, delta_gens,
+                                     dict_files: int = 4) -> None:
+    """The one dictionary derivation: term, df, shards from the per-shard
+    term-df sidecars ONLY — never the postings files (pinned in tests:
+    derivation still works with the postings directory moved away).
+
+    The base sidecars (``termdf/shard=N/``, written by the encode kernel)
+    mirror the base postings' block-n sums. Each committed delta generation
+    in ``delta_gens`` adds SIGNED adjustments (``delta_termdf``: +new
+    versions, -shadowed versions); the live df per (shard, term) is their
+    sum, and a shard drops out of a term's shard list when its net df
+    reaches 0 — exactly the state a full rebuild's dictionary would record.
+    Without deltas the base table is passed through un-aggregated.
 
     Layout is query-shaped: hash-repartitioned BY TERM and sorted within
-    files, so a per-query ``In(term, …)`` lookup prunes on parquet row-group
-    min/max stats instead of scanning the whole dictionary — at 10^12 docs
-    the dictionary is ~10^8 terms and an unsorted scan per query would be the
-    planning bottleneck (n_files scales with |vocab| there). repartition
-    (NOT coalesce): coalesce would fuse into the agg stage and run the whole
-    aggregation in n_files tasks — a hidden serial fraction that caps N→4N
-    scaling."""
-    (
-        postings.groupBy("term")
-        .agg(
-            F.sum("n").alias("df"),
-            F.sort_array(F.collect_set("shard")).alias("shards"),
+    files, so a per-query ``In(term, …)`` lookup prunes on parquet
+    row-group min/max stats instead of scanning the whole dictionary (at
+    10^12 docs the dictionary is ~10^8 terms; n_files scales with |vocab|
+    there). repartition, NOT coalesce: coalesce would fuse into the agg
+    stage and run the whole aggregation in n_files tasks."""
+    cols = ("term", F.col("df").cast("long").alias("df"), "shard")
+    termdf = read_parquet_or_none(spark, os.path.join(root, "termdf"))
+    if termdf is not None:
+        termdf = termdf.select(*cols)
+    dp = os.path.join(root, "delta_termdf")
+    delta = (read_parquet_or_none(spark, dp)
+             if delta_gens and os.path.isdir(dp) else None)
+    if delta is not None:
+        delta = delta.where(
+            F.col("gen").isin([int(g) for g in delta_gens])
+        ).select(*cols)
+        termdf = delta if termdf is None else termdf.unionByName(delta)
+        termdf = (
+            termdf.groupBy("shard", "term").agg(F.sum("df").alias("df"))
+            .where(F.col("df") > 0)
         )
-        .repartition(n_files, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_terms_dictionary_from_tf(tf_sharded: DataFrame, path: str,
-                                   n_files: int = 4) -> None:
-    """Dictionary derived from the (doc_id, term, tf, shard) relation instead
-    of the on-disk posting blocks: df per term = tf row count (each (doc,
-    term) pair becomes exactly one posting entry, so Σ block n ≡ the count),
-    shards = the term's shard set. Same aggregation shape, layout, and
-    schema as write_terms_dictionary — byte-compatible by construction and
-    asserted equal in tests/test_segments.py. The resumable build uses this
-    when the tf relation is already cached (fresh or partially-resumed run):
-    one job over the cache instead of a full re-read of every posting
-    segment from disk."""
-    (
-        tf_sharded.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sort_array(F.collect_set("shard")).alias("shards"),
+    if termdf is None:
+        (
+            spark.createDataFrame([], "term string, df long, shards array<int>")
+            .write.mode("overwrite").parquet(out_path)
         )
-        .repartition(n_files, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def termdf_from_postings(postings: DataFrame) -> DataFrame:
-    """Per-shard term document frequencies from posting block metadata:
-    (shard, term, df) with df = Σ block n within the shard. Same derivation
-    as write_terms_dictionary, just not collapsed across shards."""
-    return postings.groupBy("shard", "term").agg(F.sum("n").alias("df"))
-
-
-def termdf_from_tf(tf_sharded: DataFrame) -> DataFrame:
-    """Per-shard term document frequencies from the (doc_id, term, tf, shard)
-    relation: one tf row per (doc, term) pair ≡ one posting entry, so the
-    count equals Σ block n (the write_terms_dictionary_from_tf identity)."""
-    return tf_sharded.groupBy("shard", "term").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-
-
-def write_termdf_sidecars(termdf: DataFrame, path: str, n_shards: int) -> None:
-    """Persist per-shard (term, df) sidecars partitioned by shard.
-
-    This is the update path's dictionary state (the shard_stats analogue for
-    terms): update/delete re-derives ONLY the affected shards' sidecars from
-    their re-encoded postings and swaps those directories; the global
-    dictionary then aggregates the skinny sidecar table — it never re-reads
-    posting block metadata across all shards (the r5 O(all-shards) refresh).
-    repartition by shard → each shard's rows land wholly in one task → one
-    file per shard, sorted by term for row-group pruning."""
-    (
-        termdf.repartition(n_shards, "shard")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def write_terms_dictionary_from_termdf(termdf: DataFrame, path: str,
-                                       n_files: int = 4) -> None:
-    """Dictionary from the per-shard term-df sidecars: df = Σ per-shard df,
-    shards = the sidecar's shard set. Content-identical to
-    write_terms_dictionary by construction (sidecars are the same block-n
-    sums, partitioned) — asserted in tests/test_segments.py. Same
-    query-shaped layout (hash by term, sorted within files)."""
+        return
     (
         termdf.groupBy("term")
         .agg(
             F.sum("df").alias("df"),
             F.sort_array(F.collect_set("shard")).alias("shards"),
         )
-        .repartition(n_files, "term")
+        .repartition(dict_files, "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def _postings_from_sharded(sharded: DataFrame) -> DataFrame:
-    """Encoded posting blocks from the shard-partitioned fused relation.
-
-    Both cogroup sides derive from ``sharded`` (already hash-partitioned by
-    the doc-range shard key), so their required distributions are satisfied
-    and NO exchange is inserted — the whole build has exactly one shuffle,
-    the one that produced ``sharded`` (pinned in tests/test_plans.py). The
-    dl side's key columns are BOTH renamed in-flight (dl_shard, dl_doc_id):
-    tf and dl share a cached parent, and Spark's ambiguous-self-join
-    analysis rejects the cogroup when the two sides share a column's exprId
-    (surfaces when the pages input itself contains a join); alias-aware
-    output partitioning keeps the exchange elided through the rename."""
-    tf = sharded.select(
-        "shard", "doc_id", F.explode("tf_pairs").alias("p")
-    ).select(
-        "shard", "doc_id",
-        F.col("p.term").alias("term"), F.col("p.tf").alias("tf"),
-    )
-    dl = sharded.select(
-        F.col("shard").alias("dl_shard"),
-        F.col("doc_id").alias("dl_doc_id"), "doc_len",
-    )
-    return (
-        tf.groupBy("shard")
-        .cogroup(dl.groupBy("dl_shard"))
-        .applyInPandas(lambda l, r: _encode_shard(l, r), POSTINGS_SCHEMA)
+        .parquet(out_path)
     )
 
 
@@ -415,7 +455,7 @@ def write_index(
     fused = build_docs_and_tf(pages, doc_id_mode)
     # ONE corpus-volume exchange for the whole build: hash-repartition the
     # fused pass output by the doc-range shard key and cache THAT. Every
-    # output — postings (cogroup), docs, doclen, stats, term-df sidecars —
+    # output — postings + term-df sidecars (cogroup), docs, doclen, stats —
     # derives from this single partitioning: the cogroup's two sides inherit
     # HashPartitioning(shard, n_shards) so its exchanges are elided
     # (pinned in tests/test_plans.py), and the docs/doclen writes are
@@ -430,43 +470,27 @@ def write_index(
         .repartition(n_shards, "shard")
         .persist()
     )
-    postings = _postings_from_sharded(sharded)
+    os.makedirs(root, exist_ok=True)
 
     # Every output job is submitted CONCURRENTLY from the start (Spark job
     # submission is thread-safe): they all hang off the ONE corpus exchange,
     # whose map stage the DAG scheduler runs once and shares across the
     # concurrent jobs (the others show it as skipped), so the fixed
     # scheduling/IO latencies of the small outputs hide entirely under the
-    # postings encode instead of summing after it. r8: postings is no longer
-    # persisted — its only consumers besides the write (the dictionary
-    # aggregations) now read the written parquet with column pruning
-    # (term/shard/n only, never the posting blobs), which beats paying
-    # cache population for the full binary blocks in the serial path.
+    # postings encode instead of summing after it.
     def _postings_then_terms():
         # the cogroup kernel emits whole shards, already sorted by (term,
-        # block): write directly — no second exchange, ≤1 file per shard per
-        # task, and term row-group stats stay monotone for scan pruning
-        (
-            postings.write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(os.path.join(root, "postings"))
+        # block), and writes each shard's term-df sidecar as it goes; the
+        # dictionary then aggregates the skinny sidecars (never the
+        # posting blocks)
+        encode_postings(
+            tf_from_pairs(sharded), sharded.select("shard", "doc_id", "doc_len"),
+            os.path.join(root, "postings"),
+            termdf_dir=os.path.join(root, "termdf"),
         )
-        # dictionary chain: ONE skinny aggregation over the written postings
-        # (explicit schema so a 0-doc corpus reads as empty instead of
-        # failing inference), persisted, then the global dictionary derives
-        # from the per-shard sidecars (write_terms_dictionary_from_termdf ≡
-        # write_terms_dictionary, asserted in tests/test_segments.py) —
-        # one postings scan instead of the two independent aggregations the
-        # old shape ran, and the global agg reads the tiny termdf relation
-        pdisk = spark.read.schema(POSTINGS_SCHEMA).parquet(
-            os.path.join(root, "postings")
+        _derive_dictionary_from_sidecars(
+            spark, root, os.path.join(root, "terms"), [], dict_files
         )
-        termdf = termdf_from_postings(pdisk).persist()
-        write_termdf_sidecars(termdf, os.path.join(root, "termdf"), n_shards)
-        write_terms_dictionary_from_termdf(
-            termdf, os.path.join(root, "terms"), dict_files
-        )
-        termdf.unpersist()
 
     def _write_doclen():
         (
@@ -491,28 +515,56 @@ def write_index(
                 .parquet(os.path.join(root, "docs"))
             )
 
-    def _stats_row():
-        return sharded.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_len").alias("total_tokens"),
-        ).first()
-
     with ThreadPoolExecutor(max_workers=4) as ex:
         # postings first: FIFO scheduling gives the longest pole priority
         f_pt = ex.submit(_postings_then_terms)
         f_dl = ex.submit(_write_doclen)
         f_dc = ex.submit(_write_docs)
-        f_st = ex.submit(_stats_row)
-        row = f_st.result()
+        f_st = ex.submit(shard_totals, sharded)
+        shard_stats = f_st.result()
         f_dl.result()
         f_dc.result()
         f_pt.result()
-    n_docs = int(row.n_docs)
-    total = int(row.total_tokens or 0)
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": (total / n_docs) if n_docs else 0.0,
-        "total_tokens": total,
+    stats = index_stats(shard_stats, n_shards, doc_id_mode)
+    write_stats(root, stats)
+    sharded.unpersist()
+    return PhysicalIndex(root=root, stats=stats)
+
+
+def shard_totals(df: DataFrame) -> dict:
+    """Per-shard (n_docs, total_tokens) of a (shard, doc_len) relation —
+    the ``shard_stats`` subtotals that updates refresh per affected shard."""
+    rows = df.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("t")
+    ).collect()
+    return {int(r.shard): (int(r.n), int(r.t or 0)) for r in rows}
+
+
+def totals_fields(shard_stats: dict) -> dict:
+    """The stats.json corpus totals for the given per-shard subtotals;
+    avgdl is one exact-int division, so it is bit-identical however the
+    subtotals were gathered."""
+    n = sum(v[0] for v in shard_stats.values())
+    t = sum(v[1] for v in shard_stats.values())
+    return {
+        "n_docs": n,
+        "avgdl": (t / n) if n else 0.0,
+        "total_tokens": t,
+        "shard_stats": {
+            str(k): [int(v[0]), int(v[1])]
+            for k, v in sorted(shard_stats.items())
+        },
+    }
+
+
+def index_stats(shard_stats: dict, n_shards: int, doc_id_mode: str,
+                **extra) -> dict:
+    """The stats.json a full or resumable build writes: format version,
+    corpus totals, the per-shard subtotals and the scoring/layout
+    parameters."""
+    return {
+        "format_version": FORMAT_VERSION,
+        **totals_fields(shard_stats),
         "analyzer": ANALYZER_VERSION,
         "k1": K1,
         "b": B,
@@ -522,35 +574,40 @@ def write_index(
         # derives ids the same way — a mode mismatch would index the same
         # url under two ids and silently strand stale postings
         "doc_id_mode": doc_id_mode,
+        **extra,
     }
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, "stats.json"), "w") as f:
+
+
+def write_stats(root: str, stats: dict) -> None:
+    """Replace stats.json atomically (tmp + os.replace): it is the
+    reader-visible commit point of every build, update and compaction."""
+    tmp = os.path.join(root, "stats.json.tmp")
+    with open(tmp, "w") as f:
         json.dump(stats, f)
-    sharded.unpersist()
-    return PhysicalIndex(root=root, stats=stats)
+    os.replace(tmp, os.path.join(root, "stats.json"))
+
+
+def read_stats(root: str) -> dict:
+    """stats.json of the index at ``root``; raises ValueError for any
+    format other than FORMAT_VERSION (rebuild such an index)."""
+    with open(os.path.join(root, "stats.json")) as f:
+        stats = json.load(f)
+    found = stats.get("format_version")
+    if found != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {root} has format_version {found!r}; this version "
+            f"reads format_version {FORMAT_VERSION} only — rebuild the index"
+        )
+    return stats
 
 
 def open_index(root: str) -> PhysicalIndex:
-    with open(os.path.join(root, "stats.json")) as f:
-        stats = json.load(f)
-    return PhysicalIndex(root=root, stats=stats)
+    return PhysicalIndex(root=root, stats=read_stats(root))
 
 
 def read_docs(spark: SparkSession, root: str) -> DataFrame:
-    """The docs table in its LOGICAL schema (no physical partition column).
-
-    docs is stored partitioned by the doc-range shard key (docs/shard=N/)
-    so incremental update/delete can merge per shard with COW hard links
-    for untouched shards; pre-partitioned flat layouts (older indexes, or
-    a recovery that rolled forward a hand-written flat merge) read
-    identically — there is just no shard column to drop."""
-    df = spark.read.parquet(os.path.join(root, "docs"))
-    return df.drop("shard") if "shard" in df.columns else df
-
-
-def docs_is_sharded(docs_dir: str) -> bool:
-    """True when the docs table at ``docs_dir`` uses the partitioned
-    (shard=N/ subdirectory) layout."""
-    return os.path.isdir(docs_dir) and any(
-        e.startswith("shard=") for e in os.listdir(docs_dir)
-    )
+    """The docs table in its LOGICAL schema: docs is stored partitioned by
+    the doc-range shard key (docs/shard=N/) so incremental update/delete
+    can merge per shard with COW hard links for untouched shards; the
+    physical partition column is dropped here."""
+    return spark.read.parquet(os.path.join(root, "docs")).drop("shard")

@@ -351,7 +351,7 @@ def test_termdf_sidecar_dictionary_is_postings_free(indexes, spark, tmp_path):
     away (proves the refresh never scans block metadata across shards)."""
     import os
 
-    from importpipeline_spark.index.segments import (
+    from importpipeline_spark.index.store import (
         _derive_dictionary_from_sidecars,
     )
 
@@ -368,7 +368,8 @@ def test_termdf_sidecar_dictionary_is_postings_free(indexes, spark, tmp_path):
     os.rename(os.path.join(pidx_inc.root, "postings"), moved)
     try:
         out = str(tmp_path / "terms_chk")
-        _derive_dictionary_from_sidecars(spark, pidx_inc.root, out)
+        _derive_dictionary_from_sidecars(spark, pidx_inc.root, out,
+                                         pidx_inc.delta_gens())
         chk = sorted(
             (r.term, r.df, tuple(r.shards))
             for r in spark.read.parquet(out).collect()
@@ -419,34 +420,82 @@ def test_termdf_update_touches_only_affected_shards(spark, tmp_path):
     assert untouched
 
 
-def test_termdf_migration_on_legacy_index(spark, tmp_path):
-    """An index without sidecars (pre-r6 layout) migrates at its first
-    update: termdf is backfilled for ALL shards from the post-rebuild
-    postings and the dictionary still matches a full rebuild."""
+def test_legacy_format_is_refused(spark, tmp_path):
+    """An index whose stats.json lacks ``format_version`` (the pre-versioned
+    layout) or carries an older one is refused — never migrated in place —
+    by every reader and writer, with a ValueError naming the root and both
+    versions."""
+    import json
     import os
-    import shutil
+
+    from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.segments import (
+        build_index_resumable,
+        compact_deltas,
+        delete_from_index,
+    )
+    from importpipeline_spark.index.serve import LocalSearcher
+    from importpipeline_spark.index.store import FORMAT_VERSION, open_index
+
+    root = str(tmp_path / "legacy")
+    pages = gen_pages_df(spark, 100, seed=3, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    stats_path = os.path.join(root, "stats.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    upd = pages.where(F.xxhash64("url") % 5 == 0).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
+
+    for version in (None, FORMAT_VERSION - 1):
+        legacy = {k: v for k, v in stats.items() if k != "format_version"}
+        if version is not None:
+            legacy["format_version"] = version
+        with open(stats_path, "w") as f:
+            json.dump(legacy, f)
+        calls = [
+            lambda: open_index(root),
+            lambda: LocalSearcher(root),
+            lambda: update_index(spark, root, upd, run_id="l1",
+                                 input_snapshot="l1"),
+            lambda: delete_from_index(spark, root, upd.select("url")),
+            lambda: compact_deltas(spark, root),
+            # a resume over the same root (phase A done) reads stats first
+            lambda: build_index_resumable(spark, pages, root, n_shards=4),
+        ]
+        for call in calls:
+            with pytest.raises(ValueError) as ei:
+                call()
+            msg = str(ei.value)
+            assert root in msg, msg
+            assert f"format_version {version!r}" in msg, msg
+            assert f"format_version {FORMAT_VERSION}" in msg, msg
+        # refused, not migrated: stats.json is untouched
+        with open(stats_path) as f:
+            assert json.load(f) == legacy
+
+
+def test_corrupt_termdf_sidecar_raises(spark, tmp_path):
+    """A corrupt base term-df sidecar must fail the dictionary refresh
+    loudly; only a sidecar table with no parquet files at all reads as
+    empty. (Swallowing the read error would commit an empty or partial
+    dictionary.)"""
+    import glob
+    import os
 
     from importpipeline_spark.index.pagesgen import gen_pages_df
 
-    root = str(tmp_path / "legacy")
+    root = str(tmp_path / "corrupt")
     pages = gen_pages_df(spark, 200, seed=3, partitions=4)
     write_index(spark, pages, root, n_shards=4)
-    shutil.rmtree(os.path.join(root, "termdf"))  # simulate pre-r6 index
-
+    files = glob.glob(os.path.join(root, "termdf", "shard=*", "*.parquet"))
+    assert files
+    for p in files:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file" * 8)
     upd = pages.where(F.xxhash64("url") % 5 == 0).withColumn(
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
-    update_index(spark, root, upd, run_id="mig1", input_snapshot="m1")
-    assert os.path.isdir(os.path.join(root, "termdf"))
-
-    full_root = str(tmp_path / "legacy_full")
-    write_index(spark, pages.join(upd.select("url"), "url", "left_anti")
-                .unionByName(upd), full_root, n_shards=4)
-
-    def frame(r):
-        df = spark.read.parquet(os.path.join(r, "terms"))
-        return sorted((x.term, x.df, tuple(x.shards)) for x in df.collect())
-
-    assert frame(root) == frame(full_root)
+    with pytest.raises(Exception):
+        update_index(spark, root, upd, run_id="c1", input_snapshot="c1")
 
 
 def test_update_existence_probe_is_partition_pruned(spark, tmp_path):
@@ -481,7 +530,7 @@ def test_update_existence_probe_is_partition_pruned(spark, tmp_path):
     in_shards = _shards_of_urls(upd, "host_locality", 16)
     assert 1 <= len(in_shards) <= 2  # one host → contiguous id range
     old_docs = read_docs(spark, root)
-    probe = _docs_pruned_to_shards(spark, root, old_docs, in_shards)
+    probe = _docs_pruned_to_shards(spark, root, in_shards)
 
     buf = io.StringIO()
     with redirect_stdout(buf):

@@ -1,0 +1,132 @@
+"""On-disk invariants every writer of the base index must leave behind:
+
+- stats.json carries the current ``format_version``, and its per-shard
+  ``shard_stats`` sum to ``n_docs`` / ``total_tokens``;
+- every ``termdf/shard=N`` sidecar equals Σ block ``n`` per (shard, term)
+  recomputed from ``postings/``;
+- ``terms/`` equals the (term, df, shards) reference built from
+  ``postings/``.
+"""
+
+import glob
+import os
+import shutil
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from importpipeline_spark.index.pagesgen import gen_pages_df
+from importpipeline_spark.index.segments import (
+    build_index_resumable,
+    compact_deltas,
+    update_index,
+)
+from importpipeline_spark.index.store import (
+    FORMAT_VERSION,
+    read_stats,
+    write_index,
+)
+
+N = 240
+SHARDS = 8
+
+
+def _read_shard_table(root, table):
+    parts = []
+    for p in sorted(glob.glob(os.path.join(root, table, "shard=*", "*.parquet"))):
+        df = pd.read_parquet(p)
+        df["shard"] = int(p.split("shard=")[1].split("/")[0])
+        parts.append(df)
+    return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
+        {"shard": [], "term": [], "n": [], "df": []}
+    )
+
+
+def _check_invariants(root):
+    stats = read_stats(root)
+    assert stats["format_version"] == FORMAT_VERSION
+    assert stats.get("delta_gens", []) == []  # base-only index
+    ss = stats["shard_stats"]
+    assert sum(v[0] for v in ss.values()) == stats["n_docs"]
+    assert sum(v[1] for v in ss.values()) == stats["total_tokens"]
+    assert os.path.isdir(os.path.join(root, "termdf"))
+
+    post = _read_shard_table(root, "postings")
+    ref_td = sorted(
+        (int(s), t, int(n))
+        for (s, t), n in post.groupby(["shard", "term"])["n"].sum().items()
+    )
+    td = _read_shard_table(root, "termdf")
+    got_td = sorted(
+        (int(s), t, int(d)) for s, t, d in zip(td["shard"], td["term"], td["df"])
+    )
+    assert got_td == ref_td
+
+    ref_terms = sorted(
+        (t, int(g["n"].sum()), tuple(sorted({int(s) for s in g["shard"]})))
+        for t, g in post.groupby("term")
+    )
+    parts = sorted(glob.glob(os.path.join(root, "terms", "*.parquet")))
+    terms = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
+    got_terms = sorted(
+        (t, int(d), tuple(int(x) for x in s))
+        for t, d, s in zip(terms["term"], terms["df"], terms["shards"])
+    )
+    assert got_terms == ref_terms
+    return stats
+
+
+def _recrawl(spark):
+    """A fifth of the indexed urls re-crawled, plus a few new ones."""
+    return gen_pages_df(spark, N + 40, seed=7, partitions=4).where(
+        F.xxhash64("url") % 5 == 0
+    ).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
+
+
+def _write_index(spark, pages, root):
+    write_index(spark, pages, root, n_shards=SHARDS)
+
+
+def _resumable_clean(spark, pages, root):
+    build_index_resumable(spark, pages, root, n_shards=SHARDS, batch_size=3)
+
+
+def _resumable_killed_resumed(spark, pages, root):
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index_resumable(spark, pages, root, n_shards=SHARDS,
+                              batch_size=3, fail_after_segment=4)
+    build_index_resumable(spark, pages, root, n_shards=SHARDS, batch_size=3)
+
+
+def _resumable_noop_resume(spark, pages, root):
+    build_index_resumable(spark, pages, root, n_shards=SHARDS)
+    shutil.rmtree(os.path.join(root, "terms"))
+    build_index_resumable(spark, pages, root, n_shards=SHARDS)
+
+
+def _rebuild_update(spark, pages, root):
+    write_index(spark, pages, root, n_shards=SHARDS)
+    update_index(spark, root, _recrawl(spark), run_id="rb1",
+                 input_snapshot="rb1", strategy="rebuild")
+
+
+def _compaction(spark, pages, root):
+    write_index(spark, pages, root, n_shards=SHARDS)
+    update_index(spark, root, _recrawl(spark), run_id="d1",
+                 input_snapshot="d1")
+    assert read_stats(root)["delta_gens"]
+    compact_deltas(spark, root)
+
+
+@pytest.mark.parametrize("writer", [
+    _write_index, _resumable_clean, _resumable_killed_resumed,
+    _resumable_noop_resume, _rebuild_update, _compaction,
+], ids=lambda f: f.__name__.lstrip("_"))
+def test_base_writer_invariants(spark, tmp_path, writer):
+    pages = gen_pages_df(spark, N, seed=7, partitions=4)
+    root = str(tmp_path / "idx")
+    writer(spark, pages, root)
+    stats = _check_invariants(root)
+    docs = spark.read.parquet(os.path.join(root, "docs"))
+    assert stats["n_docs"] == docs.count() >= N

@@ -209,7 +209,7 @@ def test_build_outputs_share_one_exchange(spark):
     output at 100 TB."""
     from importpipeline_spark.index.build import build_docs_and_tf, shard_of
     from importpipeline_spark.index.pagesgen import gen_pages_df
-    from importpipeline_spark.index.store import _postings_from_sharded
+    from importpipeline_spark.index.store import encode_postings, tf_from_pairs
 
     pages = gen_pages_df(spark, 200, seed=5)
     fused = build_docs_and_tf(pages)
@@ -220,7 +220,9 @@ def test_build_outputs_share_one_exchange(spark):
     )
     try:
         sharded.count()
-        cg = _nodes_above_cache(_postings_from_sharded(sharded))
+        cg = _nodes_above_cache(encode_postings(
+            tf_from_pairs(sharded), sharded.select("shard", "doc_id", "doc_len")
+        ))
         assert "FlatMapCoGroupsInPandas" in cg, cg
         assert sum("InMemoryTableScan" in n for n in cg) == 2, cg
         assert not any("Exchange" in n for n in cg), cg

@@ -72,9 +72,10 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     got = bm25_topk_wand(spark, pidx, "the", k=5).collect()
     assert len(got) == 5
 
-    # the tf-derived dictionary (write_terms_dictionary_from_tf) must be
-    # content-identical to write_index's block-metadata-derived one — same
-    # rows, same df, same shard lists (df per term = tf row count ≡ Σ block n)
+    # the resumable build's dictionary must be content-identical to
+    # write_index's — same rows, same df, same shard lists (both derive
+    # from the encode kernel's sidecars: df per term = its run length ≡ Σ
+    # block n)
     from importpipeline_spark.index.store import write_index
 
     full_root = str(tmp_path / "full")
@@ -94,14 +95,14 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     # every build flavor leaves the per-shard term-df sidecars in place
     # (the update path's dictionary state), and the sidecar-derived
     # dictionary is content-identical to the written one
-    from importpipeline_spark.index.segments import (
+    from importpipeline_spark.index.store import (
         _derive_dictionary_from_sidecars,
     )
 
     for root in (clean_root, crash_root, full_root):
         assert os.path.isdir(os.path.join(root, "termdf")), root
     chk_path = str(tmp_path / "terms_from_sidecars")
-    _derive_dictionary_from_sidecars(spark, clean_root, chk_path)
+    _derive_dictionary_from_sidecars(spark, clean_root, chk_path, [])
     parts = sorted(glob.glob(os.path.join(chk_path, "*.parquet")))
     tc = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
     tc["shards"] = tc["shards"].map(lambda a: tuple(int(x) for x in a))
