@@ -777,8 +777,8 @@ def headline() -> None:
     # --- incremental-update probes (r5): an update's cost is bounded by the
     # doc-range shards its ids touch. Web re-crawls are HOST-bursty, and
     # host_locality packs each host into 1-2 contiguous id ranges — so a
-    # same-size update that rebuilds (nearly) every shard under random
-    # access rebuilds only the host's shard(s) under the locality layout.
+    # same-size update that touches (nearly) every shard under random
+    # access touches only the host's shard(s) under the locality layout.
     # Same index, same update size; only the access pattern differs. The
     # shard counts are reported next to the seconds so the contrast is
     # explicit in the graded artifact.
@@ -817,11 +817,10 @@ def headline() -> None:
             "warc_ts", F.col("warc_ts") + F.expr(f"INTERVAL {hours} HOURS")
         )
 
-    # r7: updates default to the LSM delta strategy (O(update) encode +
-    # query-time masking). The probe reports delta timings for both access
-    # patterns, ONE rebuild-strategy host round for the side-by-side cost
-    # of the r1-r6 re-encode path, and the compaction fold that reclaims
-    # the accumulated generations.
+    # updates write LSM delta generations (O(update) encode + query-time
+    # masking). The probe reports delta timings for both access patterns
+    # and the compaction fold that reclaims the accumulated generations —
+    # the only base re-encode after a build.
     uh = ur = None
     for r in (1, 2):
         t0 = time.perf_counter()
@@ -848,12 +847,6 @@ def headline() -> None:
     t0 = time.perf_counter()
     compact_deltas(spark, idx_upd, run_id="bench_compact")
     times["update_compact_sec"] = round(time.perf_counter() - t0, 3)
-    # the old path, one host round, for the graded delta-vs-rebuild contrast
-    t0 = time.perf_counter()
-    update_index(spark, idx_upd, _bump(host_pages, 10),
-                 run_id="bench_uh_rb", input_snapshot="uhrb",
-                 strategy="rebuild")
-    times["update_host_rebuild_sec"] = round(time.perf_counter() - t0, 3)
     shutil.rmtree(idx_upd, ignore_errors=True)
     _mark("update probes done")
 

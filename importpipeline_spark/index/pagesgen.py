@@ -99,7 +99,7 @@ _HOST_CUM = np.cumsum((np.arange(1, _N_HOSTS + 1, dtype=np.float64)) ** (-_ZIPF_
 #
 # The uniform profile's term occurrences are i.i.d. per doc, so per-block
 # posting statistics (max_tf, min_dl) concentrate and block-max bounds come
-# out flat — no pruning strategy can skip decodes there (PLANS §14). Real
+# out flat — no pruning scheme can skip decodes there (PLANS §14). Real
 # web crawls are nothing like that: a crawl visits hosts in runs, a host has
 # a topic (its pages reuse a host-specific vocabulary heavily), pages repeat
 # their topical words many times (burstiness), and document length is

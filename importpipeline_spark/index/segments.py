@@ -421,8 +421,9 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
 
     All affected shards encode in ONE cogroup job (keyed by shard → one
     parallel task per shard) and one doclen write; the per-shard directory
-    swaps happen afterwards. A kill mid-swap is covered by the caller's
-    marker protocol (recover_update re-runs the whole rebuild)."""
+    swaps happen afterwards. Only compaction calls this: a kill mid-swap
+    is covered by compact_deltas' marker (recover_update re-runs the whole
+    rebuild)."""
     from ..text.tokenizer import tokenize_udf
 
     affected = sorted(int(s) for s in affected)
@@ -624,16 +625,15 @@ def recover_update(spark: SparkSession, root: str) -> bool:
 
     - docs dir missing: roll the docs swap forward (docs.tmp present) or back
       (docs.old present).
-    - rebuild-mode marker (no ``mode`` field — also every pre-r7 marker):
-      re-run the affected-shard rebuild + stats/terms refresh against the
-      CURRENT docs table. If the crash happened before the docs swap, this
-      re-encodes identical bytes (deterministic) — a consistent pre-update
-      state; after the swap, it completes the update.
-    - delta-mode marker: the generation was FULLY staged before the marker
-      was written, so recovery always rolls forward — finish the docs swap
-      if the crash interrupted it, rename the staged generation into place
-      (idempotent), and refresh stats/dictionary, which atomically commits
-      the generation to ``delta_gens``.
+    - delta-mode marker (update or delete): the generation was FULLY staged
+      before the marker was written, so recovery always rolls forward —
+      finish the docs swap if the crash interrupted it, rename the staged
+      generation into place (idempotent), and refresh stats/dictionary,
+      which atomically commits the generation to ``delta_gens``.
+    - marker without ``mode``: only compaction writes one. Re-run the fold
+      (_rebuild_shards + stats/terms refresh) against the CURRENT docs
+      table; the re-encode is deterministic, so a repeat writes identical
+      bytes.
     - no marker: any staging/tmp leftovers are pre-commit garbage — swept.
     """
     docs_path = os.path.join(root, "docs")
@@ -679,14 +679,18 @@ def recover_update(spark: SparkSession, root: str) -> bool:
     return recovered
 
 
-def _swap_docs_under_marker(root: str, marker_payload: dict) -> None:
-    """marker (atomic) → docs→docs.old → docs.tmp→docs. Shared by both
-    update strategies; every crash window is covered by recover_update."""
+def _write_marker(root: str, payload: dict) -> None:
+    """Atomically write the update marker that recover_update reads."""
     marker = _update_marker(root)
-    mk_tmp = marker + ".tmp"
-    with open(mk_tmp, "w") as f:
-        json.dump(marker_payload, f)
-    os.replace(mk_tmp, marker)
+    with open(marker + ".tmp", "w") as f:
+        json.dump(payload, f)
+    os.replace(marker + ".tmp", marker)
+
+
+def _swap_docs_under_marker(root: str, marker_payload: dict) -> None:
+    """marker (atomic) → docs→docs.old → docs.tmp→docs; every crash window
+    is covered by recover_update."""
+    _write_marker(root, marker_payload)
     docs_path = os.path.join(root, "docs")
     docs_old = docs_path + ".old"
     shutil.rmtree(docs_old, ignore_errors=True)
@@ -714,6 +718,54 @@ def _maybe_autocompact(spark, root: str, affected, compact_after,
     return PhysicalIndex(root=root, stats=stats)
 
 
+def _commit_delta_mutation(spark, root: str, stats: dict, stage, stage_args,
+                           cached: DataFrame, merged_aff: DataFrame,
+                           affected: list, run_id: str, input_snapshot: str,
+                           compact_after) -> PhysicalIndex:
+    """The one commit sequence of update_index and delete_from_index.
+
+    ``stage(spark, root, *stage_args, n_shards)`` stages the generation
+    (deltas.stage_update_delta or deltas.stage_delete_delta) while the
+    docs copy-on-write merge of ``merged_aff`` — the post-mutation rows of
+    the ``affected`` shards — runs beside it; both are pre-marker steps a
+    crash leaves as swept garbage. ``cached`` (the caller-persisted input
+    both read) is released once they are joined. Then: marker + docs swap,
+    rename the generation into place, refresh stats/dictionary (the
+    reader-visible commit), drop the marker, auto-compact."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    n_shards = int(stats["n_shards"])
+    docs_path = os.path.join(root, "docs")
+    gen = _deltas.next_gen(stats)
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        futs = [
+            ex.submit(stage, spark, root, *stage_args, n_shards),
+            ex.submit(_write_docs_tmp_cow, spark, docs_path, merged_aff,
+                      affected, n_shards),
+        ]
+        errs = []
+        for f in futs:
+            try:
+                f.result()
+            except Exception as e:  # join both before surfacing
+                errs.append(e)
+        if errs:
+            raise errs[0]
+    cached.unpersist()
+
+    _swap_docs_under_marker(root, {
+        "affected": affected, "n_shards": n_shards, "run_id": run_id,
+        "input_snapshot": input_snapshot, "mode": "delta", "gen": gen,
+    })
+    _commit_delta_gen(root, gen)
+    stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
+                                 affected=affected, new_gen=gen)
+    os.remove(_update_marker(root))
+    shutil.rmtree(docs_path + ".old", ignore_errors=True)
+    return _maybe_autocompact(spark, root, affected, compact_after,
+                              run_id, input_snapshot, stats)
+
+
 def update_index(
     spark: SparkSession,
     root: str,
@@ -728,35 +780,36 @@ def update_index(
     1. classify the snapshot against the existing docs table
        (ExistState semantics — skip ExistSame/ExistNewer); the probe is
        partition-pruned to the shards the incoming urls' ids map to;
-    2. merge the docs table (crash-safe swap: tmp write → marker → renames,
-       with recover_update rolling an interrupted swap forward or back);
-    3. index the changed docs:
-       - ``strategy="delta"`` (default, r7): encode ONLY the changed docs
-         into an immutable delta generation (same codec); query kernels
-         mask shadowed base entries via the owner-generation rule and
-         compaction folds deltas into the base past ``compact_after``
-         generations per shard (deltas.py). CPU cost is O(update bytes);
-         the only O(affected-shard) work left is columnar IO (the docs COW
-         merge + the old-version term scan), with zero re-tokenize /
-         re-encode of unchanged docs.
-       - ``strategy="rebuild"``: re-encode every affected shard from the
-         merged docs (the r1-r6 path; also the compaction primitive).
-    4. refresh global stats from per-shard subtotals and the dictionary
-       from the (base + delta) term-df sidecar tables — never a
-       block-metadata scan across shards.
+    2. encode ONLY the changed docs into an immutable delta generation
+       (same codec as the base; deltas.py) while the docs table's affected
+       shards are merged copy-on-write — zero re-tokenize / re-encode of
+       unchanged docs. Query kernels mask shadowed base entries via the
+       owner-generation rule;
+    3. commit under the marker protocol (_commit_delta_mutation): docs
+       swap, generation rename, then global stats from per-shard subtotals
+       and the dictionary from the (base + delta) term-df sidecar tables —
+       never a block-metadata scan across shards;
+    4. auto-compact shards holding ``compact_after`` or more generations.
 
-    Either strategy is rank-identical to a full rebuild over the merged
-    corpus; a kill at ANY point leaves the index recoverable via
-    recover_update (invoked automatically on the next call) — verified in
-    tests, including mid-delta-commit crash windows.
+    The result is rank-identical to a full rebuild over the merged corpus.
+    Re-encoding the affected shards' base segments — what an update used
+    to do in place — is ``update_index`` followed by
+    ``compact_deltas(affected)``, which yields the same base tables. A kill
+    at ANY point leaves the index recoverable via recover_update (invoked
+    automatically on the next call).
+
+    ``strategy`` accepts only ``"delta"``.
     """
-    if strategy not in ("delta", "rebuild"):
-        raise ValueError(f"unknown update strategy: {strategy!r}")
+    if strategy != "delta":
+        raise ValueError(
+            f"unknown update strategy: {strategy!r}; updates always write a "
+            "delta generation — use compact_deltas to fold shards into "
+            "their base segments"
+        )
     recover_update(spark, root)
 
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
-    docs_path = os.path.join(root, "docs")
 
     # the existence probe joins on url, and an incoming url's existing copy
     # can only live in the shard its (mode-recorded) id maps to — so the
@@ -779,10 +832,8 @@ def update_index(
         changed_pages, stats.get("doc_id_mode", "hash"), cache=True
     )
     extract_cache = getattr(changed_docs, "cached_deps", [])
-    if strategy == "rebuild":
-        changed_docs = changed_docs.drop("tokens")
-    # (delta keeps ``tokens``: the generation's postings/termdf derive from
-    # them without a second Python tokenize pass over the update)
+    # ``tokens`` stays: the generation's postings/termdf derive from them
+    # without a second Python tokenize pass over the update
     changed_docs = changed_docs.persist()
     # quarantine records are appended BEFORE the no-change early return:
     # if every changed page failed extraction, changed_docs is empty but the
@@ -810,71 +861,26 @@ def update_index(
         ).distinct().collect()
     )
 
-    # merged docs table → tmp (staged BEFORE the marker). Only the AFFECTED
-    # shards' rows are merged and written — a changed url can never move
-    # shards (doc_id = f(url) is deterministic), so per-shard merges are
-    # closed and the staging helper hard-links everything else (COW):
-    # staging cost is O(affected shards), not a corpus rewrite. The filter
+    # Only the AFFECTED shards' rows are merged — a changed url can never
+    # move shards (doc_id = f(url) is deterministic), so per-shard merges
+    # are closed and the COW staging hard-links everything else. The filter
     # is on the physical partition column, so the scan reads only the
     # affected shard directories.
     old_aff = _docs_pruned_to_shards(spark, root, affected)
-
     merged_aff = old_aff.join(
         changed_docs.select("url"), "url", "left_anti"
     ).unionByName(changed_docs.drop("tokens"))
-    if strategy == "delta":
-        gen = _deltas.next_gen(stats)
-        # live versions being shadowed — their stored text re-tokenizes to
-        # exactly the terms the base postings count, giving the signed
-        # term-df adjustments (O(update) CPU; see deltas.stage_update_delta)
-        old_replaced = old_aff.join(
-            changed_docs.select("url"), "url", "left_semi"
-        )
-        # the delta staging and the docs COW merge are independent
-        # pre-marker steps over the cached changed docs — overlap them (r8;
-        # both are swept/rolled back identically on a pre-marker crash, so
-        # their relative order never mattered)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _ex:
-            f_stage = _ex.submit(_deltas.stage_update_delta, spark, root,
-                                 changed_docs, old_replaced, n_shards)
-            f_cow = _ex.submit(_write_docs_tmp_cow, spark, docs_path,
-                               merged_aff, affected, n_shards)
-            errs = []
-            for f in (f_stage, f_cow):
-                try:
-                    f.result()
-                except Exception as e:
-                    errs.append(e)
-            if errs:
-                raise errs[0]
-    else:
-        _write_docs_tmp_cow(spark, docs_path, merged_aff, affected,
-                            n_shards)
-    changed_docs.unpersist()
-
-    payload = {"affected": affected, "n_shards": n_shards,
-               "run_id": run_id, "input_snapshot": input_snapshot}
-    if strategy == "delta":
-        payload.update(mode="delta", gen=gen)
-    _swap_docs_under_marker(root, payload)
-
-    if strategy == "delta":
-        _commit_delta_gen(root, gen)
-        stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
-                                     affected=affected, new_gen=gen)
-    else:
-        _rebuild_shards(spark, root, affected, n_shards, run_id,
-                        input_snapshot)
-        stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
-                                     affected=affected)
-    os.remove(_update_marker(root))
-    shutil.rmtree(docs_path + ".old", ignore_errors=True)
-    if strategy == "delta":
-        return _maybe_autocompact(spark, root, affected, compact_after,
-                                  run_id, input_snapshot, stats)
-    return PhysicalIndex(root=root, stats=stats)
+    # live versions being shadowed — their stored text re-tokenizes to
+    # exactly the terms the base postings count, giving the signed term-df
+    # adjustments (O(update) CPU; see deltas.stage_update_delta)
+    old_replaced = old_aff.join(
+        changed_docs.select("url"), "url", "left_semi"
+    )
+    return _commit_delta_mutation(
+        spark, root, stats, _deltas.stage_update_delta,
+        (changed_docs, old_replaced), changed_docs, merged_aff, affected,
+        run_id, input_snapshot, compact_after,
+    )
 
 
 def delete_from_index(
@@ -883,29 +889,26 @@ def delete_from_index(
     urls: DataFrame,
     run_id: str = "del1",
     input_snapshot: str = "del1",
-    strategy: str = "delta",
     compact_after: int | None = 8,
 ) -> PhysicalIndex:
     """Per-record delete on the physical index (the reference's delete action
     reaching the store — ESIndexDocType.cs delete path): drop every doc whose
-    url appears in ``urls``. ``strategy="delta"`` (default) writes one
-    tombstone generation — doclen rows with doc_len = -1 mask the doomed
-    docs out of every older segment, and signed term-df adjustments keep
-    df/idf exact — O(delete bytes), no re-encode until compaction.
-    ``strategy="rebuild"`` re-encodes the affected shards (the r1-r6 path).
-    Same crash-safe swap+marker protocol as update_index; results equal a
-    full rebuild over the survivors (including df/idf shifts).
+    url appears in ``urls``. One tombstone generation — doclen rows with
+    doc_len = -1 mask the doomed docs out of every older segment, and
+    signed term-df adjustments keep df/idf exact — O(delete bytes), no
+    re-encode. It commits through the same marker protocol as update_index
+    (_commit_delta_mutation); results equal a full rebuild over the
+    survivors (including df/idf shifts), and ``delete_from_index`` followed
+    by ``compact_deltas(affected)`` re-encodes those shards' base segments
+    without the doomed docs.
 
     ``urls`` must not lazily depend on this index's own docs table (the
     delete replaces those files; a caller-side plan re-evaluated afterwards
     would read gone paths) — pass a materialized or independent frame."""
-    if strategy not in ("delta", "rebuild"):
-        raise ValueError(f"unknown delete strategy: {strategy!r}")
     recover_update(spark, root)
 
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
-    docs_path = os.path.join(root, "docs")
 
     urls_only = urls.select("url").distinct()
     # same pruning as update_index's existence probe: a doomed url's doc can
@@ -926,56 +929,13 @@ def delete_from_index(
         return PhysicalIndex(root=root, stats=stats)
 
     # survivors of the affected shards only; everything else hard-links
-    # (COW staging — same shape as update_index's merge)
-    base = _docs_pruned_to_shards(spark, root, affected)
-    merged_aff = base.join(urls_only, "url", "left_anti")
-    gen = None
-    if strategy == "delta":
-        gen = _deltas.next_gen(stats)
-        # tombstone staging and the survivors COW merge are independent
-        # pre-marker steps — overlap them (r8; same crash semantics as
-        # update_index's overlapped staging)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _ex:
-            f_stage = _ex.submit(_deltas.stage_delete_delta, spark, root,
-                                 doomed, n_shards)
-            f_cow = _ex.submit(_write_docs_tmp_cow, spark, docs_path,
-                               merged_aff, affected, n_shards)
-            errs = []
-            for f in (f_stage, f_cow):
-                try:
-                    f.result()
-                except Exception as e:
-                    errs.append(e)
-            if errs:
-                raise errs[0]
-    else:
-        _write_docs_tmp_cow(spark, docs_path, merged_aff, affected,
-                            n_shards)
-    doomed.unpersist()
-
-    payload = {"affected": affected, "n_shards": n_shards,
-               "run_id": run_id, "input_snapshot": input_snapshot}
-    if strategy == "delta":
-        payload.update(mode="delta", gen=gen)
-    _swap_docs_under_marker(root, payload)
-
-    if strategy == "delta":
-        _commit_delta_gen(root, gen)
-        stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
-                                     affected=affected, new_gen=gen)
-    else:
-        _rebuild_shards(spark, root, affected, n_shards, run_id,
-                        input_snapshot)
-        stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
-                                     affected=affected)
-    os.remove(_update_marker(root))
-    shutil.rmtree(docs_path + ".old", ignore_errors=True)
-    if strategy == "delta":
-        return _maybe_autocompact(spark, root, affected, compact_after,
-                                  run_id, input_snapshot, stats)
-    return PhysicalIndex(root=root, stats=stats)
+    merged_aff = _docs_pruned_to_shards(spark, root, affected).join(
+        urls_only, "url", "left_anti"
+    )
+    return _commit_delta_mutation(
+        spark, root, stats, _deltas.stage_delete_delta, (doomed,), doomed,
+        merged_aff, affected, run_id, input_snapshot, compact_after,
+    )
 
 
 def compact_deltas(
@@ -987,7 +947,8 @@ def compact_deltas(
 ) -> PhysicalIndex:
     """Fold delta generations into the base segments — the reference's
     delegated optimize-to-N-segments (ESIndexDefinitions.cs:452-458) over
-    this layout. For each given shard (default: every shard holding delta
+    this layout, and the only path that re-encodes base segments after a
+    build. For each given shard (default: every shard holding delta
     data) the base is re-encoded from the merged docs table and the shard's
     delta data is purged in the same marker-protected window
     (_rebuild_shards); generations left without data drop out of
@@ -1006,18 +967,13 @@ def compact_deltas(
     if input_snapshot is None:
         input_snapshot = stats.get("input_snapshot", "compact")
 
-    # rebuild-mode marker: recovery re-runs the fold against current docs
-    marker = _update_marker(root)
-    mk_tmp = marker + ".tmp"
-    with open(mk_tmp, "w") as f:
-        json.dump({"affected": todo, "n_shards": n_shards,
-                   "run_id": run_id, "input_snapshot": input_snapshot}, f)
-    os.replace(mk_tmp, marker)
-
+    # marker without a mode: recovery re-runs the fold against current docs
+    _write_marker(root, {"affected": todo, "n_shards": n_shards,
+                         "run_id": run_id, "input_snapshot": input_snapshot})
     _rebuild_shards(spark, root, todo, n_shards, run_id, input_snapshot)
     stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
                                  affected=todo)
-    os.remove(marker)
+    os.remove(_update_marker(root))
     return PhysicalIndex(root=root, stats=stats)
 
 
@@ -1025,7 +981,7 @@ def compact_deltas(
 #
 # update_index above mutates an index root in place: crash-safe (marker
 # protocol + recover_update) but a CONCURRENT reader mid-update can observe a
-# mixed state (new docs + not-yet-rebuilt postings). The published lifecycle
+# mixed state (new docs + not-yet-committed delta). The published lifecycle
 # below gives Iceberg-style snapshot isolation on top of it: every update
 # builds a NEW generation directory that hard-links the unchanged files of
 # the current one (no data copy; a changed shard is rewritten as fresh
@@ -1101,14 +1057,47 @@ def init_published_index(
     return pidx
 
 
-def open_current_index(store_root: str) -> PhysicalIndex:
+def _current_or_raise(store_root: str) -> str:
     from ..sinks.writers import current_generation
-    from .store import open_index
 
     cur = current_generation(store_root)
     if cur is None:
         raise FileNotFoundError(f"no published generation under {store_root}")
-    return open_index(cur)
+    return cur
+
+
+def open_current_index(store_root: str) -> PhysicalIndex:
+    from .store import open_index
+
+    return open_index(_current_or_raise(store_root))
+
+
+def _publish_cow(store_root: str, mutate, keep_generations: int,
+                 skip=None) -> PhysicalIndex:
+    """Run ``mutate(gen_root)`` — an in-place index operation — on a COW
+    copy of the CURRENT generation, then flip CURRENT to it. A crash at ANY
+    point leaves CURRENT untouched (the old generation stays complete and
+    immutable; the abandoned copy is removed). Old generations beyond
+    ``keep_generations`` are removed after a successful publish (never the
+    one just published nor its predecessor). ``skip(cur)`` true → nothing
+    to do: the current generation is returned unchanged."""
+    from ..sinks.writers import publish_generation
+    from .store import open_index
+
+    cur = _current_or_raise(store_root)
+    if skip is not None and skip(cur):
+        return open_index(cur)
+    new_gen = _new_gen_path(store_root)
+    _copy_index_tree(cur, new_gen)
+    try:
+        pidx = mutate(new_gen)
+    except BaseException:
+        # abandoned generation: CURRENT never moved, readers unaffected
+        shutil.rmtree(new_gen, ignore_errors=True)
+        raise
+    publish_generation(store_root, new_gen)
+    _gc_generations(store_root, keep_generations, {new_gen, cur})
+    return pidx
 
 
 def update_index_published(
@@ -1119,30 +1108,14 @@ def update_index_published(
     input_snapshot: str = "snap2",
     keep_generations: int = 2,
 ) -> PhysicalIndex:
-    """Snapshot-isolated incremental update: copy-on-write generation +
-    atomic CURRENT flip. A crash at ANY point leaves CURRENT untouched (the
-    old generation stays complete and immutable); re-running produces a fresh
-    generation. Old generations beyond ``keep_generations`` are removed after
-    a successful publish (never the one just published)."""
-    from ..sinks.writers import current_generation, publish_generation
-
-    cur = current_generation(store_root)
-    if cur is None:
-        raise FileNotFoundError(f"no published generation under {store_root}")
-    new_gen = _new_gen_path(store_root)
-    _copy_index_tree(cur, new_gen)
-    try:
-        pidx = update_index(
-            spark, new_gen, new_pages, run_id=run_id,
-            input_snapshot=input_snapshot,
-        )
-    except BaseException:
-        # abandoned generation: CURRENT never moved, readers unaffected
-        shutil.rmtree(new_gen, ignore_errors=True)
-        raise
-    publish_generation(store_root, new_gen)
-    _gc_generations(store_root, keep_generations, {new_gen, cur})
-    return pidx
+    """Snapshot-isolated incremental update: update_index inside a
+    copy-on-write generation + atomic CURRENT flip (_publish_cow)."""
+    return _publish_cow(
+        store_root,
+        lambda gen: update_index(spark, gen, new_pages, run_id=run_id,
+                                 input_snapshot=input_snapshot),
+        keep_generations,
+    )
 
 
 def compact_index_published(
@@ -1156,26 +1129,14 @@ def compact_index_published(
     COW generation directory and atomically flip CURRENT — readers of the
     published generation never observe the fold in progress (compact_deltas
     mutates a root in place, which is only safe under the single-writer /
-    no-concurrent-reader contract). Same crash story as
-    update_index_published: an abandoned generation leaves CURRENT
-    untouched."""
-    from ..sinks.writers import current_generation, publish_generation
-
-    cur = current_generation(store_root)
-    if cur is None:
-        raise FileNotFoundError(f"no published generation under {store_root}")
-    if not _deltas.shard_gen_map(cur):
-        return open_current_index(store_root)  # nothing to fold
-    new_gen = _new_gen_path(store_root)
-    _copy_index_tree(cur, new_gen)
-    try:
-        pidx = compact_deltas(spark, new_gen, shards=shards, run_id=run_id)
-    except BaseException:
-        shutil.rmtree(new_gen, ignore_errors=True)
-        raise
-    publish_generation(store_root, new_gen)
-    _gc_generations(store_root, keep_generations, {new_gen, cur})
-    return pidx
+    no-concurrent-reader contract). A generation without deltas is
+    returned as is."""
+    return _publish_cow(
+        store_root,
+        lambda gen: compact_deltas(spark, gen, shards=shards, run_id=run_id),
+        keep_generations,
+        skip=lambda cur: not _deltas.shard_gen_map(cur),
+    )
 
 
 def classify_snapshot(

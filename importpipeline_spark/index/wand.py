@@ -9,7 +9,7 @@ Endpoints/ESIndexDocType.cs:193-202; analysis chain index.config.js:66-76):
   per-shard block-max pruned scoring inside applyInPandas (numpy) → global
   top-k merge: orderBy(score DESC, doc_id ASC).limit(k) over ≤ k·shards rows.
 
-Pruning strategy — *interval-sweep block-max* (exact, fully vectorized):
+Pruning — *interval-sweep block-max* (exact, fully vectorized):
 block boundaries of the query terms cut the shard's doc-id space into
 elementary intervals; each interval's upper bound is the sum of the covering
 blocks' bounds (the classic block-max WAND bound, Ding & Suel 2011, computed

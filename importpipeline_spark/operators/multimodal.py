@@ -1,20 +1,13 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Image/audio/video travel as ``binary`` columns with typed metadata structs;
-decode / feature-extract / resize / frame-sample run as Arrow-batched UDFs
-over ``mapInPandas``.
-
-Decode is REAL for the formats stdlib+numpy can parse — PNG images
-(``decode_png``: zlib inflate + scanline filter reconstruction, a real
-compressed codec with no external library), P6 PPM images (``decode_ppm``),
-WAV audio (``decode_wav``, via the stdlib ``wave`` module), and
-PPM-sequence "video" (``split_ppm_frames``) — so decode, nearest-neighbor
-resize, per-channel statistics, audio RMS/duration, and frame sampling all
-run end-to-end on actual pixel/sample data. Only formats needing codec
-libraries absent from this container (JPEG/MP3/H.264) remain stubbed
-(``decode_image_stub`` raises NotImplementedError unless the deterministic
-fake is requested); the Spark-side plumbing — schema, partitioning, UDF
-signature, batch shape — is identical either way.
+Image payloads travel as ``binary`` columns; ``extract_meta`` turns them
+into a typed metadata struct (size, mime, content hash, width, height) with
+an Arrow-batched ``mapInPandas`` pass. Width and height come from the
+container header alone — the PNG IHDR chunk, the JPEG SOF0/SOF1 segment, or
+the P6 PPM header — so no raster is ever decoded. Any other payload (e.g.
+the ``FAKEIMG1`` stand-ins of ``attach_fake_payload``) gets deterministic
+dims derived from its md5, so the plumbing runs end to end without an image
+library.
 
 This extends the reference's binary-input layer (streams were the only binary
 surface — SURVEY.md §1.2) to first-class payload columns.
@@ -23,9 +16,10 @@ surface — SURVEY.md §1.2) to first-class payload columns.
 from __future__ import annotations
 
 import hashlib
+import struct
+import zlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -44,41 +38,21 @@ def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).withColumn("mime", F.lit("image/x-fake"))
 
 
-def decode_image_stub(payload: bytes, fake: bool = True):
-    """STUB: real decode needs an image library not present here.
-
-    With ``fake=True`` returns deterministic (width, height) derived from the
-    payload hash so downstream plumbing is exercised end-to-end.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "image decode requires an image library (PIL/cv2) not present in "
-            "this environment; plumbing is exercised with fake=True"
-        )
+def decode_image_stub(payload: bytes):
+    """Deterministic (width, height) in [16, 80) from the payload's md5 —
+    the dims of a payload no header sniffer recognizes."""
     h = hashlib.md5(payload).digest()
     return 16 + h[0] % 64, 16 + h[1] % 64
 
 
-# ------------------------------------------------------------ real codecs --
-# P6 PPM and WAV are fully specified, uncompressed formats parseable with
-# stdlib + numpy — no external codec needed, so these paths decode REAL data.
-
-
-def encode_ppm(img: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → binary P6 PPM."""
-    h, w = img.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
-
-
 def _ppm_header(payload: bytes, pos: int):
-    """Parse one P6 header at ``pos`` → (w, h, raster_start). Shared by
-    decode_ppm and split_ppm_frames so validation (magic, comments, maxval)
-    cannot drift between them. Raises ValueError on malformed input
-    (quarantine via the errorhandler pattern upstream)."""
+    """Parse one P6 header at ``pos`` → (w, h, raster_start). Raises
+    ValueError on malformed input (quarantine via the errorhandler pattern
+    upstream)."""
     if payload[pos : pos + 2] != b"P6":
         raise ValueError(f"not a P6 PPM payload at offset {pos}")
     # header = magic, width, height, maxval as whitespace-separated tokens
-    # (comment lines are not produced by our encoder and rejected here)
+    # (comment lines are rejected)
     p, fields = pos + 2, []
     while len(fields) < 3:
         while p < len(payload) and payload[p : p + 1].isspace():
@@ -95,81 +69,11 @@ def _ppm_header(payload: bytes, pos: int):
     return w, h, p + 1  # single whitespace after maxval
 
 
-def decode_ppm(payload: bytes) -> np.ndarray:
-    """Binary P6 PPM → (h, w, 3) uint8."""
-    w, h, pos = _ppm_header(payload, 0)
-    n = w * h * 3
-    raw = payload[pos : pos + n]
-    if len(raw) != n:
-        raise ValueError("truncated PPM raster")
-    return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Paeth predictor (PNG spec §9.4), vectorized per channel lane."""
-    p = a + b - c
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-
-
-def encode_png(img: np.ndarray, row_filters=None) -> bytes:
-    """(h, w) or (h, w, c∈{1,3,4}) uint8 → non-interlaced 8-bit PNG,
-    pure stdlib (zlib + struct). ``row_filters`` optionally forces a filter
-    type (0-4) per scanline — tests use it to exercise every reconstruction
-    path in decode_png against known pixels."""
-    import struct
-    import zlib
-
-    a = np.asarray(img, dtype=np.uint8)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, c = a.shape
-    color_type = {1: 0, 3: 2, 4: 6}[c]
-    if row_filters is None:
-        row_filters = [0] * h
-    raw = bytearray()
-    prev = np.zeros((w, c), dtype=np.int64)
-    for y in range(h):
-        row = a[y].astype(np.int64)
-        f = int(row_filters[y])
-        left = np.zeros_like(row)
-        left[1:] = row[:-1]
-        upleft = np.zeros_like(prev)
-        upleft[1:] = prev[:-1]
-        if f == 0:
-            enc = row
-        elif f == 1:
-            enc = row - left
-        elif f == 2:
-            enc = row - prev
-        elif f == 3:
-            enc = row - (left + prev) // 2
-        elif f == 4:
-            enc = row - _paeth(left, prev, upleft)
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        raw.append(f)
-        raw += (enc % 256).astype(np.uint8).tobytes()
-        prev = row
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (_PNG_SIG + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
 
 
 def _png_chunks(payload: bytes):
     """Iterate (tag, data) over a PNG's chunks, validating CRCs."""
-    import struct
-    import zlib
-
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos = 8
@@ -190,10 +94,8 @@ def _png_chunks(payload: bytes):
 
 
 def _png_ihdr(payload: bytes):
-    """(w, h, channels) from the IHDR only — no raster inflate; used by
-    metadata extraction so dims don't cost a full decode at scale."""
-    import struct
-
+    """(w, h, channels) from the IHDR only — no raster inflate, so dims
+    don't cost a full decode at scale."""
     for tag, data in _png_chunks(payload):
         if tag == b"IHDR":
             w, h, depth, color_type, _, _, interlace = struct.unpack(
@@ -207,258 +109,52 @@ def _png_ihdr(payload: bytes):
     raise ValueError("PNG missing IHDR")
 
 
-def decode_png(payload: bytes) -> np.ndarray:
-    """Non-interlaced 8-bit gray/RGB/RGBA PNG → (h, w, c) uint8 — REAL
-    compressed-codec decode with stdlib zlib inflate + numpy scanline
-    filter reconstruction (PNG spec filters 0-4: None/Sub/Up/Average/
-    Paeth). Palette, 16-bit, and interlaced inputs raise ValueError
-    (quarantine upstream via the errorhandler pattern). Sub rows
-    reconstruct as a per-lane cumsum; Average/Paeth rows run a flat
-    bytearray pass (left-neighbor dependence is inherently sequential)."""
-    import struct
-    import zlib
-
-    ihdr = None
-    idat = bytearray()
-    for tag, data in _png_chunks(payload):
-        if tag == b"IHDR":
-            ihdr = data
-        elif tag == b"IDAT":
-            idat += data
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    # parse the IHDR we already collected — no second chunk walk (ADVICE r6)
-    w, h, depth, color_type, _, _, interlace = struct.unpack(">IIBBBBB", ihdr)
-    c = {0: 1, 2: 3, 6: 4}.get(color_type)
-    if depth != 8 or c is None or interlace:
-        raise ValueError(
-            f"unsupported PNG (depth={depth}, color_type={color_type}, "
-            f"interlace={interlace}); 8-bit gray/RGB/RGBA only")
-    raw = zlib.decompress(bytes(idat))
-    stride = w * c
-    if len(raw) != h * (stride + 1):
-        raise ValueError("bad PNG raster size")
-    rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
-    ftypes = rows[:, 0]
-    out = np.zeros((h, w, c), dtype=np.uint8)
-    prev = np.zeros((w, c), dtype=np.int64)
-    prev_ba = bytearray(stride)
-    for y in range(h):
-        f = int(ftypes[y])
-        if f == 0:
-            rec = rows[y, 1:].astype(np.int64).reshape(w, c)
-        elif f == 1:
-            rec = np.cumsum(
-                rows[y, 1:].astype(np.int64).reshape(w, c), axis=0
-            ) % 256
-        elif f == 2:
-            rec = (rows[y, 1:].astype(np.int64).reshape(w, c) + prev) % 256
-        elif f in (3, 4):
-            # left-neighbor dependence is inherently sequential; a flat
-            # bytearray loop over plain ints runs ~10-30× faster than the
-            # old per-pixel numpy pass (no per-element array allocations —
-            # ADVICE r6), and byte arithmetic needs no % 256 bookkeeping
-            cur = bytearray(rows[y, 1:].tobytes())
-            pr = prev_ba
-            if f == 3:
-                for i in range(stride):
-                    left = cur[i - c] if i >= c else 0
-                    cur[i] = (cur[i] + ((left + pr[i]) >> 1)) & 0xFF
-            else:
-                for i in range(stride):
-                    a = cur[i - c] if i >= c else 0
-                    b = pr[i]
-                    cc = pr[i - c] if i >= c else 0
-                    p = a + b - cc
-                    pa = p - a if p >= a else a - p
-                    pb = p - b if p >= b else b - p
-                    pc = p - cc if p >= cc else cc - p
-                    pred = a if (pa <= pb and pa <= pc) else (
-                        b if pb <= pc else cc)
-                    cur[i] = (cur[i] + pred) & 0xFF
-            rec = np.frombuffer(bytes(cur), dtype=np.uint8).astype(
-                np.int64).reshape(w, c)
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        out[y] = rec.astype(np.uint8)
-        prev = rec
-        prev_ba = bytearray(out[y].tobytes())
-    return out
+def _parse_segments(payload: bytes):
+    """Iterate (marker, data) over a JPEG's header segments up to SOS."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload")
+    pos = 2
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError("bad JPEG marker alignment")
+        marker = payload[pos + 1]
+        if marker == 0xD9:  # EOI
+            return
+        (length,) = struct.unpack(">H", payload[pos + 2:pos + 4])
+        yield marker, payload[pos + 4:pos + 2 + length]
+        if marker == 0xDA:  # SOS: entropy-coded data follows
+            return
+        pos += 2 + length
+    raise ValueError("truncated JPEG")
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    """Dispatch by magic: PNG (stdlib-zlib codec), baseline JPEG (pure-numpy
-    Huffman + dequant + IDCT + YCbCr→RGB, r7), or P6 PPM → (h, w, c) uint8.
-    Anything else raises ValueError; MP3/H.264 remain honestly stubbed
-    (codec libraries absent in this environment), as do progressive JPEGs
-    (decode_jpeg raises ValueError → quarantine upstream)."""
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        from .jpegcodec import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:2] == b"P6":
-        return decode_ppm(payload)
-    raise ValueError(
-        "unrecognized image payload (PNG, baseline JPEG, P6 PPM supported)"
-    )
+def jpeg_dims(payload: bytes):
+    """(width, height, n_components) from the SOF header only — no entropy
+    decode. Only baseline/extended sequential frames are accepted."""
+    for marker, data in _parse_segments(payload):
+        if marker in (0xC0, 0xC1):
+            _, h, w, ncomp = struct.unpack(">BHHB", data[:6])
+            return w, h, ncomp
+        if marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
+                      0xCD, 0xCE, 0xCF):
+            raise ValueError("only baseline sequential JPEG supported")
+    raise ValueError("JPEG missing SOF0")
 
 
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize, pure-numpy index arithmetic."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
-def decode_wav(payload: bytes):
-    """WAV bytes → (samples float64 in [-1, 1] shaped (n, channels), rate).
-    Stdlib ``wave`` handles the RIFF framing; 8/16/32-bit PCM supported."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        rate, nch, width = wf.getframerate(), wf.getnchannels(), wf.getsampwidth()
-        raw = wf.readframes(wf.getnframes())
-    if width == 1:
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    elif width == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 4:
-        x = np.frombuffer(raw, dtype="<i4").astype(np.float64) / 2147483648.0
+def _dims(b):
+    """(width, height) of one payload, sniffed from its header."""
+    if b is None:
+        return (None, None)
+    bb = bytes(b)
+    if bb[:8] == _PNG_SIG:
+        w, h, _ = _png_ihdr(bb)
+    elif bb[:2] == b"\xff\xd8":
+        w, h, _ = jpeg_dims(bb)
+    elif bb[:2] == b"P6":
+        w, h, _ = _ppm_header(bb, 0)
     else:
-        raise ValueError(f"unsupported sample width {width}")
-    return x.reshape(-1, nch), rate
-
-
-def split_ppm_frames(payload: bytes):
-    """PPM-sequence 'video' (concatenated P6 frames) → list of frame bytes.
-
-    Frame boundaries come from each header's declared dimensions (never from
-    searching for the magic — raster bytes can legally contain b"P6");
-    _ppm_header validates maxval so frame-length arithmetic is never applied
-    to a format it doesn't hold for."""
-    frames, pos = [], 0
-    while pos < len(payload):
-        w, h, raster = _ppm_header(payload, pos)
-        end = raster + w * h * 3
-        if end > len(payload):
-            raise ValueError(f"truncated frame at offset {pos}")
-        frames.append(payload[pos:end])
-        pos = end
-    return frames
-
-
-def image_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real decode + per-channel statistics over PNG or PPM payloads,
-    Arrow-batched. Output: doc_id, width, height, mean_r/g/b (float, 4
-    decimals); grayscale replicates its mean across r/g/b, RGBA ignores
-    alpha."""
-
-    schema = (
-        "doc_id long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                img = decode_image(bytes(b))
-                c = img.shape[2]
-                m = img.reshape(-1, c)[:, : min(c, 3)].mean(axis=0)
-                if len(m) == 1:
-                    m = np.repeat(m, 3)
-                rows.append(
-                    (doc_id, img.shape[1], img.shape[0],
-                     round(float(m[0]), 4), round(float(m[1]), 4),
-                     round(float(m[2]), 4))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height",
-                               "mean_r", "mean_g", "mean_b"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(run, schema=schema)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int,
-                  payload_col: str = "payload") -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode, per Arrow batch,
-    format-preserving: a PNG payload comes back as PNG, a JPEG as baseline
-    JPEG, a P6 PPM as PPM (all round-trippable through decode_image)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpegcodec import encode_jpeg
-
-        for pdf in batches:
-            out = []
-            for b in pdf[payload_col]:
-                bb = bytes(b)
-                img = resize_nearest(decode_image(bb), out_w, out_h)
-                if bb[:8] == _PNG_SIG:
-                    enc = encode_png
-                elif bb[:2] == b"\xff\xd8":
-                    enc = encode_jpeg
-                else:
-                    enc = encode_ppm
-                out.append(enc(img))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
-
-
-def audio_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real WAV decode + duration/RMS per payload, Arrow-batched."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                x, rate = decode_wav(bytes(b))
-                rows.append(
-                    (doc_id, rate, x.shape[1],
-                     round(x.shape[0] / rate, 6),
-                     round(float(np.sqrt((x ** 2).mean())), 6))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "rate", "channels", "duration_s", "rms"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        run,
-        schema="doc_id long, rate int, channels int, duration_s double, rms double",
-    )
-
-
-def frame_sample(df: DataFrame, every_n: int,
-                 payload_col: str = "payload") -> DataFrame:
-    """REAL frame sampling over PPM-sequence payloads: split frames, keep
-    every ``every_n``-th, one output row per kept frame (frame re-encoded as
-    a standalone PPM payload)."""
-    if every_n < 1:
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                for i, fr in enumerate(split_ppm_frames(bytes(b))):
-                    if i % every_n == 0:
-                        ids.append(doc_id)
-                        idxs.append(i)
-                        frames.append(fr)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        run, schema="doc_id long, frame_idx int, frame binary"
-    )
+        w, h = decode_image_stub(bb)
+    return (w, h)
 
 
 def extract_meta(df: DataFrame) -> DataFrame:
@@ -475,23 +171,6 @@ def extract_meta(df: DataFrame) -> DataFrame:
             phash = payloads.map(
                 lambda b: hashlib.md5(bytes(b)).hexdigest()[:16] if b is not None else None
             )
-            def _dims(b):
-                if b is None:
-                    return (None, None)
-                bb = bytes(b)
-                if bb[:8] == _PNG_SIG:
-                    w, h, _ = _png_ihdr(bb)  # header-only, no raster inflate
-                    return (w, h)
-                if bb[:2] == b"\xff\xd8":
-                    from .jpegcodec import jpeg_dims
-
-                    w, h, _ = jpeg_dims(bb)  # SOF header only, no entropy
-                    return (w, h)
-                if bb[:2] == b"P6":
-                    w, h, _ = _ppm_header(bb, 0)
-                    return (w, h)
-                return decode_image_stub(bb)
-
             dims = payloads.map(_dims)
             yield pd.DataFrame(
                 {
@@ -505,16 +184,3 @@ def extract_meta(df: DataFrame) -> DataFrame:
             )
 
     return df.select(*cols).mapInPandas(run, schema=META_SCHEMA)
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing for video-like payloads: explode synthetic
-    frame indices (the decode itself is stubbed)."""
-    if every_n < 1:
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-    return df.withColumn(
-        "frame_idx",
-        F.explode(F.sequence(F.lit(0), F.lit(every_n - 1))),
-    ).withColumn(
-        "frame_key", F.concat_ws(":", F.col("doc_id"), F.col("frame_idx"))
-    )

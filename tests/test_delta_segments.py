@@ -1,9 +1,9 @@
 """LSM-style delta segments (r7): update/delete cost O(update bytes).
 
-The delta strategy (segments.update_index / delete_from_index default)
-writes each change as an immutable per-shard delta generation — same codec
-as the base — plus signed term-df adjustments; query kernels mask shadowed
-base entries via the owner-generation rule (deltas.py) and compaction folds
+segments.update_index and delete_from_index write each change as an
+immutable per-shard delta generation — same codec as the base — plus
+signed term-df adjustments; query kernels mask shadowed base entries via
+the owner-generation rule (deltas.py) and compaction folds
 deltas back into the base (the reference's delegated ES/Lucene segment
 model incl. optimize-to-N — ESIndexDefinitions.cs:452-458).
 
@@ -11,8 +11,8 @@ Pinned here: the base segment is never touched by a delta update (inode
 identity across ALL shards), rank/score/dictionary identity with a full
 rebuild across multiple generations and deletes, every crash window of the
 commit protocol, the compaction threshold, and delete-then-re-add.
-(The default-strategy rank-identity and COW/docs tests in
-test_incremental_update.py exercise this path too.)
+(The rank-identity and COW/docs tests in test_incremental_update.py
+exercise this path too.)
 """
 
 import json
@@ -250,6 +250,62 @@ def test_delta_crash_windows_roll_forward_or_back(spark, tmp_path):
     assert pidx.stats["n_docs"] == 230 and _topk(spark, pidx) == want
 
 
+def test_delete_crash_window_rolls_forward(spark, tmp_path):
+    """A delete commits through the same marker protocol as an update: a
+    kill after the docs swap, before the generation is renamed into place,
+    leaves the marker behind, and recover_update rolls the tombstone
+    generation forward to exactly a full rebuild over the survivors."""
+    pages = gen_pages_df(spark, 200, seed=42, partitions=4)
+    root = str(tmp_path / "idx")
+    write_index(spark, pages, root, n_shards=4)
+    urls = sorted(
+        r.url
+        for r in spark.read.parquet(os.path.join(root, "docs"))
+        .orderBy("doc_id").limit(25).select("url").collect()
+    )
+    del_urls = spark.createDataFrame([(u,) for u in urls], "url string")
+    full_root = str(tmp_path / "full")
+    pidx_full = write_index(spark, pages.join(del_urls, "url", "left_anti"),
+                            full_root, n_shards=4)
+
+    real_commit = seg._commit_delta_gen
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected")
+
+    seg._commit_delta_gen = boom
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            delete_from_index(spark, root, del_urls)
+    finally:
+        seg._commit_delta_gen = real_commit
+    assert os.path.exists(os.path.join(root, "update.json"))
+    assert recover_update(spark, root)
+    pidx = open_index(root)
+    assert pidx.stats["n_docs"] == pidx_full.stats["n_docs"] == 175
+    assert pidx.stats["delta_gens"] == [1]
+    assert _topk(spark, pidx) == _topk(spark, pidx_full)
+
+
+def test_update_rejects_rebuild_strategy(spark, tmp_path):
+    """Updates have one path: strategy="rebuild" is refused before any work
+    — no marker, no staged docs, no staged generation — with a message
+    naming compact_deltas."""
+    pages = gen_pages_df(spark, 60, seed=3, partitions=2)
+    root = str(tmp_path / "idx")
+    write_index(spark, pages, root, n_shards=2)
+    with open(os.path.join(root, "stats.json")) as f:
+        before = json.load(f)
+    upd = _recrawl(pages, 3, 2)
+    with pytest.raises(ValueError, match="compact_deltas"):
+        update_index(spark, root, upd, strategy="rebuild")
+    assert not os.path.exists(os.path.join(root, "update.json"))
+    assert not os.path.exists(os.path.join(root, "docs.tmp"))
+    assert not os.path.exists(os.path.join(root, "delta_staging"))
+    with open(os.path.join(root, "stats.json")) as f:
+        assert json.load(f) == before
+
+
 def test_compaction_folds_and_auto_triggers(spark, tmp_path):
     """compact_deltas folds every generation into the base (delta_gens
     empties, delta dirs gone for those shards) with unchanged results; the
@@ -426,10 +482,9 @@ def test_random_op_sequence_with_midstream_compaction(spark, tmp_path):
     """Seeded pseudo-random sequence of updates/deletes/re-adds with
     compact_after=2, so auto-compaction fires MID-sequence and later delta
     generations stack on the freshly folded base — every step must stay
-    rank/stats-identical to a full rebuild of the evolving corpus. One in
-    three updates uses strategy="rebuild" explicitly, interleaving the
-    re-encode path (which must purge its shards' delta data) with live
-    generations."""
+    rank/stats-identical to a full rebuild of the evolving corpus. Step 3
+    starts with an explicit compact_deltas, interleaving the re-encode path
+    (which must purge its shards' delta data) with live generations."""
     import random
 
     root = str(tmp_path / "idx")
@@ -451,6 +506,8 @@ def test_random_op_sequence_with_midstream_compaction(spark, tmp_path):
 
     bump = 0
     for step in range(5):
+        if step == 3:
+            compact_deltas(spark, root)
         op = rng.choice(["update", "delete", "readd"])
         if op == "update":
             alive = [u for u, b in live.items() if b is not None]
@@ -461,10 +518,8 @@ def test_random_op_sequence_with_midstream_compaction(spark, tmp_path):
             ).withColumn(
                 "warc_ts", F.col("warc_ts") + F.expr(f"INTERVAL {bump} HOURS")
             )
-            strat = rng.choice(["delta", "delta", "rebuild"])
             update_index(spark, root, upd, run_id=f"r{step}",
-                         input_snapshot=f"s{step}", strategy=strat,
-                         compact_after=2)
+                         input_snapshot=f"s{step}", compact_after=2)
             for u in sel:
                 live[u] = bump
         elif op == "delete":

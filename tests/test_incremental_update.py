@@ -1,4 +1,4 @@
-"""Incremental index update: rebuild only affected shards; results must be
+"""Incremental index update: re-index only what changed; results must be
 rank- and score-identical to a full rebuild over the merged corpus."""
 
 import pytest
@@ -380,14 +380,15 @@ def test_termdf_sidecar_dictionary_is_postings_free(indexes, spark, tmp_path):
 
 
 def test_termdf_update_touches_only_affected_shards(spark, tmp_path):
-    """A narrow (host-bursty) REBUILD-strategy update must leave every
-    unaffected shard's term-df sidecar file untouched on disk (same
-    inodes) — the sidecar refresh is O(affected shards), like the docs COW
-    merge. (The default delta strategy is stricter still — it touches NO
-    base sidecar at all — pinned in test_delta_segments.py.)"""
+    """A narrow (host-bursty) update touches NO base term-df sidecar, and
+    compacting it afterwards rewrites only the compacted shards' sidecars:
+    every other shard's sidecar file stays untouched on disk (same inodes)
+    — the sidecar refresh is O(affected shards), like the docs COW merge."""
     import os
 
+    from importpipeline_spark.index.deltas import shard_gen_map
     from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.segments import compact_deltas
 
     root = str(tmp_path / "tdidx")
     pages = gen_pages_df(spark, 2000, seed=9, partitions=8, profile="web")
@@ -411,11 +412,14 @@ def test_termdf_update_touches_only_affected_shards(spark, tmp_path):
            .orderBy(F.col("count").desc(), F.col("h").asc()).first())
     upd = pages.where(host == top["h"]).withColumn(
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
-    update_index(spark, root, upd, run_id="td1", input_snapshot="t1",
-                 strategy="rebuild")
+    update_index(spark, root, upd, run_id="td1", input_snapshot="t1")
+    assert inodes() == before
+    compacted = sorted(f"shard={s}" for s in shard_gen_map(root))
+    compact_deltas(spark, root, run_id="td1c", input_snapshot="t1")
     after = inodes()
-    rewritten = [d for d in before if after.get(d) != before[d]]
+    rewritten = sorted(d for d in before if after.get(d) != before[d])
     untouched = [d for d in before if after.get(d) == before[d]]
+    assert rewritten == compacted
     assert 1 <= len(rewritten) <= 2, (rewritten, untouched)
     assert untouched
 

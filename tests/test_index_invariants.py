@@ -20,6 +20,7 @@ from importpipeline_spark.index.pagesgen import gen_pages_df
 from importpipeline_spark.index.segments import (
     build_index_resumable,
     compact_deltas,
+    delete_from_index,
     update_index,
 )
 from importpipeline_spark.index.store import (
@@ -105,10 +106,18 @@ def _resumable_noop_resume(spark, pages, root):
     build_index_resumable(spark, pages, root, n_shards=SHARDS)
 
 
-def _rebuild_update(spark, pages, root):
-    write_index(spark, pages, root, n_shards=SHARDS)
-    update_index(spark, root, _recrawl(spark), run_id="rb1",
-                 input_snapshot="rb1", strategy="rebuild")
+def _delete_then_compact(spark, pages, root):
+    """Tombstone fold: index 40 extra pages, delete them, compact. The
+    survivors are exactly ``pages``."""
+    extra = gen_pages_df(spark, N + 40, seed=7, partitions=4).join(
+        pages.select("url"), "url", "left_anti")
+    write_index(spark, pages.unionByName(extra), root, n_shards=SHARDS)
+    doomed = spark.createDataFrame(
+        [(r.url,) for r in extra.select("url").collect()], "url string")
+    delete_from_index(spark, root, doomed, run_id="dc1",
+                      input_snapshot="dc1")
+    assert read_stats(root)["delta_gens"]
+    compact_deltas(spark, root)
 
 
 def _compaction(spark, pages, root):
@@ -121,7 +130,7 @@ def _compaction(spark, pages, root):
 
 @pytest.mark.parametrize("writer", [
     _write_index, _resumable_clean, _resumable_killed_resumed,
-    _resumable_noop_resume, _rebuild_update, _compaction,
+    _resumable_noop_resume, _delete_then_compact, _compaction,
 ], ids=lambda f: f.__name__.lstrip("_"))
 def test_base_writer_invariants(spark, tmp_path, writer):
     pages = gen_pages_df(spark, N, seed=7, partitions=4)

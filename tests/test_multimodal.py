@@ -1,17 +1,21 @@
 """Multimodal binary columns: plumbing (schema, Arrow batch shape, null
-handling) plus REAL decode paths — P6 PPM images, WAV audio, PPM-sequence
-video — which need only stdlib+numpy. Compressed codecs stay stubbed."""
+handling) plus header-only dims for PNG, baseline JPEG and P6 PPM payloads.
+The payloads here are hand-built header bytes, so the sniffers are pinned
+against the container specs, not against an encoder of this repo."""
 
 import hashlib
+import struct
+import zlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from importpipeline_spark.operators.multimodal import (
+    _png_ihdr,
+    _ppm_header,
     attach_fake_payload,
     decode_image_stub,
     extract_meta,
-    frame_sample_stub,
+    jpeg_dims,
 )
 
 
@@ -42,378 +46,115 @@ def test_extract_meta_null_payload(spark):
     assert got[1].n_bytes == 10
 
 
-def test_decode_stub_honest():
-    with pytest.raises(NotImplementedError, match="image library"):
-        decode_image_stub(b"x", fake=False)
+def _png_chunk(tag, data):
+    return (struct.pack(">I", len(data)) + tag + data
+            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
 
 
-def test_frame_sample_explode(spark):
-    df = attach_fake_payload(
-        spark.createDataFrame([(7, "vid")], "doc_id long, text string")
-    )
-    frames = frame_sample_stub(df, every_n=5)
-    rows = frames.select("doc_id", "frame_idx", "frame_key").collect()
-    assert len(rows) == 5
-    assert sorted(r.frame_idx for r in rows) == list(range(5))
-    assert all(r.frame_key == f"7:{r.frame_idx}" for r in rows)
+def _png(w, h, depth=8, color_type=2):
+    """PNG signature + IHDR + IEND with valid CRCs (no raster: the sniffer
+    reads the IHDR only)."""
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, 0)
+    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IEND", b""))
 
 
-# ---- real codecs: P6 PPM images, WAV audio, PPM-sequence video ----------
+def _jpeg_segment(marker, data):
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(data)) + data
 
 
-def _ppm_image(w, h, seed):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-
-
-def test_ppm_roundtrip_and_malformed():
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import decode_ppm, encode_ppm
-
-    img = _ppm_image(13, 7, 1)
-    assert np.array_equal(decode_ppm(encode_ppm(img)), img)
-    with pytest.raises(ValueError, match="P6"):
-        decode_ppm(b"JFIFxxxx")
-    with pytest.raises(ValueError, match="truncated"):
-        decode_ppm(encode_ppm(img)[:-5])
+def _jpeg(w, h, sof=0xC0, before_sof=()):
+    """SOI + the `before_sof` (marker, data) segments + a 3-component SOF
+    segment + EOI."""
+    comps = b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3))
+    seg = struct.pack(">BHHB", 8, h, w, 3) + comps
+    return (b"\xff\xd8"
+            + b"".join(_jpeg_segment(m, d) for m, d in before_sof)
+            + _jpeg_segment(sof, seg) + b"\xff\xd9")
 
 
-def test_image_features_real_decode(spark):
-    import numpy as np
+def _ppm(w, h, header=None):
+    return (header or b"P6\n%d %d\n255\n" % (w, h)) + b"\x00" * (w * h * 3)
 
-    from importpipeline_spark.operators.multimodal import encode_ppm, image_features
 
-    imgs = {i: _ppm_image(8 + i, 6 + i, i) for i in range(1, 4)}
+def test_extract_meta_reads_header_dims(spark):
+    """extract_meta reports each container's own dims, read from the PNG
+    IHDR, the JPEG SOF0 and the P6 header."""
+    payloads = {1: (_png(17, 9), "image/png"),
+                2: (_jpeg(640, 480), "image/jpeg"),
+                3: (_ppm(5, 3), "image/x-portable-pixmap")}
     df = spark.createDataFrame(
-        [(i, bytearray(encode_ppm(im))) for i, im in imgs.items()],
-        "doc_id long, payload binary",
+        [(i, bytearray(b), m) for i, (b, m) in payloads.items()],
+        "doc_id long, payload binary, mime string",
     )
-    got = {r.doc_id: r for r in image_features(df).collect()}
-    for i, im in imgs.items():
-        m = im.reshape(-1, 3).mean(axis=0)
-        assert (got[i].width, got[i].height) == (im.shape[1], im.shape[0])
-        assert got[i].mean_r == round(float(m[0]), 4)
-        assert got[i].mean_b == round(float(m[2]), 4)
-
-
-def test_resize_images_real(spark):
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import (
-        decode_ppm,
-        encode_ppm,
-        resize_images,
-        resize_nearest,
-    )
-
-    img = _ppm_image(16, 12, 9)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_ppm(img)))], "doc_id long, payload binary"
-    )
-    out = resize_images(df, 8, 6).collect()[0]
-    got = decode_ppm(bytes(out.payload))
-    assert got.shape == (6, 8, 3)
-    assert np.array_equal(got, resize_nearest(img, 8, 6))  # same kernel, via Spark
-
-
-def test_audio_features_real_wav(spark):
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import audio_features
-
-    # 0.5s of a full-scale-/2 sine at 440 Hz, 16-bit mono, 8 kHz
-    rate, dur = 8000, 0.5
-    t = np.arange(int(rate * dur)) / rate
-    x = (0.5 * np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(x.tobytes())
-    df = spark.createDataFrame(
-        [(1, bytearray(buf.getvalue()))], "doc_id long, payload binary"
-    )
-    r = audio_features(df).collect()[0]
-    assert (r.rate, r.channels, r.duration_s) == (rate, 1, 0.5)
-    # RMS of a 0.5-amplitude sine = 0.5/sqrt(2), within quantization error
-    assert abs(r.rms - 0.5 / math.sqrt(2)) < 1e-3
-
-
-def test_frame_sample_real_video(spark):
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import (
-        decode_ppm,
-        encode_ppm,
-        frame_sample,
-    )
-
-    frames = [_ppm_image(4, 4, 100 + i) for i in range(7)]
-    video = b"".join(encode_ppm(f) for f in frames)
-    df = spark.createDataFrame(
-        [(5, bytearray(video))], "doc_id long, payload binary"
-    )
-    got = sorted(frame_sample(df, every_n=3).collect(), key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in got] == [0, 3, 6]
-    for r in got:
-        assert np.array_equal(decode_ppm(bytes(r.frame)), frames[r.frame_idx])
-
-
-def test_ppm_maxval_and_frame_sample_validation():
-    from importpipeline_spark.operators.multimodal import (
-        decode_ppm,
-        split_ppm_frames,
-    )
-
-    sixteen_bit = b"P6\n1 1\n65535\n" + b"\x00" * 6
-    with pytest.raises(ValueError, match="maxval"):
-        decode_ppm(sixteen_bit)
-    with pytest.raises(ValueError, match="maxval"):
-        split_ppm_frames(sixteen_bit)  # same validation as decode (shared header)
-
-
-def test_frame_sample_rejects_nonpositive(spark):
-    from importpipeline_spark.operators.multimodal import (
-        frame_sample,
-        frame_sample_stub,
-    )
-
-    df = spark.createDataFrame([(1, bytearray(b"P6"))], "doc_id long, payload binary")
-    with pytest.raises(ValueError, match="every_n"):
-        frame_sample(df, every_n=0)
-    with pytest.raises(ValueError, match="every_n"):
-        frame_sample_stub(df, every_n=0)
-
-
-def test_png_roundtrip_all_filters():
-    """decode_png reconstructs every PNG scanline filter (0-4: None/Sub/Up/
-    Average/Paeth) exactly — a REAL compressed codec via stdlib zlib +
-    numpy, no image library (VERDICT r5 missing #3 closed)."""
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import (
-        _png_ihdr,
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(7)
-    for shape in [(5, 7, 3), (4, 4, 1), (6, 3, 4), (1, 1, 3)]:
-        img = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        payload = encode_png(img, row_filters=[y % 5 for y in range(shape[0])])
-        assert np.array_equal(decode_png(payload), img), shape
-        assert _png_ihdr(payload) == (shape[1], shape[0], shape[2])
-    # gradients make Average/Paeth predictions non-trivial
-    grad = (np.arange(48 * 64 * 3) % 256).astype(np.uint8).reshape(48, 64, 3)
-    for f in range(5):
-        assert np.array_equal(
-            decode_png(encode_png(grad, row_filters=[f] * 48)), grad), f
-
-
-def test_png_rejects_corrupt_and_unsupported():
-    import numpy as np
-    import pytest
-
-    from importpipeline_spark.operators.multimodal import (
-        decode_image,
-        decode_png,
-        encode_png,
-    )
-
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    payload = bytearray(encode_png(img))
-    payload[30] ^= 0xFF  # flip a bit inside IHDR
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(payload))
-    with pytest.raises(ValueError, match="not a PNG"):
-        decode_png(b"JFIF1234")
-    with pytest.raises(ValueError, match="unrecognized image"):
-        decode_image(b"GIF89a..")
-    # 16-bit depth rejected with a clear message (honest scope: 8-bit only)
-    import struct
-    import zlib
-
-    def chunk(tag, data):
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr16 = struct.pack(">IIBBBBB", 1, 1, 16, 2, 0, 0, 0)
-    bad = (sig + chunk(b"IHDR", ihdr16)
-           + chunk(b"IDAT", zlib.compress(b"\x00" * 7))
-           + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="unsupported PNG"):
-        decode_png(bad)
-
-
-def test_png_golden_bytes_deterministic():
-    """encode_png is byte-deterministic: pinned md5 so any codec change
-    that silently alters the container layout fails loudly."""
-    import hashlib
-
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import encode_png
-
-    small = (np.arange(2 * 3 * 3) % 256).astype(np.uint8).reshape(2, 3, 3)
-    payload = encode_png(small)
-    assert len(payload) == 85
-    assert hashlib.md5(payload).hexdigest() == "abc85f8f197ced3284a361072f43d860"
+    got = {r.doc_id: r for r in extract_meta(df).collect()}
+    assert (got[1].width, got[1].height) == (17, 9)
+    assert (got[2].width, got[2].height) == (640, 480)
+    assert (got[3].width, got[3].height) == (5, 3)
+    for i, (b, _) in payloads.items():
+        assert got[i].n_bytes == len(b)
+        assert got[i].payload_hash == hashlib.md5(b).hexdigest()[:16]
 
 
 def test_image_features_and_resize_png(spark):
-    """The Spark image ops accept PNG payloads end-to-end: per-channel
-    stats match the raw pixels, resize is format-preserving (PNG in →
-    PNG out), and extract_meta reports REAL dims from the IHDR."""
-    import numpy as np
-
-    from importpipeline_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-        extract_meta,
-        image_features,
-        resize_images,
-        resize_nearest,
-    )
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
-    payload = encode_png(img, row_filters=[y % 5 for y in range(12)])
+    """A PNG payload with an ancillary chunk between IHDR and IEND goes
+    through the Spark operator: extract_meta reports the IHDR dims and the
+    full payload size."""
+    png = _png(16, 12)
+    iend = _png_chunk(b"IEND", b"")
+    payload = png[:-len(iend)] + _png_chunk(b"tEXt", b"Comment\x00x") + iend
     df = spark.createDataFrame(
         [(1, bytearray(payload), "image/png")],
         "doc_id long, payload binary, mime string",
     )
-
-    feat = image_features(df).collect()[0]
-    m = img.reshape(-1, 3).mean(axis=0)
-    assert (feat.width, feat.height) == (16, 12)
-    assert feat.mean_g == round(float(m[1]), 4)
-
-    out = resize_images(df, 8, 6).collect()[0]
-    got = decode_png(bytes(out.payload))  # still a PNG
-    assert np.array_equal(got, resize_nearest(img, 8, 6))
-
     meta = extract_meta(df).collect()[0]
     assert (meta.width, meta.height) == (16, 12)
     assert meta.n_bytes == len(payload)
 
 
-def test_jpeg_gray_decode_bit_exact():
-    """r7 baseline-JPEG codec: the full decode (Huffman + dequant + IDCT)
-    of an encoded grayscale image equals the independently computed
-    DCT→quant→dequant→IDCT reconstruction EXACTLY — the entropy layers are
-    pinned bit-for-bit, not approximately."""
-    import numpy as np
-
-    from importpipeline_spark.operators.jpegcodec import (
-        _M, _QUANT_LUMA, _ZIGZAG, _scale_quant, decode_jpeg, encode_jpeg,
-        jpeg_dims,
-    )
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(24, 17), dtype=np.uint8)
-    enc = encode_jpeg(img, quality=75)
-    dec = decode_jpeg(enc)
-    assert dec.shape == (24, 17, 1)
-    assert jpeg_dims(enc) == (17, 24, 1)
-
-    ql = _scale_quant(_QUANT_LUMA, 75)[_ZIGZAG]
-    h, w = img.shape
-    bh, bw = -(-h // 8), -(-w // 8)
-    pp = np.zeros((bh * 8, bw * 8))
-    p = img.astype(np.float64) - 128.0
-    pp[:h, :w] = p
-    pp[h:, :w] = p[h - 1:h, :]
-    pp[:h, w:] = p[:, w - 1:w]
-    pp[h:, w:] = p[h - 1, w - 1]
-    out = np.zeros_like(pp)
-    for by in range(bh):
-        for bx in range(bw):
-            blk = pp[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-            f = _M @ blk @ _M.T
-            zz = np.round(f.reshape(64)[_ZIGZAG] / ql)
-            deq = np.zeros(64)
-            deq[_ZIGZAG] = zz * ql
-            out[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (
-                _M.T @ deq.reshape(8, 8) @ _M
-            )
-    want = np.clip(np.round(out[:h, :w] + 128.0), 0, 255).astype(np.uint8)
-    assert (dec[:, :, 0] == want).all()
-
-
-def test_jpeg_rgb_decode_golden_and_rejections():
-    """RGB 4:4:4 round-trip stays within quantization error of the source,
-    the decoded bytes are deterministic (md5-pinned), and non-baseline
-    modes raise (progressive SOF2 → quarantine upstream)."""
-    import hashlib as _h
-
-    import numpy as np
-    import pytest as _pytest
-
-    from importpipeline_spark.operators.jpegcodec import (
-        decode_jpeg, encode_jpeg, jpeg_dims,
-    )
-
-    img3 = np.zeros((16, 16, 3), dtype=np.uint8)
-    img3[:, :, 0] = np.arange(16)[:, None] * 8
-    img3[:, :, 1] = 100
-    img3[:, :, 2] = np.arange(16)[None, :] * 8
-    enc3 = encode_jpeg(img3, quality=95)
-    dec3 = decode_jpeg(enc3)
-    assert dec3.shape == (16, 16, 3)
-    assert jpeg_dims(enc3) == (16, 16, 3)
-    assert int(np.abs(dec3.astype(int) - img3.astype(int)).max()) <= 12
-    # golden: pins tables, zigzag, bit order, YCbCr math end-to-end
-    assert _h.md5(dec3.tobytes()).hexdigest() == (
-        "bc1da64e45ab8b7aef018e2929528cdc"
-    )
-
-    with _pytest.raises(ValueError, match="baseline"):
-        decode_jpeg(enc3.replace(b"\xff\xc0", b"\xff\xc2", 1))
-    with _pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg(b"\x00\x01rubbish")
-
-
 def test_jpeg_through_spark_feature_and_resize_paths(spark):
-    """JPEG payloads flow through the same Arrow-batched operators as
-    PNG/PPM: extract_meta reads dims from the SOF header only,
-    image_features decodes for channel means, resize_images preserves the
-    format (JPEG in → baseline JPEG out)."""
-    import numpy as np
-
-    from importpipeline_spark.operators.jpegcodec import (
-        decode_jpeg, encode_jpeg,
-    )
-    from importpipeline_spark.operators.multimodal import (
-        extract_meta, image_features, resize_images,
-    )
-
-    img = np.zeros((12, 16, 3), dtype=np.uint8)
-    img[:, :, 0] = 200
-    img[:, :, 1] = 64
-    payload = encode_jpeg(img, quality=90)
+    """A JPEG payload whose SOF0 follows APP0 and DQT segments goes through
+    the Spark operator: extract_meta walks the header segments to the SOF
+    and reports its dims."""
+    app0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    dqt = b"\x00" + bytes(range(1, 65))
+    payload = _jpeg(16, 12, before_sof=((0xE0, app0), (0xDB, dqt)))
     df = spark.createDataFrame(
         [(1, bytearray(payload), "image/jpeg")],
         "doc_id long, payload binary, mime string",
     )
     meta = extract_meta(df).collect()[0]
     assert (meta.width, meta.height) == (16, 12)
+    assert meta.n_bytes == len(payload)
 
-    feat = image_features(df).collect()[0]
-    assert abs(feat.mean_r - 200) < 4 and abs(feat.mean_g - 64) < 4
-    assert feat.mean_b < 6
 
-    out = resize_images(df, 8, 6).collect()[0]
-    got = bytes(out.payload)
-    assert got[:2] == b"\xff\xd8"  # format-preserving
-    dec = decode_jpeg(got)
-    assert dec.shape == (6, 8, 3)
-    assert abs(int(dec[:, :, 0].mean()) - 200) < 6
+def test_png_rejects_corrupt_and_unsupported():
+    assert _png_ihdr(_png(4, 4)) == (4, 4, 3)
+    bad = bytearray(_png(4, 4))
+    bad[20] ^= 0xFF  # flip a bit inside the IHDR data
+    with pytest.raises(ValueError, match="CRC"):
+        _png_ihdr(bytes(bad))
+    with pytest.raises(ValueError, match="not a PNG"):
+        _png_ihdr(b"JFIF1234")
+    # 16-bit depth rejected with a clear message (8-bit only)
+    with pytest.raises(ValueError, match="unsupported PNG"):
+        _png_ihdr(_png(1, 1, depth=16))
+
+
+def test_jpeg_rejects_non_baseline():
+    assert jpeg_dims(_jpeg(16, 12)) == (16, 12, 3)
+    # progressive (SOF2) frames are refused, not mis-read
+    with pytest.raises(ValueError, match="baseline"):
+        jpeg_dims(_jpeg(16, 12, sof=0xC2))
+    with pytest.raises(ValueError, match="not a JPEG"):
+        jpeg_dims(b"\x00\x01rubbish")
+
+
+def test_ppm_rejects_comment_and_maxval():
+    assert _ppm_header(_ppm(5, 3), 0) == (5, 3, len(b"P6\n5 3\n255\n"))
+    with pytest.raises(ValueError, match="maxval"):
+        _ppm_header(_ppm(1, 1, b"P6\n1 1\n65535\n"), 0)
+    with pytest.raises(ValueError, match="comments"):
+        _ppm_header(_ppm(1, 1, b"P6\n# made by hand\n1 1\n255\n"), 0)
+    with pytest.raises(ValueError, match="P6"):
+        _ppm_header(b"JFIFxxxx", 0)
