@@ -11,10 +11,12 @@ Scale notes (designed for ~10^12 docs / 1000 executors, tested on local[32]):
 - ``doc_id = xxhash64(url)`` — deterministic across runs/cluster sizes
   (monotonically_increasing_id is not), computed JVM-side. The signed id is
   mapped to an order-preserving unsigned key for sharding and delta encoding.
-- the tf table is the only big shuffle (explode → groupBy(doc_id, term));
-  map-side partial aggregation collapses head-term duplicates per partition
-  before the exchange, which is exactly the salting story for Zipf-skewed
-  terms: the shuffle key (doc_id, term) is effectively term salted by doc.
+- every index writer extracts through ONE fused kernel
+  (build_docs_and_tf_safe: extract + tokenize + per-doc term counts in one
+  Arrow pass, bad pages quarantined, not fatal). Term counting happens
+  inside the doc's batch, so there is no groupBy(doc_id, term) shuffle: the
+  build's only corpus exchange repartitions the kernel's per-doc rows by
+  doc-range shard (segments.build_index_resumable).
 - postings are document-sharded: shard = top bits of unsigned doc_id. Every
   shard holds a complete sub-index over its doc range, so query-side WAND is
   shard-local and the global top-k merge is a k-row sort. Sorted runs from
@@ -196,61 +198,15 @@ def build_tf(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("p.term").alias("term"), F.col("p.tf").alias("tf"))
 
 
-_FUSED_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, text string, doc_len int, "
-    "tf_pairs array<struct<term:string,tf:int>>"
-)
-
-
-def build_docs_and_tf(pages: DataFrame, doc_id_mode: str = "hash") -> DataFrame:
-    """Fused physical-build pass: extract + tokenize + per-doc term counts in
-    ONE mapInPandas evaluation (one JVM↔Python Arrow round-trip instead of
-    three chained UDFs). doc_id is added JVM-side (xxhash64).
-
-    Output: docs columns + tf_pairs; downstream splits it into the docs table
-    (drop tf_pairs) and the tf relation (explode) without re-running Python.
-    """
-    from collections import Counter
-    from typing import Iterator as _It
-
-    from ..html.htmltext import html_to_text as _h2t
-    from ..text.tokenizer import tokenize_series as _tok_series
-
-    def run(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            texts = []
-            for v in pdf["html"]:
-                if v is None:
-                    texts.append(None)
-                    continue
-                if isinstance(v, (bytes, bytearray)):
-                    v = bytes(v).decode("utf-8", errors="replace")
-                texts.append(_h2t(v))
-            # tokenization vectorized over the whole Arrow batch (pandas str
-            # ops — same pinned analyzer as tokenize_scalar, asserted in tests)
-            tok_lists = _tok_series(pd.Series(texts, dtype=object))
-            lens, pairs = [], []
-            for toks in tok_lists:
-                if toks is None or (isinstance(toks, float)):
-                    lens.append(0)
-                    pairs.append(None)
-                else:
-                    lens.append(len(toks))
-                    pairs.append(list(Counter(toks).items()))
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "text": texts,
-                    "doc_len": pd.array(lens, dtype="int32"),
-                    "tf_pairs": pairs,
-                }
-            )
-
-    return pages.mapInPandas(run, schema=_FUSED_SCHEMA).withColumn(
-        "doc_id", doc_id_expr(doc_id_mode)
-    )
+def tf_from_text(docs: DataFrame, n_shards: int) -> DataFrame:
+    """(doc_id, term, tf, shard) of stored docs re-tokenized from their
+    ``text`` — the pinned analyzer the build ran, so the counts equal what
+    the postings hold. Every path that re-derives term counts from the docs
+    table uses it: the resume of a resumable build, compaction's re-encode
+    and the term-df decrements of shadowed or deleted docs."""
+    return build_tf(
+        docs.withColumn("tokens", tokenize_udf(F.col("text")))
+    ).withColumn("shard", shard_of(F.col("doc_id"), n_shards))
 
 
 _FUSED_SAFE_SCHEMA = (
@@ -259,18 +215,18 @@ _FUSED_SAFE_SCHEMA = (
 )
 
 
-def build_docs_and_tf_safe(pages: DataFrame, doc_id_mode: str = "hash"):
-    """Fused QUARANTINING build pass: build_docs_and_tf's one-Arrow-round-trip
-    shape (extract + tokenize + per-doc term counts in a single mapInPandas)
-    plus build_docs_safe's per-record error capture — the crash-safe build
-    path needs both, and chaining the three separate UDF passes costs ~2× the
-    Python time of the fused kernel at bench scale.
+def build_docs_and_tf_safe(pages: DataFrame,
+                           doc_id_mode: str = "hash") -> DataFrame:
+    """The one fused extract+tokenize+count kernel: ONE Arrow-batched pass
+    (one JVM↔Python Arrow round-trip instead of three chained UDFs) with
+    per-record quarantine — a page whose extraction raises gets ``error``
+    set instead of failing the job. doc_id is added JVM-side.
 
-    Returns ``(docs, errors, raw)``: docs = good rows with tf_pairs (no
-    ``tokens`` column — tf_pairs already carries the term counts), errors =
-    quarantine records (same fields as build_docs_safe), raw = the shared
-    fused parent of both — persist THIS one, so the docs write and the errors
-    write don't each re-run extraction.
+    Output: url, warc_ts, lang, text, doc_len, tf_pairs, error, doc_id — one
+    row per page; tf_pairs carries the per-doc term counts, so tf is a
+    JVM-side explode (store.tf_from_pairs), never a second Python pass.
+    split_quarantine separates the good rows from the error records. Every
+    index writer extracts through it: the build and update_index.
     """
     import traceback as _tb
     from collections import Counter
@@ -298,6 +254,8 @@ def build_docs_and_tf_safe(pages: DataFrame, doc_id_mode: str = "hash"):
                         f"{type(e).__name__}: {e} | "
                         + _tb.format_exc(limit=2).replace("\n", " ")
                     )
+            # tokenization vectorized over the whole Arrow batch (pandas str
+            # ops — same pinned analyzer as tokenize_scalar, asserted in tests)
             tok_lists = _tok_series(pd.Series(texts, dtype=object))
             lens, pairs = [], []
             for toks in tok_lists:
@@ -319,17 +277,24 @@ def build_docs_and_tf_safe(pages: DataFrame, doc_id_mode: str = "hash"):
                 }
             )
 
-    raw = pages.mapInPandas(run, schema=_FUSED_SAFE_SCHEMA).withColumn(
+    return pages.mapInPandas(run, schema=_FUSED_SAFE_SCHEMA).withColumn(
         "doc_id", doc_id_expr(doc_id_mode)
     )
-    errors = raw.where(F.col("error").isNotNull()).select(
+
+
+def split_quarantine(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(docs, errors) of build_docs_and_tf_safe's output, or of any
+    relation derived from it that keeps url + error: docs = the good rows
+    without ``error``; errors = quarantine records (url, stage, error, ts),
+    the same fields as build_docs_safe's."""
+    errors = fused.where(F.col("error").isNotNull()).select(
         "url",
         F.lit("extract").alias("stage"),
         F.col("error").alias("error"),
         F.current_timestamp().alias("ts"),
     )
-    docs = raw.where(F.col("error").isNull()).drop("error")
-    return docs, errors, raw
+    docs = fused.where(F.col("error").isNull()).drop("error")
+    return docs, errors
 
 
 def build_doclen(docs: DataFrame) -> DataFrame:

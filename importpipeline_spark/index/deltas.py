@@ -47,8 +47,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import build_tf, shard_of
-from .store import encode_postings
+from .build import shard_of, tf_from_text
+from .store import encode_postings, tf_from_pairs
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
 
@@ -145,13 +145,13 @@ def purge_shards(root: str, shards) -> None:
                 shutil.rmtree(gdir, ignore_errors=True)
 
 
-def _signed_termdf(new_tf: DataFrame | None, old_docs_tok: DataFrame | None,
+def _signed_termdf(new_tf: DataFrame | None, old_docs: DataFrame | None,
                    n_shards: int) -> DataFrame | None:
     """Per-(shard, term) signed df adjustment: +1 per (new doc, term) pair,
     -1 per (shadowed live doc, term) pair. Both sides are O(update) — the
     shadowed versions' terms come from re-tokenizing exactly the replaced
-    docs' stored text (same pinned analyzer as indexing, so the decrements
-    equal what the base postings actually count)."""
+    docs' stored text (build.tf_from_text: same pinned analyzer as
+    indexing, so the decrements equal what the base postings count)."""
     parts = []
     if new_tf is not None:
         parts.append(
@@ -159,12 +159,9 @@ def _signed_termdf(new_tf: DataFrame | None, old_docs_tok: DataFrame | None,
                 F.count(F.lit(1)).alias("df")
             )
         )
-    if old_docs_tok is not None:
-        old_tf = build_tf(old_docs_tok).withColumn(
-            "shard", shard_of(F.col("doc_id"), n_shards)
-        )
+    if old_docs is not None:
         parts.append(
-            old_tf.groupBy("shard", "term").agg(
+            tf_from_text(old_docs, n_shards).groupBy("shard", "term").agg(
                 (-F.count(F.lit(1))).alias("df")
             )
         )
@@ -183,35 +180,29 @@ def _signed_termdf(new_tf: DataFrame | None, old_docs_tok: DataFrame | None,
 def stage_update_delta(
     spark: SparkSession,
     root: str,
-    changed_docs_tok: DataFrame,
+    changed_docs: DataFrame,
     old_replaced: DataFrame | None,
     n_shards: int,
 ) -> None:
     """Stage one UPDATE generation under <root>/delta_staging/.
 
-    ``changed_docs_tok``: the new/updated docs WITH their ``tokens`` column
-    (persisted by the caller — every job here is O(update)).
+    ``changed_docs``: the new/updated docs as the fused kernel emits them,
+    WITH their ``tf_pairs`` column (a view of the caller's persisted fused
+    relation — every job here is O(update) and none re-runs Python over
+    the new docs).
     ``old_replaced``: the live docs-table rows being shadowed (for the
     termdf decrements); None/empty when every incoming url is new.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..text.tokenizer import tokenize_udf
-
     discard_staging(root)
-    # tf must be MATERIALIZED before the concurrent writes fan out: all
-    # three derive from it (or from the caller-persisted changed docs), and
-    # racing the first materialization from three threads would run the
-    # tokenize/count pass redundantly
-    tf = build_tf(changed_docs_tok).withColumn(
-        "shard", shard_of(F.col("doc_id"), n_shards)
-    ).persist()
-    tf.count()
-    # tf and dl share the cached changed-docs parent, whose lineage contains
-    # the classification join — encode_postings renames the dl side's keys
-    dl = changed_docs_tok.select("doc_id", "doc_len").withColumn(
+    changed = changed_docs.withColumn(
         "shard", shard_of(F.col("doc_id"), n_shards)
     )
+    tf = tf_from_pairs(changed)
+    # tf and dl share the cached fused parent, whose lineage contains the
+    # classification join — encode_postings renames the dl side's keys
+    dl = changed.select("shard", "doc_id", "doc_len")
 
     def _w_postings():
         # no term-df sidecars here: a generation's delta_termdf is the
@@ -220,21 +211,14 @@ def stage_update_delta(
 
     def _w_doclen():
         (
-            changed_docs_tok.select("doc_id", "doc_len")
-            .withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-            .repartition(n_shards, "shard")
+            dl.repartition(n_shards, "shard")
             .sortWithinPartitions("doc_id")
             .write.mode("overwrite").partitionBy("shard")
             .parquet(staging_path(root, "delta_doclen"))
         )
 
     def _w_termdf():
-        old_tok = None
-        if old_replaced is not None:
-            old_tok = old_replaced.withColumn(
-                "tokens", tokenize_udf(F.col("text"))
-            )
-        td = _signed_termdf(tf, old_tok, n_shards)
+        td = _signed_termdf(tf, old_replaced, n_shards)
         if td is not None:
             (
                 td.repartition(n_shards, "shard")
@@ -245,24 +229,19 @@ def stage_update_delta(
 
     # the three staging writes are independent jobs over cached inputs —
     # submit them concurrently (job submission is thread-safe; same pattern
-    # as write_index's output fan-out) so their fixed scheduling/IO tails
+    # as the build's phase-A fan-out) so their fixed scheduling/IO tails
     # overlap instead of summing — at O(update) data the job floor IS most
     # of the staging wall
-    try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [pool.submit(f) for f in (_w_postings, _w_doclen, _w_termdf)]
-            errs = []
-            for f in futs:
-                try:
-                    f.result()
-                except Exception as e:  # join all before surfacing
-                    errs.append(e)
-            if errs:
-                raise errs[0]
-    finally:
-        # also on failure: a staging error must not leak the persisted tf
-        # relation in the session's block manager (ADVICE r7)
-        tf.unpersist()
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [pool.submit(f) for f in (_w_postings, _w_doclen, _w_termdf)]
+        errs = []
+        for f in futs:
+            try:
+                f.result()
+            except Exception as e:  # join all before surfacing
+                errs.append(e)
+        if errs:
+            raise errs[0]
 
 
 def stage_delete_delta(
@@ -274,8 +253,6 @@ def stage_delete_delta(
     """Stage one DELETE generation: doclen tombstones (doc_len = -1) plus
     termdf decrements from the doomed docs' stored text. No postings —
     deletion is pure masking until compaction folds it into the base."""
-    from ..text.tokenizer import tokenize_udf
-
     discard_staging(root)
     (
         doomed_docs.select("doc_id", F.lit(-1).alias("doc_len"))
@@ -285,8 +262,7 @@ def stage_delete_delta(
         .write.mode("overwrite").partitionBy("shard")
         .parquet(staging_path(root, "delta_doclen"))
     )
-    doomed_tok = doomed_docs.withColumn("tokens", tokenize_udf(F.col("text")))
-    td = _signed_termdf(None, doomed_tok, n_shards)
+    td = _signed_termdf(None, doomed_docs, n_shards)
     if td is not None:
         (
             td.repartition(n_shards, "shard")

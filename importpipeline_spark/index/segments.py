@@ -8,18 +8,24 @@ incremental ExistState skip logic
 (Endpoints/ESIndexDocType.cs:73-118 → NotExist/ExistOlder/ExistSame/ExistNewer;
 gate Datasources/StreamDatasourceBase.cs:110-134) as snapshot anti-joins.
 
-Build shape:
-  phase A (once per run): docs + doclen + stats written to the index
-  root — the global-stats pass.
+Build shape (the one build — store.write_index is this on an empty root):
+  phase A (once per run): ONE fused Arrow pass (extract + tokenize + per-doc
+  term counts, bad pages quarantined) whose output, error rows included, is
+  repartitioned by doc-range shard and persisted — the build's only corpus
+  exchange. docs, doclen, errors and the per-shard stats derive from that
+  cache with no further exchange, as concurrent jobs beside phase B;
+  stats.json, written once they finish, marks phase A done.
   phase B (resumable loop): segments (= doc-range shards) are encoded in
-  BATCHES of ``batch_size`` per Spark job — one cogroup keyed by shard, so a
-  batch of K segments runs as K parallel tasks (a cluster stays busy), while
-  each segment still commits its postings, term-df sidecar and lineage row
-  (resume granularity stays per-segment). A restarted run reads the
-  lineage, skips finished segments, and rebuilds only the missing ones —
-  final index bit-identical to an uninterrupted run, including kills
-  mid-batch (files land before lineage; an un-lineaged segment is
-  deterministically re-encoded on resume). Verified in tests.
+  BATCHES of ``batch_size`` per Spark job — one cogroup keyed by shard over
+  the same cache (no exchange), so a batch of K segments runs as K parallel
+  tasks, while each segment still commits its postings, term-df sidecar and
+  lineage row (resume granularity stays per-segment). A restarted run reads
+  the lineage, skips finished segments, and rebuilds only the missing ones
+  from the stored docs' text — final index bit-identical to an
+  uninterrupted run, including kills mid-batch (files land before lineage;
+  an un-lineaged segment is deterministically re-encoded on resume).
+  Verified in tests. Without a docs table (``write_docs=False``) a crash
+  re-runs phase A and still skips the finished segments.
   Finally the dictionary derives from the segments' sidecars — on every
   run, including a resume with nothing left to encode.
 
@@ -40,10 +46,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import deltas as _deltas
 from .build import (
     build_docs_and_tf_safe,
-    build_docs_safe,
-    build_tf,
     doc_id_expr,
     shard_of,
+    split_quarantine,
+    tf_from_text,
 )
 from .store import (
     PhysicalIndex,
@@ -152,6 +158,30 @@ def _append_lineage(root: str, row: dict) -> None:
     os.replace(tmp, os.path.join(p, f"seg_{row['segment_id']}.json"))
 
 
+def _sharded_fused(pages: DataFrame, n_shards: int, doc_id_mode: str,
+                   write_docs: bool):
+    """The build's one corpus exchange: the fused kernel's output, error
+    rows included, hash-repartitioned by doc-range shard and persisted.
+    Returns ``(sharded, docs, errors)``: the cache (the caller unpersists
+    it) and its good rows / quarantine records (build.split_quarantine).
+    Every fresh-run output derives from the cache with no further exchange:
+    the docs/doclen/errors writes and the stats run over its partitioning,
+    and each batch's cogroup sides inherit HashPartitioning(shard) so their
+    exchanges are elided (pinned in tests/test_plans.py). With
+    ``write_docs=False`` only the skinny projection is cached — the text
+    never shuffles."""
+    fused = build_docs_and_tf_safe(pages, doc_id_mode)
+    if not write_docs:
+        fused = fused.select("url", "doc_id", "doc_len", "tf_pairs", "error")
+    sharded = (
+        fused.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+        .repartition(n_shards, "shard")
+        .persist()
+    )
+    docs, errors = split_quarantine(sharded)
+    return sharded, docs, errors
+
+
 def build_index_resumable(
     spark: SparkSession,
     pages: DataFrame,
@@ -163,18 +193,23 @@ def build_index_resumable(
     dict_files: int = 4,
     batch_size: int | None = None,
     doc_id_mode: str = "hash",
+    write_docs: bool = True,
 ) -> PhysicalIndex:
     """Segmented, resumable physical index build.
 
     ``fail_after_segment`` injects a crash between segment commits (tests
     only; with batching this exercises the mid-batch kill window — some of a
     batch's segments lineage-committed, the rest not).
-    ``batch_size`` = segments encoded per Spark job (default: the session's
-    defaultParallelism, i.e. fill the cluster); each job runs its batch as
+    ``batch_size`` = segments encoded per Spark job (default: two per core
+    of the session's defaultParallelism); each job runs its batch as
     parallel per-shard tasks. Re-invoking with the same root resumes: phase
     A is recomputed only if its outputs are missing; finished segments
     (lineage status=ok for the same input_snapshot) are skipped.
+    ``write_docs=False`` skips the docs table (a serving-only index; it
+    cannot take updates, and a resume re-runs phase A).
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     os.makedirs(root, exist_ok=True)
     docs_path = os.path.join(root, "docs")
     phase_a_done = (os.path.exists(os.path.join(root, "stats.json"))
@@ -194,55 +229,57 @@ def build_index_resumable(
                 f"{stats['doc_id_mode']!r}, not {doc_id_mode!r}"
             )
 
-    docs = None
+    sharded = None
     pool = None
     phase_a_futures = None
     if not phase_a_done:
-        from concurrent.futures import ThreadPoolExecutor
+        sharded, docs, errors = _sharded_fused(pages, n_shards, doc_id_mode,
+                                               write_docs)
+        # phase B's encode sides: tf is a JVM explode of the cached tf_pairs
+        # (no second Python pass; cheaper per batch than caching the
+        # exploded relation)
+        tf = tf_from_pairs(docs)
+        dl = docs.select("shard", "doc_id", "doc_len")
 
-        # ONE fused Arrow pass (extract+tokenize+tf) with quarantine — the
-        # same kernel shape as write_index; the shared raw parent is what
-        # gets cached so docs and errors writes don't re-extract
-        docs, errors, raw = build_docs_and_tf_safe(pages, doc_id_mode)
-        raw = raw.persist()
-        docs = docs.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-        # the four phase-A outputs are independent jobs over the cached raw
-        # AND independent of phase B's posting batches: submit them
-        # concurrently (job submission is thread-safe) and only JOIN them
-        # after the batch loop. stats.json — the phase-A-done marker — is
-        # written last; a crash before it simply reruns phase A on resume,
-        # while already-lineaged segments stay skipped.
+        # the phase-A outputs are independent jobs over the cache AND
+        # independent of phase B's posting batches: submit them
+        # concurrently (job submission is thread-safe; the exchange's map
+        # stage runs once and is shared) and only JOIN them after the batch
+        # loop. stats.json — the phase-A-done marker — is written last; a
+        # crash before it simply reruns phase A on resume, while
+        # already-lineaged segments stay skipped.
         def _w_docs():
-            # same partitioned layout as store.write_index: docs/shard=N/,
-            # so later update/delete merges stage per shard (COW)
+            # docs/shard=N/, so later update/delete merges stage per shard
+            # (COW hard links for untouched shards)
             (
                 docs.drop("tf_pairs")
-                .repartition(n_shards, "shard")
                 .write.mode("overwrite")
                 .partitionBy("shard")
                 .parquet(docs_path)
             )
 
-        def _w_errors():
+        def _w_errors() -> int:
             errors.write.mode("overwrite").parquet(os.path.join(root, "errors"))
+            # run-level error counter (ImportReport.cs:92-209 'errors') of
+            # the quarantine just written
+            return _count_error_urls(spark, root)
 
         def _w_doclen():
             (
-                docs.select("doc_id", "doc_len", "shard")
-                .repartition(n_shards, "shard")
-                .sortWithinPartitions("doc_id")
+                dl.sortWithinPartitions("doc_id")
                 .write.mode("overwrite")
                 .partitionBy("shard")
                 .parquet(os.path.join(root, "doclen"))
             )
 
+        # shard totals and the error count first: _finalize_phase_a reads
+        # them by position
         pool = ThreadPoolExecutor(max_workers=4)
         phase_a_futures = [
-            pool.submit(_w_docs),
+            pool.submit(shard_totals, dl),
             pool.submit(_w_errors),
             pool.submit(_w_doclen),
-            pool.submit(shard_totals, docs),
-        ]
+        ] + ([pool.submit(_w_docs)] if write_docs else [])
 
     batch_tmp = os.path.join(root, "postings_batch_tmp")
     termdf_tmp = os.path.join(root, "termdf_batch_tmp")
@@ -266,11 +303,10 @@ def build_index_resumable(
         if errs:
             raise errs[0]
         s = index_stats(
-            phase_a_futures[3].result(), n_shards, doc_id_mode,
+            phase_a_futures[0].result(), n_shards, doc_id_mode,
             run_id=run_id,
             input_snapshot=input_snapshot,
-            # run-level error counter (ImportReport.cs:92-209 'errors')
-            n_errors=_count_error_urls(spark, root),
+            n_errors=phase_a_futures[1].result(),
         )
         write_stats(root, s)
         return s
@@ -286,22 +322,12 @@ def build_index_resumable(
         # phase B: per-segment postings (segment == doc-range shard); only
         # segments recorded ok FOR THIS INPUT SNAPSHOT count as finished
         done = _finished_segments(root, input_snapshot)
-        if docs is not None:
-            # fresh run: phase A's fused pass is still cached — tf is a
-            # plain JVM explode of its tf_pairs (no second Python pass)
-            tf = tf_from_pairs(docs)
-            dl = docs.select("shard", "doc_id", "doc_len")
-        else:
+        if sharded is None:
             # resume: tf is recomputed from the persisted docs' text (docs
             # parquet stores text, not tokens, to stay lean; only the
             # missing segments' shards are actually encoded below)
-            from ..text.tokenizer import tokenize_udf
-
             docs_df = read_docs(spark, root)
-            docs_tok = docs_df.withColumn("tokens", tokenize_udf(F.col("text")))
-            tf = build_tf(docs_tok).withColumn(
-                "shard", shard_of(F.col("doc_id"), n_shards)
-            )
+            tf = tf_from_text(docs_df, n_shards)
             dl = docs_df.select("doc_id", "doc_len").withColumn(
                 "shard", shard_of(F.col("doc_id"), n_shards)
             )
@@ -312,10 +338,8 @@ def build_index_resumable(
             # straggler absorption while halving the commit barriers
             batch_size = max(1, 2 * spark.sparkContext.defaultParallelism)
         # on RESUME, tf goes through a Python tokenize pass — cache it
-        # across batches. (Fresh runs explode the already-cached fused
-        # tf_pairs JVM-side, cheaper per batch than materializing the
-        # exploded relation.)
-        if docs is None and len(todo) > batch_size:
+        # across batches
+        if sharded is None and len(todo) > batch_size:
             tf = tf.persist()
             tf_cached = tf
         # lineaged segments keep their sidecars across resumes
@@ -389,8 +413,8 @@ def build_index_resumable(
                 stats = _finalize_phase_a(block=True)
         if tf_cached is not None:
             tf_cached.unpersist()
-        if docs is not None:
-            raw.unpersist()
+        if sharded is not None:
+            sharded.unpersist()
 
     return PhysicalIndex(root=root, stats=stats)
 
@@ -424,14 +448,11 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
     swaps happen afterwards. Only compaction calls this: a kill mid-swap
     is covered by compact_deltas' marker (recover_update re-runs the whole
     rebuild)."""
-    from ..text.tokenizer import tokenize_udf
-
     affected = sorted(int(s) for s in affected)
     # the filter hits the physical partition column, so the scan
     # lists/reads ONLY the affected shard dirs
     docs_aff = _docs_pruned_to_shards(spark, root, affected)
-    docs_tok = docs_aff.withColumn("tokens", tokenize_udf(F.col("text")))
-    tf = build_tf(docs_tok).withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+    tf = tf_from_text(docs_aff, n_shards)
     dl = docs_aff.select("doc_id", "doc_len").withColumn(
         "shard", shard_of(F.col("doc_id"), n_shards)
     )
@@ -780,11 +801,13 @@ def update_index(
     1. classify the snapshot against the existing docs table
        (ExistState semantics — skip ExistSame/ExistNewer); the probe is
        partition-pruned to the shards the incoming urls' ids map to;
-    2. encode ONLY the changed docs into an immutable delta generation
-       (same codec as the base; deltas.py) while the docs table's affected
-       shards are merged copy-on-write — zero re-tokenize / re-encode of
-       unchanged docs. Query kernels mask shadowed base entries via the
-       owner-generation rule;
+    2. extract the changed pages through the build's fused kernel
+       (build.build_docs_and_tf_safe: one Arrow pass, bad pages
+       quarantined into errors/) and encode ONLY them into an immutable
+       delta generation (same codec as the base; deltas.py) while the docs
+       table's affected shards are merged copy-on-write — zero re-tokenize
+       / re-encode of unchanged docs. Query kernels mask shadowed base
+       entries via the owner-generation rule;
     3. commit under the marker protocol (_commit_delta_mutation): docs
        swap, generation rename, then global stats from per-shard subtotals
        and the dictionary from the (base + delta) term-df sidecar tables —
@@ -824,26 +847,20 @@ def update_index(
     # derive changed docs' ids the way THIS index was built (stats records
     # the mode): a hash-id derivation over a host_locality index would
     # re-index every changed url under a second id and strand the old
-    # postings un-rebuilt
-    # cache=True: the errors write and the changed-docs materialization
-    # share ONE extraction pass over the update (r8 — uncached, the safe
-    # extraction UDF ran twice over every changed page)
-    changed_docs, errors = build_docs_safe(
-        changed_pages, stats.get("doc_id_mode", "hash"), cache=True
-    )
-    extract_cache = getattr(changed_docs, "cached_deps", [])
-    # ``tokens`` stays: the generation's postings/termdf derive from them
-    # without a second Python tokenize pass over the update
-    changed_docs = changed_docs.persist()
+    # postings un-rebuilt. The build's fused kernel: ONE Python pass over
+    # the update; the errors append, the count and the generation's
+    # postings/termdf (a JVM explode of tf_pairs) all read its cache.
+    fused = build_docs_and_tf_safe(
+        changed_pages, stats.get("doc_id_mode", "hash")
+    ).persist()
+    changed_docs, errors = split_quarantine(fused)
     # quarantine records are appended BEFORE the no-change early return:
     # if every changed page failed extraction, changed_docs is empty but the
     # errors still belong in <root>/errors/
     errors.write.mode("append").parquet(os.path.join(root, "errors"))
     n_changed = changed_docs.count()
-    for _c in extract_cache:
-        _c.unpersist()
     if n_changed == 0:
-        changed_docs.unpersist()
+        fused.unpersist()
         # the quarantine may still have grown (every changed page failed):
         # keep the error counter truthful AND attribute it to THIS run
         n_errors = _count_error_urls(spark, root)
@@ -869,7 +886,7 @@ def update_index(
     old_aff = _docs_pruned_to_shards(spark, root, affected)
     merged_aff = old_aff.join(
         changed_docs.select("url"), "url", "left_anti"
-    ).unionByName(changed_docs.drop("tokens"))
+    ).unionByName(changed_docs.drop("tf_pairs"))
     # live versions being shadowed — their stored text re-tokenizes to
     # exactly the terms the base postings count, giving the signed term-df
     # adjustments (O(update) CPU; see deltas.stage_update_delta)
@@ -878,7 +895,7 @@ def update_index(
     )
     return _commit_delta_mutation(
         spark, root, stats, _deltas.stage_update_delta,
-        (changed_docs, old_replaced), changed_docs, merged_aff, affected,
+        (changed_docs, old_replaced), fused, merged_aff, affected,
         run_id, input_snapshot, compact_after,
     )
 

@@ -15,12 +15,21 @@ cluster with an Iceberg catalog):
                         term's Σ block n in that shard)
     <root>/terms/       term, df, shards     (the dictionary, derived from the
                         sidecars only — _derive_dictionary_from_sidecars)
+    <root>/segments/    seg_N.json — one lineage row per segment (run_id,
+                        input_snapshot, counters; segments.py)
+    <root>/errors/      url, stage, error, ts — quarantined pages
+                        (append-only log)
     <root>/stats.json   format_version, n_docs, avgdl, total_tokens,
                         shard_stats (per-shard [n_docs, total_tokens]),
-                        analyzer, k1, b, n_shards, block_size, doc_id_mode
+                        analyzer, k1, b, n_shards, block_size, doc_id_mode,
+                        run_id, input_snapshot, n_errors
                         (+ delta_gens/last_gen once updates commit; see
                         deltas.py). read_stats refuses any other
                         format_version.
+
+Every built index has this layout: write_index is the resumable build
+(segments.build_index_resumable) on an empty root. ``docs/`` is absent
+when the build ran with ``write_docs=False``.
 
 Replaces the ES index + mapping template of the reference
 (Endpoints/ESIndexDefinitions.cs:312-541). The "optimize to N segments" step
@@ -49,7 +58,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..text.tokenizer import ANALYZER_VERSION
-from .build import K1, B, shard_of
+from .build import K1, B
 from .codec import BLOCK_SIZE, encode_shard_blocks, to_u64
 
 # stats.json layout version. Readers refuse any other value (and a missing
@@ -440,95 +449,27 @@ def write_index(
     dict_files: int = 4,
     doc_id_mode: str = "hash",
 ) -> PhysicalIndex:
-    """Full build: pages → physical index at ``root``.
+    """Full build: pages → a fresh physical index at ``root``.
 
-    Uses the fused extract+tokenize+count pass (one Arrow round-trip),
-    persisted once; docs, doclen, tf and stats all derive from it JVM-side.
+    The one build (segments.build_index_resumable) on an empty root:
+    whatever ``root`` held — deltas, lineage, an older build — is removed
+    first, so the result equals a build into a new directory. Bad pages are
+    quarantined into ``errors/`` and every segment is lineage-committed,
+    like any other build. There is nothing to resume, so the whole encode
+    is one batch (the default batches of 2×parallelism segments double a
+    64-shard build of 4,000 pages on 4 cores).
     ``doc_id_mode="host_locality"`` selects host-clustered doc ids (the
     index-sorting analogue — see build.doc_id_expr) for web corpora where
     block-max pruning should bite.
     """
-    from .build import build_docs_and_tf
+    from .segments import build_index_resumable
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    fused = build_docs_and_tf(pages, doc_id_mode)
-    # ONE corpus-volume exchange for the whole build: hash-repartition the
-    # fused pass output by the doc-range shard key and cache THAT. Every
-    # output — postings + term-df sidecars (cogroup), docs, doclen, stats —
-    # derives from this single partitioning: the cogroup's two sides inherit
-    # HashPartitioning(shard, n_shards) so its exchanges are elided
-    # (pinned in tests/test_plans.py), and the docs/doclen writes are
-    # partitionBy over the cached layout with no further shuffle. The old
-    # shape shuffled the corpus twice (exploded tf for the cogroup + full
-    # text for docs) plus a third skinny doclen exchange. With
-    # write_docs=False only the skinny (doc_id, doc_len, tf_pairs)
-    # projection exchanges — the text never shuffles at all.
-    keep = fused if write_docs else fused.select("doc_id", "doc_len", "tf_pairs")
-    sharded = (
-        keep.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-        .repartition(n_shards, "shard")
-        .persist()
+    shutil.rmtree(root, ignore_errors=True)
+    return build_index_resumable(
+        spark, pages, root, n_shards=n_shards, run_id="full",
+        input_snapshot="full", dict_files=dict_files, batch_size=n_shards,
+        doc_id_mode=doc_id_mode, write_docs=write_docs,
     )
-    os.makedirs(root, exist_ok=True)
-
-    # Every output job is submitted CONCURRENTLY from the start (Spark job
-    # submission is thread-safe): they all hang off the ONE corpus exchange,
-    # whose map stage the DAG scheduler runs once and shares across the
-    # concurrent jobs (the others show it as skipped), so the fixed
-    # scheduling/IO latencies of the small outputs hide entirely under the
-    # postings encode instead of summing after it.
-    def _postings_then_terms():
-        # the cogroup kernel emits whole shards, already sorted by (term,
-        # block), and writes each shard's term-df sidecar as it goes; the
-        # dictionary then aggregates the skinny sidecars (never the
-        # posting blocks)
-        encode_postings(
-            tf_from_pairs(sharded), sharded.select("shard", "doc_id", "doc_len"),
-            os.path.join(root, "postings"),
-            termdf_dir=os.path.join(root, "termdf"),
-        )
-        _derive_dictionary_from_sidecars(
-            spark, root, os.path.join(root, "terms"), [], dict_files
-        )
-
-    def _write_doclen():
-        (
-            sharded.select("shard", "doc_id", "doc_len")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(os.path.join(root, "doclen"))
-        )
-
-    def _write_docs():
-        if write_docs:
-            # partitioned by the SAME doc-range shard key as postings and
-            # doclen: incremental update/delete merge docs per shard (COW
-            # hard links for untouched shards) instead of rewriting the
-            # whole corpus — at 100 TB the docs table IS the corpus. No
-            # exchange: the rows are already shard-partitioned in the cache.
-            (
-                sharded.drop("tf_pairs")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(os.path.join(root, "docs"))
-            )
-
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        # postings first: FIFO scheduling gives the longest pole priority
-        f_pt = ex.submit(_postings_then_terms)
-        f_dl = ex.submit(_write_doclen)
-        f_dc = ex.submit(_write_docs)
-        f_st = ex.submit(shard_totals, sharded)
-        shard_stats = f_st.result()
-        f_dl.result()
-        f_dc.result()
-        f_pt.result()
-    stats = index_stats(shard_stats, n_shards, doc_id_mode)
-    write_stats(root, stats)
-    sharded.unpersist()
-    return PhysicalIndex(root=root, stats=stats)
 
 
 def shard_totals(df: DataFrame) -> dict:

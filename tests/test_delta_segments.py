@@ -32,7 +32,11 @@ from importpipeline_spark.index.segments import (
     update_index,
 )
 from importpipeline_spark.index.serve import LocalSearcher
-from importpipeline_spark.index.store import open_index, write_index
+from importpipeline_spark.index.store import (
+    open_index,
+    read_stats,
+    write_index,
+)
 from importpipeline_spark.index.wand import bm25_topk_wand
 
 QUERIES = ["the", "of and", "ebakaba8", "the ebakaba8 equababa1"]
@@ -101,6 +105,61 @@ def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
     assert pidx.stats["avgdl"] == pidx_full.stats["avgdl"]
     assert _topk(spark, pidx) == _topk(spark, pidx_full)
     assert _terms(spark, root) == _terms(spark, full_root)
+
+
+def _lineage(root):
+    """Lineage rows of the index at ``root`` without their timestamps."""
+    rows = []
+    for f in os.listdir(os.path.join(root, "segments")):
+        if f.endswith(".json"):
+            with open(os.path.join(root, "segments", f)) as fh:
+                row = json.load(fh)
+            rows.append(json.dumps(
+                {k: v for k, v in row.items()
+                 if k not in ("started_ts", "finished_ts")}, sort_keys=True))
+    return sorted(rows)
+
+
+def _dir_tree(root):
+    return sorted(os.path.relpath(d, root) for d, _, _ in os.walk(root))
+
+
+def test_write_index_over_mutated_root_starts_clean(spark, tmp_path):
+    """write_index is a full build: over a root that took a delta update, a
+    delete and a partial compaction, it leaves exactly what a write_index
+    into an empty root leaves — no delta generations, no delta bookkeeping
+    in stats, the same lineage rows and the same top-k."""
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 200, seed=7, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    update_index(spark, root, _recrawl(pages, 5, 2), run_id="m1",
+                 input_snapshot="m1", compact_after=None)
+    del_urls = spark.createDataFrame(
+        [(r.url,) for r in
+         pages.where(F.xxhash64("url") % 7 == 1).select("url").collect()],
+        "url string",
+    )
+    delete_from_index(spark, root, del_urls, run_id="m2",
+                      input_snapshot="m2", compact_after=None)
+    compact_deltas(spark, root, shards=[min(dmod.shard_gen_map(root))])
+    # the preconditions the rebuild must wipe: surviving delta generations
+    # and compaction's incremental lineage rows
+    assert read_stats(root)["delta_gens"]
+    assert any('"incremental": 1' in r for r in _lineage(root))
+
+    new_pages = gen_pages_df(spark, 180, seed=13, partitions=4)
+    pidx = write_index(spark, new_pages, root, n_shards=4)
+    fresh = str(tmp_path / "fresh")
+    pidx_fresh = write_index(spark, new_pages, fresh, n_shards=4)
+
+    assert _dir_tree(root) == _dir_tree(fresh)
+    assert not any(d.startswith("delta") for d in os.listdir(root))
+    stats = read_stats(root)
+    assert "delta_gens" not in stats and "last_gen" not in stats
+    assert stats == read_stats(fresh)
+    assert _lineage(root) == _lineage(fresh)
+    assert _terms(spark, root) == _terms(spark, fresh)
+    assert _topk(spark, pidx) == _topk(spark, pidx_fresh)
 
 
 def test_multi_generation_delete_and_readd(spark, tmp_path):

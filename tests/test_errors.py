@@ -38,14 +38,9 @@ def test_build_docs_safe_quarantines_bad_rows(spark, monkeypatch):
     assert err_rows[0].stage == "extract"
 
 
-def test_error_counter_in_index_stats(spark, tmp_path):
-    """Run-level quarantine counter (ImportReport 'errors'): the resumable
-    build and the incremental update both record n_errors in stats.json."""
-    from importpipeline_spark.index.segments import (
-        build_index_resumable,
-        update_index,
-    )
-
+def _poisoned_corpus(spark):
+    """40 generated pages plus ``u_bad``, a 30,000-deep <div> page whose
+    extraction raises RecursionError → (good, bad, good ∪ bad)."""
     deep = ("<html><head><title>t</title></head><body>"
             + "<div>" * 30000 + "x" + "</div>" * 30000 + "</body></html>")
     good = gen_pages_df(spark, 40, seed=42, partitions=2)
@@ -54,7 +49,46 @@ def test_error_counter_in_index_stats(spark, tmp_path):
     ).withColumn("warc_ts", F.current_timestamp()).withColumn(
         "text", F.lit(None).cast("string")
     ).withColumn("lang", F.lit("en"))
-    pages = good.unionByName(bad.select(*good.columns))
+    return good, bad, good.unionByName(bad.select(*good.columns))
+
+
+def test_write_index_quarantines_bad_pages(spark, tmp_path):
+    """write_index is the quarantining build: one page that raises during
+    extraction is recorded in errors/ instead of failing the job, and the
+    index over the rest is exactly the index of the good pages alone."""
+    from importpipeline_spark.index.store import write_index
+
+    good, _, pages = _poisoned_corpus(spark)
+    root = str(tmp_path / "idx")
+    pidx = write_index(spark, pages, root, n_shards=2)
+    assert pidx.stats["n_docs"] == 40
+    assert pidx.stats["n_errors"] == 1
+    err = spark.read.parquet(f"{root}/errors").collect()
+    assert [r.url for r in err] == ["u_bad"]
+    assert "RecursionError" in err[0].error
+
+    ref_root = str(tmp_path / "ref")
+    write_index(spark, good, ref_root, n_shards=2)
+
+    def _postings(r):
+        return sorted(tuple(x) for x in spark.read.parquet(f"{r}/postings")
+                      .select("shard", "term", "block_id", "n", "min_doc",
+                              "max_doc", "docs_enc", "tfs_enc", "max_tf",
+                              "min_dl").collect())
+
+    got = _postings(root)
+    assert got and got == _postings(ref_root)
+
+
+def test_error_counter_in_index_stats(spark, tmp_path):
+    """Run-level quarantine counter (ImportReport 'errors'): the resumable
+    build and the incremental update both record n_errors in stats.json."""
+    from importpipeline_spark.index.segments import (
+        build_index_resumable,
+        update_index,
+    )
+
+    good, bad, pages = _poisoned_corpus(spark)
 
     root = str(tmp_path / "erridx")
     pidx = build_index_resumable(spark, pages, root, n_shards=2)

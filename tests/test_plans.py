@@ -201,39 +201,50 @@ def _nodes_above_cache(df):
 
 
 def test_build_outputs_share_one_exchange(spark):
-    """r6 (VERDICT r5 #2): write_index's outputs — postings cogroup, docs
-    table, doclen — all derive from ONE corpus-volume exchange (the
-    shard repartition that feeds the cache). The cogroup's two sides and
-    both writes must sit directly on the cached partitioning with no
-    further Exchange; a regression re-introduces a full-text shuffle per
-    output at 100 TB."""
-    from importpipeline_spark.index.build import build_docs_and_tf, shard_of
+    """r6 (VERDICT r5 #2): the build's outputs — postings cogroup (whole
+    and batch-filtered), docs table, doclen, errors — all derive from ONE
+    corpus-volume exchange (the shard repartition that feeds the cache).
+    The plans are taken from the relation the build itself caches
+    (segments._sharded_fused), with and without the docs table. The
+    cogroup's two sides and every write must sit directly on the cached
+    partitioning with no further Exchange; a regression re-introduces a
+    full-text shuffle per output at 100 TB."""
     from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.segments import _sharded_fused
     from importpipeline_spark.index.store import encode_postings, tf_from_pairs
 
     pages = gen_pages_df(spark, 200, seed=5)
-    fused = build_docs_and_tf(pages)
-    sharded = (
-        fused.withColumn("shard", shard_of(F.col("doc_id"), 4))
-        .repartition(4, "shard")
-        .persist()
-    )
-    try:
-        sharded.count()
-        cg = _nodes_above_cache(encode_postings(
-            tf_from_pairs(sharded), sharded.select("shard", "doc_id", "doc_len")
-        ))
-        assert "FlatMapCoGroupsInPandas" in cg, cg
-        assert sum("InMemoryTableScan" in n for n in cg) == 2, cg
-        assert not any("Exchange" in n for n in cg), cg
+    for write_docs in (True, False):
+        sharded, docs, errors = _sharded_fused(pages, 4, "hash", write_docs)
+        try:
+            sharded.count()
+            dl = docs.select("shard", "doc_id", "doc_len")
+            cg = _nodes_above_cache(encode_postings(tf_from_pairs(docs), dl))
+            assert "FlatMapCoGroupsInPandas" in cg, cg
+            assert sum("InMemoryTableScan" in n for n in cg) == 2, cg
+            assert not any("Exchange" in n for n in cg), cg
 
-        docs_write = _nodes_above_cache(sharded.drop("tf_pairs"))
-        assert not any("Exchange" in n for n in docs_write), docs_write
+            # one phase-B batch: both sides filtered to the batch's shards
+            batch = F.col("shard").isin([0, 2])
+            cg_batch = _nodes_above_cache(encode_postings(
+                tf_from_pairs(docs).where(batch), dl.where(batch)
+            ))
+            assert "FlatMapCoGroupsInPandas" in cg_batch, cg_batch
+            assert sum("InMemoryTableScan" in n for n in cg_batch) == 2, \
+                cg_batch
+            assert not any("Exchange" in n for n in cg_batch), cg_batch
 
-        dl_write = _nodes_above_cache(
-            sharded.select("shard", "doc_id", "doc_len")
-            .sortWithinPartitions("doc_id")
-        )
-        assert not any("Exchange" in n for n in dl_write), dl_write
-    finally:
-        sharded.unpersist()
+            if write_docs:
+                docs_write = _nodes_above_cache(docs.drop("tf_pairs"))
+                assert not any("Exchange" in n for n in docs_write), \
+                    docs_write
+            else:
+                assert "text" not in sharded.columns
+
+            dl_write = _nodes_above_cache(dl.sortWithinPartitions("doc_id"))
+            assert not any("Exchange" in n for n in dl_write), dl_write
+
+            err_write = _nodes_above_cache(errors)
+            assert not any("Exchange" in n for n in err_write), err_write
+        finally:
+            sharded.unpersist()
