@@ -23,19 +23,28 @@ its owner generation, and resolve doc_len from the owner row; a -1 owner row
 masks the doc everywhere. Replaced docs therefore need no explicit tombstone
 — their new doclen row IS the tombstone for every older posting entry.
 
+Like a Lucene refresh, a commit never rewrites a global dictionary:
+``terms/`` is the BASE dictionary (build and compaction only), and every
+reader adds the live generations' delta_termdf with the derivation's own
+rule (store.read_dictionary, serve.LocalSearcher), seeing exactly what a
+full rebuild writes.
+
 Commit protocol: a generation is staged completely under
-<root>/delta_staging/ BEFORE the update marker is written, renamed into
-place after the docs swap, and becomes reader-visible only when stats.json
-(atomic replace) lists it in ``delta_gens``. Update and delete share this
-commit (segments._commit_delta_mutation): segments.recover_update rolls a
-mid-commit crash forward, and a pre-marker crash leaves only swept staging
-garbage.
+<root>/delta_staging/ BEFORE the update marker is written; the affected
+shards' new subtotals (and the error counter, if the update quarantined a
+page) are computed beside the staging and ride in the marker. The
+generation is renamed into place after the docs swap and becomes
+reader-visible only when stats.json (atomic replace, written from the
+marker by no Spark job) lists it in ``delta_gens``. Update and delete
+share this commit (segments._commit_delta_mutation): segments.recover_update
+rolls a mid-commit crash forward, and a pre-marker crash leaves only swept
+staging garbage.
 
 Compaction is the only re-encode of base segments after a build: it folds
 a shard's base + deltas into a fresh base segment from the merged docs
-table (segments._rebuild_shards), purging that shard's delta subdirs in its
-own marker-protected window; generations left with no shard data are
-dropped from ``delta_gens``. ``segments.compact_deltas`` is the
+table (segments._rebuild_shards), purging that shard's delta subdirs under
+its own marker (readers refuse the index while it exists: open_index);
+generations left with no shard data are dropped from ``delta_gens``. ``segments.compact_deltas`` is the
 optimize-to-N analogue, and updates auto-compact shards that accumulate
 ``compact_after`` generations or more.
 """
@@ -44,13 +53,23 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import wait
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from .build import shard_of, tf_from_text
 from .store import encode_postings, tf_from_pairs
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
+
+
+def join_all(futs) -> list:
+    """Results of ``futs`` once every one has settled; the first failure
+    is raised only then, so no job is left running behind it."""
+    wait(futs)
+    return [f.result() for f in futs]
 
 
 def delta_table_path(root: str, table: str) -> str:
@@ -146,7 +165,7 @@ def purge_shards(root: str, shards) -> None:
 
 
 def _signed_termdf(new_tf: DataFrame | None, old_docs: DataFrame | None,
-                   n_shards: int) -> DataFrame | None:
+                   n_shards: int) -> DataFrame:
     """Per-(shard, term) signed df adjustment: +1 per (new doc, term) pair,
     -1 per (shadowed live doc, term) pair. Both sides are O(update) — the
     shadowed versions' terms come from re-tokenizing exactly the replaced
@@ -165,15 +184,21 @@ def _signed_termdf(new_tf: DataFrame | None, old_docs: DataFrame | None,
                 (-F.count(F.lit(1))).alias("df")
             )
         )
-    if not parts:
-        return None
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
     return (
-        df.groupBy("shard", "term").agg(F.sum("df").alias("df"))
+        reduce(DataFrame.unionByName, parts)
+        .groupBy("shard", "term").agg(F.sum("df").alias("df"))
         .where(F.col("df") != 0)
         .select("term", "df", "shard")
+    )
+
+
+def _write_staged(df: DataFrame, root: str, table: str, n_shards: int,
+                  sort_by: str) -> None:
+    """Stage one delta table: partitioned by shard, sorted within files."""
+    (
+        df.repartition(n_shards, "shard").sortWithinPartitions(sort_by)
+        .write.mode("overwrite").partitionBy("shard")
+        .parquet(staging_path(root, table))
     )
 
 
@@ -210,38 +235,21 @@ def stage_update_delta(
         encode_postings(tf, dl, staging_path(root, "delta_postings"))
 
     def _w_doclen():
-        (
-            dl.repartition(n_shards, "shard")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(staging_path(root, "delta_doclen"))
-        )
+        _write_staged(dl, root, "delta_doclen", n_shards, "doc_id")
 
     def _w_termdf():
-        td = _signed_termdf(tf, old_replaced, n_shards)
-        if td is not None:
-            (
-                td.repartition(n_shards, "shard")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite").partitionBy("shard")
-                .parquet(staging_path(root, "delta_termdf"))
-            )
+        _write_staged(_signed_termdf(tf, old_replaced, n_shards), root,
+                      "delta_termdf", n_shards, "term")
 
     # the three staging writes are independent jobs over cached inputs —
     # submit them concurrently (job submission is thread-safe; same pattern
     # as the build's phase-A fan-out) so their fixed scheduling/IO tails
     # overlap instead of summing — at O(update) data the job floor IS most
-    # of the staging wall
+    # of the staging wall. Each keeps the caller's (thread-local) job group
+    # and description.
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(f) for f in (_w_postings, _w_doclen, _w_termdf)]
-        errs = []
-        for f in futs:
-            try:
-                f.result()
-            except Exception as e:  # join all before surfacing
-                errs.append(e)
-        if errs:
-            raise errs[0]
+        join_all([pool.submit(inheritable_thread_target(spark)(f))
+                  for f in (_w_postings, _w_doclen, _w_termdf)])
 
 
 def stage_delete_delta(
@@ -254,19 +262,9 @@ def stage_delete_delta(
     termdf decrements from the doomed docs' stored text. No postings —
     deletion is pure masking until compaction folds it into the base."""
     discard_staging(root)
-    (
-        doomed_docs.select("doc_id", F.lit(-1).alias("doc_len"))
-        .withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging_path(root, "delta_doclen"))
-    )
-    td = _signed_termdf(None, doomed_docs, n_shards)
-    if td is not None:
-        (
-            td.repartition(n_shards, "shard")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(staging_path(root, "delta_termdf"))
-        )
+    tombstones = doomed_docs.select(
+        "doc_id", F.lit(-1).alias("doc_len")
+    ).withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+    _write_staged(tombstones, root, "delta_doclen", n_shards, "doc_id")
+    _write_staged(_signed_termdf(None, doomed_docs, n_shards), root,
+                  "delta_termdf", n_shards, "term")

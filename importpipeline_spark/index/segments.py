@@ -39,9 +39,11 @@ import json
 import os
 import shutil
 import sys
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from . import deltas as _deltas
 from .build import (
@@ -54,6 +56,7 @@ from .build import (
 from .store import (
     PhysicalIndex,
     _derive_dictionary_from_sidecars,
+    _update_marker,
     encode_postings,
     index_stats,
     read_docs,
@@ -293,15 +296,10 @@ def build_index_resumable(
         """
         if not (block or all(f.done() for f in phase_a_futures)):
             return None
-        errs = []
-        for f in phase_a_futures:
-            try:
-                f.result()
-            except Exception as e:  # surfaced after all have settled
-                errs.append(e)
-        pool.shutdown()
-        if errs:
-            raise errs[0]
+        try:
+            _deltas.join_all(phase_a_futures)
+        finally:
+            pool.shutdown()
         s = index_stats(
             phase_a_futures[0].result(), n_shards, doc_id_mode,
             run_id=run_id,
@@ -392,7 +390,7 @@ def build_index_resumable(
         # every segment is committed: the dictionary derives from their
         # sidecars (also on a resume with nothing left to encode)
         _derive_dictionary_from_sidecars(
-            spark, root, os.path.join(root, "terms"), [], dict_files
+            spark, root, os.path.join(root, "terms"), dict_files
         )
     finally:
         # join the concurrent phase-A jobs BEFORE leaving (even on the
@@ -401,13 +399,9 @@ def build_index_resumable(
         # crash/resume cycles must not accumulate pinned corpus copies
         if stats is None and phase_a_futures is not None:
             if sys.exc_info()[1] is not None:
-                # an exception is in flight: join quietly so it propagates
-                # unmasked; stats.json stays unwritten → phase A reruns
-                for f in phase_a_futures:
-                    try:
-                        f.result()
-                    except Exception:
-                        pass
+                # an exception is in flight: join quietly (shutdown waits
+                # for every future) so it propagates unmasked; stats.json
+                # stays unwritten → phase A reruns
                 pool.shutdown()
             else:
                 stats = _finalize_phase_a(block=True)
@@ -438,10 +432,11 @@ def _swap_shard_dir(src_root: str, dst_root: str, shard: int,
 # ---- incremental import (ExistState semantics) ----
 
 def _rebuild_shards(spark, root: str, affected, n_shards: int,
-                    run_id: str, input_snapshot: str) -> None:
+                    run_id: str, input_snapshot: str) -> dict:
     """Re-encode postings + doclen + term-df sidecars for the given shards
-    from the CURRENT docs table. Idempotent (deterministic encode), so safe
-    to re-run during crash recovery.
+    from the CURRENT docs table and return their (n_docs, total_tokens)
+    subtotals. Idempotent (deterministic encode), so safe to re-run during
+    crash recovery.
 
     All affected shards encode in ONE cogroup job (keyed by shard → one
     parallel task per shard) and one doclen write; the per-shard directory
@@ -469,10 +464,7 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
         .partitionBy("shard")
         .parquet(dl_tmp)
     )
-    ndocs = {
-        int(r.shard): int(r["count"])
-        for r in dl.groupBy("shard").count().collect()
-    }
+    totals = shard_totals(dl)
 
     for seg in affected:
         # an emptied shard keeps empty postings/doclen dirs and no sidecar
@@ -487,7 +479,7 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
                 "run_id": run_id,
                 "segment_id": int(seg),
                 "input_snapshot": input_snapshot,
-                "n_docs": ndocs.get(seg, 0),
+                "n_docs": totals.get(seg, (0, 0))[0],
                 "n_postings": None,
                 "status": "ok",
                 "started_ts": started,
@@ -503,108 +495,77 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
     # Still inside the caller's marker window: a crash here re-runs the
     # whole (idempotent) rebuild + purge.
     _deltas.purge_shards(root, affected)
+    return totals
 
 
-def _docs_shard_totals(spark, root: str, shards) -> dict:
-    """Per-shard (n_docs, total_tokens) of the given shards from the
-    CURRENT docs table — recomputed from state, never delta-applied, so
-    callers stay idempotent under crash/retry. The scan partition-prunes to
-    those shard directories only."""
-    return shard_totals(
-        spark.read.parquet(os.path.join(root, "docs"))
-        .where(F.col("shard").isin([int(s) for s in shards]))
-    )
-
-
-def _refresh_stats_terms(spark, root: str, run_id: str, input_snapshot: str,
-                         affected, new_gen=None) -> dict:
-    """Recompute global stats (exact-int avgdl) and the dictionary after an
-    update, delete or compaction of the ``affected`` shards. Idempotent.
-
-    Stats come from the per-shard subtotals in stats.json (``shard_stats``):
-    only the affected shards' subtotals are re-scanned (partition-pruned)
-    and the rest reused — recovery stays correct because they are
-    recomputed FROM the current docs table, not delta-applied; re-running
-    produces identical values. The dictionary derives from the base +
-    committed delta term-df sidecars."""
-    from concurrent.futures import ThreadPoolExecutor
-
+def _refresh_stats_terms(root: str, mk: dict) -> dict:
+    """Publish a mutation: stats.json from its marker ``mk`` and the gen
+    dirs on disk — no Spark job, no dictionary write (readers add the live
+    delta_termdf to the base terms/). ``mk["shard_stats"]``: the affected
+    shards' new subtotals (an emptied shard drops out, as in a fresh
+    build); ``mk["n_errors"]``, if present, the new error counter. A delta
+    marker's gen joins ``delta_gens``; gens compaction emptied drop out.
+    Re-running it (recovery) writes the same file; the atomic replace IS
+    the reader-visible commit."""
     stats = read_stats(root)
-    # delta-generation bookkeeping first (driver-side directory walk — the
-    # dictionary derivation below needs the final gen list): the atomic
-    # stats.json replace below IS the reader-visible commit of ``new_gen``
-    # (its directories were renamed into place by the caller/recovery before
-    # this runs); generations whose data compaction fully folded into the
-    # base drop out. Idempotent — everything derives from the marker +
-    # on-disk state.
     gens = {int(g) for g in stats.get("delta_gens", [])}
-    if new_gen is not None:
-        gens.add(int(new_gen))
-        stats["last_gen"] = max(int(stats.get("last_gen", 0)), int(new_gen))
+    if mk.get("mode") == "delta":
+        gens.add(int(mk["gen"]))
+        stats["last_gen"] = max(int(stats.get("last_gen", 0)), int(mk["gen"]))
     gens &= _deltas.live_gens_on_disk(root)
     stats["delta_gens"] = sorted(gens)
-
-    # the three Spark pieces — per-shard doc subtotals, the error-url count,
-    # and the dictionary rebuild from the sidecars — are independent jobs:
-    # submit them concurrently so their fixed job floors overlap (r8; they
-    # ran back-to-back and were most of the per-update fixed cost)
-    affected = {int(s) for s in affected}
+    affected = {int(s) for s in mk["affected"]}
     shard_stats = {
         int(k): tuple(v) for k, v in stats["shard_stats"].items()
         if int(k) not in affected
     }
-    terms_tmp = os.path.join(root, "terms.tmp")
-    shutil.rmtree(terms_tmp, ignore_errors=True)
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f_tot = ex.submit(_docs_shard_totals, spark, root, affected)
-        f_err = ex.submit(_count_error_urls, spark, root)
-        f_dic = ex.submit(_derive_dictionary_from_sidecars, spark, root,
-                          terms_tmp, stats["delta_gens"])
-        shard_stats.update(f_tot.result())
-        n_errors = f_err.result()
-        f_dic.result()
+    shard_stats.update((int(k), tuple(v)) for k, v in mk["shard_stats"].items())
     stats.update(
         totals_fields(shard_stats),
-        run_id=run_id,
-        input_snapshot=input_snapshot,
-        n_errors=n_errors,
+        run_id=mk["run_id"],
+        input_snapshot=mk["input_snapshot"],
+        n_errors=mk.get("n_errors", stats.get("n_errors")),
     )
-    terms_path = os.path.join(root, "terms")
-    shutil.rmtree(terms_path, ignore_errors=True)
-    os.rename(terms_tmp, terms_path)
     write_stats(root, stats)
     return stats
 
 
-def _update_marker(root: str) -> str:
-    return os.path.join(root, "update.json")
+def _fold_shards(spark, root: str, mk: dict) -> dict:
+    """Compaction under its marker ``mk`` (also its crash recovery):
+    re-encode the shards, re-derive the base dictionary, publish."""
+    with _described(spark, "compact_deltas: stage"):
+        totals = _rebuild_shards(spark, root, mk["affected"],
+                                 int(mk["n_shards"]), mk["run_id"],
+                                 mk["input_snapshot"])
+    terms_tmp = os.path.join(root, "terms.tmp")
+    shutil.rmtree(terms_tmp, ignore_errors=True)
+    with _described(spark, "compact_deltas: publish"):
+        _derive_dictionary_from_sidecars(spark, root, terms_tmp)
+    terms_path = os.path.join(root, "terms")
+    shutil.rmtree(terms_path, ignore_errors=True)
+    os.rename(terms_tmp, terms_path)
+    return _refresh_stats_terms(root, dict(mk, shard_stats=totals))
 
 
-def _write_docs_tmp_cow(spark, docs_path: str, merged_affected,
-                        affected, n_shards: int) -> None:
+def _write_docs_tmp_cow(docs_path: str, merged_affected, affected) -> None:
     """Stage the post-merge docs table at ``docs_path + '.tmp'``, copying
     nothing that did not change.
 
     ``merged_affected`` must hold exactly the post-merge rows of the
-    ``affected`` shards (logical schema, no shard column). Those rows are
+    ``affected`` shards, with their shard column. Those rows are
     written partitioned (docs/shard=N/) and every OTHER shard directory is
-    hard-linked from the live table — the publish path's copy-on-write
-    (_copy_index_tree), so staging cost is O(affected shards) + O(#files)
-    link syscalls, not a corpus rewrite. The caller's whole-dir
+    hard-linked from the live table by the publish path's copy-on-write
+    primitive (_copy_index_tree; file copies where links are refused,
+    still never a Spark job), so staging cost is O(affected shards) +
+    O(#files) link syscalls, not a corpus rewrite. The caller's whole-dir
     marker+rename swap — and recover_update — apply on top: a crash
     mid-staging leaves docs.tmp garbage that recovery sweeps, never a
-    half-merged live table.
-
-    (The hard-link copy is _copy_index_tree — the generation-publish COW
-    primitive; on filesystems without links it degrades to file copies of
-    the unchanged shards, still never a Spark job.)"""
+    half-merged live table."""
     docs_tmp = docs_path + ".tmp"
     shutil.rmtree(docs_tmp, ignore_errors=True)
     aff = {int(a) for a in affected}
     (
-        merged_affected.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-        .repartition(max(1, len(aff)), "shard")
+        merged_affected.repartition(max(1, len(aff)), "shard")
         .write.mode("overwrite").partitionBy("shard").parquet(docs_tmp)
     )
     for e in os.listdir(docs_path):
@@ -629,15 +590,37 @@ def _shards_of_urls(with_urls: DataFrame, doc_id_mode: str,
     )
 
 
-def _docs_pruned_to_shards(spark, root: str, shards: list) -> DataFrame:
+def _docs_pruned_to_shards(spark, root: str, shards: list,
+                           docs: DataFrame | None = None) -> DataFrame:
     """The docs table (logical schema) restricted to the given shards — the
     filter hits the physical partition column, so the scan lists/reads ONLY
-    those shard directories (update cost stays O(update), not O(corpus))."""
-    return (
-        spark.read.parquet(os.path.join(root, "docs"))
-        .where(F.col("shard").isin([int(s) for s in shards]))
-        .drop("shard")
-    )
+    those shard directories (update cost stays O(update), not O(corpus)).
+    ``docs``: the docs relation opened once (each open runs a schema job)."""
+    if docs is None:
+        docs = spark.read.parquet(os.path.join(root, "docs"))
+    return docs.where(F.col("shard").isin([int(s) for s in shards])).drop("shard")
+
+
+@contextmanager
+def _described(spark, desc: str):
+    """Describe the calling thread's (thread-local) Spark jobs ``desc``."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
+
+
+def _phase(spark, op: str, phase: str, fn, *args):
+    """``fn(*args)`` as a thread target whose Spark jobs keep the calling
+    thread's (thread-local) job group and are described ``<op>: <phase>``."""
+    @inheritable_thread_target(spark)
+    def run():
+        with _described(spark, f"{op}: {phase}"):
+            return fn(*args)
+    return run
 
 
 def recover_update(spark: SparkSession, root: str) -> bool:
@@ -647,16 +630,19 @@ def recover_update(spark: SparkSession, root: str) -> bool:
     - docs dir missing: roll the docs swap forward (docs.tmp present) or back
       (docs.old present).
     - delta-mode marker (update or delete): the generation was FULLY staged
-      before the marker was written, so recovery always rolls forward —
-      finish the docs swap if the crash interrupted it, rename the staged
-      generation into place (idempotent), and refresh stats/dictionary,
-      which atomically commits the generation to ``delta_gens``.
+      and its stats computed before the marker was written, so recovery
+      always rolls forward with no Spark job — finish the docs swap if the
+      crash interrupted it, rename the staged generation into place
+      (idempotent), and write the stats.json the marker carries, which
+      atomically commits the generation to ``delta_gens``.
     - marker without ``mode``: only compaction writes one. Re-run the fold
-      (_rebuild_shards + stats/terms refresh) against the CURRENT docs
-      table; the re-encode is deterministic, so a repeat writes identical
-      bytes.
+      (_fold_shards: re-encode, base dictionary, stats) against the CURRENT
+      docs table; the re-encode is deterministic, so a repeat writes
+      identical bytes.
     - no marker: any staging/tmp leftovers are pre-commit garbage — swept.
+    Another format_version is refused (read_stats) before anything moves.
     """
+    read_stats(root)
     docs_path = os.path.join(root, "docs")
     docs_tmp = docs_path + ".tmp"
     docs_old = docs_path + ".old"
@@ -681,17 +667,9 @@ def recover_update(spark: SparkSession, root: str) -> bool:
                 os.rename(docs_path, docs_old)
                 os.rename(docs_tmp, docs_path)
             _deltas.commit_staged_gen(root, int(mk["gen"]))
-            _refresh_stats_terms(spark, root, mk["run_id"],
-                                 mk["input_snapshot"],
-                                 affected=mk["affected"],
-                                 new_gen=int(mk["gen"]))
+            _refresh_stats_terms(root, mk)
         else:
-            _rebuild_shards(
-                spark, root, mk["affected"], int(mk["n_shards"]),
-                mk["run_id"], mk["input_snapshot"],
-            )
-            _refresh_stats_terms(spark, root, mk["run_id"],
-                                 mk["input_snapshot"], affected=mk["affected"])
+            _fold_shards(spark, root, mk)
         os.remove(marker)
         recovered = True
     shutil.rmtree(docs_old, ignore_errors=True)
@@ -739,49 +717,54 @@ def _maybe_autocompact(spark, root: str, affected, compact_after,
     return PhysicalIndex(root=root, stats=stats)
 
 
-def _commit_delta_mutation(spark, root: str, stats: dict, stage, stage_args,
-                           cached: DataFrame, merged_aff: DataFrame,
-                           affected: list, run_id: str, input_snapshot: str,
-                           compact_after) -> PhysicalIndex:
-    """The one commit sequence of update_index and delete_from_index.
+def _commit_delta_mutation(spark, root: str, stats: dict, op: str,
+                           cached: DataFrame, stage, stage_args,
+                           merged_aff: DataFrame, affected: list,
+                           run_id: str, input_snapshot: str, compact_after,
+                           count_errors: bool = False) -> PhysicalIndex:
+    """The one commit sequence of update_index and delete_from_index
+    (``op``: the caller, for job descriptions).
 
-    ``stage(spark, root, *stage_args, n_shards)`` stages the generation
-    (deltas.stage_update_delta or deltas.stage_delete_delta) while the
-    docs copy-on-write merge of ``merged_aff`` — the post-mutation rows of
-    the ``affected`` shards — runs beside it; both are pre-marker steps a
-    crash leaves as swept garbage. ``cached`` (the caller-persisted input
-    both read) is released once they are joined. Then: marker + docs swap,
-    rename the generation into place, refresh stats/dictionary (the
-    reader-visible commit), drop the marker, auto-compact."""
+    Concurrently, before the marker: ``stage(spark, root, *stage_args,
+    n_shards)`` stages the generation; the docs copy-on-write merge writes
+    ``merged_aff`` (the post-mutation rows of the ``affected`` shards),
+    whose subtotals are counted; with ``count_errors`` the error counter
+    is recounted. A crash here leaves swept garbage. The caller's
+    ``cached`` input is released after the join (on failure, by the
+    caller). The publish runs no Spark job: marker (carrying the stats) +
+    docs swap, gen rename, stats.json from the marker, marker dropped;
+    then auto-compaction."""
     from concurrent.futures import ThreadPoolExecutor
 
     n_shards = int(stats["n_shards"])
     docs_path = os.path.join(root, "docs")
     gen = _deltas.next_gen(stats)
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs = [
-            ex.submit(stage, spark, root, *stage_args, n_shards),
-            ex.submit(_write_docs_tmp_cow, spark, docs_path, merged_aff,
-                      affected, n_shards),
-        ]
-        errs = []
-        for f in futs:
-            try:
-                f.result()
-            except Exception as e:  # join both before surfacing
-                errs.append(e)
-        if errs:
-            raise errs[0]
+    merged = merged_aff.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+    jobs = [
+        _phase(spark, op, "stage", stage, spark, root, *stage_args, n_shards),
+        _phase(spark, op, "docs_cow", _write_docs_tmp_cow, docs_path, merged,
+               affected),
+        _phase(spark, op, "docs_cow", shard_totals, merged),
+    ]
+    if count_errors:
+        jobs.append(_phase(spark, op, "classify", _count_error_urls, spark,
+                           root))
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        _, _, totals, *n_errors = _deltas.join_all(
+            [ex.submit(j) for j in jobs])
     cached.unpersist()
 
-    _swap_docs_under_marker(root, {
+    mk = {
         "affected": affected, "n_shards": n_shards, "run_id": run_id,
         "input_snapshot": input_snapshot, "mode": "delta", "gen": gen,
-    })
-    _commit_delta_gen(root, gen)
-    stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
-                                 affected=affected, new_gen=gen)
-    os.remove(_update_marker(root))
+        "shard_stats": {str(k): list(v) for k, v in sorted(totals.items())},
+        **({"n_errors": n_errors[0]} if n_errors else {}),
+    }
+    with _described(spark, f"{op}: publish"):
+        _swap_docs_under_marker(root, mk)
+        _commit_delta_gen(root, gen)
+        stats = _refresh_stats_terms(root, mk)
+        os.remove(_update_marker(root))
     shutil.rmtree(docs_path + ".old", ignore_errors=True)
     return _maybe_autocompact(spark, root, affected, compact_after,
                               run_id, input_snapshot, stats)
@@ -805,14 +788,16 @@ def update_index(
        (build.build_docs_and_tf_safe: one Arrow pass, bad pages
        quarantined into errors/) and encode ONLY them into an immutable
        delta generation (same codec as the base; deltas.py) while the docs
-       table's affected shards are merged copy-on-write — zero re-tokenize
-       / re-encode of unchanged docs. Query kernels mask shadowed base
-       entries via the owner-generation rule;
-    3. commit under the marker protocol (_commit_delta_mutation): docs
-       swap, generation rename, then global stats from per-shard subtotals
-       and the dictionary from the (base + delta) term-df sidecar tables —
-       never a block-metadata scan across shards;
+       table's affected shards are merged copy-on-write and their new
+       subtotals counted — zero re-tokenize / re-encode of unchanged docs.
+       Query kernels mask shadowed base entries via the owner-generation
+       rule;
+    3. commit under the marker protocol (_commit_delta_mutation) with no
+       Spark job: stats.json is written from the marker, and ``terms/``
+       stays the base dictionary (readers add delta_termdf);
     4. auto-compact shards holding ``compact_after`` or more generations.
+    Its Spark jobs are described ``update_index: <phase>`` (classify /
+    stage / docs_cow / publish).
 
     The result is rank-identical to a full rebuild over the merged corpus.
     Re-encoding the affected shards' base segments — what an update used
@@ -833,71 +818,65 @@ def update_index(
 
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
-
-    # the existence probe joins on url, and an incoming url's existing copy
-    # can only live in the shard its (mode-recorded) id maps to — so the
-    # classification scan prunes to the incoming ids' shards instead of
-    # reading url+warc_ts across the whole corpus (r6; the last O(corpus)
-    # read on the update path)
-    in_shards = _shards_of_urls(
-        new_pages, stats.get("doc_id_mode", "hash"), n_shards
-    )
-    old_probe = _docs_pruned_to_shards(spark, root, in_shards)
-    changed_pages = incremental_pages(new_pages, old_probe)
-    # derive changed docs' ids the way THIS index was built (stats records
-    # the mode): a hash-id derivation over a host_locality index would
-    # re-index every changed url under a second id and strand the old
-    # postings un-rebuilt. The build's fused kernel: ONE Python pass over
-    # the update; the errors append, the count and the generation's
-    # postings/termdf (a JVM explode of tf_pairs) all read its cache.
-    fused = build_docs_and_tf_safe(
-        changed_pages, stats.get("doc_id_mode", "hash")
-    ).persist()
-    changed_docs, errors = split_quarantine(fused)
-    # quarantine records are appended BEFORE the no-change early return:
-    # if every changed page failed extraction, changed_docs is empty but the
-    # errors still belong in <root>/errors/
-    errors.write.mode("append").parquet(os.path.join(root, "errors"))
-    n_changed = changed_docs.count()
-    if n_changed == 0:
-        fused.unpersist()
-        # the quarantine may still have grown (every changed page failed):
-        # keep the error counter truthful AND attribute it to THIS run
-        n_errors = _count_error_urls(spark, root)
-        if n_errors != stats.get("n_errors"):
-            stats.update(
-                n_errors=n_errors, run_id=run_id, input_snapshot=input_snapshot
+    mode = stats.get("doc_id_mode", "hash")
+    fused = None
+    try:
+        with _described(spark, "update_index: classify"):
+            # an incoming url's existing copy can only live in the shard its
+            # (mode-recorded) id maps to, so the existence probe prunes to
+            # those shards (r6); docs is opened once for probe and merge.
+            in_shards = _shards_of_urls(new_pages, mode, n_shards)
+            docs = spark.read.parquet(os.path.join(root, "docs"))
+            changed_pages = incremental_pages(
+                new_pages, _docs_pruned_to_shards(spark, root, in_shards, docs)
             )
-            write_stats(root, stats)
-        return PhysicalIndex(root=root, stats=stats)
+            # ids derive the way THIS index was built (hash ids over a
+            # host_locality index would re-index a url under a second id).
+            # ONE fused Python pass; one aggregate over its cache gives the
+            # affected shards and whether any page quarantined.
+            fused = build_docs_and_tf_safe(changed_pages, mode).persist()
+            changed_docs, errors = split_quarantine(fused)
+            per_shard = fused.groupBy(
+                shard_of(F.col("doc_id"), n_shards).alias("s"),
+                F.col("error").isNotNull().alias("bad"),
+            ).count().collect()
+            affected = sorted(int(r.s) for r in per_shard if not r.bad)
+            quarantined = any(r.bad for r in per_shard)
+            # quarantine records are appended BEFORE the no-change early
+            # return: if every changed page failed extraction, nothing is
+            # affected but the errors still belong in <root>/errors/
+            if quarantined:
+                errors.write.mode("append").parquet(f"{root}/errors")
+            if not affected:
+                if quarantined:  # a truthful counter, attributed to this run
+                    n_errors = _count_error_urls(spark, root)
+                    if n_errors != stats.get("n_errors"):
+                        stats.update(n_errors=n_errors, run_id=run_id,
+                                     input_snapshot=input_snapshot)
+                        write_stats(root, stats)
+                return PhysicalIndex(root=root, stats=stats)
 
-    affected = sorted(
-        int(r.s)
-        for r in changed_docs.select(
-            shard_of(F.col("doc_id"), n_shards).alias("s")
-        ).distinct().collect()
-    )
-
-    # Only the AFFECTED shards' rows are merged — a changed url can never
-    # move shards (doc_id = f(url) is deterministic), so per-shard merges
-    # are closed and the COW staging hard-links everything else. The filter
-    # is on the physical partition column, so the scan reads only the
-    # affected shard directories.
-    old_aff = _docs_pruned_to_shards(spark, root, affected)
-    merged_aff = old_aff.join(
-        changed_docs.select("url"), "url", "left_anti"
-    ).unionByName(changed_docs.drop("tf_pairs"))
-    # live versions being shadowed — their stored text re-tokenizes to
-    # exactly the terms the base postings count, giving the signed term-df
-    # adjustments (O(update) CPU; see deltas.stage_update_delta)
-    old_replaced = old_aff.join(
-        changed_docs.select("url"), "url", "left_semi"
-    )
-    return _commit_delta_mutation(
-        spark, root, stats, _deltas.stage_update_delta,
-        (changed_docs, old_replaced), fused, merged_aff, affected,
-        run_id, input_snapshot, compact_after,
-    )
+            # Only the AFFECTED shards' rows are merged — a changed url
+            # can never move shards (doc_id = f(url) is deterministic), so
+            # the COW staging hard-links every other shard directory.
+            old_aff = _docs_pruned_to_shards(spark, root, affected, docs)
+            merged_aff = old_aff.join(
+                changed_docs.select("url"), "url", "left_anti"
+            ).unionByName(changed_docs.drop("tf_pairs"))
+            # shadowed live versions: their stored text re-tokenizes to the
+            # terms the base counts (signed term-df; stage_update_delta)
+            old_replaced = old_aff.join(
+                changed_docs.select("url"), "url", "left_semi"
+            )
+            return _commit_delta_mutation(
+                spark, root, stats, "update_index", fused,
+                _deltas.stage_update_delta, (changed_docs, old_replaced),
+                merged_aff, affected, run_id, input_snapshot, compact_after,
+                count_errors=quarantined,
+            )
+    finally:
+        if fused is not None:
+            fused.unpersist()
 
 
 def delete_from_index(
@@ -913,7 +892,7 @@ def delete_from_index(
     url appears in ``urls``. One tombstone generation — doclen rows with
     doc_len = -1 mask the doomed docs out of every older segment, and
     signed term-df adjustments keep df/idf exact — O(delete bytes), no
-    re-encode. It commits through the same marker protocol as update_index
+    re-encode. It commits (and describes its Spark jobs) like update_index
     (_commit_delta_mutation); results equal a full rebuild over the
     survivors (including df/idf shifts), and ``delete_from_index`` followed
     by ``compact_deltas(affected)`` re-encodes those shards' base segments
@@ -926,33 +905,40 @@ def delete_from_index(
 
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
+    doomed = None
+    try:
+        with _described(spark, "delete_from_index: classify"):
+            urls_only = urls.select("url").distinct()
+            # same pruning as update_index's existence probe: a doomed url's
+            # doc can only live in the shard its (mode-recorded) id maps to
+            cand_shards = _shards_of_urls(
+                urls_only, stats.get("doc_id_mode", "hash"), n_shards
+            )
+            docs = spark.read.parquet(os.path.join(root, "docs"))
+            doomed = _docs_pruned_to_shards(
+                spark, root, cand_shards, docs
+            ).join(urls_only, "url", "left_semi").persist()
+            affected = sorted(
+                int(r.s)
+                for r in doomed.select(
+                    shard_of(F.col("doc_id"), n_shards).alias("s")
+                ).distinct().collect()
+            )
+            if not affected:
+                return PhysicalIndex(root=root, stats=stats)
 
-    urls_only = urls.select("url").distinct()
-    # same pruning as update_index's existence probe: a doomed url's doc can
-    # only live in the shard its (mode-recorded) id maps to
-    cand_shards = _shards_of_urls(
-        urls_only, stats.get("doc_id_mode", "hash"), n_shards
-    )
-    probe = _docs_pruned_to_shards(spark, root, cand_shards)
-    doomed = probe.join(urls_only, "url", "left_semi").persist()
-    affected = sorted(
-        int(r.s)
-        for r in doomed.select(
-            shard_of(F.col("doc_id"), n_shards).alias("s")
-        ).distinct().collect()
-    )
-    if not affected:
-        doomed.unpersist()
-        return PhysicalIndex(root=root, stats=stats)
-
-    # survivors of the affected shards only; everything else hard-links
-    merged_aff = _docs_pruned_to_shards(spark, root, affected).join(
-        urls_only, "url", "left_anti"
-    )
-    return _commit_delta_mutation(
-        spark, root, stats, _deltas.stage_delete_delta, (doomed,), doomed,
-        merged_aff, affected, run_id, input_snapshot, compact_after,
-    )
+            # survivors of the affected shards; the rest hard-links
+            merged_aff = _docs_pruned_to_shards(
+                spark, root, affected, docs
+            ).join(urls_only, "url", "left_anti")
+            return _commit_delta_mutation(
+                spark, root, stats, "delete_from_index", doomed,
+                _deltas.stage_delete_delta, (doomed,), merged_aff, affected,
+                run_id, input_snapshot, compact_after,
+            )
+    finally:
+        if doomed is not None:
+            doomed.unpersist()
 
 
 def compact_deltas(
@@ -964,14 +950,13 @@ def compact_deltas(
 ) -> PhysicalIndex:
     """Fold delta generations into the base segments — the reference's
     delegated optimize-to-N-segments (ESIndexDefinitions.cs:452-458) over
-    this layout, and the only path that re-encodes base segments after a
-    build. For each given shard (default: every shard holding delta
-    data) the base is re-encoded from the merged docs table and the shard's
-    delta data is purged in the same marker-protected window
-    (_rebuild_shards); generations left without data drop out of
-    ``delta_gens``. Deterministic and idempotent: a kill mid-compaction is
-    repaired by recover_update re-running the rebuild, and the result is
-    bit-identical to a fresh full build over the same corpus."""
+    this layout; besides the build, the only writer of base segments and
+    of ``terms/``. For each given shard (default: every shard holding
+    delta data) the base is re-encoded from the merged docs table and the
+    shard's delta data purged in one marker-protected window
+    (_fold_shards); generations left without data drop out of
+    ``delta_gens``. Deterministic and idempotent: recover_update repairs a
+    kill by re-running the fold, bit-identical to a fresh full build."""
     recover_update(spark, root)
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
@@ -985,11 +970,10 @@ def compact_deltas(
         input_snapshot = stats.get("input_snapshot", "compact")
 
     # marker without a mode: recovery re-runs the fold against current docs
-    _write_marker(root, {"affected": todo, "n_shards": n_shards,
-                         "run_id": run_id, "input_snapshot": input_snapshot})
-    _rebuild_shards(spark, root, todo, n_shards, run_id, input_snapshot)
-    stats = _refresh_stats_terms(spark, root, run_id, input_snapshot,
-                                 affected=todo)
+    mk = {"affected": todo, "n_shards": n_shards, "run_id": run_id,
+          "input_snapshot": input_snapshot}
+    _write_marker(root, mk)
+    stats = _fold_shards(spark, root, mk)
     os.remove(_update_marker(root))
     return PhysicalIndex(root=root, stats=stats)
 

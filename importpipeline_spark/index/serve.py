@@ -151,6 +151,14 @@ class LocalSearcher:
             self._tomb_u = self._tomb_g = None
 
         terms = _read_parquet_dir(self.pidx.terms_path, columns=["term", "df"])
+        if gens:
+            # base df + Σ live delta_termdf, net 0 dropped (read_dictionary)
+            adj = _read_delta_table(root, "delta_termdf", gens,
+                                    columns=["term", "df"])
+            if not adj.empty:
+                terms = pd.concat([terms, adj])
+                terms = terms.groupby("term", sort=False)["df"].sum()
+                terms = terms[terms > 0].reset_index()
         self._df: Dict[str, int] = dict(zip(terms["term"], terms["df"].astype(int)))
         # cross-query raw block decode cache: (doc ordinal, tf, dl) per block
         # row; ordinals index self._dl_u, fixed for this snapshot

@@ -13,8 +13,9 @@ cluster with an Iceberg catalog):
     <root>/termdf/      term, df             (per-shard sidecars, partitioned
                         by shard, written by the encode kernel: df = the
                         term's Σ block n in that shard)
-    <root>/terms/       term, df, shards     (the dictionary, derived from the
-                        sidecars only — _derive_dictionary_from_sidecars)
+    <root>/terms/       term, df, shards     (the BASE dictionary: build and
+                        compaction derive it from the base sidecars only;
+                        readers add the live delta_termdf — read_dictionary)
     <root>/segments/    seg_N.json — one lineage row per segment (run_id,
                         input_snapshot, counters; segments.py)
     <root>/errors/      url, stage, error, ts — quarantined pages
@@ -62,8 +63,9 @@ from .build import K1, B
 from .codec import BLOCK_SIZE, encode_shard_blocks, to_u64
 
 # stats.json layout version. Readers refuse any other value (and a missing
-# one): older layouts are rebuilt, never migrated in place.
-FORMAT_VERSION = 1
+# one): older layouts are rebuilt, never migrated in place. 2: terms/ is the
+# base dictionary only and delta markers carry their commit's stats.
+FORMAT_VERSION = 2
 
 POSTINGS_SCHEMA = (
     "term string, shard int, block_id int, n int, min_doc long, max_doc long, "
@@ -235,19 +237,13 @@ def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def _derive_dictionary_from_sidecars(spark: SparkSession, root: str,
-                                     out_path: str, delta_gens,
+                                     out_path: str,
                                      dict_files: int = 4) -> None:
-    """The one dictionary derivation: term, df, shards from the per-shard
-    term-df sidecars ONLY — never the postings files (pinned in tests:
-    derivation still works with the postings directory moved away).
-
-    The base sidecars (``termdf/shard=N/``, written by the encode kernel)
-    mirror the base postings' block-n sums. Each committed delta generation
-    in ``delta_gens`` adds SIGNED adjustments (``delta_termdf``: +new
-    versions, -shadowed versions); the live df per (shard, term) is their
-    sum, and a shard drops out of a term's shard list when its net df
-    reaches 0 — exactly the state a full rebuild's dictionary would record.
-    Without deltas the base table is passed through un-aggregated.
+    """The base dictionary (build and compaction): term, df, shards from
+    the base term-df sidecars ONLY (``termdf/shard=N/``, which mirror the
+    base postings' block-n sums) — never the postings files (pinned in
+    tests: derivation still works with the postings directory moved away)
+    and never a delta generation (readers add those: read_dictionary).
 
     Layout is query-shaped: hash-repartitioned BY TERM and sorted within
     files, so a per-query ``In(term, …)`` lookup prunes on parquet
@@ -255,22 +251,7 @@ def _derive_dictionary_from_sidecars(spark: SparkSession, root: str,
     10^12 docs the dictionary is ~10^8 terms; n_files scales with |vocab|
     there). repartition, NOT coalesce: coalesce would fuse into the agg
     stage and run the whole aggregation in n_files tasks."""
-    cols = ("term", F.col("df").cast("long").alias("df"), "shard")
     termdf = read_parquet_or_none(spark, os.path.join(root, "termdf"))
-    if termdf is not None:
-        termdf = termdf.select(*cols)
-    dp = os.path.join(root, "delta_termdf")
-    delta = (read_parquet_or_none(spark, dp)
-             if delta_gens and os.path.isdir(dp) else None)
-    if delta is not None:
-        delta = delta.where(
-            F.col("gen").isin([int(g) for g in delta_gens])
-        ).select(*cols)
-        termdf = delta if termdf is None else termdf.unionByName(delta)
-        termdf = (
-            termdf.groupBy("shard", "term").agg(F.sum("df").alias("df"))
-            .where(F.col("df") > 0)
-        )
     if termdf is None:
         (
             spark.createDataFrame([], "term string, df long, shards array<int>")
@@ -280,13 +261,40 @@ def _derive_dictionary_from_sidecars(spark: SparkSession, root: str,
     (
         termdf.groupBy("term")
         .agg(
-            F.sum("df").alias("df"),
+            F.sum(F.col("df").cast("long")).alias("df"),
             F.sort_array(F.collect_set("shard")).alias("shards"),
         )
         .repartition(dict_files, "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
         .parquet(out_path)
+    )
+
+
+def read_dictionary(spark: SparkSession, pidx: "PhysicalIndex",
+                    terms=None) -> DataFrame:
+    """The effective dictionary (term, df, shards) of ``pidx``'s snapshot,
+    restricted to ``terms`` when given: the base ``terms`` table, or with
+    live gens the base sidecars + signed delta_termdf rows — per (shard,
+    term) Σ df, keep > 0; df = Σ, shards = sorted set (a full rebuild's)."""
+    def only(df: DataFrame) -> DataFrame:
+        return df if terms is None else df.where(F.col("term").isin(list(terms)))
+
+    delta = pidx._delta_rel(spark, "delta_termdf")
+    if delta is None:
+        return only(pidx.terms_df(spark))
+    cols = ("term", F.col("df").cast("long").alias("df"), "shard")
+    rows = only(delta.where(F.col("gen").isin(pidx.delta_gens())).select(*cols))
+    base = pidx._rel_or_none(spark, "termdf")
+    if base is not None:
+        rows = only(base.select(*cols)).unionByName(rows)
+    return (
+        rows.groupBy("shard", "term").agg(F.sum("df").alias("df"))
+        .where(F.col("df") > 0)
+        .groupBy("term").agg(
+            F.sum("df").alias("df"),
+            F.sort_array(F.collect_set("shard")).alias("shards"),
+        )
     )
 
 
@@ -367,25 +375,19 @@ class PhysicalIndex:
         """Generations committed as of THIS handle's stats snapshot."""
         return sorted(int(g) for g in self.stats.get("delta_gens", []))
 
-    def _delta_rel(self, spark: SparkSession, name: str):
-        """Memoized relation over a delta table (None when the snapshot has
-        no committed generations or the table was never written — e.g. a
-        delete generation has no delta_postings). Uncommitted/garbage gen
-        directories never reach here: readers filter to delta_gens, whose
-        entries only land in stats.json after their directories are fully
-        renamed into place."""
+    def _rel_or_none(self, spark: SparkSession, name: str):
+        """Memoized read_parquet_or_none of a table (None if absent)."""
         key = (spark.sparkContext.applicationId, _session_uuid(spark), name)
-        if key in self._rels:
-            return self._rels[key]
-        df = None
-        path = os.path.join(self.root, name)
-        if self.delta_gens() and os.path.isdir(path):
-            try:
-                df = spark.read.option("basePath", path).parquet(path)
-            except Exception:
-                df = None  # no parquet footers (fully purged table)
-        self._rels[key] = df
-        return df
+        if key not in self._rels:
+            path = os.path.join(self.root, name)
+            self._rels[key] = (read_parquet_or_none(spark, path)
+                               if os.path.isdir(path) else None)
+        return self._rels[key]
+
+    def _delta_rel(self, spark: SparkSession, name: str):
+        """Memoized delta table (None without committed gens or data);
+        readers filter it to delta_gens (listed only once renamed in)."""
+        return self._rel_or_none(spark, name) if self.delta_gens() else None
 
     def postings_live_df(self, spark: SparkSession) -> DataFrame:
         """Base + committed delta posting blocks, each row tagged with its
@@ -393,35 +395,27 @@ class PhysicalIndex:
         query kernels mask base entries shadowed by a doc's newer owner
         generation (see deltas.py). With no deltas this is the base relation
         plus a constant column — the plan is unchanged."""
-        base = self.postings_df(spark).withColumn(
-            "seg_gen", F.lit(0).cast("int")
-        )
-        dp = self._delta_rel(spark, "delta_postings")
-        if dp is None:
-            return base
-        dp = (
-            dp.where(F.col("gen").isin(self.delta_gens()))
-            .withColumn("seg_gen", F.col("gen").cast("int"))
-            .drop("gen")
-        )
-        return base.unionByName(dp.select(*base.columns))
+        return self._live(spark, self.postings_df(spark), "delta_postings")
 
     def doclen_live_df(self, spark: SparkSession) -> DataFrame:
         """Base + committed delta doclen rows with their generation; the
         highest-generation row per doc is its owner (doc_len = -1 ⇒ deleted).
         Kernels resolve ownership per shard group — no driver-side work."""
-        base = self.doclen_df(spark).withColumn(
-            "seg_gen", F.lit(0).cast("int")
-        )
-        dd = self._delta_rel(spark, "delta_doclen")
-        if dd is None:
+        return self._live(spark, self.doclen_df(spark), "delta_doclen")
+
+    def _live(self, spark: SparkSession, base: DataFrame,
+              delta_table: str) -> DataFrame:
+        """``base`` ∪ committed ``delta_table`` rows, tagged ``seg_gen``."""
+        base = base.withColumn("seg_gen", F.lit(0).cast("int"))
+        delta = self._delta_rel(spark, delta_table)
+        if delta is None:
             return base
-        dd = (
-            dd.where(F.col("gen").isin(self.delta_gens()))
+        delta = (
+            delta.where(F.col("gen").isin(self.delta_gens()))
             .withColumn("seg_gen", F.col("gen").cast("int"))
             .drop("gen")
         )
-        return base.unionByName(dd.select(*base.columns))
+        return base.unionByName(delta.select(*base.columns))
 
     @property
     def postings_path(self) -> str:
@@ -542,8 +536,26 @@ def read_stats(root: str) -> dict:
     return stats
 
 
+def _update_marker(root: str) -> str:
+    return os.path.join(root, "update.json")
+
+
 def open_index(root: str) -> PhysicalIndex:
-    return PhysicalIndex(root=root, stats=read_stats(root))
+    """The index at ``root`` for querying; RuntimeError while a compaction
+    marker (no ``mode``) remains: the fold changes base files, deltas and
+    terms/ in separate steps, so until segments.recover_update (any writer
+    runs it) finishes it the dictionary is wrong. A delta marker's
+    generation is invisible until stats.json lists it."""
+    stats = read_stats(root)
+    try:
+        with open(_update_marker(root)) as f:
+            mode = json.load(f).get("mode")
+    except FileNotFoundError:
+        mode = "delta"
+    if mode != "delta":
+        raise RuntimeError(f"index at {root} has an interrupted compaction; "
+                           "run segments.recover_update first")
+    return PhysicalIndex(root=root, stats=stats)
 
 
 def read_docs(spark: SparkSession, root: str) -> DataFrame:

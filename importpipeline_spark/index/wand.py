@@ -4,7 +4,8 @@ Query lifecycle (rebuild of the reference's delegated ES search path —
 Endpoints/ESIndexDocType.cs:193-202; analysis chain index.config.js:66-76):
 
   query string → analyzer v1 (same UDF path as indexing) → dictionary lookup
-  (terms parquet, predicate-pushed) → posting scan pruned to query terms
+  (base terms parquet + live delta_termdf overlay, predicate-pushed;
+  store.read_dictionary) → posting scan pruned to query terms
   (partitioned by doc-range shard; term predicate pushed to row groups) →
   per-shard block-max pruned scoring inside applyInPandas (numpy) → global
   top-k merge: orderBy(score DESC, doc_id ASC).limit(k) over ≤ k·shards rows.
@@ -53,7 +54,7 @@ from pyspark.sql.window import Window
 from .build import K1, B
 from .codec import from_u64, to_u64, varint_decode
 from .search import analyze_query
-from .store import PhysicalIndex
+from .store import PhysicalIndex, read_dictionary
 
 _UB_MARGIN = 1.0 + 1e-12
 
@@ -521,7 +522,8 @@ def make_wand_batch_kernel(
 
 
 def _lookup_idf(spark, pidx, terms: List[str]):
-    """One dictionary scan → (idf per term, union of candidate shards).
+    """One scan of the snapshot's dictionary (store.read_dictionary: base
+    terms + live delta_termdf) → (idf per term, union of candidate shards).
 
     The dictionary row carries each term's shard list (recorded at build),
     so partition pruning needs no extra planning job over the postings.
@@ -541,11 +543,7 @@ def _lookup_idf(spark, pidx, terms: List[str]):
     cache = pidx._term_lookup_cache(spark)
     missing = [t for t in terms if t not in cache]
     if missing:
-        rows = (
-            pidx.terms_df(spark)
-            .where(F.col("term").isin(missing))
-            .collect()
-        )
+        rows = read_dictionary(spark, pidx, missing).collect()
         got = {r.term: (int(r.df), [int(s) for s in (r.shards or [])])
                for r in rows}
         for t in missing:

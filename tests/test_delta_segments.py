@@ -34,6 +34,7 @@ from importpipeline_spark.index.segments import (
 from importpipeline_spark.index.serve import LocalSearcher
 from importpipeline_spark.index.store import (
     open_index,
+    read_dictionary,
     read_stats,
     write_index,
 )
@@ -51,9 +52,18 @@ def _topk(spark, pidx, k=10):
 
 
 def _terms(spark, root):
-    df = __import__("pyspark.sql", fromlist=["x"])  # noqa: F841 (readable)
-    rows = spark.read.parquet(os.path.join(root, "terms")).collect()
-    return sorted((r.term, r.df, tuple(r.shards)) for r in rows)
+    """The effective dictionary of the index at ``root`` (base ``terms/``
+    plus the live delta_termdf overlay) as sorted (term, df, shards) rows;
+    LocalSearcher's df map must be exactly its df column."""
+    rows = read_dictionary(spark, open_index(root)).collect()
+    out = sorted((r.term, r.df, tuple(r.shards)) for r in rows)
+    assert LocalSearcher(root)._df == {t: df for t, df, _ in out}
+    return out
+
+
+def _file_inodes(root, table):
+    d = os.path.join(root, table)
+    return {f: os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d)}
 
 
 def _recrawl(pages, frac_mod: int, hours: int):
@@ -85,6 +95,7 @@ def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
     pages = gen_pages_df(spark, 300, seed=7, partitions=4)
     write_index(spark, pages, root, n_shards=4)
     before = {t: _inodes(root, t) for t in ("postings", "doclen", "termdf")}
+    terms_before = _file_inodes(root, "terms")
 
     upd = _recrawl(pages, 5, 2)
     n_upd = upd.count()
@@ -93,6 +104,8 @@ def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
 
     after = {t: _inodes(root, t) for t in ("postings", "doclen", "termdf")}
     assert after == before, "delta update must not rewrite any base file"
+    # terms/ is the base dictionary: the delta commit leaves it alone
+    assert _file_inodes(root, "terms") == terms_before
     assert pidx.stats["delta_gens"] == [1]
     assert os.path.isdir(os.path.join(root, "delta_postings", "gen=1"))
     assert os.path.isdir(os.path.join(root, "delta_doclen", "gen=1"))
@@ -237,11 +250,16 @@ def test_delta_crash_windows_roll_forward_or_back(spark, tmp_path):
     """Every kill window of the delta commit protocol recovers to a
     consistent state: pre-marker → clean rollback (staging swept); between
     marker and docs swap → rolled forward; post-swap pre-commit → rolled
-    forward. Forward recoveries match a full rebuild exactly."""
+    forward. Forward recoveries match a full rebuild exactly and write the
+    same stats.json as the uninterrupted commit."""
     snap1 = gen_pages_df(spark, 200, seed=42, partitions=4)
     snap2 = gen_pages_df(spark, 230, seed=42, partitions=4)
     full_root = str(tmp_path / "full")
     want = _topk(spark, write_index(spark, snap2, full_root, n_shards=4))
+    ref_root = str(tmp_path / "ref")
+    write_index(spark, snap1, ref_root, n_shards=4)
+    want_stats = update_index(spark, ref_root, snap2).stats
+    assert want_stats == read_stats(ref_root)
 
     # window: post-swap, pre-delta-commit
     root = str(tmp_path / "c")
@@ -261,6 +279,7 @@ def test_delta_crash_windows_roll_forward_or_back(spark, tmp_path):
     assert recover_update(spark, root)
     pidx = open_index(root)
     assert pidx.stats["n_docs"] == 230 and pidx.stats["delta_gens"] == [1]
+    assert pidx.stats == want_stats
     assert _topk(spark, pidx) == want
 
     # window: marker written, docs swap not yet performed
@@ -284,6 +303,7 @@ def test_delta_crash_windows_roll_forward_or_back(spark, tmp_path):
     assert recover_update(spark, root)
     pidx = open_index(root)
     assert pidx.stats["n_docs"] == 230
+    assert pidx.stats == want_stats
     assert _topk(spark, pidx) == want
 
     # window: staging done but no marker → rollback; re-apply completes
@@ -307,6 +327,7 @@ def test_delta_crash_windows_roll_forward_or_back(spark, tmp_path):
     assert open_index(root).stats["n_docs"] == 200  # clean pre-update state
     pidx = update_index(spark, root, snap2)
     assert pidx.stats["n_docs"] == 230 and _topk(spark, pidx) == want
+    assert read_stats(root) == want_stats
 
 
 def test_delete_crash_window_rolls_forward(spark, tmp_path):
@@ -326,6 +347,9 @@ def test_delete_crash_window_rolls_forward(spark, tmp_path):
     full_root = str(tmp_path / "full")
     pidx_full = write_index(spark, pages.join(del_urls, "url", "left_anti"),
                             full_root, n_shards=4)
+    ref_root = str(tmp_path / "ref")
+    write_index(spark, pages, ref_root, n_shards=4)
+    want_stats = delete_from_index(spark, ref_root, del_urls).stats
 
     real_commit = seg._commit_delta_gen
 
@@ -343,6 +367,7 @@ def test_delete_crash_window_rolls_forward(spark, tmp_path):
     pidx = open_index(root)
     assert pidx.stats["n_docs"] == pidx_full.stats["n_docs"] == 175
     assert pidx.stats["delta_gens"] == [1]
+    assert pidx.stats == want_stats == read_stats(ref_root)
     assert _topk(spark, pidx) == _topk(spark, pidx_full)
 
 
@@ -421,6 +446,50 @@ def test_compaction_folds_and_auto_triggers(spark, tmp_path):
     )
 
 
+def test_compaction_kill_refuses_readers_until_recovered(spark, tmp_path):
+    """A kill inside compaction's fold leaves an inconsistent dictionary:
+    after the base shards are swapped but before their deltas are purged
+    (the base sidecars and the live delta_termdf both count the folded
+    generation), or after the purge but before terms/ is replaced (terms/
+    plus the remaining deltas miss it). Both readers refuse the index
+    while the compaction marker is present; recover_update finishes the
+    fold, after which dictionary and ranking match a fresh build."""
+    pages = gen_pages_df(spark, 200, seed=11, partitions=4)
+    upd = _recrawl(pages, 4, 3)
+    corpus = pages.join(upd.select("url"), "url", "left_anti").unionByName(upd)
+    full_root = str(tmp_path / "full")
+    want_top = _topk(spark, write_index(spark, corpus, full_root, n_shards=4))
+    want_terms = _terms(spark, full_root)
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected-fold")
+
+    windows = [
+        # (module, function the kill replaces, deltas still on disk)
+        (dmod, "purge_shards", True),
+        (seg, "_derive_dictionary_from_sidecars", False),
+    ]
+    for mod, name, deltas_left in windows:
+        root = str(tmp_path / name)
+        write_index(spark, pages, root, n_shards=4)
+        update_index(spark, root, upd, compact_after=None)
+        real = getattr(mod, name)
+        setattr(mod, name, crash)
+        try:
+            with pytest.raises(RuntimeError, match="injected-fold"):
+                compact_deltas(spark, root)
+        finally:
+            setattr(mod, name, real)
+        assert bool(dmod.shard_gen_map(root)) == deltas_left, name
+        for read in (open_index, LocalSearcher):
+            with pytest.raises(RuntimeError, match="interrupted compaction"):
+                read(root)
+        assert recover_update(spark, root)
+        assert open_index(root).stats["delta_gens"] == []
+        assert _terms(spark, root) == want_terms, name
+        assert _topk(spark, open_index(root)) == want_top, name
+
+
 def test_delete_only_generation_masks_without_postings(spark, tmp_path):
     """A delete writes no delta postings — only doclen tombstones + termdf
     decrements — and the readers (distributed + local) handle a generation
@@ -434,8 +503,10 @@ def test_delete_only_generation_masks_without_postings(spark, tmp_path):
         .orderBy("doc_id").limit(25).select("url").collect()
     )
     del_urls = spark.createDataFrame([(u,) for u in urls], "url string")
+    terms_before = _file_inodes(root, "terms")
     pidx = delete_from_index(spark, root, del_urls)
     assert pidx.stats["delta_gens"] == [1]
+    assert _file_inodes(root, "terms") == terms_before
     assert not os.path.isdir(os.path.join(root, "delta_postings", "gen=1"))
     assert os.path.isdir(os.path.join(root, "delta_doclen", "gen=1"))
 
@@ -606,6 +677,11 @@ def test_random_op_sequence_with_midstream_compaction(spark, tmp_path):
                          input_snapshot=f"s{step}", compact_after=2)
             for u in sel:
                 live[u] = bump
+        # after every step the effective dictionary (base terms/ + live
+        # delta_termdf) is the one a fresh build of the corpus writes
+        step_root = str(tmp_path / f"step{step}")
+        write_index(spark, corpus(), step_root, n_shards=4)
+        assert _terms(spark, root) == _terms(spark, step_root), step
 
     # compact_after=2 must have fired at least once mid-sequence
     sgm = dmod.shard_gen_map(root)
@@ -620,3 +696,139 @@ def test_random_op_sequence_with_midstream_compaction(spark, tmp_path):
     assert pidx.stats["avgdl"] == pidx_full.stats["avgdl"]
     assert _topk(spark, pidx) == _topk(spark, pidx_full)
     assert _terms(spark, root) == _terms(spark, full_root)
+
+
+def _group_jobs(spark, group):
+    """Ids of the finished-or-running Spark jobs of ``group``, once the
+    listener bus has delivered every event (the status store it feeds is
+    asynchronous)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _clear_job_group(spark):
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    spark.sparkContext.setJobDescription(None)
+
+
+# Spark jobs of the small update below (200-doc base, 4 shards, a fifth of
+# it recrawled), every job of every phase included: each future inherits
+# the caller's job group
+_UPDATE_JOBS_MAX = 23
+
+
+def test_delta_publish_runs_no_spark_job(spark, tmp_path):
+    """O(update) publish: once staging, the docs copy-on-write merge and
+    the stats they feed have joined, a delta commit — marker, docs swap,
+    generation rename, stats.json — runs ZERO Spark jobs, and so does
+    recover_update's roll-forward of a delta marker. The cached input is
+    already released when the publish starts. terms/ is the base
+    dictionary and is never rewritten by a delta commit. The whole update
+    stays within its recorded job budget."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 200, seed=7, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+
+    sc.setJobGroup("upd_all", "whole update")
+    try:
+        update_index(spark, root, _recrawl(pages, 5, 2), run_id="j1",
+                     input_snapshot="j1", compact_after=None)
+    finally:
+        _clear_job_group(spark)
+    n_jobs = len(_group_jobs(spark, "upd_all"))
+    assert 0 < n_jobs <= _UPDATE_JOBS_MAX, n_jobs
+
+    real_swap = seg._swap_docs_under_marker
+    del_urls = spark.createDataFrame(
+        [(r.url,) for r in pages.orderBy("url").limit(5).collect()],
+        "url string")
+    calls = {
+        "update": lambda: update_index(
+            spark, root, _recrawl(pages, 5, 3), run_id="j2",
+            input_snapshot="j2", compact_after=None),
+        "delete": lambda: delete_from_index(
+            spark, root, del_urls, run_id="j3", compact_after=None),
+    }
+    jsc = sc._jsc
+    for name, call in calls.items():
+        persisted = []
+
+        def swap_in_group(*a, _group=f"publish_{name}", **kw):
+            # the publish starts with the marker write inside the swap
+            sc.setJobGroup(_group, "delta publish")
+            persisted.append(len(jsc.getPersistentRDDs()))
+            return real_swap(*a, **kw)
+
+        before = len(jsc.getPersistentRDDs())
+        seg._swap_docs_under_marker = swap_in_group
+        try:
+            call()
+        finally:
+            seg._swap_docs_under_marker = real_swap
+            _clear_job_group(spark)
+        assert _group_jobs(spark, f"publish_{name}") == [], name
+        # the cached update/delete input is released before the marker
+        assert persisted == [before], (name, persisted, before)
+    assert read_stats(root)["delta_gens"] == [1, 2, 3]
+
+    # a kill after the docs swap leaves the delta marker: its roll-forward
+    # is the same Spark-free publish
+    real_commit = seg._commit_delta_gen
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected")
+
+    seg._commit_delta_gen = boom
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            update_index(spark, root, _recrawl(pages, 3, 4), run_id="j4",
+                         input_snapshot="j4", compact_after=None)
+    finally:
+        seg._commit_delta_gen = real_commit
+    assert os.path.exists(os.path.join(root, "update.json"))
+    sc.setJobGroup("recover", "delta roll-forward")
+    try:
+        assert recover_update(spark, root)
+    finally:
+        _clear_job_group(spark)
+    assert _group_jobs(spark, "recover") == []
+    assert read_stats(root)["delta_gens"] == [1, 2, 3, 4]
+
+
+def test_failed_staging_releases_cached_inputs(spark, tmp_path):
+    """A staging failure surfaces only after the concurrent docs merge has
+    joined, and the update's persisted fused relation (the delete's doomed
+    docs) is released on the way out: the session's persisted RDD count is
+    back to its value before the call, and no marker is left."""
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 120, seed=5, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    jsc = spark.sparkContext._jsc
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected-stage")
+
+    del_urls = spark.createDataFrame(
+        [(r.url,) for r in pages.orderBy("url").limit(7).collect()],
+        "url string")
+    calls = [
+        ("stage_update_delta", lambda: update_index(
+            spark, root, _recrawl(pages, 4, 1), run_id="l1",
+            input_snapshot="l1")),
+        ("stage_delete_delta", lambda: delete_from_index(
+            spark, root, del_urls, run_id="l2")),
+    ]
+    for name, call in calls:
+        before = len(jsc.getPersistentRDDs())
+        real = getattr(dmod, name)
+        setattr(dmod, name, boom)
+        try:
+            with pytest.raises(RuntimeError, match="injected-stage"):
+                call()
+        finally:
+            setattr(dmod, name, real)
+        assert len(jsc.getPersistentRDDs()) == before, name
+        assert not os.path.exists(os.path.join(root, "update.json"))
+    assert not recover_update(spark, root)
+    assert open_index(root).stats["n_docs"] == 120

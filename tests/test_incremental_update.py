@@ -71,17 +71,23 @@ def test_rank_identical_to_full_rebuild(indexes, spark, query):
     assert [(r.doc_id, r.score) for r in a] == [(r.doc_id, r.score) for r in b]
 
 
+def _dictionary(spark, pidx):
+    """{term: (df, shards)} of the effective dictionary (base terms/ plus
+    the live delta_termdf overlay)."""
+    from importpipeline_spark.index.store import read_dictionary
+
+    return {r.term: (r.df, tuple(r.shards))
+            for r in read_dictionary(spark, pidx).collect()}
+
+
 def test_dictionary_matches_full_rebuild(indexes, spark):
+    from importpipeline_spark.index.serve import LocalSearcher
+
     pidx_inc, pidx_full = indexes
-    ta = {
-        r.term: r.df
-        for r in spark.read.parquet(pidx_inc.terms_path).collect()
-    }
-    tb = {
-        r.term: r.df
-        for r in spark.read.parquet(pidx_full.terms_path).collect()
-    }
-    assert ta == tb
+    assert pidx_inc.delta_gens()
+    ta = _dictionary(spark, pidx_inc)
+    assert ta == _dictionary(spark, pidx_full)
+    assert LocalSearcher(pidx_inc.root)._df == {t: v[0] for t, v in ta.items()}
 
 
 def test_crash_recovery_mid_update(spark, tmp_path):
@@ -345,38 +351,37 @@ def test_update_docs_merge_is_cow_per_shard(spark, tmp_path):
 
 
 def test_termdf_sidecar_dictionary_is_postings_free(indexes, spark, tmp_path):
-    """r6 (VERDICT r5 #3): the update path's dictionary derives from the
-    per-shard term-df sidecars ONLY — content-identical to the full
-    rebuild's dictionary, and computable with the postings directory moved
-    away (proves the refresh never scans block metadata across shards)."""
+    """r6 (VERDICT r5 #3): the updated index's dictionary derives from the
+    term-df sidecars ONLY — the base sidecars plus the live delta_termdf
+    overlay — content-identical to the full rebuild's dictionary, and
+    computable with the postings directory moved away (proves no reader or
+    writer of the dictionary scans block metadata across shards). The base
+    derivation alone reproduces terms/ as written."""
     import os
 
     from importpipeline_spark.index.store import (
         _derive_dictionary_from_sidecars,
+        open_index,
     )
 
     pidx_inc, pidx_full = indexes
+    want = _dictionary(spark, pidx_full)
 
     def frame(root):
-        df = spark.read.parquet(os.path.join(root, "terms"))
+        df = spark.read.parquet(root)
         return sorted((r.term, r.df, tuple(r.shards)) for r in df.collect())
-
-    upd = frame(pidx_inc.root)
-    assert upd == frame(pidx_full.root)
 
     moved = os.path.join(pidx_inc.root, "postings_moved")
     os.rename(os.path.join(pidx_inc.root, "postings"), moved)
     try:
+        got = _dictionary(spark, open_index(pidx_inc.root))
         out = str(tmp_path / "terms_chk")
-        _derive_dictionary_from_sidecars(spark, pidx_inc.root, out,
-                                         pidx_inc.delta_gens())
-        chk = sorted(
-            (r.term, r.df, tuple(r.shards))
-            for r in spark.read.parquet(out).collect()
-        )
+        _derive_dictionary_from_sidecars(spark, pidx_inc.root, out)
+        base = frame(out)
     finally:
         os.rename(moved, os.path.join(pidx_inc.root, "postings"))
-    assert chk == upd
+    assert got == want
+    assert base == frame(pidx_inc.terms_path)
 
 
 def test_termdf_update_touches_only_affected_shards(spark, tmp_path):
@@ -428,7 +433,8 @@ def test_legacy_format_is_refused(spark, tmp_path):
     """An index whose stats.json lacks ``format_version`` (the pre-versioned
     layout) or carries an older one is refused — never migrated in place —
     by every reader and writer, with a ValueError naming the root and both
-    versions."""
+    versions; so is a version-1 index with live generations and a stale
+    version-1 delta marker, which recovery leaves untouched."""
     import json
     import os
 
@@ -437,6 +443,7 @@ def test_legacy_format_is_refused(spark, tmp_path):
         build_index_resumable,
         compact_deltas,
         delete_from_index,
+        recover_update,
     )
     from importpipeline_spark.index.serve import LocalSearcher
     from importpipeline_spark.index.store import FORMAT_VERSION, open_index
@@ -477,16 +484,53 @@ def test_legacy_format_is_refused(spark, tmp_path):
         with open(stats_path) as f:
             assert json.load(f) == legacy
 
+    # a version-1 index with live generations (its terms/ already counted
+    # them) and a version-1 delta marker (no stats in it): refused before
+    # recovery touches anything
+    live = str(tmp_path / "legacy_live")
+    write_index(spark, pages, live, n_shards=4)
+    update_index(spark, live, upd, run_id="l2", input_snapshot="l2",
+                 compact_after=None)
+    live_stats = os.path.join(live, "stats.json")
+    with open(live_stats) as f:
+        legacy = json.load(f)
+    assert legacy["delta_gens"] == [1]
+    legacy["format_version"] = 1
+    with open(live_stats, "w") as f:
+        json.dump(legacy, f)
+    marker = os.path.join(live, "update.json")
+    old_marker = {"affected": [0], "n_shards": 4, "run_id": "old",
+                  "input_snapshot": "old", "mode": "delta", "gen": 2}
+    with open(marker, "w") as f:
+        json.dump(old_marker, f)
+    calls = [
+        lambda: open_index(live),
+        lambda: LocalSearcher(live),
+        lambda: recover_update(spark, live),
+        lambda: update_index(spark, live, upd, run_id="l3",
+                             input_snapshot="l3"),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="format_version 1"):
+            call()
+    with open(live_stats) as f:
+        assert json.load(f) == legacy
+    with open(marker) as f:
+        assert json.load(f) == old_marker
+
 
 def test_corrupt_termdf_sidecar_raises(spark, tmp_path):
-    """A corrupt base term-df sidecar must fail the dictionary refresh
+    """A corrupt base term-df sidecar must fail every dictionary derivation
     loudly; only a sidecar table with no parquet files at all reads as
-    empty. (Swallowing the read error would commit an empty or partial
-    dictionary.)"""
+    empty. (Swallowing the read error would serve or commit an empty or
+    partial dictionary.) A delta commit reads no sidecar — terms/ is the
+    base dictionary — so the derivation to pin is the readers' overlay
+    (read_dictionary, hence the distributed query's idf lookup)."""
     import glob
     import os
 
     from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.store import open_index, read_dictionary
 
     root = str(tmp_path / "corrupt")
     pages = gen_pages_df(spark, 200, seed=3, partitions=4)
@@ -496,10 +540,17 @@ def test_corrupt_termdf_sidecar_raises(spark, tmp_path):
     for p in files:
         with open(p, "wb") as f:
             f.write(b"not a parquet file" * 8)
-    upd = pages.where(F.xxhash64("url") % 5 == 0).withColumn(
+    # new content, so the generation carries term-df adjustments
+    upd = gen_pages_df(spark, 230, seed=4, partitions=4).where(
+        F.xxhash64("url") % 5 == 0).withColumn(
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
+    pidx = update_index(spark, root, upd, run_id="c1", input_snapshot="c1")
+    assert pidx.delta_gens()
+    assert glob.glob(os.path.join(root, "delta_termdf", "gen=1", "*", "*"))
     with pytest.raises(Exception):
-        update_index(spark, root, upd, run_id="c1", input_snapshot="c1")
+        read_dictionary(spark, open_index(root)).collect()
+    with pytest.raises(Exception):
+        bm25_topk_wand(spark, open_index(root), "the", k=5).collect()
 
 
 def test_update_existence_probe_is_partition_pruned(spark, tmp_path):

@@ -102,7 +102,7 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     for root in (clean_root, crash_root, full_root):
         assert os.path.isdir(os.path.join(root, "termdf")), root
     chk_path = str(tmp_path / "terms_from_sidecars")
-    _derive_dictionary_from_sidecars(spark, clean_root, chk_path, [])
+    _derive_dictionary_from_sidecars(spark, clean_root, chk_path)
     parts = sorted(glob.glob(os.path.join(chk_path, "*.parquet")))
     tc = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
     tc["shards"] = tc["shards"].map(lambda a: tuple(int(x) for x in a))
