@@ -201,9 +201,10 @@ def build_tf(docs: DataFrame) -> DataFrame:
 def tf_from_text(docs: DataFrame, n_shards: int) -> DataFrame:
     """(doc_id, term, tf, shard) of stored docs re-tokenized from their
     ``text`` — the pinned analyzer the build ran, so the counts equal what
-    the postings hold. Every path that re-derives term counts from the docs
-    table uses it: the resume of a resumable build, compaction's re-encode
-    and the term-df decrements of shadowed or deleted docs."""
+    the postings hold. Every encode of stored docs uses it: the resume of a
+    resumable build and compaction's re-encode. (The delta staging kernel
+    re-tokenizes shadowed or deleted docs in-process with
+    tokenize_series, the function tokenize_udf wraps: store._stage_delta.)"""
     return build_tf(
         docs.withColumn("tokens", tokenize_udf(F.col("text")))
     ).withColumn("shard", shard_of(F.col("doc_id"), n_shards))

@@ -30,15 +30,21 @@ rule (store.read_dictionary, serve.LocalSearcher), seeing exactly what a
 full rebuild writes.
 
 Commit protocol: a generation is staged completely under
-<root>/delta_staging/ BEFORE the update marker is written; the affected
-shards' new subtotals (and the error counter, if the update quarantined a
-page) are computed beside the staging and ride in the marker. The
-generation is renamed into place after the docs swap and becomes
-reader-visible only when stats.json (atomic replace, written from the
-marker by no Spark job) lists it in ``delta_gens``. Update and delete
-share this commit (segments._commit_delta_mutation): segments.recover_update
-rolls a mid-commit crash forward, and a pre-marker crash leaves only swept
-staging garbage.
+<root>/delta_staging/ BEFORE the update marker is written, by ONE encode
+job (store.encode_postings given the staging root): the live rows the
+generation shadows or deletes ride its dl side flagged ``old`` with their
+stored text, and the per-shard kernel writes the delta postings, the doclen
+rows, the netted term-df adjustments and the shard's (Δn_docs,
+Δtotal_tokens). The driver adds those to stats.json's ``shard_stats`` (a
+shard whose counters it cannot find fails the commit) and the new
+subtotals — with the error counter, if the update quarantined a page —
+ride in the marker. The generation is renamed into place after the docs
+swap and becomes reader-visible only when stats.json (atomic replace,
+written from the marker by no Spark job) lists it in ``delta_gens``.
+Update and delete share this staging and commit
+(segments._commit_delta_mutation): segments.recover_update rolls a
+mid-commit crash forward, and a pre-marker crash leaves only swept staging
+garbage.
 
 Compaction is the only re-encode of base segments after a build: it folds
 a shard's base + deltas into a fresh base segment from the merged docs
@@ -51,15 +57,14 @@ optimize-to-N analogue, and updates auto-compact shards that accumulate
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from concurrent.futures import wait
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.util import inheritable_thread_target
 
-from .build import shard_of, tf_from_text
+from .build import shard_of
 from .store import encode_postings, tf_from_pairs
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
@@ -80,8 +85,12 @@ def gen_path(root: str, table: str, gen: int) -> str:
     return os.path.join(root, table, f"gen={int(gen)}")
 
 
+def staging_root(root: str) -> str:
+    return os.path.join(root, "delta_staging")
+
+
 def staging_path(root: str, table: str) -> str:
-    return os.path.join(root, "delta_staging", table)
+    return os.path.join(staging_root(root), table)
 
 
 def next_gen(stats: dict) -> int:
@@ -95,7 +104,7 @@ def next_gen(stats: dict) -> int:
 
 
 def discard_staging(root: str) -> None:
-    shutil.rmtree(os.path.join(root, "delta_staging"), ignore_errors=True)
+    shutil.rmtree(staging_root(root), ignore_errors=True)
 
 
 def commit_staged_gen(root: str, gen: int) -> None:
@@ -164,92 +173,53 @@ def purge_shards(root: str, shards) -> None:
                 shutil.rmtree(gdir, ignore_errors=True)
 
 
-def _signed_termdf(new_tf: DataFrame | None, old_docs: DataFrame | None,
-                   n_shards: int) -> DataFrame:
-    """Per-(shard, term) signed df adjustment: +1 per (new doc, term) pair,
-    -1 per (shadowed live doc, term) pair. Both sides are O(update) — the
-    shadowed versions' terms come from re-tokenizing exactly the replaced
-    docs' stored text (build.tf_from_text: same pinned analyzer as
-    indexing, so the decrements equal what the base postings count)."""
-    parts = []
-    if new_tf is not None:
-        parts.append(
-            new_tf.groupBy("shard", "term").agg(
-                F.count(F.lit(1)).alias("df")
-            )
-        )
-    if old_docs is not None:
-        parts.append(
-            tf_from_text(old_docs, n_shards).groupBy("shard", "term").agg(
-                (-F.count(F.lit(1))).alias("df")
-            )
-        )
-    return (
-        reduce(DataFrame.unionByName, parts)
-        .groupBy("shard", "term").agg(F.sum("df").alias("df"))
-        .where(F.col("df") != 0)
-        .select("term", "df", "shard")
+def _dl_rows(docs: DataFrame, n_shards: int, old: bool,
+             doc_len=None) -> DataFrame:
+    """The staging job's dl-side rows of ``docs``: the generation's new
+    delta_doclen rows (``doc_len`` overrides the column: -1 for a delete
+    tombstone), or with ``old`` the live rows it replaces or deletes,
+    carrying their stored ``text`` for the term-df decrements."""
+    return docs.select(
+        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
+        (F.col("doc_len") if doc_len is None else doc_len).alias("doc_len"),
+        F.lit(old).alias("old"),
+        F.col("text") if old else F.lit(None).cast("string").alias("text"),
     )
 
 
-def _write_staged(df: DataFrame, root: str, table: str, n_shards: int,
-                  sort_by: str) -> None:
-    """Stage one delta table: partitioned by shard, sorted within files."""
-    (
-        df.repartition(n_shards, "shard").sortWithinPartitions(sort_by)
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging_path(root, table))
-    )
+def _stage(root: str, tf: DataFrame, dl: DataFrame) -> None:
+    """Stage a generation in ONE encode job (store.encode_postings with a
+    staging root): the kernel encodes ``tf`` against the new ``dl`` rows
+    into delta_postings and, per shard, writes delta_doclen, the netted
+    delta_termdf and the (Δn_docs, Δtotal_tokens) counters."""
+    discard_staging(root)
+    # a generation whose adjustments net to zero still commits its (empty)
+    # delta_termdf directory
+    os.makedirs(staging_path(root, "delta_termdf"))
+    encode_postings(tf, dl, staging_path(root, "delta_postings"),
+                    staging=staging_root(root))
 
 
 def stage_update_delta(
     spark: SparkSession,
     root: str,
     changed_docs: DataFrame,
-    old_replaced: DataFrame | None,
+    old_replaced: DataFrame,
     n_shards: int,
 ) -> None:
     """Stage one UPDATE generation under <root>/delta_staging/.
 
     ``changed_docs``: the new/updated docs as the fused kernel emits them,
     WITH their ``tf_pairs`` column (a view of the caller's persisted fused
-    relation — every job here is O(update) and none re-runs Python over
-    the new docs).
-    ``old_replaced``: the live docs-table rows being shadowed (for the
-    termdf decrements); None/empty when every incoming url is new.
+    relation — the job is O(update) and re-runs no Python over the new
+    docs). ``old_replaced``: the live docs-table rows being shadowed; their
+    text rides the dl side for the term-df decrements.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    discard_staging(root)
-    changed = changed_docs.withColumn(
-        "shard", shard_of(F.col("doc_id"), n_shards)
+    tf = tf_from_pairs(
+        changed_docs.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
     )
-    tf = tf_from_pairs(changed)
-    # tf and dl share the cached fused parent, whose lineage contains the
-    # classification join — encode_postings renames the dl side's keys
-    dl = changed.select("shard", "doc_id", "doc_len")
-
-    def _w_postings():
-        # no term-df sidecars here: a generation's delta_termdf is the
-        # signed adjustment written by _w_termdf
-        encode_postings(tf, dl, staging_path(root, "delta_postings"))
-
-    def _w_doclen():
-        _write_staged(dl, root, "delta_doclen", n_shards, "doc_id")
-
-    def _w_termdf():
-        _write_staged(_signed_termdf(tf, old_replaced, n_shards), root,
-                      "delta_termdf", n_shards, "term")
-
-    # the three staging writes are independent jobs over cached inputs —
-    # submit them concurrently (job submission is thread-safe; same pattern
-    # as the build's phase-A fan-out) so their fixed scheduling/IO tails
-    # overlap instead of summing — at O(update) data the job floor IS most
-    # of the staging wall. Each keeps the caller's (thread-local) job group
-    # and description.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        join_all([pool.submit(inheritable_thread_target(spark)(f))
-                  for f in (_w_postings, _w_doclen, _w_termdf)])
+    _stage(root, tf, _dl_rows(changed_docs, n_shards, False).unionByName(
+        _dl_rows(old_replaced, n_shards, True)))
 
 
 def stage_delete_delta(
@@ -258,13 +228,37 @@ def stage_delete_delta(
     doomed_docs: DataFrame,
     n_shards: int,
 ) -> None:
-    """Stage one DELETE generation: doclen tombstones (doc_len = -1) plus
-    termdf decrements from the doomed docs' stored text. No postings —
-    deletion is pure masking until compaction folds it into the base."""
-    discard_staging(root)
-    tombstones = doomed_docs.select(
-        "doc_id", F.lit(-1).alias("doc_len")
-    ).withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-    _write_staged(tombstones, root, "delta_doclen", n_shards, "doc_id")
-    _write_staged(_signed_termdf(None, doomed_docs, n_shards), root,
-                  "delta_termdf", n_shards, "term")
+    """Stage one DELETE generation: the update's job with an empty tf side
+    — doclen tombstones (doc_len = -1) plus termdf decrements from the
+    doomed docs' stored text. No postings — deletion is pure masking until
+    compaction folds it into the base."""
+    tf = spark.createDataFrame([], "shard int, doc_id long, term string, "
+                                   "tf int")
+    _stage(root, tf, _dl_rows(doomed_docs, n_shards, False, F.lit(-1))
+           .unionByName(_dl_rows(doomed_docs, n_shards, True)))
+    shutil.rmtree(staging_path(root, "delta_postings"))
+
+
+def staged_shard_deltas(root: str, shards) -> dict:
+    """shard → (Δn_docs, Δtotal_tokens) of the staged generation, from the
+    counters the staging kernel wrote. Every affected shard must have its
+    counters and its delta_doclen file: a missing one means the executors
+    wrote where the driver cannot see (the index root must be a shared
+    filesystem), so this raises — before any marker — instead of
+    defaulting a subtotal to 0."""
+    out = {}
+    for s in shards:
+        counters = os.path.join(staging_root(root), "counters",
+                                f"shard_{int(s)}.json")
+        doclen = os.path.join(staging_path(root, "delta_doclen"),
+                              f"shard={int(s)}", "part-0.parquet")
+        if not (os.path.exists(counters) and os.path.exists(doclen)):
+            raise RuntimeError(
+                f"staging kernel output for shard {s} is missing under "
+                f"{staging_root(root)}; the index root must "
+                "be a filesystem shared by driver and executors"
+            )
+        with open(counters) as f:
+            rec = json.load(f)
+        out[int(s)] = (int(rec["n_docs"]), int(rec["total_tokens"]))
+    return out

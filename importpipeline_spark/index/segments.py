@@ -59,6 +59,7 @@ from .store import (
     _update_marker,
     encode_postings,
     index_stats,
+    open_docs,
     read_docs,
     read_parquet_or_none,
     read_stats,
@@ -595,9 +596,9 @@ def _docs_pruned_to_shards(spark, root: str, shards: list,
     """The docs table (logical schema) restricted to the given shards — the
     filter hits the physical partition column, so the scan lists/reads ONLY
     those shard directories (update cost stays O(update), not O(corpus)).
-    ``docs``: the docs relation opened once (each open runs a schema job)."""
+    ``docs``: the docs relation when the caller already opened it."""
     if docs is None:
-        docs = spark.read.parquet(os.path.join(root, "docs"))
+        docs = open_docs(spark, root)
     return docs.where(F.col("shard").isin([int(s) for s in shards])).drop("shard")
 
 
@@ -726,14 +727,16 @@ def _commit_delta_mutation(spark, root: str, stats: dict, op: str,
     (``op``: the caller, for job descriptions).
 
     Concurrently, before the marker: ``stage(spark, root, *stage_args,
-    n_shards)`` stages the generation; the docs copy-on-write merge writes
-    ``merged_aff`` (the post-mutation rows of the ``affected`` shards),
-    whose subtotals are counted; with ``count_errors`` the error counter
-    is recounted. A crash here leaves swept garbage. The caller's
-    ``cached`` input is released after the join (on failure, by the
-    caller). The publish runs no Spark job: marker (carrying the stats) +
-    docs swap, gen rename, stats.json from the marker, marker dropped;
-    then auto-compaction."""
+    n_shards)`` stages the generation in one encode job, whose kernel also
+    counts each affected shard's (Δn_docs, Δtotal_tokens); the docs
+    copy-on-write merge writes ``merged_aff`` (the post-mutation rows of
+    the ``affected`` shards); with ``count_errors`` the error counter is
+    recounted. A crash here, or a shard whose kernel output the driver
+    cannot find, leaves swept garbage. The caller's ``cached`` input is
+    released after the join (on failure, by the caller). The publish runs
+    no Spark job: marker (carrying ``shard_stats`` + Δ) + docs swap, gen
+    rename, stats.json from the marker, marker dropped; then
+    auto-compaction."""
     from concurrent.futures import ThreadPoolExecutor
 
     n_shards = int(stats["n_shards"])
@@ -744,20 +747,23 @@ def _commit_delta_mutation(spark, root: str, stats: dict, op: str,
         _phase(spark, op, "stage", stage, spark, root, *stage_args, n_shards),
         _phase(spark, op, "docs_cow", _write_docs_tmp_cow, docs_path, merged,
                affected),
-        _phase(spark, op, "docs_cow", shard_totals, merged),
     ]
     if count_errors:
         jobs.append(_phase(spark, op, "classify", _count_error_urls, spark,
                            root))
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        _, _, totals, *n_errors = _deltas.join_all(
-            [ex.submit(j) for j in jobs])
+        _, _, *n_errors = _deltas.join_all([ex.submit(j) for j in jobs])
     cached.unpersist()
 
+    shard_stats = {}
+    for s, (dn, dt) in _deltas.staged_shard_deltas(root, affected).items():
+        n, t = stats["shard_stats"].get(str(s), (0, 0))
+        if n + dn:  # an emptied shard drops out, as in a fresh build
+            shard_stats[str(s)] = [n + dn, t + dt]
     mk = {
         "affected": affected, "n_shards": n_shards, "run_id": run_id,
         "input_snapshot": input_snapshot, "mode": "delta", "gen": gen,
-        "shard_stats": {str(k): list(v) for k, v in sorted(totals.items())},
+        "shard_stats": shard_stats,
         **({"n_errors": n_errors[0]} if n_errors else {}),
     }
     with _described(spark, f"{op}: publish"):
@@ -786,15 +792,18 @@ def update_index(
        partition-pruned to the shards the incoming urls' ids map to;
     2. extract the changed pages through the build's fused kernel
        (build.build_docs_and_tf_safe: one Arrow pass, bad pages
-       quarantined into errors/) and encode ONLY them into an immutable
-       delta generation (same codec as the base; deltas.py) while the docs
-       table's affected shards are merged copy-on-write and their new
-       subtotals counted — zero re-tokenize / re-encode of unchanged docs.
-       Query kernels mask shadowed base entries via the owner-generation
-       rule;
+       quarantined into errors/) and stage ONLY them as an immutable delta
+       generation in one encode job (same codec as the base; deltas.py):
+       the shadowed live rows ride its dl side, so the same per-shard
+       kernel writes the postings, doclen rows, signed term-df and the
+       shards' subtotal changes. The docs table's affected shards are
+       merged copy-on-write beside it — zero re-tokenize / re-encode of
+       unchanged docs. Query kernels mask shadowed base entries via the
+       owner-generation rule;
     3. commit under the marker protocol (_commit_delta_mutation) with no
-       Spark job: stats.json is written from the marker, and ``terms/``
-       stays the base dictionary (readers add delta_termdf);
+       Spark job: stats.json (shard_stats + the staged changes) is written
+       from the marker, and ``terms/`` stays the base dictionary (readers
+       add delta_termdf);
     4. auto-compact shards holding ``compact_after`` or more generations.
     Its Spark jobs are described ``update_index: <phase>`` (classify /
     stage / docs_cow / publish).
@@ -826,7 +835,7 @@ def update_index(
             # (mode-recorded) id maps to, so the existence probe prunes to
             # those shards (r6); docs is opened once for probe and merge.
             in_shards = _shards_of_urls(new_pages, mode, n_shards)
-            docs = spark.read.parquet(os.path.join(root, "docs"))
+            docs = open_docs(spark, root)
             changed_pages = incremental_pages(
                 new_pages, _docs_pruned_to_shards(spark, root, in_shards, docs)
             )
@@ -863,8 +872,9 @@ def update_index(
             merged_aff = old_aff.join(
                 changed_docs.select("url"), "url", "left_anti"
             ).unionByName(changed_docs.drop("tf_pairs"))
-            # shadowed live versions: their stored text re-tokenizes to the
-            # terms the base counts (signed term-df; stage_update_delta)
+            # shadowed live versions ride the staging job's dl side: their
+            # stored text re-tokenizes to the terms the base counts, their
+            # doc_len leaves the shard subtotals (stage_update_delta)
             old_replaced = old_aff.join(
                 changed_docs.select("url"), "url", "left_semi"
             )
@@ -892,11 +902,12 @@ def delete_from_index(
     url appears in ``urls``. One tombstone generation — doclen rows with
     doc_len = -1 mask the doomed docs out of every older segment, and
     signed term-df adjustments keep df/idf exact — O(delete bytes), no
-    re-encode. It commits (and describes its Spark jobs) like update_index
-    (_commit_delta_mutation); results equal a full rebuild over the
-    survivors (including df/idf shifts), and ``delete_from_index`` followed
-    by ``compact_deltas(affected)`` re-encodes those shards' base segments
-    without the doomed docs.
+    re-encode; the update's staging job with an empty tf side stages it
+    (stage_delete_delta). It commits (and describes its Spark jobs) like
+    update_index (_commit_delta_mutation); results equal a full rebuild
+    over the survivors (including df/idf shifts), and
+    ``delete_from_index`` followed by ``compact_deltas(affected)``
+    re-encodes those shards' base segments without the doomed docs.
 
     ``urls`` must not lazily depend on this index's own docs table (the
     delete replaces those files; a caller-side plan re-evaluated afterwards
@@ -914,7 +925,7 @@ def delete_from_index(
             cand_shards = _shards_of_urls(
                 urls_only, stats.get("doc_id_mode", "hash"), n_shards
             )
-            docs = spark.read.parquet(os.path.join(root, "docs"))
+            docs = open_docs(spark, root)
             doomed = _docs_pruned_to_shards(
                 spark, root, cand_shards, docs
             ).join(urls_only, "url", "left_semi").persist()

@@ -27,6 +27,8 @@ from typing import Dict, List, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 from .build import K1, B
@@ -34,6 +36,10 @@ from .codec import from_u64, to_u64
 from .store import PhysicalIndex, open_index
 from .search import analyze_query
 from .wand import _ShardIndex, _sweep, resolve_doclen
+
+
+_GEN_PARTITIONING = ds.partitioning(pa.schema([("gen", pa.int64())]),
+                                   flavor="hive")
 
 
 def _read_parquet_dir(path: str, columns=None) -> pd.DataFrame:
@@ -44,19 +50,22 @@ def _read_parquet_dir(path: str, columns=None) -> pd.DataFrame:
 
 def _read_delta_table(root: str, table: str, gens, columns=None) -> pd.DataFrame:
     """Committed delta generations of one delta table as a single frame with
-    a ``seg_gen`` column (gen taken from the directory name — the snapshot's
-    stats.json lists only fully-committed generations)."""
-    parts = []
-    for g in sorted(int(x) for x in gens):
-        p = os.path.join(root, table, f"gen={g}")
-        if not os.path.isdir(p):
-            continue  # e.g. a delete generation has no delta_postings
-        pdf = _read_parquet_dir(p, columns=columns)
-        if pdf.empty:
-            continue
-        pdf["seg_gen"] = np.int64(g)
-        parts.append(pdf)
-    return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+    a ``seg_gen`` column, read in ONE pyarrow dataset call (gen taken from
+    the directory name — the snapshot's stats.json lists only
+    fully-committed generations; rows in (gen, file) order)."""
+    base = os.path.join(root, table)
+    files = [
+        f for g in sorted(int(x) for x in gens)
+        for f in sorted(glob.glob(os.path.join(base, f"gen={g}", "**",
+                                               "*.parquet"), recursive=True))
+    ]  # a delete generation has no delta_postings
+    if not files:
+        return pd.DataFrame()
+    data = ds.dataset(files, format="parquet", partition_base_dir=base,
+                      partitioning=_GEN_PARTITIONING)
+    table = data.to_table(
+        columns=None if columns is None else [*columns, "gen"])
+    return table.to_pandas().rename(columns={"gen": "seg_gen"})
 
 
 class LocalSearcher:

@@ -50,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections import Counter
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -58,7 +59,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..text.tokenizer import ANALYZER_VERSION
+from ..text.tokenizer import ANALYZER_VERSION, tokenize_series
 from .build import K1, B
 from .codec import BLOCK_SIZE, encode_shard_blocks, to_u64
 
@@ -72,15 +73,44 @@ POSTINGS_SCHEMA = (
     "docs_enc binary, tfs_enc binary, max_tf int, min_dl int"
 )
 
+# docs/ as every writer stores it (the fused kernel's good rows, partition
+# column last): a read with this schema skips the one-task schema-inference
+# job a plain read runs (pinned against an inferred read in tests)
+DOCS_SCHEMA = (
+    "url string, warc_ts timestamp, lang string, text string, doc_len int, "
+    "doc_id long, shard int"
+)
+
 _POSTING_COLS = [
     "term", "shard", "block_id", "n", "min_doc", "max_doc",
     "docs_enc", "tfs_enc", "max_tf", "min_dl",
 ]
 
 
+def _write_part(table: pa.Table, d: str) -> None:
+    """``table`` as ``d/part-0.parquet``, written executor-side under a
+    dot-prefixed tmp name (Spark's and pyarrow's readers skip it) and
+    renamed into place: content is deterministic and the rename atomic, so
+    task retries and speculative duplicates are harmless."""
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".part.{os.getpid()}.tmp")
+    pq.write_table(table, tmp, use_dictionary=False, store_schema=False)
+    os.replace(tmp, os.path.join(d, "part-0.parquet"))
+
+
+def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
+    """``rec`` as ``counters_dir/shard_N.json`` (same tmp + rename)."""
+    os.makedirs(counters_dir, exist_ok=True)
+    tmp = os.path.join(counters_dir, f".shard_{shard}.{os.getpid()}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(rec, f)
+    os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
+
+
 def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                   termdf_dir: str | None = None,
-                  counters_dir: str | None = None) -> pd.DataFrame:
+                  counters_dir: str | None = None,
+                  staging: str | None = None) -> pd.DataFrame:
     """Cogrouped kernel: one doc-range shard's entire sub-index in one pass.
 
     One task per shard (not per term!): the tf rows are lexsorted by
@@ -93,18 +123,26 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     Each term's run length IS its df in this shard (one tf row per (doc,
     term) pair), so with ``termdf_dir`` the kernel also writes the shard's
     (term, df) sidecar; with ``counters_dir`` it writes the segment's
-    lineage counters. Both are written executor-side under a dot-prefixed
-    tmp name (Spark's readers skip it) and renamed into place: content is
-    deterministic and the rename atomic, so task retries and speculative
-    duplicates are harmless. The index root must be a filesystem the
-    driver and executors share, as every driver-side rename of
-    executor-written parquet already requires.
+    lineage counters. With ``staging`` (a delta generation's staging root)
+    the dl side also carries the live rows the generation shadows or
+    deletes, flagged ``old`` with their stored ``text``, and the kernel
+    stages the shard's delta tables beside the postings (_stage_delta).
+    Every side file is written executor-side (_write_part). The index
+    root must be a filesystem the driver and executors share, as every
+    driver-side rename of executor-written parquet already requires.
     """
+    shard = int(
+        (tf_pdf["shard"] if len(tf_pdf) else dl_pdf["dl_shard"]).iloc[0])
+    if staging is not None:
+        # old rows share doc_ids with their new versions: split them off
+        # before the doc_len lookup
+        is_old = dl_pdf["old"].to_numpy(dtype=bool)
+        old_pdf, dl_pdf = dl_pdf[is_old], dl_pdf[~is_old]
+    terms = np.empty(0, dtype=object)
+    run_starts = np.empty(0, dtype=np.int64)
     if tf_pdf.empty:
         out = pd.DataFrame(columns=_POSTING_COLS)
-        shard = int(dl_pdf["dl_shard"].iloc[0])
     else:
-        shard = int(tf_pdf["shard"].iloc[0])
         u = to_u64(tf_pdf["doc_id"].to_numpy(dtype=np.int64))
         tfs = tf_pdf["tf"].to_numpy(dtype=np.int64)
         terms = tf_pdf["term"].to_numpy(dtype=object)
@@ -137,31 +175,58 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                 "min_dl": min_dl.astype(np.int32),
             }
         )
-        if termdf_dir is not None:
-            df = np.diff(np.append(run_starts, len(terms)))
-            sidecar = pa.table({
-                "term": pa.array(terms[run_starts], pa.string()),
-                "df": pa.array(df, pa.int64()),
-            })
-            d = os.path.join(termdf_dir, f"shard={shard}")
-            os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, f".part.{os.getpid()}.tmp")
-            pq.write_table(sidecar, tmp, use_dictionary=False,
-                           store_schema=False)
-            os.replace(tmp, os.path.join(d, "part-0.parquet"))
+    df = pd.Series(np.diff(np.append(run_starts, len(terms))),
+                   index=terms[run_starts], dtype=np.int64)
+    if termdf_dir is not None and len(df):
+        _write_part(pa.table({
+            "term": pa.array(df.index, pa.string()),
+            "df": pa.array(df.to_numpy(), pa.int64()),
+        }), os.path.join(termdf_dir, f"shard={shard}"))
     if counters_dir is not None:
-        rec = {
+        _write_counters({
             "blocks": int(len(out)),
             "postings": int(out["n"].sum()) if len(out) else 0,
             "terms": int(out["term"].nunique()) if len(out) else 0,
             "n_docs": int(len(dl_pdf)),
-        }
-        os.makedirs(counters_dir, exist_ok=True)
-        tmp = os.path.join(counters_dir, f".shard_{shard}.{os.getpid()}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
+        }, counters_dir, shard)
+    if staging is not None:
+        _stage_delta(staging, shard, df, dl_pdf, old_pdf)
     return out
+
+
+def _stage_delta(staging: str, shard: int, df: pd.Series,
+                 new_pdf: pd.DataFrame, old_pdf: pd.DataFrame) -> None:
+    """One shard's delta tables under ``staging``: ``delta_doclen`` (the
+    new rows, doc_len = -1 for a delete tombstone, sorted by doc_id),
+    ``delta_termdf`` (``df`` — +1 per new (doc, term) — minus 1 per distinct
+    term of each re-tokenized old text, netted, zeros dropped, sorted by
+    term; the same pinned analyzer as indexing, so the decrements equal
+    what the base counts) and ``counters/shard_N.json``: the shard's
+    (Δn_docs, Δtotal_tokens), tombstones counting 0."""
+    part = f"shard={shard}"
+    new_pdf = new_pdf.sort_values("dl_doc_id", kind="stable")
+    _write_part(pa.table({
+        "doc_id": pa.array(new_pdf["dl_doc_id"], pa.int64()),
+        "doc_len": pa.array(new_pdf["doc_len"], pa.int32()),
+    }), os.path.join(staging, "delta_doclen", part))
+    gone = Counter(
+        t for toks in tokenize_series(old_pdf["text"].astype(object))
+        if isinstance(toks, list) for t in set(toks)
+    )
+    adj = df.sub(pd.Series(gone, dtype=np.int64), fill_value=0)
+    adj = adj.astype(np.int64)
+    adj = adj[adj != 0].sort_index()
+    if len(adj):
+        _write_part(pa.table({
+            "term": pa.array(adj.index, pa.string()),
+            "df": pa.array(adj.to_numpy(), pa.int64()),
+        }), os.path.join(staging, "delta_termdf", part))
+    live = new_pdf["doc_len"].to_numpy(dtype=np.int64)
+    live = live[live >= 0]
+    _write_counters({
+        "n_docs": len(live) - len(old_pdf),
+        "total_tokens": int(live.sum()) - int(old_pdf["doc_len"].sum()),
+    }, os.path.join(staging, "counters"), shard)
 
 
 def tf_from_pairs(df: DataFrame) -> DataFrame:
@@ -177,7 +242,8 @@ def tf_from_pairs(df: DataFrame) -> DataFrame:
 
 def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
                     termdf_dir: str | None = None,
-                    counters_dir: str | None = None) -> DataFrame:
+                    counters_dir: str | None = None,
+                    staging: str | None = None) -> DataFrame:
     """The one posting writer: encode ``tf`` (shard, doc_id, term, tf)
     against ``dl`` (shard, doc_id, doc_len) per shard and, with ``path``,
     write the blocks partitioned by shard. Returns the encode plan (with
@@ -187,6 +253,10 @@ def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
     ``termdf_dir/shard=N/``; the directory is cleared (and created, so it
     exists even when no shard has postings) before the job.
     ``counters_dir``: per-shard lineage counters (_encode_shard).
+    ``staging``: a delta generation's staging root — ``dl`` also carries
+    ``old`` (true for the live rows the generation replaces or deletes)
+    and their ``text``, and the same job stages every affected shard's
+    delta_doclen, delta_termdf and counters there (_stage_delta).
 
     The dl side's key columns are BOTH renamed (dl_shard, dl_doc_id): tf
     and dl usually share a parent, and Spark's ambiguous-self-join analysis
@@ -201,12 +271,14 @@ def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
     dl = dl.select(
         F.col("shard").alias("dl_shard"),
         F.col("doc_id").alias("dl_doc_id"), "doc_len",
+        *(("old", "text") if staging is not None else ()),
     )
     out = (
         tf.groupBy("shard")
         .cogroup(dl.groupBy("dl_shard"))
         .applyInPandas(
-            lambda l, r: _encode_shard(l, r, termdf_dir, counters_dir),
+            lambda l, r: _encode_shard(l, r, termdf_dir, counters_dir,
+                                       staging),
             POSTINGS_SCHEMA,
         )
     )
@@ -558,9 +630,15 @@ def open_index(root: str) -> PhysicalIndex:
     return PhysicalIndex(root=root, stats=stats)
 
 
+def open_docs(spark: SparkSession, root: str) -> DataFrame:
+    """The docs table with its ``shard`` partition column, read with the
+    pinned DOCS_SCHEMA (no schema-inference job)."""
+    return spark.read.schema(DOCS_SCHEMA).parquet(os.path.join(root, "docs"))
+
+
 def read_docs(spark: SparkSession, root: str) -> DataFrame:
     """The docs table in its LOGICAL schema: docs is stored partitioned by
     the doc-range shard key (docs/shard=N/) so incremental update/delete
     can merge per shard with COW hard links for untouched shards; the
     physical partition column is dropped here."""
-    return spark.read.parquet(os.path.join(root, "docs")).drop("shard")
+    return open_docs(spark, root).drop("shard")

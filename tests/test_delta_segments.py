@@ -682,6 +682,10 @@ def test_random_op_sequence_with_midstream_compaction(spark, tmp_path):
         step_root = str(tmp_path / f"step{step}")
         write_index(spark, corpus(), step_root, n_shards=4)
         assert _terms(spark, root) == _terms(spark, step_root), step
+        # and the incrementally maintained subtotals are the fresh build's
+        got, want = read_stats(root), read_stats(step_root)
+        for key in ("n_docs", "total_tokens", "avgdl", "shard_stats"):
+            assert got[key] == want[key], (step, key)
 
     # compact_after=2 must have fired at least once mid-sequence
     sgm = dmod.shard_gen_map(root)
@@ -711,10 +715,11 @@ def _clear_job_group(spark):
     spark.sparkContext.setJobDescription(None)
 
 
-# Spark jobs of the small update below (200-doc base, 4 shards, a fifth of
-# it recrawled), every job of every phase included: each future inherits
-# the caller's job group
-_UPDATE_JOBS_MAX = 23
+# Spark jobs of the small update and delete below (200-doc base, 4 shards;
+# a fifth of it recrawled, 5 urls deleted), every job of every phase
+# included: each future inherits the caller's job group
+_UPDATE_JOBS_MAX = 13
+_DELETE_JOBS_MAX = 17
 
 
 def test_delta_publish_runs_no_spark_job(spark, tmp_path):
@@ -724,7 +729,7 @@ def test_delta_publish_runs_no_spark_job(spark, tmp_path):
     recover_update's roll-forward of a delta marker. The cached input is
     already released when the publish starts. terms/ is the base
     dictionary and is never rewritten by a delta commit. The whole update
-    stays within its recorded job budget."""
+    and the whole delete stay within their recorded job budgets."""
     sc = spark.sparkContext
     root = str(tmp_path / "idx")
     pages = gen_pages_df(spark, 200, seed=7, partitions=4)
@@ -762,12 +767,16 @@ def test_delta_publish_runs_no_spark_job(spark, tmp_path):
 
         before = len(jsc.getPersistentRDDs())
         seg._swap_docs_under_marker = swap_in_group
+        sc.setJobGroup(f"{name}_all", "whole call up to its publish")
         try:
             call()
         finally:
             seg._swap_docs_under_marker = real_swap
             _clear_job_group(spark)
         assert _group_jobs(spark, f"publish_{name}") == [], name
+        n_jobs = len(_group_jobs(spark, f"{name}_all"))
+        budget = {"update": _UPDATE_JOBS_MAX, "delete": _DELETE_JOBS_MAX}
+        assert 0 < n_jobs <= budget[name], (name, n_jobs)
         # the cached update/delete input is released before the marker
         assert persisted == [before], (name, persisted, before)
     assert read_stats(root)["delta_gens"] == [1, 2, 3]
@@ -794,6 +803,49 @@ def test_delta_publish_runs_no_spark_job(spark, tmp_path):
         _clear_job_group(spark)
     assert _group_jobs(spark, "recover") == []
     assert read_stats(root)["delta_gens"] == [1, 2, 3, 4]
+
+
+def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
+                                                   monkeypatch):
+    """The commit takes each affected shard's new subtotals from the
+    counters the staging kernel writes beside its delta_doclen file. When
+    a shard's counters are missing — what an index root the driver and
+    executors do not share looks like — the update raises before the
+    marker instead of counting the shard as unchanged: stats.json is
+    untouched, and the only leftovers are staging garbage that
+    recover_update sweeps."""
+    from importpipeline_spark.index import store as smod
+
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 120, seed=5, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    with open(os.path.join(root, "stats.json")) as f:
+        stats_before = f.read()
+    tree_before = _dir_tree(root)
+    real = smod._encode_shard
+
+    def drop_shard0_counters(tf_pdf, dl_pdf, termdf_dir, counters_dir,
+                             staging):
+        out = real(tf_pdf, dl_pdf, termdf_dir, counters_dir, staging)
+        p = os.path.join(staging, "counters", "shard_0.json")
+        if os.path.exists(p):
+            os.remove(p)
+        return out
+
+    monkeypatch.setattr(smod, "_encode_shard", drop_shard0_counters)
+    with pytest.raises(RuntimeError, match="shard 0 is missing"):
+        update_index(spark, root, _recrawl(pages, 2, 1), run_id="m1",
+                     input_snapshot="m1")
+    monkeypatch.undo()
+    with open(os.path.join(root, "stats.json")) as f:
+        assert f.read() == stats_before
+    assert not os.path.exists(os.path.join(root, "update.json"))
+    left = set(_dir_tree(root)) - set(tree_before)
+    assert left and all(
+        d.split(os.sep)[0] in ("delta_staging", "docs.tmp") for d in left
+    ), left
+    assert not recover_update(spark, root)
+    assert _dir_tree(root) == tree_before
 
 
 def test_failed_staging_releases_cached_inputs(spark, tmp_path):

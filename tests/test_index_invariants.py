@@ -24,6 +24,7 @@ from importpipeline_spark.index.segments import (
     update_index,
 )
 from importpipeline_spark.index.store import (
+    DOCS_SCHEMA,
     FORMAT_VERSION,
     read_stats,
     write_index,
@@ -139,3 +140,15 @@ def test_base_writer_invariants(spark, tmp_path, writer):
     stats = _check_invariants(root)
     docs = spark.read.parquet(os.path.join(root, "docs"))
     assert stats["n_docs"] == docs.count() >= N
+
+
+def test_docs_schema_is_pinned(spark, tmp_path):
+    """store.DOCS_SCHEMA — the schema update_index and delete_from_index
+    read ``docs/`` with, so that no schema-inference job runs — is exactly
+    the schema Spark infers for a freshly built ``docs/``."""
+    root = str(tmp_path / "idx")
+    write_index(spark, gen_pages_df(spark, 60, seed=3, partitions=2), root,
+                n_shards=4)
+    docs = os.path.join(root, "docs")
+    assert (spark.read.schema(DOCS_SCHEMA).parquet(docs).schema
+            == spark.read.parquet(docs).schema)
