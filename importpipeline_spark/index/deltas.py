@@ -126,8 +126,8 @@ def commit_staged_gen(root: str, gen: int) -> None:
 def shard_gen_map(root: str) -> dict:
     """shard -> set of generations holding on-disk delta data for it (union
     across the three delta tables; doclen is authoritative — every delta
-    write includes doclen rows — but postings/termdf are scanned too so a
-    half-purged crash window never hides data)."""
+    write includes doclen rows — but delta_postings/delta_termdf are
+    scanned too so a half-purged crash window never hides data)."""
     out: dict = {}
     for table in DELTA_TABLES:
         base = delta_table_path(root, table)
@@ -229,7 +229,7 @@ def stage_delete_delta(
     n_shards: int,
 ) -> None:
     """Stage one DELETE generation: the update's job with an empty tf side
-    — doclen tombstones (doc_len = -1) plus termdf decrements from the
+    — doclen tombstones (doc_len = -1) plus delta_termdf decrements from the
     doomed docs' stored text. No postings — deletion is pure masking until
     compaction folds it into the base."""
     tf = spark.createDataFrame([], "shard int, doc_id long, term string, "

@@ -18,16 +18,18 @@ Build shape (the one build — store.write_index is this on an empty root):
   phase B (resumable loop): segments (= doc-range shards) are encoded in
   BATCHES of ``batch_size`` per Spark job — one cogroup keyed by shard over
   the same cache (no exchange), so a batch of K segments runs as K parallel
-  tasks, while each segment still commits its postings, term-df sidecar and
-  lineage row (resume granularity stays per-segment). A restarted run reads
+  tasks, while each segment still commits its postings and lineage row
+  (resume granularity stays per-segment). A restarted run reads
   the lineage, skips finished segments, and rebuilds only the missing ones
   from the stored docs' text — final index bit-identical to an
   uninterrupted run, including kills mid-batch (files land before lineage;
   an un-lineaged segment is deterministically re-encoded on resume).
   Verified in tests. Without a docs table (``write_docs=False``) a crash
   re-runs phase A and still skips the finished segments.
-  Finally the dictionary derives from the segments' sidecars — on every
-  run, including a resume with nothing left to encode.
+  Finally the dictionary derives from the committed postings' block counts
+  (df = Σ n) — on every run, including a resume with nothing left to
+  encode. The build's Spark jobs are described ``build: extract`` (phase
+  A), ``build: encode`` (the batches) and ``build: dictionary``.
 
 Errors are quarantined per record (mirrors ESEndpoint.SaveError,
 Endpoints/ESEndpoint.cs:457-471) into <root>/errors/.
@@ -55,7 +57,7 @@ from .build import (
 )
 from .store import (
     PhysicalIndex,
-    _derive_dictionary_from_sidecars,
+    _derive_dictionary,
     _update_marker,
     encode_postings,
     index_stats,
@@ -194,7 +196,6 @@ def build_index_resumable(
     run_id: str = "run1",
     input_snapshot: str = "snap1",
     fail_after_segment: int | None = None,
-    dict_files: int = 4,
     batch_size: int | None = None,
     doc_id_mode: str = "hash",
     write_docs: bool = True,
@@ -270,7 +271,9 @@ def build_index_resumable(
 
         def _w_doclen():
             (
-                dl.sortWithinPartitions("doc_id")
+                # the writer's own sort by the partition column replaces
+                # a doc_id-only sort: lead with shard so the files keep it
+                dl.sortWithinPartitions("shard", "doc_id")
                 .write.mode("overwrite")
                 .partitionBy("shard")
                 .parquet(os.path.join(root, "doclen"))
@@ -279,14 +282,17 @@ def build_index_resumable(
         # shard totals and the error count first: _finalize_phase_a reads
         # them by position
         pool = ThreadPoolExecutor(max_workers=4)
+
+        def _extract(fn, *args):
+            return pool.submit(_phase(spark, "build", "extract", fn, *args))
+
         phase_a_futures = [
-            pool.submit(shard_totals, dl),
-            pool.submit(_w_errors),
-            pool.submit(_w_doclen),
-        ] + ([pool.submit(_w_docs)] if write_docs else [])
+            _extract(shard_totals, dl),
+            _extract(_w_errors),
+            _extract(_w_doclen),
+        ] + ([_extract(_w_docs)] if write_docs else [])
 
     batch_tmp = os.path.join(root, "postings_batch_tmp")
-    termdf_tmp = os.path.join(root, "termdf_batch_tmp")
     counters_dir = os.path.join(root, "postings_batch_counters")
 
     def _finalize_phase_a(block: bool) -> dict | None:
@@ -341,26 +347,24 @@ def build_index_resumable(
         if sharded is None and len(todo) > batch_size:
             tf = tf.persist()
             tf_cached = tf
-        # lineaged segments keep their sidecars across resumes
-        os.makedirs(os.path.join(root, "termdf"), exist_ok=True)
         for start in range(0, len(todo), batch_size):
             batch = todo[start:start + batch_size]
             started = datetime.now(timezone.utc).isoformat()
             # ONE encode job for the whole batch: keyed by shard, so the K
             # segments encode as K parallel tasks, each also writing its
-            # term-df sidecar and lineage counters
-            encode_postings(
-                tf.where(F.col("shard").isin(batch)),
-                dl.where(F.col("shard").isin(batch)),
-                batch_tmp, termdf_dir=termdf_tmp, counters_dir=counters_dir,
-            )
+            # lineage counters
+            with _described(spark, "build: encode"):
+                encode_postings(
+                    tf.where(F.col("shard").isin(batch)),
+                    dl.where(F.col("shard").isin(batch)),
+                    batch_tmp, counters_dir=counters_dir,
+                )
             # commit each segment: files into place FIRST, lineage row after
             # — a kill between the two just re-encodes that segment on
             # resume (deterministic, so the final bytes are identical).
             for seg in batch:
                 path = _swap_shard_dir(batch_tmp, os.path.join(root, "postings"),
-                                       seg, keep_empty=True)
-                _swap_shard_dir(termdf_tmp, os.path.join(root, "termdf"), seg)
+                                       seg)
                 m = _read_counters(counters_dir, seg, seg_path=path)
                 _append_lineage(
                     root,
@@ -386,13 +390,12 @@ def build_index_resumable(
                 pos += 1
             if stats is None:
                 stats = _finalize_phase_a(block=False)
-        for d in (batch_tmp, termdf_tmp, counters_dir):
+        for d in (batch_tmp, counters_dir):
             shutil.rmtree(d, ignore_errors=True)
         # every segment is committed: the dictionary derives from their
-        # sidecars (also on a resume with nothing left to encode)
-        _derive_dictionary_from_sidecars(
-            spark, root, os.path.join(root, "terms"), dict_files
-        )
+        # postings (also on a resume with nothing left to encode)
+        with _described(spark, "build: dictionary"):
+            _derive_dictionary(spark, root, os.path.join(root, "terms"))
     finally:
         # join the concurrent phase-A jobs BEFORE leaving (even on the
         # crash path: a caller that immediately resumes must not race
@@ -414,18 +417,17 @@ def build_index_resumable(
     return PhysicalIndex(root=root, stats=stats)
 
 
-def _swap_shard_dir(src_root: str, dst_root: str, shard: int,
-                    keep_empty: bool = False) -> str:
+def _swap_shard_dir(src_root: str, dst_root: str, shard: int) -> str:
     """Move ``src_root/shard=N`` over ``dst_root/shard=N``. A shard the
-    source has no data for leaves an empty directory (``keep_empty``) or
-    none. Returns the destination path."""
+    source has no data for leaves an empty directory. Returns the
+    destination path."""
     dst = os.path.join(dst_root, f"shard={shard}")
     shutil.rmtree(dst, ignore_errors=True)
     src = os.path.join(src_root, f"shard={shard}")
     if os.path.exists(src):
         os.makedirs(dst_root, exist_ok=True)
         os.rename(src, dst)
-    elif keep_empty:
+    else:
         os.makedirs(dst, exist_ok=True)
     return dst
 
@@ -434,7 +436,7 @@ def _swap_shard_dir(src_root: str, dst_root: str, shard: int,
 
 def _rebuild_shards(spark, root: str, affected, n_shards: int,
                     run_id: str, input_snapshot: str) -> dict:
-    """Re-encode postings + doclen + term-df sidecars for the given shards
+    """Re-encode postings + doclen for the given shards
     from the CURRENT docs table and return their (n_docs, total_tokens)
     subtotals. Idempotent (deterministic encode), so safe to re-run during
     crash recovery.
@@ -455,12 +457,11 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
 
     started = datetime.now(timezone.utc).isoformat()
     post_tmp = os.path.join(root, "postings_rebuild_tmp")
-    termdf_tmp = os.path.join(root, "termdf_rebuild_tmp")
-    encode_postings(tf, dl, post_tmp, termdf_dir=termdf_tmp)
+    encode_postings(tf, dl, post_tmp)
     dl_tmp = os.path.join(root, "doclen_rebuild_tmp")
     (
         dl.repartition(max(1, len(affected)), "shard")
-        .sortWithinPartitions("doc_id")
+        .sortWithinPartitions("shard", "doc_id")
         .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(dl_tmp)
@@ -468,12 +469,9 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
     totals = shard_totals(dl)
 
     for seg in affected:
-        # an emptied shard keeps empty postings/doclen dirs and no sidecar
-        _swap_shard_dir(post_tmp, os.path.join(root, "postings"), seg,
-                        keep_empty=True)
-        _swap_shard_dir(dl_tmp, os.path.join(root, "doclen"), seg,
-                        keep_empty=True)
-        _swap_shard_dir(termdf_tmp, os.path.join(root, "termdf"), seg)
+        # an emptied shard keeps empty postings/doclen dirs
+        _swap_shard_dir(post_tmp, os.path.join(root, "postings"), seg)
+        _swap_shard_dir(dl_tmp, os.path.join(root, "doclen"), seg)
         _append_lineage(
             root,
             {
@@ -488,10 +486,10 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
                 "metrics": {"incremental": 1},
             },
         )
-    for d in (post_tmp, dl_tmp, termdf_tmp):
+    for d in (post_tmp, dl_tmp):
         shutil.rmtree(d, ignore_errors=True)
     # the freshly encoded base now carries these shards' full live state —
-    # their delta-segment data (postings/doclen/termdf across ALL
+    # their delta-segment data (every delta table across ALL
     # generations) is folded and must go, or queries would double-count.
     # Still inside the caller's marker window: a crash here re-runs the
     # whole (idempotent) rebuild + purge.
@@ -541,7 +539,7 @@ def _fold_shards(spark, root: str, mk: dict) -> dict:
     terms_tmp = os.path.join(root, "terms.tmp")
     shutil.rmtree(terms_tmp, ignore_errors=True)
     with _described(spark, "compact_deltas: publish"):
-        _derive_dictionary_from_sidecars(spark, root, terms_tmp)
+        _derive_dictionary(spark, root, terms_tmp)
     terms_path = os.path.join(root, "terms")
     shutil.rmtree(terms_path, ignore_errors=True)
     os.rename(terms_tmp, terms_path)

@@ -6,16 +6,16 @@ cluster with an Iceberg catalog):
     <root>/docs/        doc_id, url, warc_ts, text, doc_len, lang
                         (partitioned by shard — update/delete merge docs
                         per shard with COW hard links; read via read_docs)
-    <root>/doclen/      shard, doc_id, doc_len            (partitioned by shard)
+    <root>/doclen/      shard, doc_id, doc_len            (partitioned by shard,
+                        sorted by doc_id within files)
     <root>/postings/    term, block_id, n, min_doc, max_doc, docs_enc,
                         tfs_enc, max_tf, min_dl           (partitioned by shard,
-                        sorted by term within files → row-group term pruning)
-    <root>/termdf/      term, df             (per-shard sidecars, partitioned
-                        by shard, written by the encode kernel: df = the
-                        term's Σ block n in that shard)
+                        sorted by term within files → row-group term pruning;
+                        a term's df in a shard is its blocks' Σ n)
     <root>/terms/       term, df, shards     (the BASE dictionary: build and
-                        compaction derive it from the base sidecars only;
-                        readers add the live delta_termdf — read_dictionary)
+                        compaction derive it from the base postings' block
+                        n — df = Σ n; readers add the live delta_termdf —
+                        read_dictionary)
     <root>/segments/    seg_N.json — one lineage row per segment (run_id,
                         input_snapshot, counters; segments.py)
     <root>/errors/      url, stage, error, ts — quarantined pages
@@ -81,6 +81,9 @@ DOCS_SCHEMA = (
     "doc_id long, shard int"
 )
 
+# terms/ file count: compaction and the build write the same layout
+DICT_FILES = 4
+
 _POSTING_COLS = [
     "term", "shard", "block_id", "n", "min_doc", "max_doc",
     "docs_enc", "tfs_enc", "max_tf", "min_dl",
@@ -108,7 +111,6 @@ def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
 
 
 def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
-                  termdf_dir: str | None = None,
                   counters_dir: str | None = None,
                   staging: str | None = None) -> pd.DataFrame:
     """Cogrouped kernel: one doc-range shard's entire sub-index in one pass.
@@ -120,13 +122,12 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     count is the parallelism/memory knob: each task holds one doc-range's
     postings (bounded by shard width), which is what holds at 1000× data.
 
-    Each term's run length IS its df in this shard (one tf row per (doc,
-    term) pair), so with ``termdf_dir`` the kernel also writes the shard's
-    (term, df) sidecar; with ``counters_dir`` it writes the segment's
-    lineage counters. With ``staging`` (a delta generation's staging root)
-    the dl side also carries the live rows the generation shadows or
-    deletes, flagged ``old`` with their stored ``text``, and the kernel
-    stages the shard's delta tables beside the postings (_stage_delta).
+    With ``counters_dir`` the kernel writes the segment's lineage
+    counters. With ``staging`` (a delta generation's staging root) the dl
+    side also carries the live rows the generation shadows or deletes,
+    flagged ``old`` with their stored ``text``, and the kernel stages the
+    shard's delta tables beside the postings (_stage_delta; each term's
+    run length is its +df there — one tf row per (doc, term) pair).
     Every side file is written executor-side (_write_part). The index
     root must be a filesystem the driver and executors share, as every
     driver-side rename of executor-written parquet already requires.
@@ -175,13 +176,6 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                 "min_dl": min_dl.astype(np.int32),
             }
         )
-    df = pd.Series(np.diff(np.append(run_starts, len(terms))),
-                   index=terms[run_starts], dtype=np.int64)
-    if termdf_dir is not None and len(df):
-        _write_part(pa.table({
-            "term": pa.array(df.index, pa.string()),
-            "df": pa.array(df.to_numpy(), pa.int64()),
-        }), os.path.join(termdf_dir, f"shard={shard}"))
     if counters_dir is not None:
         _write_counters({
             "blocks": int(len(out)),
@@ -190,6 +184,8 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
             "n_docs": int(len(dl_pdf)),
         }, counters_dir, shard)
     if staging is not None:
+        df = pd.Series(np.diff(np.append(run_starts, len(terms))),
+                       index=terms[run_starts], dtype=np.int64)
         _stage_delta(staging, shard, df, dl_pdf, old_pdf)
     return out
 
@@ -241,7 +237,6 @@ def tf_from_pairs(df: DataFrame) -> DataFrame:
 
 
 def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
-                    termdf_dir: str | None = None,
                     counters_dir: str | None = None,
                     staging: str | None = None) -> DataFrame:
     """The one posting writer: encode ``tf`` (shard, doc_id, term, tf)
@@ -249,9 +244,6 @@ def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
     write the blocks partitioned by shard. Returns the encode plan (with
     ``path=None`` nothing runs — plan inspection only).
 
-    ``termdf_dir``: the kernel writes each shard's (term, df) sidecar to
-    ``termdf_dir/shard=N/``; the directory is cleared (and created, so it
-    exists even when no shard has postings) before the job.
     ``counters_dir``: per-shard lineage counters (_encode_shard).
     ``staging``: a delta generation's staging root — ``dl`` also carries
     ``old`` (true for the live rows the generation replaces or deletes)
@@ -277,24 +269,20 @@ def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
         tf.groupBy("shard")
         .cogroup(dl.groupBy("dl_shard"))
         .applyInPandas(
-            lambda l, r: _encode_shard(l, r, termdf_dir, counters_dir,
-                                       staging),
+            lambda l, r: _encode_shard(l, r, counters_dir, staging),
             POSTINGS_SCHEMA,
         )
     )
     if path is not None:
-        if termdf_dir is not None:
-            shutil.rmtree(termdf_dir, ignore_errors=True)
-            os.makedirs(termdf_dir)
         out.write.mode("overwrite").partitionBy("shard").parquet(path)
     return out
 
 
 def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     """The parquet table (partitioned or not) at ``path``, or None when its
-    directory holds no parquet files at all (e.g. the term-df sidecars of
-    an index whose every document quarantined or was deleted — schema
-    inference has nothing to read). Any other read failure (a missing
+    directory holds no parquet files at all (e.g. the postings of an index
+    whose every document quarantined or was deleted — schema inference has
+    nothing to read). Any other read failure (a missing
     directory, a corrupt file) raises: an empty or partial dictionary or
     counter must never be derived silently."""
     try:
@@ -308,35 +296,32 @@ def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def _derive_dictionary_from_sidecars(spark: SparkSession, root: str,
-                                     out_path: str,
-                                     dict_files: int = 4) -> None:
+def _derive_dictionary(spark: SparkSession, root: str,
+                       out_path: str) -> None:
     """The base dictionary (build and compaction): term, df, shards from
-    the base term-df sidecars ONLY (``termdf/shard=N/``, which mirror the
-    base postings' block-n sums) — never the postings files (pinned in
-    tests: derivation still works with the postings directory moved away)
-    and never a delta generation (readers add those: read_dictionary).
+    the base posting blocks' (term, shard, n) columns ONLY — df = Σ n,
+    shards = the sorted set of shards holding a block — and never a delta
+    generation (readers add those: read_dictionary).
 
-    Layout is query-shaped: hash-repartitioned BY TERM and sorted within
-    files, so a per-query ``In(term, …)`` lookup prunes on parquet
-    row-group min/max stats instead of scanning the whole dictionary (at
-    10^12 docs the dictionary is ~10^8 terms; n_files scales with |vocab|
-    there). repartition, NOT coalesce: coalesce would fuse into the agg
-    stage and run the whole aggregation in n_files tasks."""
-    termdf = read_parquet_or_none(spark, os.path.join(root, "termdf"))
-    if termdf is None:
+    Layout is query-shaped: hash-repartitioned BY TERM into DICT_FILES
+    files and sorted within them, so a per-query ``In(term, …)`` lookup
+    prunes on parquet row-group min/max stats instead of scanning the
+    whole dictionary. repartition, NOT coalesce: coalesce would fuse into
+    the agg stage and run the whole aggregation in DICT_FILES tasks."""
+    post = read_parquet_or_none(spark, os.path.join(root, "postings"))
+    if post is None:
         (
             spark.createDataFrame([], "term string, df long, shards array<int>")
             .write.mode("overwrite").parquet(out_path)
         )
         return
     (
-        termdf.groupBy("term")
+        post.groupBy("term")
         .agg(
-            F.sum(F.col("df").cast("long")).alias("df"),
+            F.sum("n").alias("df"),
             F.sort_array(F.collect_set("shard")).alias("shards"),
         )
-        .repartition(dict_files, "term")
+        .repartition(DICT_FILES, "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
         .parquet(out_path)
@@ -347,7 +332,7 @@ def read_dictionary(spark: SparkSession, pidx: "PhysicalIndex",
                     terms=None) -> DataFrame:
     """The effective dictionary (term, df, shards) of ``pidx``'s snapshot,
     restricted to ``terms`` when given: the base ``terms`` table, or with
-    live gens the base sidecars + signed delta_termdf rows — per (shard,
+    live gens the base blocks' n + signed delta_termdf rows — per (shard,
     term) Σ df, keep > 0; df = Σ, shards = sorted set (a full rebuild's)."""
     def only(df: DataFrame) -> DataFrame:
         return df if terms is None else df.where(F.col("term").isin(list(terms)))
@@ -355,11 +340,14 @@ def read_dictionary(spark: SparkSession, pidx: "PhysicalIndex",
     delta = pidx._delta_rel(spark, "delta_termdf")
     if delta is None:
         return only(pidx.terms_df(spark))
-    cols = ("term", F.col("df").cast("long").alias("df"), "shard")
-    rows = only(delta.where(F.col("gen").isin(pidx.delta_gens())).select(*cols))
-    base = pidx._rel_or_none(spark, "termdf")
+    rows = only(delta.where(F.col("gen").isin(pidx.delta_gens()))
+                .select("term", "df", "shard"))
+    # an index whose base holds no posting file (every page quarantined,
+    # or all deleted and compacted) has only the overlay
+    base = pidx._rel_or_none(spark, "postings")
     if base is not None:
-        rows = only(base.select(*cols)).unionByName(rows)
+        rows = only(base.select("term", F.col("n").alias("df"), "shard")
+                    ).unionByName(rows)
     return (
         rows.groupBy("shard", "term").agg(F.sum("df").alias("df"))
         .where(F.col("df") > 0)
@@ -512,7 +500,6 @@ def write_index(
     root: str,
     n_shards: int = 16,
     write_docs: bool = True,
-    dict_files: int = 4,
     doc_id_mode: str = "hash",
 ) -> PhysicalIndex:
     """Full build: pages → a fresh physical index at ``root``.
@@ -533,7 +520,7 @@ def write_index(
     shutil.rmtree(root, ignore_errors=True)
     return build_index_resumable(
         spark, pages, root, n_shards=n_shards, run_id="full",
-        input_snapshot="full", dict_files=dict_files, batch_size=n_shards,
+        input_snapshot="full", batch_size=n_shards,
         doc_id_mode=doc_id_mode, write_docs=write_docs,
     )
 
@@ -577,7 +564,7 @@ def index_stats(shard_stats: dict, n_shards: int, doc_id_mode: str,
         "b": B,
         "n_shards": n_shards,
         "block_size": BLOCK_SIZE,
-        # recorded so every later writer (update/delete/streaming ingest)
+        # recorded so every later writer (update/delete)
         # derives ids the same way — a mode mismatch would index the same
         # url under two ids and silently strand stale postings
         "doc_id_mode": doc_id_mode,

@@ -39,9 +39,6 @@ def main() -> None:
                          "task's posting slice stays memory-bounded")
     ap.add_argument("--run-id", default="run1")
     ap.add_argument("--input-snapshot", default="snap1")
-    ap.add_argument("--dict-files", type=int, default=4,
-                    help="terms-dictionary file count; scale with |vocab| "
-                         "(term-hashed + sorted for row-group pruning)")
     args = ap.parse_args()
 
     # conf (master, executors, shuffle partitions, AQE) comes from the
@@ -56,7 +53,6 @@ def main() -> None:
     pidx = build_index_resumable(
         spark, pages, args.root, n_shards=args.n_shards,
         run_id=args.run_id, input_snapshot=args.input_snapshot,
-        dict_files=args.dict_files,
     )
     lin = read_lineage(spark, args.root)
     seg_summary = (

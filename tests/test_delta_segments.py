@@ -87,14 +87,14 @@ def _inodes(root, table):
 
 
 def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
-    """The whole point of the LSM path: an update rewrites NO base postings,
-    doclen, or termdf file in ANY shard (inode identity everywhere), yet
+    """The whole point of the LSM path: an update rewrites NO base postings
+    or doclen file in ANY shard (inode identity everywhere), yet
     stays rank-identical to a full rebuild — so update compute is bounded by
     the update, not the affected shards."""
     root = str(tmp_path / "idx")
     pages = gen_pages_df(spark, 300, seed=7, partitions=4)
     write_index(spark, pages, root, n_shards=4)
-    before = {t: _inodes(root, t) for t in ("postings", "doclen", "termdf")}
+    before = {t: _inodes(root, t) for t in ("postings", "doclen")}
     terms_before = _file_inodes(root, "terms")
 
     upd = _recrawl(pages, 5, 2)
@@ -102,7 +102,7 @@ def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
     assert n_upd > 10
     pidx = update_index(spark, root, upd, run_id="d1", input_snapshot="s1")
 
-    after = {t: _inodes(root, t) for t in ("postings", "doclen", "termdf")}
+    after = {t: _inodes(root, t) for t in ("postings", "doclen")}
     assert after == before, "delta update must not rewrite any base file"
     # terms/ is the base dictionary: the delta commit leaves it alone
     assert _file_inodes(root, "terms") == terms_before
@@ -449,7 +449,7 @@ def test_compaction_folds_and_auto_triggers(spark, tmp_path):
 def test_compaction_kill_refuses_readers_until_recovered(spark, tmp_path):
     """A kill inside compaction's fold leaves an inconsistent dictionary:
     after the base shards are swapped but before their deltas are purged
-    (the base sidecars and the live delta_termdf both count the folded
+    (the base blocks and the live delta_termdf both count the folded
     generation), or after the purge but before terms/ is replaced (terms/
     plus the remaining deltas miss it). Both readers refuse the index
     while the compaction marker is present; recover_update finishes the
@@ -467,7 +467,7 @@ def test_compaction_kill_refuses_readers_until_recovered(spark, tmp_path):
     windows = [
         # (module, function the kill replaces, deltas still on disk)
         (dmod, "purge_shards", True),
-        (seg, "_derive_dictionary_from_sidecars", False),
+        (seg, "_derive_dictionary", False),
     ]
     for mod, name, deltas_left in windows:
         root = str(tmp_path / name)
@@ -824,9 +824,8 @@ def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
     tree_before = _dir_tree(root)
     real = smod._encode_shard
 
-    def drop_shard0_counters(tf_pdf, dl_pdf, termdf_dir, counters_dir,
-                             staging):
-        out = real(tf_pdf, dl_pdf, termdf_dir, counters_dir, staging)
+    def drop_shard0_counters(tf_pdf, dl_pdf, counters_dir, staging):
+        out = real(tf_pdf, dl_pdf, counters_dir, staging)
         p = os.path.join(staging, "counters", "shard_0.json")
         if os.path.exists(p):
             os.remove(p)

@@ -351,44 +351,65 @@ def test_update_docs_merge_is_cow_per_shard(spark, tmp_path):
 
 
 def test_termdf_sidecar_dictionary_is_postings_free(indexes, spark, tmp_path):
-    """r6 (VERDICT r5 #3): the updated index's dictionary derives from the
-    term-df sidecars ONLY — the base sidecars plus the live delta_termdf
-    overlay — content-identical to the full rebuild's dictionary, and
-    computable with the postings directory moved away (proves no reader or
-    writer of the dictionary scans block metadata across shards). The base
-    derivation alone reproduces terms/ as written."""
+    """The base term df has one source: the base posting blocks' ``n``.
+    The base derivation (build and compaction) equals Σ base block n per
+    term with the sorted set of shards holding a block, reproduces terms/
+    as written, and never reads ``delta_postings``: an update's blocks
+    there would change the sums, yet removing them changes nothing. The
+    readers' overlay (base blocks + live delta_termdf) equals the full
+    rebuild's dictionary."""
+    import glob
     import os
 
-    from importpipeline_spark.index.store import (
-        _derive_dictionary_from_sidecars,
-        open_index,
-    )
+    import pandas as pd
+
+    from importpipeline_spark.index.store import _derive_dictionary, open_index
 
     pidx_inc, pidx_full = indexes
-    want = _dictionary(spark, pidx_full)
+    root = pidx_inc.root
+    assert _dictionary(spark, open_index(root)) == _dictionary(spark, pidx_full)
 
-    def frame(root):
-        df = spark.read.parquet(root)
+    def blocks(table):
+        parts = []
+        for p in glob.glob(os.path.join(root, table, "**", "*.parquet"),
+                           recursive=True):
+            df = pd.read_parquet(p, columns=["term", "n"])
+            df["shard"] = int(p.split("shard=")[1].split("/")[0])
+            parts.append(df)
+        return pd.concat(parts, ignore_index=True)
+
+    def ref(post):
+        return sorted(
+            (t, int(g["n"].sum()), tuple(sorted(set(g["shard"].tolist()))))
+            for t, g in post.groupby("term")
+        )
+
+    def frame(path):
+        df = spark.read.parquet(path)
         return sorted((r.term, r.df, tuple(r.shards)) for r in df.collect())
 
-    moved = os.path.join(pidx_inc.root, "postings_moved")
-    os.rename(os.path.join(pidx_inc.root, "postings"), moved)
+    base = blocks("postings")
+    want = ref(base)
+    assert want != ref(pd.concat([base, blocks("delta_postings")]))
+    out = str(tmp_path / "terms_chk")
+    _derive_dictionary(spark, root, out)
+    assert frame(out) == want == frame(pidx_inc.terms_path)
+
+    moved = os.path.join(root, "delta_postings_moved")
+    os.rename(os.path.join(root, "delta_postings"), moved)
     try:
-        got = _dictionary(spark, open_index(pidx_inc.root))
-        out = str(tmp_path / "terms_chk")
-        _derive_dictionary_from_sidecars(spark, pidx_inc.root, out)
-        base = frame(out)
+        _derive_dictionary(spark, root, out)
     finally:
-        os.rename(moved, os.path.join(pidx_inc.root, "postings"))
-    assert got == want
-    assert base == frame(pidx_inc.terms_path)
+        os.rename(moved, os.path.join(root, "delta_postings"))
+    assert frame(out) == want
 
 
 def test_termdf_update_touches_only_affected_shards(spark, tmp_path):
-    """A narrow (host-bursty) update touches NO base term-df sidecar, and
-    compacting it afterwards rewrites only the compacted shards' sidecars:
-    every other shard's sidecar file stays untouched on disk (same inodes)
-    — the sidecar refresh is O(affected shards), like the docs COW merge."""
+    """The base term df lives in the posting blocks: a narrow (host-bursty)
+    update touches NO base postings file, and compacting it afterwards
+    rewrites only the compacted shards' postings: every other shard's file
+    stays untouched on disk (same inodes) — the base df refresh is
+    O(affected shards), like the docs COW merge."""
     import os
 
     from importpipeline_spark.index.deltas import shard_gen_map
@@ -399,7 +420,7 @@ def test_termdf_update_touches_only_affected_shards(spark, tmp_path):
     pages = gen_pages_df(spark, 2000, seed=9, partitions=8, profile="web")
     write_index(spark, pages, root, n_shards=16, write_docs=True,
                 doc_id_mode="host_locality")
-    td_dir = os.path.join(root, "termdf")
+    td_dir = os.path.join(root, "postings")
 
     def inodes():
         out = {}
@@ -520,26 +541,26 @@ def test_legacy_format_is_refused(spark, tmp_path):
 
 
 def test_corrupt_termdf_sidecar_raises(spark, tmp_path):
-    """A corrupt base term-df sidecar must fail every dictionary derivation
-    loudly; only a sidecar table with no parquet files at all reads as
-    empty. (Swallowing the read error would serve or commit an empty or
-    partial dictionary.) A delta commit reads no sidecar — terms/ is the
-    base dictionary — so the derivation to pin is the readers' overlay
-    (read_dictionary, hence the distributed query's idf lookup)."""
+    """A corrupt base postings file — the base term df's one source — must
+    fail every dictionary derivation loudly; only a postings table with no
+    parquet files at all reads as empty. (Swallowing the read error would
+    serve or commit an empty or partial dictionary.) A delta commit derives
+    no dictionary — terms/ is the base dictionary — so the derivation to
+    pin is the readers' overlay (read_dictionary, hence the distributed
+    query's idf lookup) and the base derivation of a compaction."""
     import glob
     import os
 
     from importpipeline_spark.index.pagesgen import gen_pages_df
-    from importpipeline_spark.index.store import open_index, read_dictionary
+    from importpipeline_spark.index.store import (
+        _derive_dictionary,
+        open_index,
+        read_dictionary,
+    )
 
     root = str(tmp_path / "corrupt")
     pages = gen_pages_df(spark, 200, seed=3, partitions=4)
     write_index(spark, pages, root, n_shards=4)
-    files = glob.glob(os.path.join(root, "termdf", "shard=*", "*.parquet"))
-    assert files
-    for p in files:
-        with open(p, "wb") as f:
-            f.write(b"not a parquet file" * 8)
     # new content, so the generation carries term-df adjustments
     upd = gen_pages_df(spark, 230, seed=4, partitions=4).where(
         F.xxhash64("url") % 5 == 0).withColumn(
@@ -547,10 +568,17 @@ def test_corrupt_termdf_sidecar_raises(spark, tmp_path):
     pidx = update_index(spark, root, upd, run_id="c1", input_snapshot="c1")
     assert pidx.delta_gens()
     assert glob.glob(os.path.join(root, "delta_termdf", "gen=1", "*", "*"))
+    files = glob.glob(os.path.join(root, "postings", "shard=*", "*.parquet"))
+    assert files
+    for p in files:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file" * 8)
     with pytest.raises(Exception):
         read_dictionary(spark, open_index(root)).collect()
     with pytest.raises(Exception):
         bm25_topk_wand(spark, open_index(root), "the", k=5).collect()
+    with pytest.raises(Exception):
+        _derive_dictionary(spark, root, str(tmp_path / "terms_chk"))
 
 
 def test_update_existence_probe_is_partition_pruned(spark, tmp_path):

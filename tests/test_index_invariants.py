@@ -2,10 +2,11 @@
 
 - stats.json carries the current ``format_version``, and its per-shard
   ``shard_stats`` sum to ``n_docs`` / ``total_tokens``;
-- every ``termdf/shard=N`` sidecar equals Σ block ``n`` per (shard, term)
-  recomputed from ``postings/``;
+- no base term-df copy exists beside ``postings/`` (the blocks' ``n`` is
+  the one source of the base df);
 - ``terms/`` equals the (term, df, shards) reference built from
-  ``postings/``.
+  ``postings/``;
+- every ``doclen/shard=N`` file is sorted by doc_id.
 """
 
 import glob
@@ -13,6 +14,7 @@ import os
 import shutil
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,7 +43,7 @@ def _read_shard_table(root, table):
         df["shard"] = int(p.split("shard=")[1].split("/")[0])
         parts.append(df)
     return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        {"shard": [], "term": [], "n": [], "df": []}
+        {"shard": [], "term": [], "n": []}
     )
 
 
@@ -52,19 +54,9 @@ def _check_invariants(root):
     ss = stats["shard_stats"]
     assert sum(v[0] for v in ss.values()) == stats["n_docs"]
     assert sum(v[1] for v in ss.values()) == stats["total_tokens"]
-    assert os.path.isdir(os.path.join(root, "termdf"))
+    assert not os.path.exists(os.path.join(root, "termdf"))
 
     post = _read_shard_table(root, "postings")
-    ref_td = sorted(
-        (int(s), t, int(n))
-        for (s, t), n in post.groupby(["shard", "term"])["n"].sum().items()
-    )
-    td = _read_shard_table(root, "termdf")
-    got_td = sorted(
-        (int(s), t, int(d)) for s, t, d in zip(td["shard"], td["term"], td["df"])
-    )
-    assert got_td == ref_td
-
     ref_terms = sorted(
         (t, int(g["n"].sum()), tuple(sorted({int(s) for s in g["shard"]})))
         for t, g in post.groupby("term")
@@ -76,6 +68,12 @@ def _check_invariants(root):
         for t, d, s in zip(terms["term"], terms["df"], terms["shards"])
     )
     assert got_terms == ref_terms
+
+    doclen = glob.glob(os.path.join(root, "doclen", "shard=*", "*.parquet"))
+    assert doclen
+    for p in doclen:
+        ids = pq.read_table(p, columns=["doc_id"])["doc_id"].to_numpy()
+        assert (ids[1:] >= ids[:-1]).all(), p
     return stats
 
 

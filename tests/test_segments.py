@@ -74,8 +74,7 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
 
     # the resumable build's dictionary must be content-identical to
     # write_index's — same rows, same df, same shard lists (both derive
-    # from the encode kernel's sidecars: df per term = its run length ≡ Σ
-    # block n)
+    # from the committed postings: df per term = Σ block n)
     from importpipeline_spark.index.store import write_index
 
     full_root = str(tmp_path / "full")
@@ -92,17 +91,15 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     assert ta["df"].tolist() == tb["df"].tolist()
     assert ta["shards"].tolist() == tb["shards"].tolist()
 
-    # every build flavor leaves the per-shard term-df sidecars in place
-    # (the update path's dictionary state), and the sidecar-derived
-    # dictionary is content-identical to the written one
-    from importpipeline_spark.index.store import (
-        _derive_dictionary_from_sidecars,
-    )
+    # no build flavor writes a second copy of the base df, and a
+    # re-derivation from the postings is content-identical to the written
+    # dictionary
+    from importpipeline_spark.index.store import _derive_dictionary
 
     for root in (clean_root, crash_root, full_root):
-        assert os.path.isdir(os.path.join(root, "termdf")), root
-    chk_path = str(tmp_path / "terms_from_sidecars")
-    _derive_dictionary_from_sidecars(spark, clean_root, chk_path)
+        assert not os.path.exists(os.path.join(root, "termdf")), root
+    chk_path = str(tmp_path / "terms_rederived")
+    _derive_dictionary(spark, clean_root, chk_path)
     parts = sorted(glob.glob(os.path.join(chk_path, "*.parquet")))
     tc = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
     tc["shards"] = tc["shards"].map(lambda a: tuple(int(x) for x in a))
@@ -177,3 +174,28 @@ def test_all_quarantined_build_completes_empty(spark, tmp_path):
     assert pidx.stats["n_errors"] == 4
     assert read_lineage(spark, root).count() == 4
     assert bm25_topk_wand(spark, pidx, "the", k=5).collect() == []
+
+
+def test_build_jobs_carry_phase_descriptions(spark, tmp_path):
+    """Every Spark job of a write_index is described by its build phase —
+    ``build: extract`` (phase A), ``build: encode`` (the posting batches)
+    or ``build: dictionary`` — so the event log attributes each job to a
+    layer."""
+    from importpipeline_spark.index.store import write_index
+
+    sc = spark.sparkContext
+    pages = gen_pages_df(spark, 120, seed=5, partitions=4)
+    sc.setJobGroup("write_index_phases", "undescribed")
+    try:
+        write_index(spark, pages, str(tmp_path / "idx"), n_shards=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    status = sc._jsc.sc().statusStore()
+    descs = []
+    for job_id in sc.statusTracker().getJobIdsForGroup("write_index_phases"):
+        d = status.job(job_id).description()
+        descs.append(d.get() if d.isDefined() else None)
+    assert set(descs) == {"build: extract", "build: encode",
+                          "build: dictionary"}, descs
