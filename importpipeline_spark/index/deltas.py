@@ -29,14 +29,21 @@ reader adds the live generations' delta_termdf with the derivation's own
 rule (store.read_dictionary, serve.LocalSearcher), seeing exactly what a
 full rebuild writes.
 
-Commit protocol: a generation is staged completely under
-<root>/delta_staging/ BEFORE the update marker is written, by ONE encode
-job (store.encode_postings given the staging root): the live rows the
-generation shadows or deletes ride its dl side flagged ``old`` with their
-stored text, and the per-shard kernel writes the delta postings, the doclen
-rows, the netted term-df adjustments and the shard's (Δn_docs,
-Δtotal_tokens). The driver adds those to stats.json's ``shard_stats`` (a
-shard whose counters it cannot find fails the commit) and the new
+Commit protocol: a generation is staged completely BEFORE the update
+marker is written, by ONE encode job (store.encode_postings given a
+Staging), and that job also stages the docs copy-on-write merge. Its only
+side carries, per probed shard, every live docs row, the generation's new
+rows (an update: the extract kernel's output, term counts included) or
+doomed urls (a delete), repartitioned by shard into parallel tasks. Per
+shard the kernel works out, by url, the live rows the generation shadows
+or deletes and writes under <root>/delta_staging/ the delta postings, the
+doclen rows, the netted term-df adjustments and the shard's (Δn_docs,
+Δtotal_tokens), and the shard's merged docs part under <root>/docs.tmp/
+(live − old + new). A shard with no change gets nothing. The driver
+learns the changed shards and any quarantined page from the kernel's
+accumulator, hard-links every other docs shard into docs.tmp (no Spark
+job), and adds the counters to stats.json's ``shard_stats`` (a shard whose
+counters, doclen or docs part it cannot find fails the commit); the new
 subtotals — with the error counter, if the update quarantined a page —
 ride in the marker. The generation is renamed into place after the docs
 swap and becomes reader-visible only when stats.json (atomic replace,
@@ -64,8 +71,16 @@ from concurrent.futures import wait
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import shard_of
-from .store import encode_postings, tf_from_pairs
+from .build import doc_id_expr, shard_of
+from .store import (
+    BAD,
+    GONE,
+    LIVE,
+    NEW,
+    StagedParam,
+    Staging,
+    encode_postings,
+)
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
 
@@ -173,89 +188,123 @@ def purge_shards(root: str, shards) -> None:
                 shutil.rmtree(gdir, ignore_errors=True)
 
 
-def _dl_rows(docs: DataFrame, n_shards: int, old: bool,
-             doc_len=None) -> DataFrame:
-    """The staging job's dl-side rows of ``docs``: the generation's new
-    delta_doclen rows (``doc_len`` overrides the column: -1 for a delete
-    tombstone), or with ``old`` the live rows it replaces or deletes,
-    carrying their stored ``text`` for the term-df decrements."""
-    return docs.select(
-        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
-        (F.col("doc_len") if doc_len is None else doc_len).alias("doc_len"),
-        F.lit(old).alias("old"),
-        F.col("text") if old else F.lit(None).cast("string").alias("text"),
+def _live_rows(live_docs: DataFrame) -> DataFrame:
+    """The staging job's LIVE rows: the probed shards' docs rows
+    (open_docs' columns, partition column included). Every row kind keeps
+    doc_id, doc_len and warc_us non-null: the kernel's pandas would turn a
+    shard's integer column with a null into float64, rounding doc ids."""
+    return live_docs.select(
+        "shard", "doc_id", "doc_len", F.lit(LIVE).alias("kind"), "url",
+        "text", F.unix_micros("warc_ts").alias("warc_us"), "lang",
+        F.lit(None).cast("array<string>").alias("terms"),
+        F.lit(None).cast("array<int>").alias("tfs"),
     )
 
 
-def _stage(root: str, tf: DataFrame, dl: DataFrame) -> None:
+def _stage(spark: SparkSession, root: str, rows: DataFrame,
+           n_parts: int) -> tuple[list, int]:
     """Stage a generation in ONE encode job (store.encode_postings with a
-    staging root): the kernel encodes ``tf`` against the new ``dl`` rows
-    into delta_postings and, per shard, writes delta_doclen, the netted
-    delta_termdf and the (Δn_docs, Δtotal_tokens) counters."""
+    Staging): per changed shard the kernel encodes the NEW ``rows`` into
+    delta_postings and writes delta_doclen, the netted delta_termdf, the
+    (Δn_docs, Δtotal_tokens) counters and the merged
+    ``docs.tmp/shard=N``. ``rows`` is repartitioned by shard into
+    min(``n_parts``, defaultParallelism) partitions, at least 2: the job's
+    only exchange, which AQE does not coalesce, so the shards run as
+    parallel tasks (one partition would plan as SinglePartition, which the
+    adaptive plan shuffles a second time). Returns the changed shards and
+    the quarantined rows, as the kernel reported them."""
+    sc = spark.sparkContext
     discard_staging(root)
+    docs_tmp = os.path.join(root, "docs.tmp")
+    shutil.rmtree(docs_tmp, ignore_errors=True)
     # a generation whose adjustments net to zero still commits its (empty)
     # delta_termdf directory
     os.makedirs(staging_path(root, "delta_termdf"))
-    encode_postings(tf, dl, staging_path(root, "delta_postings"),
-                    staging=staging_root(root))
+    report = sc.accumulator((frozenset(), 0), StagedParam())
+    n_parts = max(2, min(n_parts, sc.defaultParallelism))
+    encode_postings(None, rows.repartition(n_parts, "shard"),
+                    staging_path(root, "delta_postings"),
+                    staging=Staging(staging_root(root), docs_tmp, report))
+    shards, n_bad = report.value
+    return sorted(shards), n_bad
 
 
 def stage_update_delta(
     spark: SparkSession,
     root: str,
-    changed_docs: DataFrame,
-    old_replaced: DataFrame,
+    fused: DataFrame,
+    live_docs: DataFrame,
+    n_parts: int,
     n_shards: int,
-) -> None:
-    """Stage one UPDATE generation under <root>/delta_staging/.
+) -> tuple[list, int]:
+    """Stage one UPDATE generation under <root>/delta_staging/ and its
+    merged docs shards under <root>/docs.tmp/; returns (changed shards,
+    quarantined pages).
 
-    ``changed_docs``: the new/updated docs as the fused kernel emits them,
-    WITH their ``tf_pairs`` column (a view of the caller's persisted fused
-    relation — the job is O(update) and re-runs no Python over the new
-    docs). ``old_replaced``: the live docs-table rows being shadowed; their
-    text rides the dl side for the term-df decrements.
+    ``fused``: the changed pages as the extract kernel emits them, good and
+    quarantined rows alike (build.build_docs_and_tf_safe); the good ones
+    are the NEW rows, with their tf_pairs as ``terms``/``tfs``.
+    ``live_docs``: the live docs rows of the probed shards; those whose
+    url a NEW row carries are the shadowed versions — their stored text
+    re-tokenizes to the terms the base counts, their doc_len leaves the
+    shard subtotals.
     """
-    tf = tf_from_pairs(
-        changed_docs.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
+    new = fused.select(
+        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
+        "doc_len", F.when(F.col("error").isNull(), NEW).otherwise(BAD)
+        .alias("kind"), "url", "text",
+        F.unix_micros("warc_ts").alias("warc_us"), "lang",
+        F.col("tf_pairs.term").alias("terms"),
+        F.col("tf_pairs.tf").alias("tfs"),
     )
-    _stage(root, tf, _dl_rows(changed_docs, n_shards, False).unionByName(
-        _dl_rows(old_replaced, n_shards, True)))
+    return _stage(spark, root, _live_rows(live_docs).unionByName(
+        new, allowMissingColumns=True), n_parts)
 
 
 def stage_delete_delta(
     spark: SparkSession,
     root: str,
-    doomed_docs: DataFrame,
+    urls: DataFrame,
+    live_docs: DataFrame,
+    n_parts: int,
     n_shards: int,
-) -> None:
-    """Stage one DELETE generation: the update's job with an empty tf side
-    — doclen tombstones (doc_len = -1) plus delta_termdf decrements from the
-    doomed docs' stored text. No postings — deletion is pure masking until
-    compaction folds it into the base."""
-    tf = spark.createDataFrame([], "shard int, doc_id long, term string, "
-                                   "tf int")
-    _stage(root, tf, _dl_rows(doomed_docs, n_shards, False, F.lit(-1))
-           .unionByName(_dl_rows(doomed_docs, n_shards, True)))
+    doc_id_mode: str,
+) -> tuple[list, int]:
+    """Stage one DELETE generation: the update's job with the doomed
+    ``urls`` as GONE rows instead of NEW ones — doclen tombstones (doc_len
+    = -1) plus delta_termdf decrements from the doomed docs' stored text.
+    No postings — deletion is pure masking until compaction folds it into
+    the base."""
+    gone = urls.select(doc_id_expr(doc_id_mode).alias("doc_id"), "url").select(
+        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
+        F.lit(-1).alias("doc_len"), F.lit(GONE).alias("kind"), "url",
+        F.lit(0).cast("long").alias("warc_us"),
+    )
+    out = _stage(spark, root, _live_rows(live_docs).unionByName(
+        gone, allowMissingColumns=True), n_parts)
     shutil.rmtree(staging_path(root, "delta_postings"))
+    return out
 
 
 def staged_shard_deltas(root: str, shards) -> dict:
     """shard → (Δn_docs, Δtotal_tokens) of the staged generation, from the
     counters the staging kernel wrote. Every affected shard must have its
-    counters and its delta_doclen file: a missing one means the executors
-    wrote where the driver cannot see (the index root must be a shared
-    filesystem), so this raises — before any marker — instead of
-    defaulting a subtotal to 0."""
+    counters, its delta_doclen file and its staged docs part: a missing
+    one means the executors wrote where the driver cannot see (the index
+    root must be a shared filesystem), so this raises — before any marker
+    — instead of defaulting a subtotal to 0."""
     out = {}
     for s in shards:
+        part = os.path.join(f"shard={int(s)}", "part-0.parquet")
         counters = os.path.join(staging_root(root), "counters",
                                 f"shard_{int(s)}.json")
-        doclen = os.path.join(staging_path(root, "delta_doclen"),
-                              f"shard={int(s)}", "part-0.parquet")
-        if not (os.path.exists(counters) and os.path.exists(doclen)):
+        files = (counters,
+                 os.path.join(staging_path(root, "delta_doclen"), part),
+                 os.path.join(root, "docs.tmp", part))
+        if not all(os.path.exists(f) for f in files):
             raise RuntimeError(
                 f"staging kernel output for shard {s} is missing under "
-                f"{staging_root(root)}; the index root must "
+                f"{root}; the index root must "
                 "be a filesystem shared by driver and executors"
             )
         with open(counters) as f:

@@ -546,27 +546,18 @@ def _fold_shards(spark, root: str, mk: dict) -> dict:
     return _refresh_stats_terms(root, dict(mk, shard_stats=totals))
 
 
-def _write_docs_tmp_cow(docs_path: str, merged_affected, affected) -> None:
-    """Stage the post-merge docs table at ``docs_path + '.tmp'``, copying
-    nothing that did not change.
-
-    ``merged_affected`` must hold exactly the post-merge rows of the
-    ``affected`` shards, with their shard column. Those rows are
-    written partitioned (docs/shard=N/) and every OTHER shard directory is
-    hard-linked from the live table by the publish path's copy-on-write
-    primitive (_copy_index_tree; file copies where links are refused,
-    still never a Spark job), so staging cost is O(affected shards) +
-    O(#files) link syscalls, not a corpus rewrite. The caller's whole-dir
-    marker+rename swap — and recover_update — apply on top: a crash
-    mid-staging leaves docs.tmp garbage that recovery sweeps, never a
-    half-merged live table."""
+def _write_docs_tmp_cow(docs_path: str, affected) -> None:
+    """Complete the post-merge docs table staged at ``docs_path + '.tmp'``,
+    copying nothing that did not change. The staging kernel already wrote
+    the ``affected`` shards' merged parts there; every OTHER shard
+    directory is hard-linked from the live table by the publish path's
+    copy-on-write primitive (_copy_index_tree; file copies where links are
+    refused) — no Spark job, O(#files) link syscalls. The caller's
+    whole-dir marker+rename swap — and recover_update — apply on top: a
+    crash mid-staging leaves docs.tmp garbage that recovery sweeps, never
+    a half-merged live table."""
     docs_tmp = docs_path + ".tmp"
-    shutil.rmtree(docs_tmp, ignore_errors=True)
     aff = {int(a) for a in affected}
-    (
-        merged_affected.repartition(max(1, len(aff)), "shard")
-        .write.mode("overwrite").partitionBy("shard").parquet(docs_tmp)
-    )
     for e in os.listdir(docs_path):
         if e.startswith("shard=") and int(e.split("=", 1)[1]) not in aff:
             _copy_index_tree(
@@ -590,14 +581,14 @@ def _shards_of_urls(with_urls: DataFrame, doc_id_mode: str,
 
 
 def _docs_pruned_to_shards(spark, root: str, shards: list,
-                           docs: DataFrame | None = None) -> DataFrame:
-    """The docs table (logical schema) restricted to the given shards — the
-    filter hits the physical partition column, so the scan lists/reads ONLY
-    those shard directories (update cost stays O(update), not O(corpus)).
-    ``docs``: the docs relation when the caller already opened it."""
-    if docs is None:
-        docs = open_docs(spark, root)
-    return docs.where(F.col("shard").isin([int(s) for s in shards])).drop("shard")
+                           keep_shard: bool = False) -> DataFrame:
+    """The docs table (logical schema; with ``keep_shard`` its partition
+    column too) restricted to the given shards — the filter hits the
+    physical partition column, so the scan lists/reads ONLY those shard
+    directories (update cost stays O(update), not O(corpus))."""
+    docs = open_docs(spark, root).where(
+        F.col("shard").isin([int(s) for s in shards]))
+    return docs if keep_shard else docs.drop("shard")
 
 
 @contextmanager
@@ -717,42 +708,41 @@ def _maybe_autocompact(spark, root: str, affected, compact_after,
 
 
 def _commit_delta_mutation(spark, root: str, stats: dict, op: str,
-                           cached: DataFrame, stage, stage_args,
-                           merged_aff: DataFrame, affected: list,
-                           run_id: str, input_snapshot: str, compact_after,
-                           count_errors: bool = False) -> PhysicalIndex:
+                           staged: tuple, run_id: str, input_snapshot: str,
+                           compact_after) -> PhysicalIndex:
     """The one commit sequence of update_index and delete_from_index
-    (``op``: the caller, for job descriptions).
+    (``op``: the caller, for job descriptions), after their staging job:
+    ``staged`` is its (changed shards, quarantined pages) report.
 
-    Concurrently, before the marker: ``stage(spark, root, *stage_args,
-    n_shards)`` stages the generation in one encode job, whose kernel also
-    counts each affected shard's (Δn_docs, Δtotal_tokens); the docs
-    copy-on-write merge writes ``merged_aff`` (the post-mutation rows of
-    the ``affected`` shards); with ``count_errors`` the error counter is
-    recounted. A crash here, or a shard whose kernel output the driver
-    cannot find, leaves swept garbage. The caller's ``cached`` input is
-    released after the join (on failure, by the caller). The publish runs
-    no Spark job: marker (carrying ``shard_stats`` + Δ) + docs swap, gen
-    rename, stats.json from the marker, marker dropped; then
-    auto-compaction."""
-    from concurrent.futures import ThreadPoolExecutor
+    With no changed shard the staging leftovers are swept and nothing is
+    committed (an update whose every changed page quarantined still
+    refreshes the error counter). Otherwise, before the marker and with no
+    Spark job, the unchanged docs shards are hard-linked into docs.tmp and
+    each changed shard's new subtotals are taken from its staged counters
+    (a shard whose kernel output the driver cannot find raises, leaving
+    swept garbage). A quarantine appended to errors/ is recounted — the
+    only job after staging. The publish runs no Spark job: marker
+    (carrying ``shard_stats`` + Δ) + docs swap, gen rename, stats.json
+    from the marker, marker dropped; then auto-compaction."""
+    affected, n_bad = staged
+    n_errors = {}
+    if n_bad:
+        with _described(spark, f"{op}: classify"):
+            n_errors["n_errors"] = _count_error_urls(spark, root)
+    docs_path = os.path.join(root, "docs")
+    if not affected:
+        _deltas.discard_staging(root)
+        shutil.rmtree(docs_path + ".tmp", ignore_errors=True)
+        if n_errors and n_errors["n_errors"] != stats.get("n_errors"):
+            # a truthful counter, attributed to this run
+            stats.update(n_errors, run_id=run_id,
+                         input_snapshot=input_snapshot)
+            write_stats(root, stats)
+        return PhysicalIndex(root=root, stats=stats)
 
     n_shards = int(stats["n_shards"])
-    docs_path = os.path.join(root, "docs")
     gen = _deltas.next_gen(stats)
-    merged = merged_aff.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-    jobs = [
-        _phase(spark, op, "stage", stage, spark, root, *stage_args, n_shards),
-        _phase(spark, op, "docs_cow", _write_docs_tmp_cow, docs_path, merged,
-               affected),
-    ]
-    if count_errors:
-        jobs.append(_phase(spark, op, "classify", _count_error_urls, spark,
-                           root))
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        _, _, *n_errors = _deltas.join_all([ex.submit(j) for j in jobs])
-    cached.unpersist()
-
+    _write_docs_tmp_cow(docs_path, affected)
     shard_stats = {}
     for s, (dn, dt) in _deltas.staged_shard_deltas(root, affected).items():
         n, t = stats["shard_stats"].get(str(s), (0, 0))
@@ -761,8 +751,7 @@ def _commit_delta_mutation(spark, root: str, stats: dict, op: str,
     mk = {
         "affected": affected, "n_shards": n_shards, "run_id": run_id,
         "input_snapshot": input_snapshot, "mode": "delta", "gen": gen,
-        "shard_stats": shard_stats,
-        **({"n_errors": n_errors[0]} if n_errors else {}),
+        "shard_stats": shard_stats, **n_errors,
     }
     with _described(spark, f"{op}: publish"):
         _swap_docs_under_marker(root, mk)
@@ -785,26 +774,29 @@ def update_index(
 ) -> PhysicalIndex:
     """Incremental index update: re-index only what changed.
 
-    1. classify the snapshot against the existing docs table
-       (ExistState semantics — skip ExistSame/ExistNewer); the probe is
-       partition-pruned to the shards the incoming urls' ids map to;
-    2. extract the changed pages through the build's fused kernel
+    1. find the shards the incoming urls' ids map to (_shards_of_urls, the
+       ``classify`` job): an existing copy can only live there, so the
+       existence probe (ExistState semantics — skip ExistSame/ExistNewer)
+       is partition-pruned to them;
+    2. ONE staging job (deltas.stage_update_delta) runs the probe, extracts
+       the changed pages through the build's fused kernel
        (build.build_docs_and_tf_safe: one Arrow pass, bad pages
-       quarantined into errors/) and stage ONLY them as an immutable delta
-       generation in one encode job (same codec as the base; deltas.py):
-       the shadowed live rows ride its dl side, so the same per-shard
-       kernel writes the postings, doclen rows, signed term-df and the
-       shards' subtotal changes. The docs table's affected shards are
-       merged copy-on-write beside it — zero re-tokenize / re-encode of
-       unchanged docs. Query kernels mask shadowed base entries via the
-       owner-generation rule;
-    3. commit under the marker protocol (_commit_delta_mutation) with no
-       Spark job: stats.json (shard_stats + the staged changes) is written
-       from the marker, and ``terms/`` stays the base dictionary (readers
-       add delta_termdf);
+       quarantined) and, per probed shard in parallel tasks, the one
+       encode kernel writes the delta generation (same codec as the base;
+       deltas.py) — postings, doclen rows, signed term-df, the shard's
+       subtotal change — and the shard's merged docs part, the probed
+       shards' live rows riding its one side. Zero re-tokenize /
+       re-encode of unchanged docs; query kernels mask shadowed base
+       entries via the owner-generation rule. Quarantined pages are
+       appended to errors/;
+    3. commit under the marker protocol (_commit_delta_mutation): the
+       unchanged docs shards are hard-linked, stats.json (shard_stats +
+       the staged changes) is written from the marker, and ``terms/``
+       stays the base dictionary (readers add delta_termdf) — no Spark job
+       unless a page quarantined (the error recount);
     4. auto-compact shards holding ``compact_after`` or more generations.
     Its Spark jobs are described ``update_index: <phase>`` (classify /
-    stage / docs_cow / publish).
+    stage).
 
     The result is rank-identical to a full rebuild over the merged corpus.
     Re-encoding the affected shards' base segments — what an update used
@@ -826,65 +818,24 @@ def update_index(
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
     mode = stats.get("doc_id_mode", "hash")
-    fused = None
-    try:
+    with _described(spark, "update_index: classify"):
+        in_shards = _shards_of_urls(new_pages, mode, n_shards)
+    live = _docs_pruned_to_shards(spark, root, in_shards, keep_shard=True)
+    # ids derive the way THIS index was built (hash ids over a
+    # host_locality index would re-index a url under a second id)
+    fused = build_docs_and_tf_safe(incremental_pages(new_pages, live), mode)
+    with _described(spark, "update_index: stage"):
+        staged = _deltas.stage_update_delta(
+            spark, root, fused, live, len(in_shards), n_shards)
+    if staged[1]:
+        # the rare quarantine re-extracts the changed pages once
         with _described(spark, "update_index: classify"):
-            # an incoming url's existing copy can only live in the shard its
-            # (mode-recorded) id maps to, so the existence probe prunes to
-            # those shards (r6); docs is opened once for probe and merge.
-            in_shards = _shards_of_urls(new_pages, mode, n_shards)
-            docs = open_docs(spark, root)
-            changed_pages = incremental_pages(
-                new_pages, _docs_pruned_to_shards(spark, root, in_shards, docs)
-            )
-            # ids derive the way THIS index was built (hash ids over a
-            # host_locality index would re-index a url under a second id).
-            # ONE fused Python pass; one aggregate over its cache gives the
-            # affected shards and whether any page quarantined.
-            fused = build_docs_and_tf_safe(changed_pages, mode).persist()
-            changed_docs, errors = split_quarantine(fused)
-            per_shard = fused.groupBy(
-                shard_of(F.col("doc_id"), n_shards).alias("s"),
-                F.col("error").isNotNull().alias("bad"),
-            ).count().collect()
-            affected = sorted(int(r.s) for r in per_shard if not r.bad)
-            quarantined = any(r.bad for r in per_shard)
-            # quarantine records are appended BEFORE the no-change early
-            # return: if every changed page failed extraction, nothing is
-            # affected but the errors still belong in <root>/errors/
-            if quarantined:
-                errors.write.mode("append").parquet(f"{root}/errors")
-            if not affected:
-                if quarantined:  # a truthful counter, attributed to this run
-                    n_errors = _count_error_urls(spark, root)
-                    if n_errors != stats.get("n_errors"):
-                        stats.update(n_errors=n_errors, run_id=run_id,
-                                     input_snapshot=input_snapshot)
-                        write_stats(root, stats)
-                return PhysicalIndex(root=root, stats=stats)
-
-            # Only the AFFECTED shards' rows are merged — a changed url
-            # can never move shards (doc_id = f(url) is deterministic), so
-            # the COW staging hard-links every other shard directory.
-            old_aff = _docs_pruned_to_shards(spark, root, affected, docs)
-            merged_aff = old_aff.join(
-                changed_docs.select("url"), "url", "left_anti"
-            ).unionByName(changed_docs.drop("tf_pairs"))
-            # shadowed live versions ride the staging job's dl side: their
-            # stored text re-tokenizes to the terms the base counts, their
-            # doc_len leaves the shard subtotals (stage_update_delta)
-            old_replaced = old_aff.join(
-                changed_docs.select("url"), "url", "left_semi"
-            )
-            return _commit_delta_mutation(
-                spark, root, stats, "update_index", fused,
-                _deltas.stage_update_delta, (changed_docs, old_replaced),
-                merged_aff, affected, run_id, input_snapshot, compact_after,
-                count_errors=quarantined,
-            )
-    finally:
-        if fused is not None:
-            fused.unpersist()
+            split_quarantine(fused)[1].write.mode("append").parquet(
+                os.path.join(root, "errors"))
+    return _commit_delta_mutation(
+        spark, root, stats, "update_index", staged, run_id, input_snapshot,
+        compact_after,
+    )
 
 
 def delete_from_index(
@@ -900,10 +851,12 @@ def delete_from_index(
     url appears in ``urls``. One tombstone generation — doclen rows with
     doc_len = -1 mask the doomed docs out of every older segment, and
     signed term-df adjustments keep df/idf exact — O(delete bytes), no
-    re-encode; the update's staging job with an empty tf side stages it
-    (stage_delete_delta). It commits (and describes its Spark jobs) like
-    update_index (_commit_delta_mutation); results equal a full rebuild
-    over the survivors (including df/idf shifts), and
+    re-encode. The update's staging job stages it (stage_delete_delta):
+    the doomed urls ride its one side in place of new rows, beside the live
+    rows of the shards they map to, so the kernel finds the doomed docs and
+    writes the survivors' docs parts. It commits (and describes its Spark
+    jobs) like update_index (_commit_delta_mutation); results equal a full
+    rebuild over the survivors (including df/idf shifts), and
     ``delete_from_index`` followed by ``compact_deltas(affected)``
     re-encodes those shards' base segments without the doomed docs.
 
@@ -914,40 +867,20 @@ def delete_from_index(
 
     stats = read_stats(root)
     n_shards = int(stats["n_shards"])
-    doomed = None
-    try:
-        with _described(spark, "delete_from_index: classify"):
-            urls_only = urls.select("url").distinct()
-            # same pruning as update_index's existence probe: a doomed url's
-            # doc can only live in the shard its (mode-recorded) id maps to
-            cand_shards = _shards_of_urls(
-                urls_only, stats.get("doc_id_mode", "hash"), n_shards
-            )
-            docs = open_docs(spark, root)
-            doomed = _docs_pruned_to_shards(
-                spark, root, cand_shards, docs
-            ).join(urls_only, "url", "left_semi").persist()
-            affected = sorted(
-                int(r.s)
-                for r in doomed.select(
-                    shard_of(F.col("doc_id"), n_shards).alias("s")
-                ).distinct().collect()
-            )
-            if not affected:
-                return PhysicalIndex(root=root, stats=stats)
-
-            # survivors of the affected shards; the rest hard-links
-            merged_aff = _docs_pruned_to_shards(
-                spark, root, affected, docs
-            ).join(urls_only, "url", "left_anti")
-            return _commit_delta_mutation(
-                spark, root, stats, "delete_from_index", doomed,
-                _deltas.stage_delete_delta, (doomed,), merged_aff, affected,
-                run_id, input_snapshot, compact_after,
-            )
-    finally:
-        if doomed is not None:
-            doomed.unpersist()
+    mode = stats.get("doc_id_mode", "hash")
+    urls = urls.select("url")
+    with _described(spark, "delete_from_index: classify"):
+        # same pruning as update_index's existence probe: a doomed url's
+        # doc can only live in the shard its (mode-recorded) id maps to
+        cand_shards = _shards_of_urls(urls, mode, n_shards)
+    live = _docs_pruned_to_shards(spark, root, cand_shards, keep_shard=True)
+    with _described(spark, "delete_from_index: stage"):
+        staged = _deltas.stage_delete_delta(
+            spark, root, urls, live, len(cand_shards), n_shards, mode)
+    return _commit_delta_mutation(
+        spark, root, stats, "delete_from_index", staged, run_id,
+        input_snapshot, compact_after,
+    )
 
 
 def compact_deltas(

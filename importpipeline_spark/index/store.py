@@ -4,8 +4,10 @@ Layout (parquet; Iceberg-ready — the same frames can go to ``writeTo`` on a
 cluster with an Iceberg catalog):
 
     <root>/docs/        doc_id, url, warc_ts, text, doc_len, lang
-                        (partitioned by shard — update/delete merge docs
-                        per shard with COW hard links; read via read_docs)
+                        (partitioned by shard — an update or delete's
+                        staging kernel writes each changed shard's
+                        part-0.parquet and the rest are hard-linked;
+                        read via open_docs/read_docs)
     <root>/doclen/      shard, doc_id, doc_len            (partitioned by shard,
                         sorted by doc_id within files)
     <root>/postings/    term, block_id, n, min_doc, max_doc, docs_enc,
@@ -52,11 +54,13 @@ import os
 import shutil
 from collections import Counter
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..text.tokenizer import ANALYZER_VERSION, tokenize_series
@@ -110,9 +114,36 @@ def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
     os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
 
 
+# kinds of the dl-side rows of a staging encode (deltas.py builds them):
+# the probed shards' live docs rows, the generation's new rows, the urls a
+# delete dooms, and the update's quarantined pages (counted, never indexed)
+LIVE, NEW, GONE, BAD = 0, 1, 2, 3
+
+
+class StagedParam(AccumulatorParam):
+    """Accumulates (staged shards, quarantined rows) across kernel tasks."""
+
+    def zero(self, value):
+        return frozenset(), 0
+
+    def addInPlace(self, a, b):
+        return a[0] | b[0], a[1] + b[1]
+
+
+class Staging(NamedTuple):
+    """Where a delta generation's staging kernel writes: ``root`` (the
+    staging root) gets each changed shard's delta_doclen, delta_termdf and
+    counters, ``docs`` (the staged docs table) its merged docs part, and
+    ``report`` (an accumulator of StagedParam) the shards the kernel
+    changed and the quarantined rows it saw."""
+    root: str
+    docs: str
+    report: Accumulator
+
+
 def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                   counters_dir: str | None = None,
-                  staging: str | None = None) -> pd.DataFrame:
+                  staging: Staging | None = None) -> pd.DataFrame:
     """Cogrouped kernel: one doc-range shard's entire sub-index in one pass.
 
     One task per shard (not per term!): the tf rows are lexsorted by
@@ -123,22 +154,24 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     postings (bounded by shard width), which is what holds at 1000× data.
 
     With ``counters_dir`` the kernel writes the segment's lineage
-    counters. With ``staging`` (a delta generation's staging root) the dl
-    side also carries the live rows the generation shadows or deletes,
-    flagged ``old`` with their stored ``text``, and the kernel stages the
-    shard's delta tables beside the postings (_stage_delta; each term's
-    run length is its +df there — one tf row per (doc, term) pair).
+    counters. With ``staging`` there is no tf side: the dl side carries
+    rows of every ``kind`` (LIVE, NEW, GONE, BAD) with the docs columns,
+    the NEW rows are the postings' docs and carry their term counts
+    (_staged_tf), and the kernel stages the shard's delta tables and
+    merged docs part beside the postings (_stage_delta; each term's run
+    length is its +df there — one tf row per (doc, term) pair).
     Every side file is written executor-side (_write_part). The index
     root must be a filesystem the driver and executors share, as every
     driver-side rename of executor-written parquet already requires.
     """
-    shard = int(
-        (tf_pdf["shard"] if len(tf_pdf) else dl_pdf["dl_shard"]).iloc[0])
-    if staging is not None:
-        # old rows share doc_ids with their new versions: split them off
-        # before the doc_len lookup
-        is_old = dl_pdf["old"].to_numpy(dtype=bool)
-        old_pdf, dl_pdf = dl_pdf[is_old], dl_pdf[~is_old]
+    if staging is None:
+        shard = int(
+            (tf_pdf["shard"] if len(tf_pdf) else dl_pdf["dl_shard"]).iloc[0])
+    else:
+        rows = dl_pdf
+        shard = int(rows["dl_shard"].iloc[0])
+        dl_pdf = rows[rows["kind"].to_numpy() == NEW]
+        tf_pdf = _staged_tf(dl_pdf)
     terms = np.empty(0, dtype=object)
     run_starts = np.empty(0, dtype=np.int64)
     if tf_pdf.empty:
@@ -186,25 +219,65 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     if staging is not None:
         df = pd.Series(np.diff(np.append(run_starts, len(terms))),
                        index=terms[run_starts], dtype=np.int64)
-        _stage_delta(staging, shard, df, dl_pdf, old_pdf)
+        _stage_delta(staging, shard, df, rows)
     return out
 
 
-def _stage_delta(staging: str, shard: int, df: pd.Series,
-                 new_pdf: pd.DataFrame, old_pdf: pd.DataFrame) -> None:
-    """One shard's delta tables under ``staging``: ``delta_doclen`` (the
-    new rows, doc_len = -1 for a delete tombstone, sorted by doc_id),
-    ``delta_termdf`` (``df`` — +1 per new (doc, term) — minus 1 per distinct
-    term of each re-tokenized old text, netted, zeros dropped, sorted by
-    term; the same pinned analyzer as indexing, so the decrements equal
-    what the base counts) and ``counters/shard_N.json``: the shard's
-    (Δn_docs, Δtotal_tokens), tombstones counting 0."""
+def _staged_tf(new_pdf: pd.DataFrame) -> pd.DataFrame:
+    """(doc_id, term, tf) rows of the NEW rows' ``terms``/``tfs`` arrays
+    (the fused kernel's tf_pairs; null for a doc with no tokens)."""
+    has = np.array([t is not None and len(t) > 0 for t in new_pdf["terms"]],
+                   dtype=bool)
+    terms = [t for t, h in zip(new_pdf["terms"], has) if h]
+    if not terms:
+        return pd.DataFrame({"doc_id": np.empty(0, np.int64),
+                             "term": np.empty(0, object),
+                             "tf": np.empty(0, np.int64)})
+    return pd.DataFrame({
+        "doc_id": np.repeat(new_pdf["dl_doc_id"].to_numpy(np.int64)[has],
+                            [len(t) for t in terms]),
+        "term": np.concatenate(terms),
+        "tf": np.concatenate([t for t, h in zip(new_pdf["tfs"], has) if h]),
+    })
+
+
+def _stage_delta(staging: Staging, shard: int, df: pd.Series,
+                 rows: pd.DataFrame) -> None:
+    """One shard's share of a delta generation. The live ``rows`` whose url
+    a NEW row carries (an update) or a GONE row names (a delete) are the
+    shard's OLD rows. A shard with neither new nor old rows is unchanged
+    and gets nothing. Otherwise the kernel writes under ``staging``:
+    ``delta_doclen`` (the new rows, plus a doc_len = -1 tombstone per row a
+    delete dooms, sorted by doc_id); ``delta_termdf`` (``df`` — +1 per new
+    (doc, term) — minus 1 per distinct term of each re-tokenized old text,
+    netted, zeros dropped, sorted by term; the same pinned analyzer as
+    indexing, so the decrements equal what the base counts);
+    ``counters/shard_N.json`` (the shard's (Δn_docs, Δtotal_tokens),
+    tombstones counting 0); and the shard's merged docs part — live rows
+    minus old plus new, in DOCS_SCHEMA's types. The counters go last, so
+    a shard with counters has every file. ``staging.report`` receives the
+    changed shard and the quarantined (BAD) rows."""
+    kind = rows["kind"].to_numpy()
+    new_pdf = rows[kind == NEW]
+    live = rows[kind == LIVE]
+    doomed = live["url"].isin(rows["url"][kind == GONE]).to_numpy()
+    is_old = doomed | live["url"].isin(new_pdf["url"]).to_numpy()
+    old_pdf = live[is_old]
+    changed = len(new_pdf) + len(old_pdf) > 0
+    staging.report.add((frozenset([shard] if changed else []),
+                        int((kind == BAD).sum())))
+    if not changed:
+        return
     part = f"shard={shard}"
-    new_pdf = new_pdf.sort_values("dl_doc_id", kind="stable")
+    doclen = pd.concat([
+        new_pdf[["dl_doc_id", "doc_len"]],
+        live[doomed][["dl_doc_id"]].assign(doc_len=-1),
+    ]).sort_values("dl_doc_id", kind="stable")
     _write_part(pa.table({
-        "doc_id": pa.array(new_pdf["dl_doc_id"], pa.int64()),
-        "doc_len": pa.array(new_pdf["doc_len"], pa.int32()),
-    }), os.path.join(staging, "delta_doclen", part))
+        "doc_id": pa.array(doclen["dl_doc_id"].to_numpy(dtype=np.int64)),
+        "doc_len": pa.array(doclen["doc_len"].to_numpy(dtype=np.int64),
+                            pa.int32()),
+    }), os.path.join(staging.root, "delta_doclen", part))
     gone = Counter(
         t for toks in tokenize_series(old_pdf["text"].astype(object))
         if isinstance(toks, list) for t in set(toks)
@@ -216,13 +289,24 @@ def _stage_delta(staging: str, shard: int, df: pd.Series,
         _write_part(pa.table({
             "term": pa.array(adj.index, pa.string()),
             "df": pa.array(adj.to_numpy(), pa.int64()),
-        }), os.path.join(staging, "delta_termdf", part))
-    live = new_pdf["doc_len"].to_numpy(dtype=np.int64)
-    live = live[live >= 0]
+        }), os.path.join(staging.root, "delta_termdf", part))
+    docs = pd.concat([live[~is_old], new_pdf])
+    _write_part(pa.table({
+        "url": pa.array(docs["url"], pa.string()),
+        "warc_ts": pa.Array.from_pandas(docs["warc_us"], type=pa.int64())
+        .cast(pa.timestamp("us", tz="UTC")),
+        "lang": pa.array(docs["lang"], pa.string()),
+        "text": pa.array(docs["text"], pa.string()),
+        "doc_len": pa.array(docs["doc_len"].to_numpy(dtype=np.int64),
+                            pa.int32()),
+        "doc_id": pa.array(docs["dl_doc_id"].to_numpy(dtype=np.int64)),
+    }), os.path.join(staging.docs, part))
+    new_len = new_pdf["doc_len"].to_numpy(dtype=np.int64)
     _write_counters({
-        "n_docs": len(live) - len(old_pdf),
-        "total_tokens": int(live.sum()) - int(old_pdf["doc_len"].sum()),
-    }, os.path.join(staging, "counters"), shard)
+        "n_docs": len(new_pdf) - len(old_pdf),
+        "total_tokens": int(new_len.sum())
+        - int(old_pdf["doc_len"].to_numpy(dtype=np.int64).sum()),
+    }, os.path.join(staging.root, "counters"), shard)
 
 
 def tf_from_pairs(df: DataFrame) -> DataFrame:
@@ -236,19 +320,23 @@ def tf_from_pairs(df: DataFrame) -> DataFrame:
     )
 
 
-def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
+def encode_postings(tf: DataFrame | None, dl: DataFrame,
+                    path: str | None = None,
                     counters_dir: str | None = None,
-                    staging: str | None = None) -> DataFrame:
+                    staging: Staging | None = None) -> DataFrame:
     """The one posting writer: encode ``tf`` (shard, doc_id, term, tf)
     against ``dl`` (shard, doc_id, doc_len) per shard and, with ``path``,
     write the blocks partitioned by shard. Returns the encode plan (with
     ``path=None`` nothing runs — plan inspection only).
 
     ``counters_dir``: per-shard lineage counters (_encode_shard).
-    ``staging``: a delta generation's staging root — ``dl`` also carries
-    ``old`` (true for the live rows the generation replaces or deletes)
-    and their ``text``, and the same job stages every affected shard's
-    delta_doclen, delta_termdf and counters there (_stage_delta).
+    ``staging``: a delta generation's Staging. ``tf`` is then None and
+    ``dl`` is the only side: each row also carries its ``kind`` and docs
+    columns (url, text, warc_us = warc_ts in epoch microseconds, lang), a
+    NEW row its ``terms``/``tfs`` arrays, and the same job stages every
+    changed shard's delta_doclen, delta_termdf, counters and merged docs
+    part (_stage_delta). One side means one exchange, and the kernel's
+    input is never computed twice.
 
     The dl side's key columns are BOTH renamed (dl_shard, dl_doc_id): tf
     and dl usually share a parent, and Spark's ambiguous-self-join analysis
@@ -263,16 +351,21 @@ def encode_postings(tf: DataFrame, dl: DataFrame, path: str | None = None,
     dl = dl.select(
         F.col("shard").alias("dl_shard"),
         F.col("doc_id").alias("dl_doc_id"), "doc_len",
-        *(("old", "text") if staging is not None else ()),
+        *(("kind", "url", "text", "warc_us", "lang", "terms", "tfs")
+          if staging is not None else ()),
     )
-    out = (
-        tf.groupBy("shard")
-        .cogroup(dl.groupBy("dl_shard"))
-        .applyInPandas(
-            lambda l, r: _encode_shard(l, r, counters_dir, staging),
-            POSTINGS_SCHEMA,
+    if staging is None:
+        out = (
+            tf.groupBy("shard")
+            .cogroup(dl.groupBy("dl_shard"))
+            .applyInPandas(
+                lambda l, r: _encode_shard(l, r, counters_dir),
+                POSTINGS_SCHEMA,
+            )
         )
-    )
+    else:
+        out = dl.groupBy("dl_shard").applyInPandas(
+            lambda r: _encode_shard(None, r, None, staging), POSTINGS_SCHEMA)
     if path is not None:
         out.write.mode("overwrite").partitionBy("shard").parquet(path)
     return out

@@ -538,12 +538,17 @@ def _lookup_idf(spark, pidx, terms: List[str]):
     cache — df is a constant of the handle's snapshot, and mutations
     either return a fresh PhysicalIndex or require ``invalidate()``
     (which clears this cache too). OOV terms are cached as None so a
-    repeated miss costs nothing."""
+    repeated miss costs nothing. The lookup's Spark jobs are described
+    ``query: dictionary``."""
     n = pidx.stats["n_docs"]
     cache = pidx._term_lookup_cache(spark)
     missing = [t for t in terms if t not in cache]
     if missing:
-        rows = read_dictionary(spark, pidx, missing).collect()
+        # the writer module stays out of the serving path's imports
+        from .segments import _described
+
+        with _described(spark, "query: dictionary"):
+            rows = read_dictionary(spark, pidx, missing).collect()
         got = {r.term: (int(r.df), [int(s) for s in (r.shards or [])])
                for r in rows}
         for t in missing:
@@ -596,7 +601,11 @@ def bm25_topk_wand(
     query: str,
     k: int = 10,
 ) -> DataFrame:
-    """Top-k via the compressed store. Rank-identical to the exhaustive path."""
+    """Top-k via the compressed store. Rank-identical to the exhaustive path.
+
+    The dictionary lookup runs here (its jobs described ``query:
+    dictionary``); the returned plan's kernel job runs at the caller's
+    action, under the caller's job description."""
     terms = analyze_query(query)
     avgdl = pidx.stats["avgdl"] or 1.0
     empty = spark.createDataFrame([], CAND_SCHEMA)
@@ -627,7 +636,9 @@ def bm25_topk_wand_batch(
 
     One cogroup job total: per shard, every query reuses the same block
     arrays and decode cache. Global per-query top-k = window rank over
-    ≤ k·shards candidates per query.
+    ≤ k·shards candidates per query. As in bm25_topk_wand, the dictionary
+    lookup runs here (``query: dictionary``) and the kernel job at the
+    caller's action.
     """
     avgdl = pidx.stats["avgdl"] or 1.0
     empty = spark.createDataFrame([], BATCH_CAND_SCHEMA + ", rank int")

@@ -33,6 +33,7 @@ from importpipeline_spark.index.segments import (
 )
 from importpipeline_spark.index.serve import LocalSearcher
 from importpipeline_spark.index.store import (
+    open_docs,
     open_index,
     read_dictionary,
     read_stats,
@@ -118,6 +119,22 @@ def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
     assert pidx.stats["avgdl"] == pidx_full.stats["avgdl"]
     assert _topk(spark, pidx) == _topk(spark, pidx_full)
     assert _terms(spark, root) == _terms(spark, full_root)
+
+    # an update confined to one shard rewrites only that shard's docs part:
+    # every other docs shard stays a hard link of the same files
+    docs_before = _inodes(root, "docs")
+    one = [r.url for r in open_docs(spark, root)
+           .where(F.col("shard") == 2).limit(3).collect()]
+    pidx = update_index(
+        spark, root, pages.where(F.col("url").isin(one)).withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 5 HOURS")),
+        run_id="d2", input_snapshot="s2")
+    assert pidx.stats["delta_gens"] == [1, 2]
+    docs_after = _inodes(root, "docs")
+    assert set(docs_after) == set(docs_before)
+    for shard, files in docs_after.items():
+        assert (files == docs_before[shard]) == (shard != "shard=2"), shard
+    assert {t: _inodes(root, t) for t in ("postings", "doclen")} == before
 
 
 def _lineage(root):
@@ -717,15 +734,16 @@ def _clear_job_group(spark):
 
 # Spark jobs of the small update and delete below (200-doc base, 4 shards;
 # a fifth of it recrawled, 5 urls deleted), every job of every phase
-# included: each future inherits the caller's job group
-_UPDATE_JOBS_MAX = 13
-_DELETE_JOBS_MAX = 17
+# included: they all run under the caller's job group
+_UPDATE_JOBS_MAX = 5
+_DELETE_JOBS_MAX = 4
 
 
 def test_delta_publish_runs_no_spark_job(spark, tmp_path):
-    """O(update) publish: once staging, the docs copy-on-write merge and
-    the stats they feed have joined, a delta commit — marker, docs swap,
-    generation rename, stats.json — runs ZERO Spark jobs, and so does
+    """O(update) publish: once the staging job (which also writes the
+    changed docs shards) has run, a delta commit — docs hard links, marker,
+    docs swap, generation rename, stats.json — runs ZERO Spark jobs, and
+    so does
     recover_update's roll-forward of a delta marker. The cached input is
     already released when the publish starts. terms/ is the base
     dictionary and is never rewritten by a delta commit. The whole update
@@ -808,50 +826,60 @@ def test_delta_publish_runs_no_spark_job(spark, tmp_path):
 def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
                                                    monkeypatch):
     """The commit takes each affected shard's new subtotals from the
-    counters the staging kernel writes beside its delta_doclen file. When
-    a shard's counters are missing — what an index root the driver and
-    executors do not share looks like — the update raises before the
-    marker instead of counting the shard as unchanged: stats.json is
+    counters the staging kernel writes beside its delta_doclen file and
+    its merged docs part. When any of the three is missing for a shard —
+    what an index root the driver and executors do not share looks like —
+    the update raises before the marker instead of counting the shard as
+    unchanged or publishing a docs table without it: stats.json is
     untouched, and the only leftovers are staging garbage that
     recover_update sweeps."""
     from importpipeline_spark.index import store as smod
 
-    root = str(tmp_path / "idx")
     pages = gen_pages_df(spark, 120, seed=5, partitions=4)
-    write_index(spark, pages, root, n_shards=4)
-    with open(os.path.join(root, "stats.json")) as f:
-        stats_before = f.read()
-    tree_before = _dir_tree(root)
     real = smod._encode_shard
+    for dropped in ("counters", "delta_doclen", "docs"):
+        root = str(tmp_path / dropped)
+        write_index(spark, pages, root, n_shards=4)
+        with open(os.path.join(root, "stats.json")) as f:
+            stats_before = f.read()
+        tree_before = _dir_tree(root)
 
-    def drop_shard0_counters(tf_pdf, dl_pdf, counters_dir, staging):
-        out = real(tf_pdf, dl_pdf, counters_dir, staging)
-        p = os.path.join(staging, "counters", "shard_0.json")
-        if os.path.exists(p):
-            os.remove(p)
-        return out
+        def drop_shard0_output(tf_pdf, dl_pdf, counters_dir, staging,
+                               _dropped=dropped):
+            out = real(tf_pdf, dl_pdf, counters_dir, staging)
+            p = {
+                "counters": os.path.join(staging.root, "counters",
+                                         "shard_0.json"),
+                "delta_doclen": os.path.join(staging.root, "delta_doclen",
+                                             "shard=0", "part-0.parquet"),
+                "docs": os.path.join(staging.docs, "shard=0",
+                                     "part-0.parquet"),
+            }[_dropped]
+            if os.path.exists(p):
+                os.remove(p)
+            return out
 
-    monkeypatch.setattr(smod, "_encode_shard", drop_shard0_counters)
-    with pytest.raises(RuntimeError, match="shard 0 is missing"):
-        update_index(spark, root, _recrawl(pages, 2, 1), run_id="m1",
-                     input_snapshot="m1")
-    monkeypatch.undo()
-    with open(os.path.join(root, "stats.json")) as f:
-        assert f.read() == stats_before
-    assert not os.path.exists(os.path.join(root, "update.json"))
-    left = set(_dir_tree(root)) - set(tree_before)
-    assert left and all(
-        d.split(os.sep)[0] in ("delta_staging", "docs.tmp") for d in left
-    ), left
-    assert not recover_update(spark, root)
-    assert _dir_tree(root) == tree_before
+        monkeypatch.setattr(smod, "_encode_shard", drop_shard0_output)
+        with pytest.raises(RuntimeError, match="shard 0 is missing"):
+            update_index(spark, root, _recrawl(pages, 2, 1), run_id="m1",
+                         input_snapshot="m1")
+        monkeypatch.undo()
+        with open(os.path.join(root, "stats.json")) as f:
+            assert f.read() == stats_before, dropped
+        assert not os.path.exists(os.path.join(root, "update.json"))
+        left = set(_dir_tree(root)) - set(tree_before)
+        assert left and all(
+            d.split(os.sep)[0] in ("delta_staging", "docs.tmp") for d in left
+        ), (dropped, left)
+        assert not recover_update(spark, root)
+        assert _dir_tree(root) == tree_before, dropped
 
 
 def test_failed_staging_releases_cached_inputs(spark, tmp_path):
-    """A staging failure surfaces only after the concurrent docs merge has
-    joined, and the update's persisted fused relation (the delete's doomed
-    docs) is released on the way out: the session's persisted RDD count is
-    back to its value before the call, and no marker is left."""
+    """A staging failure leaves the session and the index as they were:
+    neither an update nor a delete leaves a persisted relation behind (the
+    session's persisted RDD count is back to its value before the call),
+    no marker is left, and recover_update finds nothing to do."""
     root = str(tmp_path / "idx")
     pages = gen_pages_df(spark, 120, seed=5, partitions=4)
     write_index(spark, pages, root, n_shards=4)
@@ -883,3 +911,44 @@ def test_failed_staging_releases_cached_inputs(spark, tmp_path):
         assert not os.path.exists(os.path.join(root, "update.json"))
     assert not recover_update(spark, root)
     assert open_index(root).stats["n_docs"] == 120
+
+
+def test_multi_shard_mutation_runs_parallel_kernel_tasks(spark, tmp_path):
+    """The staging kernel's two sides are repartitioned by shard into as
+    many partitions as the mutation probes shards; AQE does not coalesce
+    those shuffles, so an update or a delete touching two or more shards
+    runs its kernel stage — the last stage of its last ``stage`` job — in
+    more than one task instead of encoding the shards one after another in
+    a single task."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 200, seed=7, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    del_urls = spark.createDataFrame(
+        [(r.url,) for r in pages.orderBy("url").limit(6).collect()],
+        "url string")
+    calls = {
+        "update_index": lambda: update_index(
+            spark, root, _recrawl(pages, 5, 2), run_id="p1",
+            input_snapshot="p1", compact_after=None),
+        "delete_from_index": lambda: delete_from_index(
+            spark, root, del_urls, run_id="p2", compact_after=None),
+    }
+    status = sc._jsc.sc().statusStore()
+    for op, call in calls.items():
+        sc.setJobGroup(f"kernel_{op}", "undescribed")
+        try:
+            pidx = call()
+        finally:
+            _clear_job_group(spark)
+        gen = pidx.stats["delta_gens"][-1]
+        assert len(os.listdir(os.path.join(
+            root, "delta_doclen", f"gen={gen}"))) >= 2, op
+        stage_jobs = [
+            j for j in _group_jobs(spark, f"kernel_{op}")
+            if status.job(j).description().getOrElse(None) == f"{op}: stage"
+        ]
+        kernel_stage = max(
+            sc.statusTracker().getJobInfo(max(stage_jobs)).stageIds)
+        info = sc.statusTracker().getStageInfo(kernel_stage)
+        assert info.numCompletedTasks > 1, (op, info)

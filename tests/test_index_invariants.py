@@ -143,10 +143,47 @@ def test_base_writer_invariants(spark, tmp_path, writer):
 def test_docs_schema_is_pinned(spark, tmp_path):
     """store.DOCS_SCHEMA — the schema update_index and delete_from_index
     read ``docs/`` with, so that no schema-inference job runs — is exactly
-    the schema Spark infers for a freshly built ``docs/``."""
+    the schema Spark infers for a freshly built ``docs/``, and stays so
+    after an update and a delete, whose staging kernel writes the changed
+    shards' parts with pyarrow: those read back like Spark-written ones,
+    with ``warc_ts`` exact to the microsecond and stored as UTC."""
+    import pyarrow as pa
+
     root = str(tmp_path / "idx")
-    write_index(spark, gen_pages_df(spark, 60, seed=3, partitions=2), root,
-                n_shards=4)
+    pages = gen_pages_df(spark, 60, seed=3, partitions=2)
+    write_index(spark, pages, root, n_shards=4)
     docs = os.path.join(root, "docs")
-    assert (spark.read.schema(DOCS_SCHEMA).parquet(docs).schema
-            == spark.read.parquet(docs).schema)
+
+    def pinned_equals_inferred():
+        pinned = spark.read.schema(DOCS_SCHEMA).parquet(docs)
+        inferred = spark.read.parquet(docs)
+        assert pinned.schema == inferred.schema
+        assert sorted(pinned.collect()) == sorted(inferred.collect())
+        return pinned
+
+    pinned_equals_inferred()
+    # bumped by an hour and an odd number of microseconds
+    upd = pages.where(F.xxhash64("url") % 3 == 0).withColumn(
+        "warc_ts",
+        F.timestamp_micros(F.unix_micros("warc_ts") + 3_600_123_457))
+    want = {r.url: r.us for r in
+            upd.select("url", F.unix_micros("warc_ts").alias("us")).collect()}
+    update_index(spark, root, upd, run_id="u1", input_snapshot="u1")
+    got = {r.url: r.us for r in pinned_equals_inferred().select(
+        "url", F.unix_micros("warc_ts").alias("us")).collect()}
+    assert len(got) == 60 and all(got[u] == us for u, us in want.items())
+    kernel_parts = glob.glob(os.path.join(docs, "shard=*", "part-0.parquet"))
+    assert kernel_parts
+    for p in kernel_parts:
+        assert (pq.read_schema(p).field("warc_ts").type
+                == pa.timestamp("us", tz="UTC"))
+        # a kernel-written shard alone infers the pinned schema too
+        assert (spark.read.parquet(os.path.dirname(p)).schema
+                == spark.read.schema(DOCS_SCHEMA).parquet(
+                    os.path.dirname(p)).drop("shard").schema)
+
+    doomed = sorted(want)[:4]
+    delete_from_index(spark, root, spark.createDataFrame(
+        [(u,) for u in doomed], "url string"), run_id="d1")
+    left = {r.url for r in pinned_equals_inferred().collect()}
+    assert len(left) == 56 and not left & set(doomed)

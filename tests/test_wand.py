@@ -218,3 +218,25 @@ def test_topk_ties_at_k_boundary(spark, tmp_path_factory, monkeypatch):
     sweeper = LocalSearcher(root)
     for q, k, want in cases:
         assert sweeper.search(q, k) == want, (q, k)
+
+
+def test_query_dictionary_jobs_are_described(physical, spark):
+    """The distributed query's dictionary lookup describes its Spark jobs
+    ``query: dictionary``; the kernel job runs at the caller's action under
+    the caller's own description."""
+    pidx, _ = physical
+    sc = spark.sparkContext
+    fresh = open_index(pidx.root)  # no memoized relations or entries
+    sc.setJobGroup("wand_phases", "caller")
+    try:
+        assert bm25_topk_wand(spark, fresh, "the ebakaba8", k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    status = sc._jsc.sc().statusStore()
+    descs = set()
+    for job_id in sc.statusTracker().getJobIdsForGroup("wand_phases"):
+        d = status.job(job_id).description()
+        descs.add(d.get() if d.isDefined() else None)
+    assert descs == {"query: dictionary", "caller"}, descs
