@@ -31,27 +31,28 @@ full rebuild writes.
 
 Commit protocol: a generation is staged completely BEFORE the update
 marker is written, by ONE encode job (store.encode_postings given a
-Staging), and that job also stages the docs copy-on-write merge. Its only
-side carries, per probed shard, every live docs row, the generation's new
-rows (an update: the extract kernel's output, term counts included) or
-doomed urls (a delete), repartitioned by shard into parallel tasks. Per
-shard the kernel works out, by url, the live rows the generation shadows
-or deletes and writes under <root>/delta_staging/ the delta postings, the
-doclen rows, the netted term-df adjustments and the shard's (Δn_docs,
-Δtotal_tokens), and the shard's merged docs part under <root>/docs.tmp/
-(live − old + new). A shard with no change gets nothing. The driver
-learns the changed shards and any quarantined page from the kernel's
-accumulator, hard-links every other docs shard into docs.tmp (no Spark
-job), and adds the counters to stats.json's ``shard_stats`` (a shard whose
-counters, doclen or docs part it cannot find fails the commit); the new
-subtotals — with the error counter, if the update quarantined a page —
-ride in the marker. The generation is renamed into place after the docs
-swap and becomes reader-visible only when stats.json (atomic replace,
-written from the marker by no Spark job) lists it in ``delta_gens``.
-Update and delete share this staging and commit
-(segments._commit_delta_mutation): segments.recover_update rolls a
-mid-commit crash forward, and a pre-marker crash leaves only swept staging
-garbage.
+Staging) that also stages the docs copy-on-write merge. Its one side
+carries only the incoming rows — an update's pages as the extract kernel
+emits them (term counts included, quarantined pages too) or a delete's
+doomed urls — repartitioned by shard into parallel tasks. Per shard the
+kernel reads the shard's own docs part(s), runs the existence probe by
+(url, warc_ts) — ExistSame and ExistNewer pages are dropped before
+anything is written — finds by url the live rows the generation shadows
+or deletes, and writes under <root>/delta_staging/ the delta postings,
+doclen rows, netted term-df adjustments and (Δn_docs, Δtotal_tokens),
+the merged docs part under <root>/docs.tmp/ (live − old + new), and any
+kept quarantined page as an errors/ part; a shard no incoming row maps
+to is never read. With no Spark job, the driver learns the changed
+shards and quarantined count from the kernel's accumulator, hard-links
+every other docs shard into docs.tmp, recounts errors/ with pyarrow and
+adds the counters to ``shard_stats`` (missing kernel output fails the
+commit); the new subtotals and error counter ride in the marker. The
+generation is renamed into place after the docs swap and becomes
+reader-visible only when stats.json (atomic replace, written from the
+marker by no Spark job) lists it in ``delta_gens``. Update and delete
+share this staging and commit (segments._commit_delta_mutation):
+segments.recover_update rolls a mid-commit crash forward, and a
+pre-marker crash leaves only swept staging garbage.
 
 Compaction is the only re-encode of base segments after a build: it folds
 a shard's base + deltas into a fresh base segment from the merged docs
@@ -68,6 +69,7 @@ import json
 import os
 import shutil
 from concurrent.futures import wait
+from uuid import uuid4
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -75,7 +77,6 @@ from .build import doc_id_expr, shard_of
 from .store import (
     BAD,
     GONE,
-    LIVE,
     NEW,
     StagedParam,
     Staging,
@@ -90,10 +91,6 @@ def join_all(futs) -> list:
     is raised only then, so no job is left running behind it."""
     wait(futs)
     return [f.result() for f in futs]
-
-
-def delta_table_path(root: str, table: str) -> str:
-    return os.path.join(root, table)
 
 
 def gen_path(root: str, table: str, gen: int) -> str:
@@ -145,7 +142,7 @@ def shard_gen_map(root: str) -> dict:
     scanned too so a half-purged crash window never hides data)."""
     out: dict = {}
     for table in DELTA_TABLES:
-        base = delta_table_path(root, table)
+        base = os.path.join(root, table)
         if not os.path.isdir(base):
             continue
         for g in os.listdir(base):
@@ -174,7 +171,7 @@ def purge_shards(root: str, shards) -> None:
     readers converge."""
     doomed = {int(s) for s in shards}
     for table in DELTA_TABLES:
-        base = delta_table_path(root, table)
+        base = os.path.join(root, table)
         if not os.path.isdir(base):
             continue
         for g in list(os.listdir(base)):
@@ -188,31 +185,19 @@ def purge_shards(root: str, shards) -> None:
                 shutil.rmtree(gdir, ignore_errors=True)
 
 
-def _live_rows(live_docs: DataFrame) -> DataFrame:
-    """The staging job's LIVE rows: the probed shards' docs rows
-    (open_docs' columns, partition column included). Every row kind keeps
-    doc_id, doc_len and warc_us non-null: the kernel's pandas would turn a
-    shard's integer column with a null into float64, rounding doc ids."""
-    return live_docs.select(
-        "shard", "doc_id", "doc_len", F.lit(LIVE).alias("kind"), "url",
-        "text", F.unix_micros("warc_ts").alias("warc_us"), "lang",
-        F.lit(None).cast("array<string>").alias("terms"),
-        F.lit(None).cast("array<int>").alias("tfs"),
-    )
-
-
 def _stage(spark: SparkSession, root: str, rows: DataFrame,
-           n_parts: int) -> tuple[list, int]:
+           n_shards: int) -> tuple[list, int]:
     """Stage a generation in ONE encode job (store.encode_postings with a
-    Staging): per changed shard the kernel encodes the NEW ``rows`` into
-    delta_postings and writes delta_doclen, the netted delta_termdf, the
-    (Δn_docs, Δtotal_tokens) counters and the merged
-    ``docs.tmp/shard=N``. ``rows`` is repartitioned by shard into
-    min(``n_parts``, defaultParallelism) partitions, at least 2: the job's
-    only exchange, which AQE does not coalesce, so the shards run as
-    parallel tasks (one partition would plan as SinglePartition, which the
-    adaptive plan shuffles a second time). Returns the changed shards and
-    the quarantined rows, as the kernel reported them."""
+    Staging) over the incoming ``rows``: per shard the kernel probes and
+    reads the shard's live docs and writes delta_postings, delta_doclen,
+    the netted delta_termdf, the (Δn_docs, Δtotal_tokens) counters, the
+    merged ``docs.tmp/shard=N`` and the quarantined pages' errors/ part.
+    ``rows`` is repartitioned by shard into min(n_shards,
+    defaultParallelism) partitions, at least 2: the job's only exchange,
+    which AQE does not coalesce, so the shards run as parallel tasks (one
+    partition would plan as SinglePartition, which the adaptive plan
+    shuffles a second time). Returns the changed shards and the
+    quarantined rows, as the kernel reported them."""
     sc = spark.sparkContext
     discard_staging(root)
     docs_tmp = os.path.join(root, "docs.tmp")
@@ -221,10 +206,13 @@ def _stage(spark: SparkSession, root: str, rows: DataFrame,
     # delta_termdf directory
     os.makedirs(staging_path(root, "delta_termdf"))
     report = sc.accumulator((frozenset(), 0), StagedParam())
-    n_parts = max(2, min(n_parts, sc.defaultParallelism))
-    encode_postings(None, rows.repartition(n_parts, "shard"),
-                    staging_path(root, "delta_postings"),
-                    staging=Staging(staging_root(root), docs_tmp, report))
+    n_parts = max(2, min(n_shards, sc.defaultParallelism))
+    encode_postings(
+        None, rows.repartition(n_parts, "shard"),
+        staging_path(root, "delta_postings"),
+        staging=Staging(staging_root(root), docs_tmp, report,
+                        os.path.join(root, "docs"),
+                        os.path.join(root, "errors", f"part-{uuid4().hex}")))
     shards, n_bad = report.value
     return sorted(shards), n_bad
 
@@ -233,55 +221,54 @@ def stage_update_delta(
     spark: SparkSession,
     root: str,
     fused: DataFrame,
-    live_docs: DataFrame,
-    n_parts: int,
     n_shards: int,
 ) -> tuple[list, int]:
     """Stage one UPDATE generation under <root>/delta_staging/ and its
     merged docs shards under <root>/docs.tmp/; returns (changed shards,
-    quarantined pages).
+    quarantined pages recorded in errors/).
 
-    ``fused``: the changed pages as the extract kernel emits them, good and
-    quarantined rows alike (build.build_docs_and_tf_safe); the good ones
-    are the NEW rows, with their tf_pairs as ``terms``/``tfs``.
-    ``live_docs``: the live docs rows of the probed shards; those whose
-    url a NEW row carries are the shadowed versions — their stored text
-    re-tokenizes to the terms the base counts, their doc_len leaves the
+    ``fused``: the incoming pages as the extract kernel emits them, good
+    and quarantined rows alike (build.build_docs_and_tf_safe): the good
+    ones are NEW rows, with their tf_pairs as ``terms``/``tfs``, the others
+    BAD. The kernel drops the pages its existence probe skips; a live row
+    whose url a kept NEW row carries is the shadowed version — its stored
+    text re-tokenizes to the terms the base counts, its doc_len leaves the
     shard subtotals.
     """
-    new = fused.select(
+    return _stage(spark, root, fused.select(
         shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
         "doc_len", F.when(F.col("error").isNull(), NEW).otherwise(BAD)
         .alias("kind"), "url", "text",
         F.unix_micros("warc_ts").alias("warc_us"), "lang",
         F.col("tf_pairs.term").alias("terms"),
-        F.col("tf_pairs.tf").alias("tfs"),
-    )
-    return _stage(spark, root, _live_rows(live_docs).unionByName(
-        new, allowMissingColumns=True), n_parts)
+        F.col("tf_pairs.tf").alias("tfs"), "error",
+    ), n_shards)
 
 
 def stage_delete_delta(
     spark: SparkSession,
     root: str,
     urls: DataFrame,
-    live_docs: DataFrame,
-    n_parts: int,
     n_shards: int,
     doc_id_mode: str,
 ) -> tuple[list, int]:
     """Stage one DELETE generation: the update's job with the doomed
-    ``urls`` as GONE rows instead of NEW ones — doclen tombstones (doc_len
-    = -1) plus delta_termdf decrements from the doomed docs' stored text.
+    ``urls`` as GONE rows instead of pages — doclen tombstones (doc_len =
+    -1) plus delta_termdf decrements from the doomed docs' stored text.
     No postings — deletion is pure masking until compaction folds it into
-    the base."""
+    the base. warc_us is 0, not null: pandas turns an integer column
+    holding a null into float64."""
     gone = urls.select(doc_id_expr(doc_id_mode).alias("doc_id"), "url").select(
         shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
         F.lit(-1).alias("doc_len"), F.lit(GONE).alias("kind"), "url",
+        F.lit(None).cast("string").alias("text"),
         F.lit(0).cast("long").alias("warc_us"),
+        F.lit(None).cast("string").alias("lang"),
+        F.lit(None).cast("array<string>").alias("terms"),
+        F.lit(None).cast("array<int>").alias("tfs"),
+        F.lit(None).cast("string").alias("error"),
     )
-    out = _stage(spark, root, _live_rows(live_docs).unionByName(
-        gone, allowMissingColumns=True), n_parts)
+    out = _stage(spark, root, gone, n_shards)
     shutil.rmtree(staging_path(root, "delta_postings"))
     return out
 

@@ -6,7 +6,8 @@ one record per run with state + counters; eviction/merge
 RunAdministrations.cs:155-240) as a ``segments`` lineage table, and its
 incremental ExistState skip logic
 (Endpoints/ESIndexDocType.cs:73-118 → NotExist/ExistOlder/ExistSame/ExistNewer;
-gate Datasources/StreamDatasourceBase.cs:110-134) as snapshot anti-joins.
+gate Datasources/StreamDatasourceBase.cs:110-134) as the update kernel's
+per-shard probe (store._probe; classify_snapshot is its oracle).
 
 Build shape (the one build — store.write_index is this on an empty root):
   phase A (once per run): ONE fused Arrow pass (extract + tokenize + per-doc
@@ -44,13 +45,14 @@ import sys
 from contextlib import contextmanager
 from datetime import datetime, timezone
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from . import deltas as _deltas
 from .build import (
     build_docs_and_tf_safe,
-    doc_id_expr,
     shard_of,
     split_quarantine,
     tf_from_text,
@@ -63,7 +65,6 @@ from .store import (
     index_stats,
     open_docs,
     read_docs,
-    read_parquet_or_none,
     read_stats,
     shard_totals,
     tf_from_pairs,
@@ -78,20 +79,23 @@ SEGMENTS_SCHEMA = (
 )
 
 
-def _count_error_urls(spark: SparkSession, root: str) -> int:
-    """Run-level error counter = DISTINCT failed urls in the quarantine.
+def _count_error_urls(root: str) -> int:
+    """Run-level error counter = DISTINCT failed urls in the quarantine,
+    read with pyarrow (no Spark job).
 
     The errors dir is an append-only log (a page that keeps failing is
     re-quarantined on every retry — by design, each run's failures are
     recorded); the COUNTER must not inflate under the retry workflows
-    crash-recovery encourages, so it counts distinct urls, not log rows."""
+    crash-recovery encourages, so it counts distinct urls, not log rows.
+    No parquet file means zero; a corrupt one raises, never n_errors=0."""
     p = os.path.join(root, "errors")
-    # an empty quarantine means zero; a corrupt one must NOT silently
-    # report n_errors=0 (read_parquet_or_none raises)
-    errors = read_parquet_or_none(spark, p) if os.path.exists(p) else None
-    return 0 if errors is None else int(
-        errors.select("url").distinct().count()
-    )
+    if not os.path.isdir(p) or not any(
+        f.endswith(".parquet") and not f.startswith((".", "_"))
+        for f in os.listdir(p)
+    ):
+        return 0
+    return pc.count_distinct(
+        pq.read_table(p, columns=["url"])["url"]).as_py()
 
 
 def _seg_dir(root: str) -> str:
@@ -267,7 +271,7 @@ def build_index_resumable(
             errors.write.mode("overwrite").parquet(os.path.join(root, "errors"))
             # run-level error counter (ImportReport.cs:92-209 'errors') of
             # the quarantine just written
-            return _count_error_urls(spark, root)
+            return _count_error_urls(root)
 
         def _w_doclen():
             (
@@ -449,7 +453,8 @@ def _rebuild_shards(spark, root: str, affected, n_shards: int,
     affected = sorted(int(s) for s in affected)
     # the filter hits the physical partition column, so the scan
     # lists/reads ONLY the affected shard dirs
-    docs_aff = _docs_pruned_to_shards(spark, root, affected)
+    docs_aff = open_docs(spark, root).where(
+        F.col("shard").isin(affected)).drop("shard")
     tf = tf_from_text(docs_aff, n_shards)
     dl = docs_aff.select("doc_id", "doc_len").withColumn(
         "shard", shard_of(F.col("doc_id"), n_shards)
@@ -563,32 +568,6 @@ def _write_docs_tmp_cow(docs_path: str, affected) -> None:
             _copy_index_tree(
                 os.path.join(docs_path, e), os.path.join(docs_tmp, e)
             )
-
-
-def _shards_of_urls(with_urls: DataFrame, doc_id_mode: str,
-                    n_shards: int) -> list:
-    """Doc-range shards the given urls' ids map to. doc_id = f(url) is
-    deterministic and mode-recorded, so an incoming url's EXISTING copy (if
-    any) can only live in the shard its id maps to — existence probes can
-    therefore partition-prune the docs scan to these shards before any
-    join. One skinny job over the update input (urls only, no extraction)."""
-    return sorted(
-        int(r.s)
-        for r in with_urls.select(
-            shard_of(doc_id_expr(doc_id_mode), n_shards).alias("s")
-        ).distinct().collect()
-    )
-
-
-def _docs_pruned_to_shards(spark, root: str, shards: list,
-                           keep_shard: bool = False) -> DataFrame:
-    """The docs table (logical schema; with ``keep_shard`` its partition
-    column too) restricted to the given shards — the filter hits the
-    physical partition column, so the scan lists/reads ONLY those shard
-    directories (update cost stays O(update), not O(corpus))."""
-    docs = open_docs(spark, root).where(
-        F.col("shard").isin([int(s) for s in shards]))
-    return docs if keep_shard else docs.drop("shard")
 
 
 @contextmanager
@@ -714,21 +693,19 @@ def _commit_delta_mutation(spark, root: str, stats: dict, op: str,
     (``op``: the caller, for job descriptions), after their staging job:
     ``staged`` is its (changed shards, quarantined pages) report.
 
-    With no changed shard the staging leftovers are swept and nothing is
-    committed (an update whose every changed page quarantined still
-    refreshes the error counter). Otherwise, before the marker and with no
-    Spark job, the unchanged docs shards are hard-linked into docs.tmp and
-    each changed shard's new subtotals are taken from its staged counters
-    (a shard whose kernel output the driver cannot find raises, leaving
-    swept garbage). A quarantine appended to errors/ is recounted — the
-    only job after staging. The publish runs no Spark job: marker
-    (carrying ``shard_stats`` + Δ) + docs swap, gen rename, stats.json
-    from the marker, marker dropped; then auto-compaction."""
+    A quarantine — already recorded in errors/ by the staging kernel — is
+    recounted with pyarrow (_count_error_urls; no Spark job). With no
+    changed shard the staging leftovers are swept and nothing is committed
+    (an update whose every kept page quarantined still refreshes the error
+    counter). Otherwise, before the marker and with no Spark job, the
+    unchanged docs shards are hard-linked into docs.tmp and each changed
+    shard's new subtotals are taken from its staged counters (a shard
+    whose kernel output the driver cannot find raises, leaving swept
+    garbage). The publish runs no Spark job either: marker (carrying
+    ``shard_stats`` + Δ) + docs swap, gen rename, stats.json from the
+    marker, marker dropped; then auto-compaction."""
     affected, n_bad = staged
-    n_errors = {}
-    if n_bad:
-        with _described(spark, f"{op}: classify"):
-            n_errors["n_errors"] = _count_error_urls(spark, root)
+    n_errors = {"n_errors": _count_error_urls(root)} if n_bad else {}
     docs_path = os.path.join(root, "docs")
     if not affected:
         _deltas.discard_staging(root)
@@ -774,29 +751,27 @@ def update_index(
 ) -> PhysicalIndex:
     """Incremental index update: re-index only what changed.
 
-    1. find the shards the incoming urls' ids map to (_shards_of_urls, the
-       ``classify`` job): an existing copy can only live there, so the
-       existence probe (ExistState semantics — skip ExistSame/ExistNewer)
-       is partition-pruned to them;
-    2. ONE staging job (deltas.stage_update_delta) runs the probe, extracts
-       the changed pages through the build's fused kernel
+    1. ONE staging job (deltas.stage_update_delta): its map stage
+       extracts every incoming page through the build's fused kernel
        (build.build_docs_and_tf_safe: one Arrow pass, bad pages
-       quarantined) and, per probed shard in parallel tasks, the one
-       encode kernel writes the delta generation (same codec as the base;
-       deltas.py) — postings, doclen rows, signed term-df, the shard's
-       subtotal change — and the shard's merged docs part, the probed
-       shards' live rows riding its one side. Zero re-tokenize /
-       re-encode of unchanged docs; query kernels mask shadowed base
-       entries via the owner-generation rule. Quarantined pages are
-       appended to errors/;
-    3. commit under the marker protocol (_commit_delta_mutation): the
-       unchanged docs shards are hard-linked, stats.json (shard_stats +
-       the staged changes) is written from the marker, and ``terms/``
-       stays the base dictionary (readers add delta_termdf) — no Spark job
-       unless a page quarantined (the error recount);
-    4. auto-compact shards holding ``compact_after`` or more generations.
-    Its Spark jobs are described ``update_index: <phase>`` (classify /
-    stage).
+       quarantined) and sends it to the kernel task of the shard its
+       (mode-recorded) id maps to. Each task reads its own shard's live
+       docs, runs the existence probe (ExistState — NotExist/ExistOlder
+       kept, ExistSame/ExistNewer dropped, quarantined pages too), and
+       the one encode kernel writes the delta generation (deltas.py:
+       postings in the base's codec, doclen rows, signed term-df, the
+       shard's subtotal change), the merged docs part and the kept
+       quarantined pages' errors/ part. Unchanged docs are never
+       re-tokenized or re-encoded, and a shard without an incoming page
+       is never read;
+    2. commit under the marker protocol (_commit_delta_mutation) with no
+       Spark job: unchanged docs shards hard-linked, the error counter
+       recounted with pyarrow, stats.json (shard_stats + the staged
+       changes) written from the marker; ``terms/`` stays the base
+       dictionary (readers add delta_termdf);
+    3. auto-compact shards holding ``compact_after`` or more generations.
+    Its two Spark jobs (map stage, kernel) are described
+    ``update_index: stage``.
 
     The result is rank-identical to a full rebuild over the merged corpus.
     Re-encoding the affected shards' base segments — what an update used
@@ -816,22 +791,12 @@ def update_index(
     recover_update(spark, root)
 
     stats = read_stats(root)
-    n_shards = int(stats["n_shards"])
-    mode = stats.get("doc_id_mode", "hash")
-    with _described(spark, "update_index: classify"):
-        in_shards = _shards_of_urls(new_pages, mode, n_shards)
-    live = _docs_pruned_to_shards(spark, root, in_shards, keep_shard=True)
     # ids derive the way THIS index was built (hash ids over a
     # host_locality index would re-index a url under a second id)
-    fused = build_docs_and_tf_safe(incremental_pages(new_pages, live), mode)
+    fused = build_docs_and_tf_safe(new_pages, stats.get("doc_id_mode", "hash"))
     with _described(spark, "update_index: stage"):
-        staged = _deltas.stage_update_delta(
-            spark, root, fused, live, len(in_shards), n_shards)
-    if staged[1]:
-        # the rare quarantine re-extracts the changed pages once
-        with _described(spark, "update_index: classify"):
-            split_quarantine(fused)[1].write.mode("append").parquet(
-                os.path.join(root, "errors"))
+        staged = _deltas.stage_update_delta(spark, root, fused,
+                                            int(stats["n_shards"]))
     return _commit_delta_mutation(
         spark, root, stats, "update_index", staged, run_id, input_snapshot,
         compact_after,
@@ -852,13 +817,14 @@ def delete_from_index(
     doc_len = -1 mask the doomed docs out of every older segment, and
     signed term-df adjustments keep df/idf exact — O(delete bytes), no
     re-encode. The update's staging job stages it (stage_delete_delta):
-    the doomed urls ride its one side in place of new rows, beside the live
-    rows of the shards they map to, so the kernel finds the doomed docs and
-    writes the survivors' docs parts. It commits (and describes its Spark
-    jobs) like update_index (_commit_delta_mutation); results equal a full
-    rebuild over the survivors (including df/idf shifts), and
-    ``delete_from_index`` followed by ``compact_deltas(affected)``
-    re-encodes those shards' base segments without the doomed docs.
+    the doomed urls ride its one side in place of pages, each sent to the
+    kernel task of the shard its (mode-recorded) id maps to, which finds
+    the doomed docs among its shard's live docs and writes the survivors'
+    docs part. It commits (and describes its Spark jobs) like update_index
+    (_commit_delta_mutation); results equal a full rebuild over the
+    survivors (including df/idf shifts), and ``delete_from_index``
+    followed by ``compact_deltas(affected)`` re-encodes those shards' base
+    segments without the doomed docs.
 
     ``urls`` must not lazily depend on this index's own docs table (the
     delete replaces those files; a caller-side plan re-evaluated afterwards
@@ -866,17 +832,10 @@ def delete_from_index(
     recover_update(spark, root)
 
     stats = read_stats(root)
-    n_shards = int(stats["n_shards"])
-    mode = stats.get("doc_id_mode", "hash")
-    urls = urls.select("url")
-    with _described(spark, "delete_from_index: classify"):
-        # same pruning as update_index's existence probe: a doomed url's
-        # doc can only live in the shard its (mode-recorded) id maps to
-        cand_shards = _shards_of_urls(urls, mode, n_shards)
-    live = _docs_pruned_to_shards(spark, root, cand_shards, keep_shard=True)
     with _described(spark, "delete_from_index: stage"):
         staged = _deltas.stage_delete_delta(
-            spark, root, urls, live, len(cand_shards), n_shards, mode)
+            spark, root, urls.select("url"), int(stats["n_shards"]),
+            stats.get("doc_id_mode", "hash"))
     return _commit_delta_mutation(
         spark, root, stats, "delete_from_index", staged, run_id,
         input_snapshot, compact_after,
@@ -1088,7 +1047,9 @@ def classify_snapshot(
     """Adds ``exist_state`` per incoming url:
     NotExist / ExistOlder / ExistSame / ExistNewer — the reference's
     existence probe (ESIndexDocType.cs:73-118) as one batch left join instead
-    of a per-record network round-trip."""
+    of a per-record network round-trip. The update path runs the same rule
+    per shard inside its staging kernel (store._probe); this join is its
+    test oracle."""
     ex = existing_docs.select(
         F.col("url").alias("url"), F.col("warc_ts").alias("old_ts")
     )
@@ -1100,12 +1061,3 @@ def classify_snapshot(
         .otherwise("ExistNewer")
     )
     return joined.withColumn("exist_state", state).drop("old_ts")
-
-
-def incremental_pages(new_pages: DataFrame, existing_docs: DataFrame) -> DataFrame:
-    """Pages to (re)index: new urls + re-crawls newer than the indexed copy
-    (skip ExistSame/ExistNewer — StreamDatasourceBase.cs:110-134)."""
-    classified = classify_snapshot(new_pages, existing_docs)
-    return classified.where(
-        F.col("exist_state").isin("NotExist", "ExistOlder")
-    ).drop("exist_state")

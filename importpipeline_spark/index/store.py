@@ -94,15 +94,17 @@ _POSTING_COLS = [
 ]
 
 
-def _write_part(table: pa.Table, d: str) -> None:
-    """``table`` as ``d/part-0.parquet``, written executor-side under a
-    dot-prefixed tmp name (Spark's and pyarrow's readers skip it) and
-    renamed into place: content is deterministic and the rename atomic, so
-    task retries and speculative duplicates are harmless."""
+def _write_part(table: pa.Table, d: str, name: str = "part-0.parquet",
+                **opts) -> None:
+    """``table`` as ``d/name`` (pq.write_table ``opts``), written
+    executor-side under a dot-prefixed tmp name (Spark's and pyarrow's
+    readers skip it) and renamed into place: content is deterministic and
+    the rename atomic, so task retries and duplicates are harmless."""
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".part.{os.getpid()}.tmp")
-    pq.write_table(table, tmp, use_dictionary=False, store_schema=False)
-    os.replace(tmp, os.path.join(d, "part-0.parquet"))
+    tmp = os.path.join(d, f".{name}.{os.getpid()}.tmp")
+    pq.write_table(table, tmp, store_schema=False,
+                   **{"use_dictionary": False, **opts})
+    os.replace(tmp, os.path.join(d, name))
 
 
 def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
@@ -114,10 +116,17 @@ def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
     os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
 
 
-# kinds of the dl-side rows of a staging encode (deltas.py builds them):
-# the probed shards' live docs rows, the generation's new rows, the urls a
-# delete dooms, and the update's quarantined pages (counted, never indexed)
-LIVE, NEW, GONE, BAD = 0, 1, 2, 3
+# kinds of a staging encode's rows (deltas.py builds them): an update's
+# incoming pages (NEW, or BAD when extraction quarantined them) and the urls
+# a delete dooms (GONE)
+NEW, GONE, BAD = 0, 1, 2
+
+# docs/ in DOCS_SCHEMA's types, as a staging task reads its shard's part(s)
+_DOCS_ARROW = pa.schema([
+    ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
+    ("lang", pa.string()), ("text", pa.string()), ("doc_len", pa.int32()),
+    ("doc_id", pa.int64()),
+])
 
 
 class StagedParam(AccumulatorParam):
@@ -131,14 +140,17 @@ class StagedParam(AccumulatorParam):
 
 
 class Staging(NamedTuple):
-    """Where a delta generation's staging kernel writes: ``root`` (the
-    staging root) gets each changed shard's delta_doclen, delta_termdf and
-    counters, ``docs`` (the staged docs table) its merged docs part, and
-    ``report`` (an accumulator of StagedParam) the shards the kernel
-    changed and the quarantined rows it saw."""
+    """A delta generation's staging kernel reads each shard's live rows in
+    ``live`` (the docs table) and writes each changed shard's delta_doclen,
+    delta_termdf and counters under ``root`` (the staging root), its merged
+    docs part under ``docs``, its quarantined pages as ``errors``-<shard>
+    (a call-unique prefix in errors/), and reports to ``report`` (a
+    StagedParam accumulator) the changed shards and quarantined rows."""
     root: str
     docs: str
     report: Accumulator
+    live: str
+    errors: str
 
 
 def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
@@ -155,11 +167,13 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
 
     With ``counters_dir`` the kernel writes the segment's lineage
     counters. With ``staging`` there is no tf side: the dl side carries
-    rows of every ``kind`` (LIVE, NEW, GONE, BAD) with the docs columns,
-    the NEW rows are the postings' docs and carry their term counts
-    (_staged_tf), and the kernel stages the shard's delta tables and
-    merged docs part beside the postings (_stage_delta; each term's run
-    length is its +df there — one tf row per (doc, term) pair).
+    one shard's incoming rows of every ``kind`` (NEW, BAD, GONE) with the
+    docs columns. The kernel reads the shard's live docs itself
+    (_live_docs), drops the pages the existence probe skips (_probe),
+    encodes the NEW rows from their term counts (_staged_tf) and stages
+    the shard's delta tables, merged docs part and quarantine records
+    beside the postings (_stage_delta; each term's run length is its +df
+    there — one tf row per (doc, term) pair).
     Every side file is written executor-side (_write_part). The index
     root must be a filesystem the driver and executors share, as every
     driver-side rename of executor-written parquet already requires.
@@ -168,8 +182,9 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
         shard = int(
             (tf_pdf["shard"] if len(tf_pdf) else dl_pdf["dl_shard"]).iloc[0])
     else:
-        rows = dl_pdf
-        shard = int(rows["dl_shard"].iloc[0])
+        shard = int(dl_pdf["dl_shard"].iloc[0])
+        live = _live_docs(staging.live, shard)
+        rows = _probe(dl_pdf, live)
         dl_pdf = rows[rows["kind"].to_numpy() == NEW]
         tf_pdf = _staged_tf(dl_pdf)
     terms = np.empty(0, dtype=object)
@@ -219,8 +234,38 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     if staging is not None:
         df = pd.Series(np.diff(np.append(run_starts, len(terms))),
                        index=terms[run_starts], dtype=np.int64)
-        _stage_delta(staging, shard, df, rows)
+        _stage_delta(staging, shard, df, rows, live)
     return out
+
+
+def _live_docs(docs: str, shard: int) -> pd.DataFrame:
+    """The shard's live docs rows, read executor-side from every part of
+    ``docs/shard=N`` in DOCS_SCHEMA's types, named as the staging rows
+    name them (warc_ts as epoch micros ``warc_us``, doc_id as
+    ``dl_doc_id``). A shard with no directory has no docs; an unreadable
+    part raises."""
+    d = os.path.join(docs, f"shard={shard}")
+    t = (pq.read_table(d, columns=_DOCS_ARROW.names,
+                       coerce_int96_timestamp_unit="us")
+         if os.path.isdir(d) else _DOCS_ARROW.empty_table())
+    us = t["warc_ts"].cast(_DOCS_ARROW.field("warc_ts").type).cast(pa.int64())
+    return t.set_column(1, "warc_us", us).rename_columns(
+        ["url", "warc_us", "lang", "text", "doc_len", "dl_doc_id"]).to_pandas()
+
+
+def _probe(rows: pd.DataFrame, live: pd.DataFrame) -> pd.DataFrame:
+    """The reference's per-record existence probe (ESIndexDocType.cs:73-118),
+    shard-local: an incoming NEW or BAD page stays when its url has no
+    live copy, or one without warc_ts (NotExist), or an older one
+    (ExistOlder), and is dropped when the live copy is as new (ExistSame)
+    or newer (ExistNewer) — segments.classify_snapshot's rule. GONE rows
+    stay."""
+    pos = pd.Index(live["url"]).get_indexer(rows["url"])
+    hit = (pos >= 0) & (rows["kind"].to_numpy() != GONE)
+    old = live["warc_us"].to_numpy()[pos[hit]]
+    keep = ~hit
+    keep[hit] = pd.isna(old) | (old < rows["warc_us"].to_numpy()[hit])
+    return rows[keep]
 
 
 def _staged_tf(new_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -242,30 +287,40 @@ def _staged_tf(new_pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _stage_delta(staging: Staging, shard: int, df: pd.Series,
-                 rows: pd.DataFrame) -> None:
-    """One shard's share of a delta generation. The live ``rows`` whose url
-    a NEW row carries (an update) or a GONE row names (a delete) are the
-    shard's OLD rows. A shard with neither new nor old rows is unchanged
-    and gets nothing. Otherwise the kernel writes under ``staging``:
-    ``delta_doclen`` (the new rows, plus a doc_len = -1 tombstone per row a
-    delete dooms, sorted by doc_id); ``delta_termdf`` (``df`` — +1 per new
-    (doc, term) — minus 1 per distinct term of each re-tokenized old text,
-    netted, zeros dropped, sorted by term; the same pinned analyzer as
-    indexing, so the decrements equal what the base counts);
-    ``counters/shard_N.json`` (the shard's (Δn_docs, Δtotal_tokens),
-    tombstones counting 0); and the shard's merged docs part — live rows
-    minus old plus new, in DOCS_SCHEMA's types. The counters go last, so
-    a shard with counters has every file. ``staging.report`` receives the
-    changed shard and the quarantined (BAD) rows."""
+                 rows: pd.DataFrame, live: pd.DataFrame) -> None:
+    """One shard's share of a delta generation, from the incoming ``rows``
+    the probe kept and the shard's ``live`` docs: the BAD rows go to its
+    errors/ part; the live rows whose url a NEW row carries (an update) or
+    a GONE row names (a delete) are its OLD rows. A shard with neither new
+    nor old rows gets nothing more. Otherwise the kernel writes under
+    ``staging``: ``delta_doclen`` (the new rows, plus a doc_len = -1
+    tombstone per row a delete dooms, sorted by doc_id); ``delta_termdf``
+    (``df`` — +1 per new (doc, term) — minus 1 per distinct term of each
+    re-tokenized old text, netted, zeros dropped, sorted by term; the same
+    pinned analyzer as indexing, so the decrements equal what the base
+    counts); ``counters/shard_N.json`` (the shard's (Δn_docs,
+    Δtotal_tokens), tombstones counting 0); and the shard's merged docs
+    part — live rows minus old plus new, in DOCS_SCHEMA's types. The
+    counters go last, so a shard with counters has every file."""
     kind = rows["kind"].to_numpy()
     new_pdf = rows[kind == NEW]
-    live = rows[kind == LIVE]
+    bad = rows[kind == BAD]
     doomed = live["url"].isin(rows["url"][kind == GONE]).to_numpy()
     is_old = doomed | live["url"].isin(new_pdf["url"]).to_numpy()
     old_pdf = live[is_old]
     changed = len(new_pdf) + len(old_pdf) > 0
-    staging.report.add((frozenset([shard] if changed else []),
-                        int((kind == BAD).sum())))
+    if len(bad):
+        # build.split_quarantine's columns, ts as a Spark write stores it
+        _write_part(pa.table({
+            "url": pa.array(bad["url"], pa.string()),
+            "stage": pa.array(["extract"] * len(bad), pa.string()),
+            "error": pa.array(bad["error"], pa.string()),
+            "ts": pa.array([pd.Timestamp.now(tz="UTC")] * len(bad),
+                           pa.timestamp("us", tz="UTC")),
+        }), os.path.dirname(staging.errors),
+            f"{os.path.basename(staging.errors)}-{shard}.parquet",
+            use_deprecated_int96_timestamps=True)
+    staging.report.add((frozenset([shard] if changed else []), len(bad)))
     if not changed:
         return
     part = f"shard={shard}"
@@ -300,7 +355,10 @@ def _stage_delta(staging: Staging, shard: int, df: pd.Series,
         "doc_len": pa.array(docs["doc_len"].to_numpy(dtype=np.int64),
                             pa.int32()),
         "doc_id": pa.array(docs["dl_doc_id"].to_numpy(dtype=np.int64)),
-    }), os.path.join(staging.docs, part))
+    }), os.path.join(staging.docs, part),
+        # no text min/max: pyarrow repeats whole page texts in the page
+        # header and the footer (KBs per part); nothing prunes on text
+        write_statistics=["url", "warc_ts", "lang", "doc_len", "doc_id"])
     new_len = new_pdf["doc_len"].to_numpy(dtype=np.int64)
     _write_counters({
         "n_docs": len(new_pdf) - len(old_pdf),
@@ -331,12 +389,13 @@ def encode_postings(tf: DataFrame | None, dl: DataFrame,
 
     ``counters_dir``: per-shard lineage counters (_encode_shard).
     ``staging``: a delta generation's Staging. ``tf`` is then None and
-    ``dl`` is the only side: each row also carries its ``kind`` and docs
-    columns (url, text, warc_us = warc_ts in epoch microseconds, lang), a
-    NEW row its ``terms``/``tfs`` arrays, and the same job stages every
-    changed shard's delta_doclen, delta_termdf, counters and merged docs
-    part (_stage_delta). One side means one exchange, and the kernel's
-    input is never computed twice.
+    ``dl`` — the only side — holds just the generation's incoming rows,
+    each also with its ``kind``, docs columns (url, text, warc_us =
+    warc_ts in epoch microseconds, lang), ``error`` and, for a NEW row,
+    ``terms``/``tfs`` arrays. The same job probes each shard's live docs
+    and stages its delta_doclen, delta_termdf, counters, merged docs part
+    and quarantine records (_stage_delta); no live docs row crosses the
+    exchange, and the kernel's input is never computed twice.
 
     The dl side's key columns are BOTH renamed (dl_shard, dl_doc_id): tf
     and dl usually share a parent, and Spark's ambiguous-self-join analysis
@@ -351,8 +410,8 @@ def encode_postings(tf: DataFrame | None, dl: DataFrame,
     dl = dl.select(
         F.col("shard").alias("dl_shard"),
         F.col("doc_id").alias("dl_doc_id"), "doc_len",
-        *(("kind", "url", "text", "warc_us", "lang", "terms", "tfs")
-          if staging is not None else ()),
+        *(("kind", "url", "text", "warc_us", "lang", "terms", "tfs",
+           "error") if staging is not None else ()),
     )
     if staging is None:
         out = (

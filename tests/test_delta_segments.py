@@ -734,9 +734,10 @@ def _clear_job_group(spark):
 
 # Spark jobs of the small update and delete below (200-doc base, 4 shards;
 # a fifth of it recrawled, 5 urls deleted), every job of every phase
-# included: they all run under the caller's job group
-_UPDATE_JOBS_MAX = 5
-_DELETE_JOBS_MAX = 4
+# included: they all run under the caller's job group. Each is the staging
+# job's map stage plus its kernel, quarantine included.
+_UPDATE_JOBS_MAX = 2
+_DELETE_JOBS_MAX = 2
 
 
 def test_delta_publish_runs_no_spark_job(spark, tmp_path):
@@ -821,6 +822,40 @@ def test_delta_publish_runs_no_spark_job(spark, tmp_path):
         _clear_job_group(spark)
     assert _group_jobs(spark, "recover") == []
     assert read_stats(root)["delta_gens"] == [1, 2, 3, 4]
+
+
+def test_quarantined_update_runs_no_extra_job(spark, tmp_path):
+    """A quarantined page costs an update no Spark job: the staging kernel
+    records it as an errors/ part (the columns and types a Spark write
+    gives errors/, so a Spark read sees one table) and the driver
+    recounts the quarantine's distinct urls with pyarrow. The update stays
+    within its job budget, and n_errors is the recount."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 200, seed=7, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    deep = ("<html><body>" + "<div>" * 30000 + "x" + "</div>" * 30000
+            + "</body></html>")
+    poison = spark.createDataFrame(
+        [("u_poison", deep.encode())], "url string, html binary"
+    ).withColumn("warc_ts", F.current_timestamp()).withColumn(
+        "text", F.lit(None).cast("string")).withColumn("lang", F.lit("en"))
+    upd = _recrawl(pages, 5, 2).unionByName(poison.select(*pages.columns))
+    sc.setJobGroup("upd_bad", "update with a quarantined page")
+    try:
+        pidx = update_index(spark, root, upd, run_id="q1",
+                            input_snapshot="q1", compact_after=None)
+    finally:
+        _clear_job_group(spark)
+    n_jobs = len(_group_jobs(spark, "upd_bad"))
+    assert 0 < n_jobs <= _UPDATE_JOBS_MAX, n_jobs
+    assert pidx.stats["n_errors"] == 1 and pidx.stats["delta_gens"] == [1]
+    err = spark.read.parquet(os.path.join(root, "errors"))
+    assert err.schema.simpleString() == (
+        "struct<url:string,stage:string,error:string,ts:timestamp>")
+    rows = err.collect()
+    assert [(r.url, r.stage) for r in rows] == [("u_poison", "extract")]
+    assert "RecursionError" in rows[0].error and rows[0].ts is not None
 
 
 def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
@@ -914,9 +949,9 @@ def test_failed_staging_releases_cached_inputs(spark, tmp_path):
 
 
 def test_multi_shard_mutation_runs_parallel_kernel_tasks(spark, tmp_path):
-    """The staging kernel's two sides are repartitioned by shard into as
-    many partitions as the mutation probes shards; AQE does not coalesce
-    those shuffles, so an update or a delete touching two or more shards
+    """The staging kernel's one side is repartitioned by shard into
+    min(shards, parallelism) partitions, at least 2; AQE does not coalesce
+    that shuffle, so an update or a delete touching two or more shards
     runs its kernel stage — the last stage of its last ``stage`` job — in
     more than one task instead of encoding the shards one after another in
     a single task."""

@@ -581,59 +581,117 @@ def test_corrupt_termdf_sidecar_raises(spark, tmp_path):
         _derive_dictionary(spark, root, str(tmp_path / "terms_chk"))
 
 
-def test_update_existence_probe_is_partition_pruned(spark, tmp_path):
-    """r6: the update path's existence probe (classify/incremental_pages)
-    scans ONLY the shards the incoming urls' ids map to — doc_id = f(url)
-    is deterministic, so an existing copy cannot live anywhere else. Pinned
-    two ways: the physical plan carries a shard PartitionFilter, and the
-    pruned classification equals the unpruned one."""
-    import io
+def test_update_kernel_probe_matches_classify_snapshot(spark, tmp_path):
+    """The staging kernel runs the existence probe per shard on its own
+    shard's live docs. It must keep exactly the pages classify_snapshot
+    (the DataFrame oracle) calls NotExist or ExistOlder and drop the
+    ExistSame and ExistNewer ones, whose content is changed here so a
+    wrongly kept page would show in docs/. Quarantined pages pass the same
+    probe: a quarantined NotExist page is recorded in errors/, a
+    quarantined ExistSame page is not."""
     import os
-    from contextlib import redirect_stdout
+    from datetime import timedelta
 
-    from importpipeline_spark.index.pagesgen import gen_pages_df
-    from importpipeline_spark.index.segments import (
-        _docs_pruned_to_shards,
-        _shards_of_urls,
-        incremental_pages,
-    )
+    import pyarrow.parquet as pq
+
+    from importpipeline_spark.index.pagesgen import PAGES_SCHEMA
+    from importpipeline_spark.index.segments import classify_snapshot
     from importpipeline_spark.index.store import read_docs
 
-    root = str(tmp_path / "pruneidx")
-    pages = gen_pages_df(spark, 1000, seed=4, partitions=8, profile="web")
-    write_index(spark, pages, root, n_shards=16, write_docs=True,
-                doc_id_mode="host_locality")
+    root = str(tmp_path / "probeidx")
+    pages = gen_pages_df(spark, 240, seed=4, partitions=4)
+    write_index(spark, pages, root, n_shards=8)
+    old = {r.url: r for r in read_docs(spark, root).collect()}
+    picked = pages.orderBy("url").limit(14).collect()
+    deep = ("<html><body>" + "<div>" * 30000 + "x" + "</div>" * 30000
+            + "</body></html>").encode()
 
-    host = F.parse_url(F.col("url"), F.lit("HOST"))
-    top = (pages.groupBy(host.alias("h")).count()
-           .orderBy(F.col("count").desc(), F.col("h").asc()).first())
-    upd = pages.where(host == top["h"]).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
+    def page(r, hours, html, text):
+        return (r.url, r.warc_ts + timedelta(hours=hours), html, text, r.lang)
 
-    in_shards = _shards_of_urls(upd, "host_locality", 16)
-    assert 1 <= len(in_shards) <= 2  # one host → contiguous id range
-    old_docs = read_docs(spark, root)
-    probe = _docs_pruned_to_shards(spark, root, in_shards)
+    def changed(r, tag):
+        text = f"zzprobe {tag} {r.url}"
+        return text.encode(), text
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        incremental_pages(upd, probe).explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert "shard" in plan.split("PartitionFilters", 1)[1][:200], plan
+    rows = []
+    for i, r in enumerate(picked[:12]):
+        hours, tag = [(2, "older"), (0, "same"), (-2, "newer")][i % 3]
+        rows.append(page(r, hours, *changed(r, tag)))
+    rows.append(page(picked[12], 0, deep, None))  # quarantined ExistSame
+    fresh = picked[13]
+    rows += [
+        (f"{fresh.url}/new{i}", fresh.warc_ts, *changed(fresh, f"new{i}"),
+         "en") for i in range(2)
+    ]
+    rows.append((f"{fresh.url}/bad", fresh.warc_ts, deep, None, "en"))
+    upd = spark.createDataFrame(rows, PAGES_SCHEMA)
 
-    got = sorted(r.url for r in incremental_pages(upd, probe).collect())
-    want = sorted(r.url for r in incremental_pages(upd, old_docs).collect())
-    assert got == want and len(got) == int(top["count"])
+    states = {r.url: r.exist_state for r in classify_snapshot(
+        upd, read_docs(spark, root)).collect()}
+    assert sorted(set(states.values())) == [
+        "ExistNewer", "ExistOlder", "ExistSame", "NotExist"]
+    bad = {picked[12].url, f"{fresh.url}/bad"}
+    kept = {u for u, st in states.items()
+            if st in ("NotExist", "ExistOlder") and u not in bad}
 
-    # and the full update over the pruned path stays rank-identical
     pidx = update_index(spark, root, upd, run_id="pr1", input_snapshot="p1")
-    merged = pages.join(upd.select("url"), "url", "left_anti").unionByName(upd)
-    full_root = str(tmp_path / "prunefull")
-    pidx_full = write_index(spark, merged, full_root, n_shards=16,
-                            write_docs=True, doc_id_mode="host_locality")
-    a = [(r.doc_id, round(r.score, 6))
-         for r in bm25_topk_wand(spark, pidx, "the", k=10).collect()]
-    b = [(r.doc_id, round(r.score, 6))
-         for r in bm25_topk_wand(spark, pidx_full, "the", k=10).collect()]
-    assert a == b
+    assert pidx.stats["n_docs"] == 240 + 2
+    assert pidx.stats["n_errors"] == 1
+    docs = {r.url: r for r in read_docs(spark, root).collect()}
+    incoming = {u: (ts, text) for u, ts, _, text, _ in rows}
+    for u, st in states.items():
+        if u in kept:
+            assert docs[u].text == incoming[u][1], (u, st)
+            assert docs[u].warc_ts == incoming[u][0], (u, st)
+        elif u in old:
+            assert docs[u] == old[u], (u, st)
+        else:
+            assert u not in docs, (u, st)
+    # the generation's doclen rows are exactly the kept pages
+    got_ids = set(pq.read_table(os.path.join(
+        root, "delta_doclen", "gen=1"))["doc_id"].to_pylist())
+    assert got_ids == {docs[u].doc_id for u in kept}
+    err = spark.read.parquet(os.path.join(root, "errors"))
+    assert [r.url for r in err.collect()] == [f"{fresh.url}/bad"]
+
+
+def test_mutation_reads_only_its_own_shards(spark, tmp_path):
+    """Each staging task reads only its own shard's docs: a docs file
+    corrupted in a shard no incoming url maps to breaks neither an update
+    nor a delete, and stays byte-identical — hard-linked (same inode)
+    into the new docs/ table."""
+    import os
+
+    from importpipeline_spark.index.build import doc_id_expr, shard_of
+    from importpipeline_spark.index.segments import delete_from_index
+
+    root = str(tmp_path / "ownidx")
+    pages = gen_pages_df(spark, 200, seed=6, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    shard = {r.url: r.s for r in pages.select(
+        "url", shard_of(doc_id_expr("hash"), 4).alias("s")).collect()}
+    victim = os.path.join(root, "docs", "shard=3")
+    files = sorted(f for f in os.listdir(victim) if f.endswith(".parquet"))
+    assert files
+    for f in files:
+        with open(os.path.join(victim, f), "wb") as fh:
+            fh.write(b"not a parquet file" * 8)
+    snap = {f: (os.stat(os.path.join(victim, f)).st_ino,
+                open(os.path.join(victim, f), "rb").read()) for f in files}
+
+    others = sorted(u for u, s in shard.items() if s != 3)
+    upd = pages.where(F.col("url").isin(others[:30])).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 HOURS"))
+    del_urls = spark.createDataFrame([(u,) for u in others[30:36]],
+                                     "url string")
+    update_index(spark, root, upd, run_id="own1", input_snapshot="o1")
+    pidx = delete_from_index(spark, root, del_urls, run_id="own2")
+    assert pidx.stats["delta_gens"] == [1, 2]
+    assert pidx.stats["n_docs"] == 200 - 6
+    assert sorted(f for f in os.listdir(victim)
+                  if f.endswith(".parquet")) == files
+    for f, (ino, data) in snap.items():
+        p = os.path.join(victim, f)
+        assert os.stat(p).st_ino == ino, f
+        with open(p, "rb") as fh:
+            assert fh.read() == data, f

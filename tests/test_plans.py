@@ -248,3 +248,32 @@ def test_build_outputs_share_one_exchange(spark):
             assert not any("Exchange" in n for n in err_write), err_write
         finally:
             sharded.unpersist()
+
+
+def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
+    """An update's staging job is one staged query: the incoming pages'
+    extract, ONE exchange (the repartition by shard) and the grouped
+    kernel. No docs scan and no join is in the plan — each kernel task
+    reads and probes its own shard's docs — and no live docs row crosses
+    the exchange."""
+    import re
+
+    from importpipeline_spark.index import deltas
+    from importpipeline_spark.index.build import build_docs_and_tf_safe
+    from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.store import encode_postings
+
+    seen = []
+    monkeypatch.setattr(deltas, "encode_postings",
+                        lambda tf, dl, path, staging: seen.append(
+                            (dl, staging)))
+    fused = build_docs_and_tf_safe(gen_pages_df(spark, 40, seed=5), "hash")
+    assert deltas.stage_update_delta(spark, str(tmp_path), fused, 8) == (
+        [], 0)
+    (rows, staging), = seen
+    plan = plan_of(encode_postings(None, rows, None, staging=staging))
+    exchanges = re.findall(r"^\(\d+\) (\w*Exchange\w*)", plan, re.M)
+    assert exchanges == ["Exchange"], plan
+    assert "hashpartitioning(shard" in plan, plan
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "Join" not in plan and "Scan parquet" not in plan, plan
