@@ -198,18 +198,6 @@ def build_tf(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("p.term").alias("term"), F.col("p.tf").alias("tf"))
 
 
-def tf_from_text(docs: DataFrame, n_shards: int) -> DataFrame:
-    """(doc_id, term, tf, shard) of stored docs re-tokenized from their
-    ``text`` — the pinned analyzer the build ran, so the counts equal what
-    the postings hold. Every encode of stored docs uses it: the resume of a
-    resumable build and compaction's re-encode. (The delta staging kernel
-    re-tokenizes shadowed or deleted docs in-process with
-    tokenize_series, the function tokenize_udf wraps: store._stage_delta.)"""
-    return build_tf(
-        docs.withColumn("tokens", tokenize_udf(F.col("text")))
-    ).withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-
-
 _FUSED_SAFE_SCHEMA = (
     "url string, warc_ts timestamp, lang string, text string, doc_len int, "
     "tf_pairs array<struct<term:string,tf:int>>, error string"
@@ -227,7 +215,10 @@ def build_docs_and_tf_safe(pages: DataFrame,
     row per page; tf_pairs carries the per-doc term counts, so tf is a
     JVM-side explode (store.tf_from_pairs), never a second Python pass.
     split_quarantine separates the good rows from the error records. Every
-    index writer extracts through it: the build and update_index.
+    index writer extracts through it: the build and update_index. Stored
+    docs are never re-extracted: a fold (compaction, a resume) or a delta
+    staging re-tokenizes their text inside its encode task with the same
+    tokenize_series (store._tf_of_text, store._stage_delta).
     """
     import traceback as _tb
     from collections import Counter

@@ -56,11 +56,15 @@ pre-marker crash leaves only swept staging garbage.
 
 Compaction is the only re-encode of base segments after a build: it folds
 a shard's base + deltas into a fresh base segment from the merged docs
-table (segments._rebuild_shards), purging that shard's delta subdirs under
-its own marker (readers refuse the index while it exists: open_index);
-generations left with no shard data are dropped from ``delta_gens``. ``segments.compact_deltas`` is the
-optimize-to-N analogue, and updates auto-compact shards that accumulate
-``compact_after`` generations or more.
+table in one fold job — one task per shard reads its own docs part(s),
+re-tokenizes them in the task and writes the shard's postings, doclen
+part and counters (segments._rebuild_shards, store.Fold) — then derives
+the base dictionary and purges that shard's delta subdirs under its own
+marker (readers refuse the index while it exists: open_index);
+generations left with no shard data are dropped from ``delta_gens``.
+``segments.compact_deltas`` is the optimize-to-N analogue, and updates
+auto-compact shards that accumulate ``compact_after`` generations or
+more.
 """
 
 from __future__ import annotations

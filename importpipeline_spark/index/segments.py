@@ -21,12 +21,13 @@ Build shape (the one build — store.write_index is this on an empty root):
   the same cache (no exchange), so a batch of K segments runs as K parallel
   tasks, while each segment still commits its postings and lineage row
   (resume granularity stays per-segment). A restarted run reads
-  the lineage, skips finished segments, and rebuilds only the missing ones
-  from the stored docs' text — final index bit-identical to an
-  uninterrupted run, including kills mid-batch (files land before lineage;
-  an un-lineaged segment is deterministically re-encoded on resume).
-  Verified in tests. Without a docs table (``write_docs=False``) a crash
-  re-runs phase A and still skips the finished segments.
+  the lineage, skips finished segments, and folds only the missing ones
+  from the stored docs' text (_fold: one job per batch, each task reading
+  and re-tokenizing its own shard's docs) — final index bit-identical to
+  an uninterrupted run, including kills mid-batch (files land before
+  lineage; an un-lineaged segment is deterministically re-encoded on
+  resume). Verified in tests. A crash re-runs phase A only if one of its
+  jobs had not succeeded, or without a docs table (``write_docs=False``).
   Finally the dictionary derives from the committed postings' block counts
   (df = Σ n) — on every run, including a resume with nothing left to
   encode. The build's Spark jobs are described ``build: extract`` (phase
@@ -38,6 +39,7 @@ Endpoints/ESEndpoint.cs:457-471) into <root>/errors/.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -51,26 +53,24 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from . import deltas as _deltas
-from .build import (
-    build_docs_and_tf_safe,
-    shard_of,
-    split_quarantine,
-    tf_from_text,
-)
+from .build import build_docs_and_tf_safe, shard_of, split_quarantine
 from .store import (
+    Fold,
     PhysicalIndex,
     _derive_dictionary,
     _update_marker,
     encode_postings,
     index_stats,
-    open_docs,
-    read_docs,
     read_stats,
     shard_totals,
     tf_from_pairs,
     totals_fields,
     write_stats,
 )
+
+# where an encode job (build batch, resume or compaction fold) writes its
+# segments' files before each segment's commit swaps them into place
+_ENCODE_TMP = "encode_tmp"
 
 SEGMENTS_SCHEMA = (
     "run_id string, segment_id int, input_snapshot string, n_docs long, "
@@ -102,27 +102,23 @@ def _seg_dir(root: str) -> str:
     return os.path.join(root, "segments")
 
 
-def _read_counters(counters_dir: str, segment_id: int,
-                   seg_path: str | None = None) -> dict:
-    p = os.path.join(counters_dir, f"shard_{segment_id}.json")
-    if not os.path.exists(p):
-        if seg_path is not None and any(
-            f.endswith(".parquet") for f in os.listdir(seg_path)
-        ):
-            # the segment demonstrably produced postings but its sidecar is
-            # missing → the executors wrote somewhere the driver can't see.
-            # All-zero lineage counters would be silent corruption of the
-            # run report; fail loudly instead.
-            raise RuntimeError(
-                f"segment {segment_id} has postings but no counter sidecar "
-                f"at {p}; the index root must be a filesystem shared by "
-                "driver and executors (the same requirement the segment "
-                "file renames already impose)"
-            )
-        # doc range with no group at all (no docs, no postings)
-        return {"blocks": 0, "postings": 0, "terms": 0, "n_docs": 0}
-    with open(p) as f:
-        return json.load(f)
+def _read_counters(tmp: str, seg: int, fold: bool) -> dict:
+    """Segment ``seg``'s counters as its encode task wrote them under
+    ``tmp``. A cogroup encode runs no task for a doc range without docs:
+    there a missing file means zeros, unless the segment has postings.
+    Otherwise (a fold task writes them for every shard) it raises: the
+    executors wrote where the driver cannot see."""
+    p = os.path.join(tmp, "counters", f"shard_{seg}.json")
+    if os.path.exists(p):
+        with open(p) as f:
+            return json.load(f)
+    if fold or glob.glob(os.path.join(tmp, "postings", f"shard={seg}",
+                                      "*.parquet")):
+        raise RuntimeError(
+            f"segment {seg} has no counters at {p}; the index root must be "
+            "a filesystem shared by driver and executors")
+    return dict.fromkeys(
+        ("n_docs", "total_tokens", "blocks", "postings", "terms"), 0)
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
@@ -166,6 +162,65 @@ def _append_lineage(root: str, row: dict) -> None:
     # atomic per-segment commit (the reference's save-after-each-run —
     # ImportEngine.cs:455)
     os.replace(tmp, os.path.join(p, f"seg_{row['segment_id']}.json"))
+
+
+def _commit_segment(root: str, seg: int, tables, m: dict, run_id: str,
+                    input_snapshot: str, started: str, **metrics) -> None:
+    """The one segment commit (build batches, resume, compaction): move
+    ``seg``'s shard dir of each of ``tables`` from _ENCODE_TMP over the
+    live one (a shard without data gets an empty dir) FIRST, then write
+    its lineage row with the encode's counters ``m`` and any extra
+    ``metrics`` — a kill between the two just re-encodes the segment
+    (deterministic, so the bytes are identical)."""
+    for table in tables:
+        src = os.path.join(root, _ENCODE_TMP, table, f"shard={seg}")
+        dst = os.path.join(root, table, f"shard={seg}")
+        os.makedirs(src, exist_ok=True)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.rmtree(dst, ignore_errors=True)
+        os.rename(src, dst)
+    _append_lineage(root, {
+        "run_id": run_id, "segment_id": int(seg),
+        "input_snapshot": input_snapshot, "n_docs": m["n_docs"],
+        "n_postings": m["postings"], "status": "ok", "started_ts": started,
+        "finished_ts": datetime.now(timezone.utc).isoformat(),
+        # per-segment metrics (mirrors DatasourceReport counters —
+        # ImportReport.cs:92-209)
+        "metrics": {"blocks": m["blocks"], "distinct_terms": m["terms"],
+                    **metrics},
+    })
+
+
+def _fold(spark, root: str, shards, want: dict | None) -> dict:
+    """Re-encode ``shards`` from their stored docs in ONE Spark job with
+    no exchange: one task per shard (store.encode_postings given a
+    store.Fold) reads its own docs/shard=N with pyarrow, re-tokenizes it
+    and writes under _ENCODE_TMP its postings (through Spark's writer),
+    its doc_id-sorted doclen part and its counters.
+    Returns shard → counters, each checked against ``want`` (shard_stats
+    subtotals; an emptied shard is absent there): a mismatch, or a missing
+    counters or doclen file, raises before anything is swapped."""
+    tmp = os.path.join(root, _ENCODE_TMP)
+    shutil.rmtree(tmp, ignore_errors=True)
+    ids = spark.range(len(shards), numPartitions=len(shards)).select(
+        F.element_at(F.array(*map(F.lit, shards)),
+                     F.col("id").cast("int") + 1).alias("shard"))
+    encode_postings(None, ids, os.path.join(tmp, "postings"),
+                    os.path.join(tmp, "counters"),
+                    Fold(os.path.join(root, "docs"),
+                         os.path.join(tmp, "doclen")))
+    out = {}
+    for s in shards:
+        m = out[s] = _read_counters(tmp, s, fold=True)
+        if not os.path.exists(os.path.join(
+                tmp, "doclen", f"shard={s}", "part-0.parquet")):
+            raise RuntimeError(f"segment {s} has no doclen part under {tmp}")
+        got = [m["n_docs"], m["total_tokens"]] if m["n_docs"] else None
+        if want is not None and got != want.get(str(s)):
+            raise RuntimeError(
+                f"segment {s} folded to (n_docs, total_tokens) {got}; "
+                f"shard_stats has {want.get(str(s))}")
+    return out
 
 
 def _sharded_fused(pages: DataFrame, n_shards: int, doc_id_mode: str,
@@ -296,8 +351,7 @@ def build_index_resumable(
             _extract(_w_doclen),
         ] + ([_extract(_w_docs)] if write_docs else [])
 
-    batch_tmp = os.path.join(root, "postings_batch_tmp")
-    counters_dir = os.path.join(root, "postings_batch_counters")
+    tmp = os.path.join(root, _ENCODE_TMP)
 
     def _finalize_phase_a(block: bool) -> dict | None:
         """Join the concurrent phase-A jobs and write stats.json (the
@@ -320,82 +374,50 @@ def build_index_resumable(
         write_stats(root, s)
         return s
 
-    # EVERYTHING phase-B — including its setup Spark jobs (docs re-read on
-    # resume) — runs inside one guard: any exit, success or failure, first
-    # joins the concurrent phase-A futures (a caller that immediately
-    # resumes must not race still-running background writes) and releases
-    # the caches.
-    tf_cached = None
+    # EVERYTHING phase-B runs inside one guard: any exit, success or
+    # failure, first joins the concurrent phase-A futures (a caller that
+    # immediately resumes must not race still-running background writes)
+    # and releases the cache.
     pos = 0
     try:
         # phase B: per-segment postings (segment == doc-range shard); only
         # segments recorded ok FOR THIS INPUT SNAPSHOT count as finished
         done = _finished_segments(root, input_snapshot)
-        if sharded is None:
-            # resume: tf is recomputed from the persisted docs' text (docs
-            # parquet stores text, not tokens, to stay lean; only the
-            # missing segments' shards are actually encoded below)
-            docs_df = read_docs(spark, root)
-            tf = tf_from_text(docs_df, n_shards)
-            dl = docs_df.select("doc_id", "doc_len").withColumn(
-                "shard", shard_of(F.col("doc_id"), n_shards)
-            )
-
         todo = [s for s in range(n_shards) if s not in done]
         if batch_size is None:
             # two task waves per batch job: keeps every core busy with
             # straggler absorption while halving the commit barriers
             batch_size = max(1, 2 * spark.sparkContext.defaultParallelism)
-        # on RESUME, tf goes through a Python tokenize pass — cache it
-        # across batches
-        if sharded is None and len(todo) > batch_size:
-            tf = tf.persist()
-            tf_cached = tf
+        shutil.rmtree(tmp, ignore_errors=True)
         for start in range(0, len(todo), batch_size):
             batch = todo[start:start + batch_size]
             started = datetime.now(timezone.utc).isoformat()
-            # ONE encode job for the whole batch: keyed by shard, so the K
-            # segments encode as K parallel tasks, each also writing its
-            # lineage counters
+            # ONE encode job for the whole batch, its K segments as K
+            # parallel tasks that also write their counters: a fresh run
+            # cogroups the phase-A cache, a resume folds stored docs
             with _described(spark, "build: encode"):
-                encode_postings(
-                    tf.where(F.col("shard").isin(batch)),
-                    dl.where(F.col("shard").isin(batch)),
-                    batch_tmp, counters_dir=counters_dir,
-                )
-            # commit each segment: files into place FIRST, lineage row after
-            # — a kill between the two just re-encodes that segment on
-            # resume (deterministic, so the final bytes are identical).
+                if sharded is None:
+                    counters = _fold(spark, root, batch, stats["shard_stats"])
+                    tables = ["postings", "doclen"]
+                else:
+                    encode_postings(
+                        tf.where(F.col("shard").isin(batch)),
+                        dl.where(F.col("shard").isin(batch)),
+                        os.path.join(tmp, "postings"),
+                        counters_dir=os.path.join(tmp, "counters"),
+                    )
+                    counters = {s: _read_counters(tmp, s, fold=False)
+                                for s in batch}
+                    tables = ["postings"]
             for seg in batch:
-                path = _swap_shard_dir(batch_tmp, os.path.join(root, "postings"),
-                                       seg)
-                m = _read_counters(counters_dir, seg, seg_path=path)
-                _append_lineage(
-                    root,
-                    {
-                        "run_id": run_id,
-                        "segment_id": seg,
-                        "input_snapshot": input_snapshot,
-                        "n_docs": m["n_docs"],
-                        "n_postings": m["postings"],
-                        "status": "ok",
-                        "started_ts": started,
-                        "finished_ts": datetime.now(timezone.utc).isoformat(),
-                        # per-segment metrics (mirrors DatasourceReport
-                        # counters — ImportReport.cs:92-209)
-                        "metrics": {
-                            "blocks": m["blocks"],
-                            "distinct_terms": m["terms"],
-                        },
-                    },
-                )
+                _commit_segment(root, seg, tables, counters[seg], run_id,
+                                input_snapshot, started)
                 if fail_after_segment is not None and pos >= fail_after_segment:
                     raise RuntimeError(f"injected failure after segment {seg}")
                 pos += 1
             if stats is None:
                 stats = _finalize_phase_a(block=False)
-        for d in (batch_tmp, counters_dir):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
         # every segment is committed: the dictionary derives from their
         # postings (also on a resume with nothing left to encode)
         with _described(spark, "build: dictionary"):
@@ -403,103 +425,56 @@ def build_index_resumable(
     finally:
         # join the concurrent phase-A jobs BEFORE leaving (even on the
         # crash path: a caller that immediately resumes must not race
-        # still-running background writes), then release the caches —
+        # still-running background writes), then release the cache —
         # crash/resume cycles must not accumulate pinned corpus copies
         if stats is None and phase_a_futures is not None:
             if sys.exc_info()[1] is not None:
                 # an exception is in flight: join quietly (shutdown waits
-                # for every future) so it propagates unmasked; stats.json
-                # stays unwritten → phase A reruns
+                # for every future) so it propagates unmasked. Phase A is
+                # still marked done when all of its jobs succeeded, so
+                # the resume folds the missing segments from docs/ instead
+                # of re-extracting; otherwise phase A reruns
                 pool.shutdown()
+                if not any(f.exception() for f in phase_a_futures):
+                    _finalize_phase_a(block=True)
             else:
                 stats = _finalize_phase_a(block=True)
-        if tf_cached is not None:
-            tf_cached.unpersist()
         if sharded is not None:
             sharded.unpersist()
 
     return PhysicalIndex(root=root, stats=stats)
 
 
-def _swap_shard_dir(src_root: str, dst_root: str, shard: int) -> str:
-    """Move ``src_root/shard=N`` over ``dst_root/shard=N``. A shard the
-    source has no data for leaves an empty directory. Returns the
-    destination path."""
-    dst = os.path.join(dst_root, f"shard={shard}")
-    shutil.rmtree(dst, ignore_errors=True)
-    src = os.path.join(src_root, f"shard={shard}")
-    if os.path.exists(src):
-        os.makedirs(dst_root, exist_ok=True)
-        os.rename(src, dst)
-    else:
-        os.makedirs(dst, exist_ok=True)
-    return dst
-
-
 # ---- incremental import (ExistState semantics) ----
 
-def _rebuild_shards(spark, root: str, affected, n_shards: int,
-                    run_id: str, input_snapshot: str) -> dict:
-    """Re-encode postings + doclen for the given shards
-    from the CURRENT docs table and return their (n_docs, total_tokens)
-    subtotals. Idempotent (deterministic encode), so safe to re-run during
-    crash recovery.
+def _rebuild_shards(spark, root: str, affected, run_id: str,
+                    input_snapshot: str, want: dict | None) -> dict:
+    """Re-encode postings + doclen for the given shards from the CURRENT
+    docs table and return their (n_docs, total_tokens) subtotals (an
+    emptied shard is absent). Idempotent (deterministic encode), so safe
+    to re-run during crash recovery.
 
-    All affected shards encode in ONE cogroup job (keyed by shard → one
-    parallel task per shard) and one doclen write; the per-shard directory
-    swaps happen afterwards. Only compaction calls this: a kill mid-swap
-    is covered by compact_deltas' marker (recover_update re-runs the whole
-    rebuild)."""
+    One fold job (_fold: one task per shard, each reading its own docs
+    and writing its postings, doclen part and counters, checked against
+    ``want`` when given); the per-shard commits happen afterwards.
+    Only compaction calls this: a kill mid-swap is covered by
+    compact_deltas' marker (recover_update re-runs the whole rebuild)."""
     affected = sorted(int(s) for s in affected)
-    # the filter hits the physical partition column, so the scan
-    # lists/reads ONLY the affected shard dirs
-    docs_aff = open_docs(spark, root).where(
-        F.col("shard").isin(affected)).drop("shard")
-    tf = tf_from_text(docs_aff, n_shards)
-    dl = docs_aff.select("doc_id", "doc_len").withColumn(
-        "shard", shard_of(F.col("doc_id"), n_shards)
-    )
-
     started = datetime.now(timezone.utc).isoformat()
-    post_tmp = os.path.join(root, "postings_rebuild_tmp")
-    encode_postings(tf, dl, post_tmp)
-    dl_tmp = os.path.join(root, "doclen_rebuild_tmp")
-    (
-        dl.repartition(max(1, len(affected)), "shard")
-        .sortWithinPartitions("shard", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(dl_tmp)
-    )
-    totals = shard_totals(dl)
-
+    counters = _fold(spark, root, affected, want)
     for seg in affected:
         # an emptied shard keeps empty postings/doclen dirs
-        _swap_shard_dir(post_tmp, os.path.join(root, "postings"), seg)
-        _swap_shard_dir(dl_tmp, os.path.join(root, "doclen"), seg)
-        _append_lineage(
-            root,
-            {
-                "run_id": run_id,
-                "segment_id": int(seg),
-                "input_snapshot": input_snapshot,
-                "n_docs": totals.get(seg, (0, 0))[0],
-                "n_postings": None,
-                "status": "ok",
-                "started_ts": started,
-                "finished_ts": datetime.now(timezone.utc).isoformat(),
-                "metrics": {"incremental": 1},
-            },
-        )
-    for d in (post_tmp, dl_tmp):
-        shutil.rmtree(d, ignore_errors=True)
+        _commit_segment(root, seg, ["postings", "doclen"], counters[seg],
+                        run_id, input_snapshot, started, incremental=1)
+    shutil.rmtree(os.path.join(root, _ENCODE_TMP), ignore_errors=True)
     # the freshly encoded base now carries these shards' full live state —
     # their delta-segment data (every delta table across ALL
     # generations) is folded and must go, or queries would double-count.
     # Still inside the caller's marker window: a crash here re-runs the
     # whole (idempotent) rebuild + purge.
     _deltas.purge_shards(root, affected)
-    return totals
+    return {s: (m["n_docs"], m["total_tokens"])
+            for s, m in counters.items() if m["n_docs"]}
 
 
 def _refresh_stats_terms(root: str, mk: dict) -> dict:
@@ -538,9 +513,8 @@ def _fold_shards(spark, root: str, mk: dict) -> dict:
     """Compaction under its marker ``mk`` (also its crash recovery):
     re-encode the shards, re-derive the base dictionary, publish."""
     with _described(spark, "compact_deltas: stage"):
-        totals = _rebuild_shards(spark, root, mk["affected"],
-                                 int(mk["n_shards"]), mk["run_id"],
-                                 mk["input_snapshot"])
+        totals = _rebuild_shards(spark, root, mk["affected"], mk["run_id"],
+                                 mk["input_snapshot"], mk.get("shard_stats"))
     terms_tmp = os.path.join(root, "terms.tmp")
     shutil.rmtree(terms_tmp, ignore_errors=True)
     with _described(spark, "compact_deltas: publish"):
@@ -607,7 +581,8 @@ def recover_update(spark: SparkSession, root: str) -> bool:
     - marker without ``mode``: only compaction writes one. Re-run the fold
       (_fold_shards: re-encode, base dictionary, stats) against the CURRENT
       docs table; the re-encode is deterministic, so a repeat writes
-      identical bytes.
+      identical bytes. The fold must reproduce the marker's
+      ``shard_stats``; a marker without them takes the fold's.
     - no marker: any staging/tmp leftovers are pre-commit garbage — swept.
     Another format_version is refused (read_stats) before anything moves.
     """
@@ -870,9 +845,12 @@ def compact_deltas(
     if input_snapshot is None:
         input_snapshot = stats.get("input_snapshot", "compact")
 
-    # marker without a mode: recovery re-runs the fold against current docs
+    # marker without a mode: recovery re-runs the fold against current
+    # docs, which must reproduce the folded shards' subtotals
+    ss = stats["shard_stats"]
     mk = {"affected": todo, "n_shards": n_shards, "run_id": run_id,
-          "input_snapshot": input_snapshot}
+          "input_snapshot": input_snapshot,
+          "shard_stats": {str(s): ss[str(s)] for s in todo if str(s) in ss}}
     _write_marker(root, mk)
     stats = _fold_shards(spark, root, mk)
     os.remove(_update_marker(root))

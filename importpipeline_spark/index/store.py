@@ -7,7 +7,7 @@ cluster with an Iceberg catalog):
                         (partitioned by shard — an update or delete's
                         staging kernel writes each changed shard's
                         part-0.parquet and the rest are hard-linked;
-                        read via open_docs/read_docs)
+                        read with DOCS_SCHEMA)
     <root>/doclen/      shard, doc_id, doc_len            (partitioned by shard,
                         sorted by doc_id within files)
     <root>/postings/    term, block_id, n, min_doc, max_doc, docs_enc,
@@ -32,7 +32,8 @@ cluster with an Iceberg catalog):
 
 Every built index has this layout: write_index is the resumable build
 (segments.build_index_resumable) on an empty root. ``docs/`` is absent
-when the build ran with ``write_docs=False``.
+when the build ran with ``write_docs=False``. A fold (compaction, a
+resume) re-encodes each shard from its own docs/ part(s): encode_postings.
 
 Replaces the ES index + mapping template of the reference
 (Endpoints/ESIndexDefinitions.cs:312-541). The "optimize to N segments" step
@@ -153,9 +154,16 @@ class Staging(NamedTuple):
     errors: str
 
 
+class Fold(NamedTuple):
+    """A fold's kernel task reads its shard's docs in ``live`` (the docs
+    table) and writes its doclen part under ``doclen``."""
+    live: str
+    doclen: str
+
+
 def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                   counters_dir: str | None = None,
-                  staging: Staging | None = None) -> pd.DataFrame:
+                  staging: Staging | Fold | None = None) -> pd.DataFrame:
     """Cogrouped kernel: one doc-range shard's entire sub-index in one pass.
 
     One task per shard (not per term!): the tf rows are lexsorted by
@@ -165,15 +173,18 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     count is the parallelism/memory knob: each task holds one doc-range's
     postings (bounded by shard width), which is what holds at 1000× data.
 
-    With ``counters_dir`` the kernel writes the segment's lineage
-    counters. With ``staging`` there is no tf side: the dl side carries
-    one shard's incoming rows of every ``kind`` (NEW, BAD, GONE) with the
-    docs columns. The kernel reads the shard's live docs itself
-    (_live_docs), drops the pages the existence probe skips (_probe),
-    encodes the NEW rows from their term counts (_staged_tf) and stages
-    the shard's delta tables, merged docs part and quarantine records
-    beside the postings (_stage_delta; each term's run length is its +df
-    there — one tf row per (doc, term) pair).
+    With ``counters_dir`` the kernel writes the shard's counters (n_docs,
+    total_tokens, blocks, postings, terms). Given a ``staging`` there is
+    no tf side: the kernel reads the shard's live docs itself
+    (_live_docs). A Staging's dl side carries one shard's incoming rows of
+    every ``kind`` (NEW, BAD, GONE) with the docs columns: the kernel
+    drops the pages the existence probe skips (_probe), encodes the NEW
+    rows from their term counts (_staged_tf) and stages the shard's delta
+    tables, merged docs part and quarantine records beside the postings
+    (_stage_delta; each term's run length is its +df there — one tf row
+    per (doc, term) pair). A Fold's dl side is the shard id: the kernel
+    encodes every live doc re-tokenized (_tf_of_text) and writes the
+    doc_id-sorted doclen part before the counters.
     Every side file is written executor-side (_write_part). The index
     root must be a filesystem the driver and executors share, as every
     driver-side rename of executor-written parquet already requires.
@@ -184,8 +195,11 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     else:
         shard = int(dl_pdf["dl_shard"].iloc[0])
         live = _live_docs(staging.live, shard)
-        rows = _probe(dl_pdf, live)
-        dl_pdf = rows[rows["kind"].to_numpy() == NEW]
+        if isinstance(staging, Fold):
+            dl_pdf = _tf_of_text(live)
+        else:
+            rows = _probe(dl_pdf, live)
+            dl_pdf = rows[rows["kind"].to_numpy() == NEW]
         tf_pdf = _staged_tf(dl_pdf)
     terms = np.empty(0, dtype=object)
     run_starts = np.empty(0, dtype=np.int64)
@@ -224,14 +238,21 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                 "min_dl": min_dl.astype(np.int32),
             }
         )
+    if isinstance(staging, Fold):
+        doclen = dl_pdf.sort_values("dl_doc_id", kind="stable")
+        _write_part(pa.table({
+            "doc_id": pa.array(doclen["dl_doc_id"].to_numpy(dtype=np.int64)),
+            "doc_len": pa.array(doclen["doc_len"].to_numpy(dtype=np.int32)),
+        }), os.path.join(staging.doclen, f"shard={shard}"))
     if counters_dir is not None:
         _write_counters({
             "blocks": int(len(out)),
             "postings": int(out["n"].sum()) if len(out) else 0,
             "terms": int(out["term"].nunique()) if len(out) else 0,
             "n_docs": int(len(dl_pdf)),
+            "total_tokens": int(dl_pdf["doc_len"].sum()),
         }, counters_dir, shard)
-    if staging is not None:
+    if isinstance(staging, Staging):
         df = pd.Series(np.diff(np.append(run_starts, len(terms))),
                        index=terms[run_starts], dtype=np.int64)
         _stage_delta(staging, shard, df, rows, live)
@@ -284,6 +305,18 @@ def _staged_tf(new_pdf: pd.DataFrame) -> pd.DataFrame:
         "term": np.concatenate(terms),
         "tf": np.concatenate([t for t, h in zip(new_pdf["tfs"], has) if h]),
     })
+
+
+def _tf_of_text(live: pd.DataFrame) -> pd.DataFrame:
+    """``live`` docs rows with each stored text's term counts as
+    ``terms``/``tfs`` arrays (the shape _staged_tf takes): the pinned
+    analyzer the build ran (tokenize_series), so a fold encodes exactly
+    what the build's fused kernel counted."""
+    counts = [Counter(t) if isinstance(t, list) else Counter()
+              for t in tokenize_series(live["text"].astype(object))]
+    return live.assign(
+        terms=[np.array(list(c), dtype=object) for c in counts],
+        tfs=[np.fromiter(c.values(), np.int64, len(c)) for c in counts])
 
 
 def _stage_delta(staging: Staging, shard: int, df: pd.Series,
@@ -381,13 +414,13 @@ def tf_from_pairs(df: DataFrame) -> DataFrame:
 def encode_postings(tf: DataFrame | None, dl: DataFrame,
                     path: str | None = None,
                     counters_dir: str | None = None,
-                    staging: Staging | None = None) -> DataFrame:
+                    staging: Staging | Fold | None = None) -> DataFrame:
     """The one posting writer: encode ``tf`` (shard, doc_id, term, tf)
     against ``dl`` (shard, doc_id, doc_len) per shard and, with ``path``,
     write the blocks partitioned by shard. Returns the encode plan (with
     ``path=None`` nothing runs — plan inspection only).
 
-    ``counters_dir``: per-shard lineage counters (_encode_shard).
+    ``counters_dir``: per-shard counters (_encode_shard).
     ``staging``: a delta generation's Staging. ``tf`` is then None and
     ``dl`` — the only side — holds just the generation's incoming rows,
     each also with its ``kind``, docs columns (url, text, warc_us =
@@ -396,6 +429,10 @@ def encode_postings(tf: DataFrame | None, dl: DataFrame,
     and stages its delta_doclen, delta_termdf, counters, merged docs part
     and quarantine records (_stage_delta); no live docs row crosses the
     exchange, and the kernel's input is never computed twice.
+    Or ``staging``: a Fold. ``tf`` is then None and ``dl`` is one
+    ``shard`` row per shard to fold, each in its own partition: the kernel
+    maps over it (no exchange, no docs scan in the plan) and each task
+    re-encodes its shard from the shard's stored docs.
 
     The dl side's key columns are BOTH renamed (dl_shard, dl_doc_id): tf
     and dl usually share a parent, and Spark's ambiguous-self-join analysis
@@ -407,23 +444,23 @@ def encode_postings(tf: DataFrame | None, dl: DataFrame,
     a .drop/.select through FlatMapCoGroupsInPandas and strip needed
     columns from the cogroup INPUT pdfs (observed: doc_id vanishing from
     the dl side)."""
-    dl = dl.select(
-        F.col("shard").alias("dl_shard"),
-        F.col("doc_id").alias("dl_doc_id"), "doc_len",
-        *(("kind", "url", "text", "warc_us", "lang", "terms", "tfs",
-           "error") if staging is not None else ()),
-    )
-    if staging is None:
-        out = (
-            tf.groupBy("shard")
-            .cogroup(dl.groupBy("dl_shard"))
-            .applyInPandas(
-                lambda l, r: _encode_shard(l, r, counters_dir),
-                POSTINGS_SCHEMA,
-            )
-        )
+    if isinstance(staging, Fold):
+        out = dl.mapInPandas(lambda batches: (
+            _encode_shard(None, pd.DataFrame({"dl_shard": [s]}),
+                          counters_dir, staging)
+            for pdf in batches for s in pdf["shard"]), POSTINGS_SCHEMA)
+    elif staging is None:
+        out = tf.groupBy("shard").cogroup(dl.select(
+            F.col("shard").alias("dl_shard"),
+            F.col("doc_id").alias("dl_doc_id"), "doc_len",
+        ).groupBy("dl_shard")).applyInPandas(
+            lambda l, r: _encode_shard(l, r, counters_dir), POSTINGS_SCHEMA)
     else:
-        out = dl.groupBy("dl_shard").applyInPandas(
+        out = dl.select(
+            F.col("shard").alias("dl_shard"),
+            F.col("doc_id").alias("dl_doc_id"), "doc_len", "kind", "url",
+            "text", "warc_us", "lang", "terms", "tfs", "error",
+        ).groupBy("dl_shard").applyInPandas(
             lambda r: _encode_shard(None, r, None, staging), POSTINGS_SCHEMA)
     if path is not None:
         out.write.mode("overwrite").partitionBy("shard").parquet(path)
@@ -767,17 +804,3 @@ def open_index(root: str) -> PhysicalIndex:
         raise RuntimeError(f"index at {root} has an interrupted compaction; "
                            "run segments.recover_update first")
     return PhysicalIndex(root=root, stats=stats)
-
-
-def open_docs(spark: SparkSession, root: str) -> DataFrame:
-    """The docs table with its ``shard`` partition column, read with the
-    pinned DOCS_SCHEMA (no schema-inference job)."""
-    return spark.read.schema(DOCS_SCHEMA).parquet(os.path.join(root, "docs"))
-
-
-def read_docs(spark: SparkSession, root: str) -> DataFrame:
-    """The docs table in its LOGICAL schema: docs is stored partitioned by
-    the doc-range shard key (docs/shard=N/) so incremental update/delete
-    can merge per shard with COW hard links for untouched shards; the
-    physical partition column is dropped here."""
-    return open_docs(spark, root).drop("shard")

@@ -19,6 +19,7 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,7 +34,7 @@ from importpipeline_spark.index.segments import (
 )
 from importpipeline_spark.index.serve import LocalSearcher
 from importpipeline_spark.index.store import (
-    open_docs,
+    DOCS_SCHEMA,
     open_index,
     read_dictionary,
     read_stats,
@@ -59,6 +60,25 @@ def _terms(spark, root):
     rows = read_dictionary(spark, open_index(root)).collect()
     out = sorted((r.term, r.df, tuple(r.shards)) for r in rows)
     assert LocalSearcher(root)._df == {t: df for t, df, _ in out}
+    return out
+
+
+def _base_tables(root):
+    """The base tables of the index at ``root`` row by row: each shard's
+    postings rows (encoded bytes included) and doclen rows in file order
+    (a shard without rows is left out: a fresh build writes no doclen dir
+    for it, a fold an empty part), and the terms/ rows sorted by term."""
+    out = {}
+    for table in ("postings", "doclen"):
+        for d in sorted(d for d in os.listdir(os.path.join(root, table))
+                        if d.startswith("shard=")):
+            rows = (pq.read_table(os.path.join(root, table, d)).to_pylist()
+                    if any(f.endswith(".parquet") for f in os.listdir(
+                        os.path.join(root, table, d))) else [])
+            if rows:
+                out[table, d] = rows
+    out["terms"] = sorted(pq.read_table(os.path.join(root, "terms"))
+                          .to_pylist(), key=lambda r: r["term"])
     return out
 
 
@@ -123,7 +143,8 @@ def test_delta_update_leaves_base_segment_untouched(spark, tmp_path):
     # an update confined to one shard rewrites only that shard's docs part:
     # every other docs shard stays a hard link of the same files
     docs_before = _inodes(root, "docs")
-    one = [r.url for r in open_docs(spark, root)
+    one = [r.url for r in spark.read.schema(DOCS_SCHEMA)
+           .parquet(os.path.join(root, "docs"))
            .where(F.col("shard") == 2).limit(3).collect()]
     pidx = update_index(
         spark, root, pages.where(F.col("url").isin(one)).withColumn(
@@ -446,6 +467,8 @@ def test_compaction_folds_and_auto_triggers(spark, tmp_path):
     pidx_full = write_index(spark, corpus, full_root, n_shards=4)
     assert _topk(spark, pidx) == _topk(spark, pidx_full)
     assert _terms(spark, root) == _terms(spark, full_root)
+    # the folded base is the fresh build's, row by row and byte for byte
+    assert _base_tables(root) == _base_tables(full_root)
 
     # auto-compaction: third update with compact_after=3 folds its shards
     upd = _recrawl(pages, 3, 9)
@@ -505,6 +528,121 @@ def test_compaction_kill_refuses_readers_until_recovered(spark, tmp_path):
         assert open_index(root).stats["delta_gens"] == []
         assert _terms(spark, root) == want_terms, name
         assert _topk(spark, open_index(root)) == want_top, name
+        assert _base_tables(root) == _base_tables(full_root), name
+
+
+def test_compaction_checks_fold_output_before_swap(spark, tmp_path,
+                                                  monkeypatch):
+    """Each fold task writes its shard's doclen part, then its counters
+    (n_docs, total_tokens, blocks, postings, terms), which stand in for a
+    shard_totals rescan. When the driver cannot find a shard's counters
+    or doclen part — what an index root the driver and executors do not
+    share looks like — or its counters differ from stats.json's
+    shard_stats, compact_deltas raises before any base file is swapped:
+    the marker stays, readers refuse the index, and recover_update's
+    re-fold leaves exactly the base a fresh build writes."""
+    from importpipeline_spark.index import store as smod
+
+    pages = gen_pages_df(spark, 160, seed=13, partitions=4)
+    upd = _recrawl(pages, 3, 2)
+    corpus = pages.join(upd.select("url"), "url", "left_anti").unionByName(upd)
+    full_root = str(tmp_path / "full")
+    write_index(spark, corpus, full_root, n_shards=4)
+    want = _base_tables(full_root)
+
+    def off_by_one(counters_dir, staging, shard):
+        p = os.path.join(counters_dir, f"shard_{shard}.json")
+        with open(p) as f:
+            rec = json.load(f)
+        rec["total_tokens"] += 1
+        with open(p, "w") as f:
+            json.dump(rec, f)
+
+    tampers = {
+        "has no counters": lambda counters_dir, staging, shard: os.remove(
+            os.path.join(counters_dir, f"shard_{shard}.json")),
+        "has no doclen part": lambda counters_dir, staging, shard: os.remove(
+            os.path.join(staging.doclen, f"shard={shard}", "part-0.parquet")),
+        "shard_stats": off_by_one,
+    }
+    real = smod._encode_shard
+    for i, (msg, tamper) in enumerate(tampers.items()):
+        root = str(tmp_path / f"idx{i}")
+        write_index(spark, pages, root, n_shards=4)
+        update_index(spark, root, upd, compact_after=None)
+        victim = min(dmod.shard_gen_map(root))
+        base = {t: _inodes(root, t) for t in ("postings", "doclen")}
+
+        def tampered(tf_pdf, dl_pdf, counters_dir, staging, _tamper=tamper,
+                     _victim=victim):
+            out = real(tf_pdf, dl_pdf, counters_dir, staging)
+            if int(dl_pdf["dl_shard"].iloc[0]) == _victim:
+                _tamper(counters_dir, staging, _victim)
+            return out
+
+        monkeypatch.setattr(smod, "_encode_shard", tampered)
+        with pytest.raises(RuntimeError, match=f"segment {victim} .*{msg}"):
+            compact_deltas(spark, root)
+        monkeypatch.undo()
+        assert {t: _inodes(root, t) for t in ("postings", "doclen")} == base
+        assert dmod.shard_gen_map(root), msg
+        with pytest.raises(RuntimeError, match="interrupted compaction"):
+            open_index(root)
+        assert recover_update(spark, root)
+        assert open_index(root).stats["delta_gens"] == []
+        assert _base_tables(root) == want, msg
+
+
+def test_compaction_reads_only_its_own_shards(spark, tmp_path):
+    """Each fold task reads only its own shard's docs: a docs file
+    corrupted in a shard that holds a delta generation but is not among
+    compact_deltas' ``shards`` breaks nothing and stays byte-identical
+    (same inode). The folded shards' lineage rows carry the fold's
+    counters, as build rows do, marked ``incremental``."""
+    from importpipeline_spark.index.build import doc_id_expr, shard_of
+
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 200, seed=6, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    shard = {r.url: r.s for r in pages.select(
+        "url", shard_of(doc_id_expr("hash"), 4).alias("s")).collect()}
+    recrawl = sorted(u for u, s in shard.items() if s != 3)[::4]
+    update_index(spark, root, pages.where(F.col("url").isin(recrawl))
+                 .withColumn("warc_ts",
+                             F.col("warc_ts") + F.expr("INTERVAL 2 HOURS")),
+                 run_id="o1", input_snapshot="o1", compact_after=None)
+    assert set(dmod.shard_gen_map(root)) == {0, 1, 2}
+    victim = os.path.join(root, "docs", "shard=2")
+    files = sorted(f for f in os.listdir(victim) if f.endswith(".parquet"))
+    assert files
+    for f in files:
+        with open(os.path.join(victim, f), "wb") as fh:
+            fh.write(b"not a parquet file" * 8)
+    snap = {f: (os.stat(os.path.join(victim, f)).st_ino,
+                open(os.path.join(victim, f), "rb").read()) for f in files}
+
+    pidx = compact_deltas(spark, root, shards=[0, 1], run_id="c1")
+    assert set(dmod.shard_gen_map(root)) == {2}
+    assert pidx.stats["delta_gens"] == [1]
+    assert sorted(f for f in os.listdir(victim)
+                  if f.endswith(".parquet")) == files
+    for f, (ino, data) in snap.items():
+        p = os.path.join(victim, f)
+        assert os.stat(p).st_ino == ino, f
+        with open(p, "rb") as fh:
+            assert fh.read() == data, f
+    for s in (0, 1):
+        with open(os.path.join(root, "segments", f"seg_{s}.json")) as fh:
+            row = json.load(fh)
+        post = pq.read_table(os.path.join(root, "postings", f"shard={s}"))
+        assert row["run_id"] == "c1"
+        assert row["n_docs"] == pidx.stats["shard_stats"][str(s)][0]
+        assert row["n_postings"] == sum(post["n"].to_pylist()) > 0
+        assert row["metrics"] == {
+            "blocks": post.num_rows,
+            "distinct_terms": len(set(post["term"].to_pylist())),
+            "incremental": 1,
+        }
 
 
 def test_delete_only_generation_masks_without_postings(spark, tmp_path):
@@ -738,6 +876,59 @@ def _clear_job_group(spark):
 # job's map stage plus its kernel, quarantine included.
 _UPDATE_JOBS_MAX = 2
 _DELETE_JOBS_MAX = 2
+
+
+# Spark jobs by description of a compaction and of a killed build's resume
+# at the test shape: the fold is one job (one task per shard, no exchange),
+# and the base dictionary (_derive_dictionary) runs _DICTIONARY_JOBS
+_COMPACT_STAGE_JOBS_MAX = 2
+_DICTIONARY_JOBS = 4
+
+
+def _jobs_by_description(spark, group):
+    status = spark.sparkContext._jsc.sc().statusStore()
+    out = {}
+    for j in _group_jobs(spark, group):
+        d = status.job(j).description().getOrElse(None)
+        out[d] = out.get(d, 0) + 1
+    return out
+
+
+def test_compaction_and_resume_job_budgets(spark, tmp_path):
+    """compact_deltas runs its fold (``compact_deltas: stage``) and the
+    base dictionary (``compact_deltas: publish``) and nothing else: no
+    docs scan, doclen write or shard_totals job. A build killed after 3
+    of its 8 segments, with batch_size=3, resumes in one fold job per
+    batch of missing segments plus the dictionary: phase A, whose jobs
+    had all finished, is not re-run."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 200, seed=7, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    update_index(spark, root, _recrawl(pages, 5, 2), run_id="c1",
+                 input_snapshot="c1", compact_after=None)
+    sc.setJobGroup("compact_all", "whole compaction")
+    try:
+        compact_deltas(spark, root)
+    finally:
+        _clear_job_group(spark)
+    got = _jobs_by_description(spark, "compact_all")
+    assert set(got) == {"compact_deltas: stage", "compact_deltas: publish"}
+    assert got["compact_deltas: stage"] <= _COMPACT_STAGE_JOBS_MAX, got
+    assert got["compact_deltas: publish"] == _DICTIONARY_JOBS, got
+
+    rroot = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        seg.build_index_resumable(spark, pages, rroot, n_shards=8,
+                                  batch_size=3, fail_after_segment=2)
+    sc.setJobGroup("resume_all", "resume")
+    try:
+        seg.build_index_resumable(spark, pages, rroot, n_shards=8,
+                                  batch_size=3)
+    finally:
+        _clear_job_group(spark)
+    assert _jobs_by_description(spark, "resume_all") == {
+        "build: encode": 2, "build: dictionary": _DICTIONARY_JOBS}
 
 
 def test_delta_publish_runs_no_spark_job(spark, tmp_path):

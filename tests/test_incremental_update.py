@@ -7,8 +7,15 @@ from pyspark.sql.window import Window
 
 from importpipeline_spark.index.pagesgen import gen_pages_df
 from importpipeline_spark.index.segments import update_index
-from importpipeline_spark.index.store import write_index
+from importpipeline_spark.index.store import DOCS_SCHEMA, write_index
 from importpipeline_spark.index.wand import bm25_topk_wand
+
+
+def read_docs(spark, root):
+    """The docs table of the index at ``root`` without its shard column,
+    read with the pinned DOCS_SCHEMA."""
+    return spark.read.schema(DOCS_SCHEMA).parquet(
+        f"{root}/docs").drop("shard")
 
 N1 = 400
 N_RECRAWL = 40
@@ -342,8 +349,6 @@ def test_update_docs_merge_is_cow_per_shard(spark, tmp_path):
     assert pidx.stats["n_docs"] == 2000
 
     # the merged table still reads back complete and url-unique
-    from importpipeline_spark.index.store import read_docs
-
     docs = read_docs(spark, root)
     assert docs.count() == 2000
     assert docs.select("url").distinct().count() == 2000
@@ -596,8 +601,6 @@ def test_update_kernel_probe_matches_classify_snapshot(spark, tmp_path):
 
     from importpipeline_spark.index.pagesgen import PAGES_SCHEMA
     from importpipeline_spark.index.segments import classify_snapshot
-    from importpipeline_spark.index.store import read_docs
-
     root = str(tmp_path / "probeidx")
     pages = gen_pages_df(spark, 240, seed=4, partitions=4)
     write_index(spark, pages, root, n_shards=8)

@@ -277,3 +277,52 @@ def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
     assert "hashpartitioning(shard" in plan, plan
     assert "FlatMapGroupsInPandas" in plan, plan
     assert "Join" not in plan and "Scan parquet" not in plan, plan
+
+
+def test_fold_is_one_map_over_shard_ids(spark, tmp_path, monkeypatch):
+    """A fold (compaction, or a build's resume) is one map over the shard
+    ids to fold, one per partition: no Spark-side docs scan, no Python UDF
+    evaluation, no cogroup and no exchange in the plan — each kernel task
+    reads and re-tokenizes its own shard's docs with pyarrow — and a
+    multi-shard fold runs in more than one task."""
+    import re
+
+    from importpipeline_spark.index import segments
+    from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.store import (
+        encode_postings,
+        read_stats,
+        write_index,
+    )
+
+    root = str(tmp_path / "idx")
+    write_index(spark, gen_pages_df(spark, 120, seed=5), root, n_shards=4)
+    seen = []
+
+    def record(tf, dl, path, counters_dir, staging):
+        seen.append((dl, staging))
+        return encode_postings(tf, dl, path, counters_dir, staging)
+
+    monkeypatch.setattr(segments, "encode_postings", record)
+    sc = spark.sparkContext
+    sc.setJobGroup("fold_tasks", "fold")
+    try:
+        counters = segments._fold(spark, root, [0, 1, 2, 3],
+                                  read_stats(root)["shard_stats"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert sorted(counters) == [0, 1, 2, 3]
+    (ids, fold), = seen
+    plan = plan_of(encode_postings(None, ids, None, None, fold))
+    assert len(re.findall(r"^\(\d+\) \w*Exchange", plan, re.M)) <= 1, plan
+    assert "MapInPandas" in plan, plan
+    for node in ("Scan parquet", "EvalPython", "CoGroup", "Join"):
+        assert node not in plan, (node, plan)
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("fold_tasks")
+    tasks = [tracker.getStageInfo(st).numCompletedTasks
+             for st in tracker.getJobInfo(job).stageIds]
+    assert max(tasks) > 1, tasks

@@ -56,7 +56,8 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     # only some segments finished
     lin = read_lineage(spark, crash_root)
     assert 0 < lin.count() < 8
-    # resume completes the rest without redoing phase A
+    # resume completes the rest without redoing phase A (all of its jobs
+    # finished before the kill)
     pidx = build_index_resumable(spark, pages, crash_root, n_shards=8)
     assert read_lineage(spark, crash_root).count() == 8
 
@@ -67,6 +68,16 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
         assert a[col].tolist() == b[col].tolist(), col
     assert [bytes(x) for x in a.docs_enc] == [bytes(x) for x in b.docs_enc]
     assert [bytes(x) for x in a.tfs_enc] == [bytes(x) for x in b.tfs_enc]
+
+    # doclen rows (phase A's: the kill leaves phase A done, so the resume
+    # folds the missing segments from docs/ without re-extracting)
+    def _doclen(root):
+        return {d: pd.read_parquet(os.path.join(root, "doclen", d))
+                .to_dict("list")
+                for d in sorted(os.listdir(os.path.join(root, "doclen")))
+                if d.startswith("shard=")}
+
+    assert _doclen(clean_root) == _doclen(crash_root)
 
     # resumed index serves queries
     got = bm25_topk_wand(spark, pidx, "the", k=5).collect()
