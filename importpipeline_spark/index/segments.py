@@ -191,7 +191,7 @@ def _commit_segment(root: str, seg: int, tables, m: dict, run_id: str,
     })
 
 
-def _fold(spark, root: str, shards, want: dict | None) -> dict:
+def _fold(spark, root: str, shards, want: dict) -> dict:
     """Re-encode ``shards`` from their stored docs in ONE Spark job with
     no exchange: one task per shard (store.encode_postings given a
     store.Fold) reads its own docs/shard=N with pyarrow, re-tokenizes it
@@ -216,7 +216,7 @@ def _fold(spark, root: str, shards, want: dict | None) -> dict:
                 tmp, "doclen", f"shard={s}", "part-0.parquet")):
             raise RuntimeError(f"segment {s} has no doclen part under {tmp}")
         got = [m["n_docs"], m["total_tokens"]] if m["n_docs"] else None
-        if want is not None and got != want.get(str(s)):
+        if got != want.get(str(s)):
             raise RuntimeError(
                 f"segment {s} folded to (n_docs, total_tokens) {got}; "
                 f"shard_stats has {want.get(str(s))}")
@@ -448,7 +448,7 @@ def build_index_resumable(
 # ---- incremental import (ExistState semantics) ----
 
 def _rebuild_shards(spark, root: str, affected, run_id: str,
-                    input_snapshot: str, want: dict | None) -> dict:
+                    input_snapshot: str, want: dict) -> dict:
     """Re-encode postings + doclen for the given shards from the CURRENT
     docs table and return their (n_docs, total_tokens) subtotals (an
     emptied shard is absent). Idempotent (deterministic encode), so safe
@@ -456,7 +456,7 @@ def _rebuild_shards(spark, root: str, affected, run_id: str,
 
     One fold job (_fold: one task per shard, each reading its own docs
     and writing its postings, doclen part and counters, checked against
-    ``want`` when given); the per-shard commits happen afterwards.
+    ``want``); the per-shard commits happen afterwards.
     Only compaction calls this: a kill mid-swap is covered by
     compact_deltas' marker (recover_update re-runs the whole rebuild)."""
     affected = sorted(int(s) for s in affected)
@@ -514,7 +514,7 @@ def _fold_shards(spark, root: str, mk: dict) -> dict:
     re-encode the shards, re-derive the base dictionary, publish."""
     with _described(spark, "compact_deltas: stage"):
         totals = _rebuild_shards(spark, root, mk["affected"], mk["run_id"],
-                                 mk["input_snapshot"], mk.get("shard_stats"))
+                                 mk["input_snapshot"], mk["shard_stats"])
     terms_tmp = os.path.join(root, "terms.tmp")
     shutil.rmtree(terms_tmp, ignore_errors=True)
     with _described(spark, "compact_deltas: publish"):
@@ -582,7 +582,8 @@ def recover_update(spark: SparkSession, root: str) -> bool:
       (_fold_shards: re-encode, base dictionary, stats) against the CURRENT
       docs table; the re-encode is deterministic, so a repeat writes
       identical bytes. The fold must reproduce the marker's
-      ``shard_stats``; a marker without them takes the fold's.
+      ``shard_stats``; a marker without them (no writer leaves one) is
+      refused with RuntimeError before anything is re-encoded.
     - no marker: any staging/tmp leftovers are pre-commit garbage — swept.
     Another format_version is refused (read_stats) before anything moves.
     """
@@ -612,6 +613,10 @@ def recover_update(spark: SparkSession, root: str) -> bool:
                 os.rename(docs_tmp, docs_path)
             _deltas.commit_staged_gen(root, int(mk["gen"]))
             _refresh_stats_terms(root, mk)
+        elif "shard_stats" not in mk:
+            raise RuntimeError(
+                f"compaction marker {marker} has no shard_stats: nothing "
+                "to check a re-fold against; rebuild the index")
         else:
             _fold_shards(spark, root, mk)
         os.remove(marker)

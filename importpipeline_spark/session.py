@@ -1,7 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Local testing runs on local[N]; the same conf block is what we'd ship in
-spark-submit --py-files on a real cluster (AQE, skew-join handling, Arrow).
+spark-submit --py-files on a real cluster (AQE, skew-join handling, Arrow),
+except the worker daemon module: under --py-files the package reaches a
+worker only with its first task, after the daemon has started.
 Session timezone is pinned to UTC to mirror the reference's ToUtc date mode
 (/root/reference/ImportPipeline/Converters/Converters.cs:377-387).
 """
@@ -43,6 +45,9 @@ def get_spark(
         # small-file corpora must still split wide enough to feed every core
         # through the CPU-heavy extraction/tokenization stages
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
+        # workers stop re-reading pyspark.zip at every task's start; the
+        # engine must be importable (cwd or PYTHONPATH) when the daemon starts
+        .config("spark.python.daemon.module", "importpipeline_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

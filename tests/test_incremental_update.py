@@ -97,59 +97,51 @@ def test_dictionary_matches_full_rebuild(indexes, spark):
     assert LocalSearcher(pidx_inc.root)._df == {t: v[0] for t, v in ta.items()}
 
 
-def test_crash_recovery_mid_update(spark, tmp_path):
-    """Kill at the worst windows of update_index → recover_update restores a
-    consistent index; re-applying the snapshot completes the update and
-    matches a full rebuild."""
+def test_crash_recovery_mid_update(spark, tmp_path, monkeypatch):
+    """Kill at the worst windows of a mutation → recover_update restores a
+    consistent index that matches a full rebuild. A compaction marker no
+    writer leaves (no shard_stats to check the re-fold against) is refused
+    loudly instead of being re-folded unchecked."""
     import json
     import os
-    import shutil
 
-    from importpipeline_spark.index.segments import recover_update
+    from importpipeline_spark.index import segments as seg
+    from importpipeline_spark.index.segments import compact_deltas, recover_update
+    from importpipeline_spark.index.store import open_index, read_stats
 
     root = str(tmp_path / "crashidx")
     snap1 = gen_pages_df(spark, 200, seed=42, partitions=4)
     write_index(spark, snap1, root, n_shards=4)
     snap2 = gen_pages_df(spark, 230, seed=42, partitions=4)
+    update_index(spark, root, snap2, run_id="u1", input_snapshot="snap2",
+                 compact_after=None)
+    assert open_index(root).stats["delta_gens"] == [1]
 
-    # window A: crash right after the docs swap + marker (postings stale)
-    # simulate: do the merge/swap by hand the way update_index orders it
-    docs = os.path.join(root, "docs")
-    changed = snap2.join(
-        spark.read.parquet(docs).select("url"), "url", "left_anti"
-    )
-    from importpipeline_spark.index.build import build_docs_safe, shard_of
-    from pyspark.sql import functions as F
+    # window A: compaction killed between two shards' segment commits —
+    # one base shard is folded, the others and every delta still stale
+    real_commit = seg._commit_segment
+    commits = []
 
-    cdocs, _ = build_docs_safe(changed)
-    cdocs = cdocs.drop("tokens")
-    affected = sorted(
-        int(r.s)
-        for r in cdocs.select(shard_of(F.col("doc_id"), 4).alias("s"))
-        .distinct().collect()
-    )
-    # mirror the real staging (r5 partitioned docs layout: logical schema
-    # has no shard column; the staged tmp is written partitioned by it)
-    merged = spark.read.parquet(docs).drop("shard").unionByName(cdocs)
-    (
-        merged.withColumn("shard", shard_of(F.col("doc_id"), 4))
-        .write.mode("overwrite").partitionBy("shard").parquet(docs + ".tmp")
-    )
-    with open(os.path.join(root, "update.json"), "w") as f:
-        json.dump({"affected": affected, "n_shards": 4,
-                   "run_id": "crash", "input_snapshot": "snap2"}, f)
-    os.rename(docs, docs + ".old")
-    os.rename(docs + ".tmp", docs)
-    # --- "crash" here: docs merged, marker present, postings stale ---
+    def commit_once(*a, **kw):
+        if commits:
+            raise RuntimeError("injected-commit")
+        commits.append(a[1])
+        return real_commit(*a, **kw)
+
+    monkeypatch.setattr(seg, "_commit_segment", commit_once)
+    with pytest.raises(RuntimeError, match="injected-commit"):
+        compact_deltas(spark, root)
+    monkeypatch.undo()
+    assert len(commits) == 1
+    # --- "crash" here: marker present, base half folded ---
     assert recover_update(spark, root)
     assert not os.path.exists(os.path.join(root, "update.json"))
 
     # recovered index must equal a full rebuild over snap2
     full_root = str(tmp_path / "fullidx")
     pidx_full = write_index(spark, snap2, full_root, n_shards=4)
-    from importpipeline_spark.index.store import open_index
-
     pidx_rec = open_index(root)
+    assert pidx_rec.stats["delta_gens"] == []
     assert pidx_rec.stats["n_docs"] == pidx_full.stats["n_docs"] == 230
     for q in ("the", "of and", "ebakaba8"):
         a = bm25_topk_wand(spark, pidx_rec, q, k=10).collect()
@@ -157,9 +149,21 @@ def test_crash_recovery_mid_update(spark, tmp_path):
         assert [(r.doc_id, r.score) for r in a] == [(r.doc_id, r.score) for r in b]
 
     # window B: docs dir missing mid-rename → rolled forward from tmp
+    docs = os.path.join(root, "docs")
     os.rename(docs, docs + ".tmp")
     assert recover_update(spark, root)
     assert os.path.exists(docs)
+
+    # a mode-less marker without shard_stats: refused, nothing touched
+    stats = read_stats(root)
+    marker = os.path.join(root, "update.json")
+    with open(marker, "w") as f:
+        json.dump({"affected": [0], "n_shards": 4, "run_id": "crash",
+                   "input_snapshot": "snap2"}, f)
+    with pytest.raises(RuntimeError, match="no shard_stats"):
+        recover_update(spark, root)
+    assert os.path.exists(marker)
+    assert read_stats(root) == stats
 
 
 def test_noop_update(indexes, spark):
