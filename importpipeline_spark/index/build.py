@@ -11,12 +11,13 @@ Scale notes (designed for ~10^12 docs / 1000 executors, tested on local[32]):
 - ``doc_id = xxhash64(url)`` — deterministic across runs/cluster sizes
   (monotonically_increasing_id is not), computed JVM-side. The signed id is
   mapped to an order-preserving unsigned key for sharding and delta encoding.
-- every index writer extracts through ONE fused kernel
-  (build_docs_and_tf_safe: extract + tokenize + per-doc term counts in one
-  Arrow pass, bad pages quarantined, not fatal). Term counting happens
-  inside the doc's batch, so there is no groupBy(doc_id, term) shuffle: the
-  build's only corpus exchange repartitions the kernel's per-doc rows by
-  doc-range shard (segments.build_index_resumable).
+- every index writer extracts through ONE extract kernel (extract_batch:
+  extract + tokenize + per-doc term counts, bad pages quarantined, not
+  fatal): the build's Arrow pass (build_docs_and_tf_safe) and an update's
+  staging kernel, on the pages its existence probe keeps. Term counting
+  happens inside the doc's batch, so there is no groupBy(doc_id, term)
+  shuffle: the build's only corpus exchange repartitions the kernel's
+  per-doc rows by doc-range shard (segments.build_index_resumable).
 - postings are document-sharded: shard = top bits of unsigned doc_id. Every
   shard holds a complete sub-index over its doc range, so query-side WAND is
   shard-local and the global top-k merge is a k-row sort. Sorted runs from
@@ -28,6 +29,8 @@ Scale notes (designed for ~10^12 docs / 1000 executors, tested on local[32]):
 
 from __future__ import annotations
 
+import traceback
+from collections import Counter
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -41,8 +44,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..html.htmltext import html_to_text
 from ..html.udfs import html_to_text_safe_udf, html_to_text_udf
-from ..text.tokenizer import tokenize_udf
+from ..text.tokenizer import tokenize_series, tokenize_udf
 
 K1 = 1.2
 B = 0.75
@@ -136,8 +140,6 @@ def tf_pairs_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     batch. Grouping by term within a doc needs no shuffle: the doc's tokens
     are already co-located, so the classic explode→groupBy(doc_id, term)
     exchange (the single biggest shuffle of the build) disappears entirely."""
-    from collections import Counter
-
     def one(tokens):
         if tokens is None:
             return None
@@ -204,70 +206,57 @@ _FUSED_SAFE_SCHEMA = (
 )
 
 
+def extract_batch(html: pd.Series) -> pd.DataFrame:
+    """The one extract kernel: text, doc_len (int32), tf_pairs (the per-doc
+    [(term, tf)], None without text) and error of each ``html`` value
+    (bytes or str; None is a doc with no text), in input order. A page
+    whose extraction raises is quarantined — ``error`` set — instead of
+    failing its task. Called by the build's Arrow pass
+    (build_docs_and_tf_safe) and by the staging kernel on the pages its
+    existence probe keeps (store._extracted)."""
+    texts, errs = [], []
+    for v in html:
+        text = err = None
+        try:
+            if isinstance(v, (bytes, bytearray)):
+                v = bytes(v).decode("utf-8", errors="replace")
+            if v is not None:
+                text = html_to_text(v)
+        except Exception as e:  # noqa: BLE001 — quarantine by design
+            err = (f"{type(e).__name__}: {e} | "
+                   + traceback.format_exc(limit=2).replace("\n", " "))
+        texts.append(text)
+        errs.append(err)
+    # tokenization vectorized over the whole batch (pandas str ops — same
+    # pinned analyzer as tokenize_scalar, asserted in tests)
+    toks = [t if isinstance(t, list) else None
+            for t in tokenize_series(pd.Series(texts, dtype=object))]
+    return pd.DataFrame({
+        "text": texts,
+        "doc_len": pd.array([len(t) if t else 0 for t in toks], "int32"),
+        "tf_pairs": [None if t is None else list(Counter(t).items())
+                     for t in toks],
+        "error": errs,
+    })
+
+
 def build_docs_and_tf_safe(pages: DataFrame,
                            doc_id_mode: str = "hash") -> DataFrame:
-    """The one fused extract+tokenize+count kernel: ONE Arrow-batched pass
-    (one JVM↔Python Arrow round-trip instead of three chained UDFs) with
-    per-record quarantine — a page whose extraction raises gets ``error``
-    set instead of failing the job. doc_id is added JVM-side.
-
-    Output: url, warc_ts, lang, text, doc_len, tf_pairs, error, doc_id — one
-    row per page; tf_pairs carries the per-doc term counts, so tf is a
-    JVM-side explode (store.tf_from_pairs), never a second Python pass.
-    split_quarantine separates the good rows from the error records. Every
-    index writer extracts through it: the build and update_index. Stored
-    docs are never re-extracted: a fold (compaction, a resume) or a delta
-    staging re-tokenizes their text inside its encode task with the same
-    tokenize_series (store._tf_of_text, store._stage_delta).
+    """The build's extract pass: extract_batch over each Arrow batch of
+    ``pages`` (one JVM↔Python round-trip, not three chained UDFs); doc_id
+    is added JVM-side. Output: url, warc_ts, lang, text, doc_len,
+    tf_pairs, error, doc_id — one row per page; tf is a JVM-side explode
+    of tf_pairs (store.tf_from_pairs), and split_quarantine separates the
+    good rows from the error records. An update's staging kernel calls
+    extract_batch itself, after its existence probe. Stored docs are
+    never re-extracted: a fold or a delta staging re-tokenizes their text
+    in its encode task (store._tf_of_text, store._stage_delta).
     """
-    import traceback as _tb
-    from collections import Counter
-    from typing import Iterator as _It
-
-    from ..html.htmltext import html_to_text as _h2t
-    from ..text.tokenizer import tokenize_series as _tok_series
-
-    def run(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts, errs = [], []
-            for v in pdf["html"]:
-                try:
-                    if v is None:
-                        texts.append(None)
-                        errs.append(None)
-                        continue
-                    if isinstance(v, (bytes, bytearray)):
-                        v = bytes(v).decode("utf-8", errors="replace")
-                    texts.append(_h2t(v))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — quarantine by design
-                    texts.append(None)
-                    errs.append(
-                        f"{type(e).__name__}: {e} | "
-                        + _tb.format_exc(limit=2).replace("\n", " ")
-                    )
-            # tokenization vectorized over the whole Arrow batch (pandas str
-            # ops — same pinned analyzer as tokenize_scalar, asserted in tests)
-            tok_lists = _tok_series(pd.Series(texts, dtype=object))
-            lens, pairs = [], []
-            for toks in tok_lists:
-                if toks is None or isinstance(toks, float):
-                    lens.append(0)
-                    pairs.append(None)
-                else:
-                    lens.append(len(toks))
-                    pairs.append(list(Counter(toks).items()))
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "text": texts,
-                    "doc_len": pd.array(lens, dtype="int32"),
-                    "tf_pairs": pairs,
-                    "error": errs,
-                }
-            )
+            ex = extract_batch(pdf["html"])
+            yield pd.DataFrame({"url": pdf["url"], "warc_ts": pdf["warc_ts"],
+                                "lang": pdf["lang"], **ex})
 
     return pages.mapInPandas(run, schema=_FUSED_SAFE_SCHEMA).withColumn(
         "doc_id", doc_id_expr(doc_id_mode)

@@ -32,27 +32,28 @@ full rebuild writes.
 Commit protocol: a generation is staged completely BEFORE the update
 marker is written, by ONE encode job (store.encode_postings given a
 Staging) that also stages the docs copy-on-write merge. Its one side
-carries only the incoming rows — an update's pages as the extract kernel
-emits them (term counts included, quarantined pages too) or a delete's
-doomed urls — repartitioned by shard into parallel tasks. Per shard the
-kernel reads the shard's own docs part(s), runs the existence probe by
-(url, warc_ts) — ExistSame and ExistNewer pages are dropped before
-anything is written — finds by url the live rows the generation shadows
-or deletes, and writes under <root>/delta_staging/ the delta postings,
+carries only the incoming rows as JVM columns — an update's raw pages or
+a delete's doomed urls — repartitioned by shard into parallel tasks (its
+map stage runs no Python). Per shard the kernel reads the shard's own
+docs part(s), runs the existence probe by (url, warc_ts) — ExistSame
+and ExistNewer pages are dropped before anything is extracted or
+written — extracts the kept pages (build.extract_batch, failures
+quarantined), finds by url the live rows the generation shadows or
+deletes, and writes under <root>/delta_staging/ the delta postings,
 doclen rows, netted term-df adjustments and (Δn_docs, Δtotal_tokens),
 the merged docs part under <root>/docs.tmp/ (live − old + new), and any
-kept quarantined page as an errors/ part; a shard no incoming row maps
-to is never read. With no Spark job, the driver learns the changed
-shards and quarantined count from the kernel's accumulator, hard-links
-every other docs shard into docs.tmp, recounts errors/ with pyarrow and
-adds the counters to ``shard_stats`` (missing kernel output fails the
-commit); the new subtotals and error counter ride in the marker. The
-generation is renamed into place after the docs swap and becomes
-reader-visible only when stats.json (atomic replace, written from the
-marker by no Spark job) lists it in ``delta_gens``. Update and delete
-share this staging and commit (segments._commit_delta_mutation):
-segments.recover_update rolls a mid-commit crash forward, and a
-pre-marker crash leaves only swept staging garbage.
+quarantined page as an errors/ part; a shard no incoming row maps to is
+never read. The job collects one report row per shard; then, with no
+Spark job, the driver hard-links every other docs shard into docs.tmp,
+recounts errors/ with pyarrow and adds the counters to ``shard_stats``
+(missing kernel output fails the commit); the new subtotals and error
+counter ride in the marker. The generation is renamed into place after
+the docs swap and becomes reader-visible only when stats.json (atomic
+replace, written from the marker by no Spark job) lists it in
+``delta_gens``. Update and delete share this staging and commit
+(segments._commit_delta_mutation): segments.recover_update rolls a
+mid-commit crash forward, and a pre-marker crash leaves only swept
+staging garbage.
 
 Compaction is the only re-encode of base segments after a build: it folds
 a shard's base + deltas into a fresh base segment from the merged docs
@@ -78,14 +79,7 @@ from uuid import uuid4
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import doc_id_expr, shard_of
-from .store import (
-    BAD,
-    GONE,
-    NEW,
-    StagedParam,
-    Staging,
-    encode_postings,
-)
+from .store import GONE, NEW, Staging, encode_postings
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
 
@@ -193,59 +187,54 @@ def _stage(spark: SparkSession, root: str, rows: DataFrame,
            n_shards: int) -> tuple[list, int]:
     """Stage a generation in ONE encode job (store.encode_postings with a
     Staging) over the incoming ``rows``: per shard the kernel probes and
-    reads the shard's live docs and writes delta_postings, delta_doclen,
-    the netted delta_termdf, the (Δn_docs, Δtotal_tokens) counters, the
-    merged ``docs.tmp/shard=N`` and the quarantined pages' errors/ part.
-    ``rows`` is repartitioned by shard into min(n_shards,
-    defaultParallelism) partitions, at least 2: the job's only exchange,
-    which AQE does not coalesce, so the shards run as parallel tasks (one
-    partition would plan as SinglePartition, which the adaptive plan
-    shuffles a second time). Returns the changed shards and the
-    quarantined rows, as the kernel reported them."""
-    sc = spark.sparkContext
+    reads the shard's live docs, extracts the pages the probe keeps and
+    writes delta_postings, delta_doclen, the netted delta_termdf, the
+    (Δn_docs, Δtotal_tokens) counters, the merged ``docs.tmp/shard=N`` and
+    the quarantined pages' errors/ part. ``rows`` is repartitioned by
+    shard into min(n_shards, defaultParallelism) partitions, at least 2:
+    the job's only exchange, which AQE does not coalesce, so the shards
+    run as parallel tasks (one partition would plan as SinglePartition,
+    which the adaptive plan shuffles a second time). Returns the changed
+    shards and quarantined rows of the collected per-shard reports."""
     discard_staging(root)
     docs_tmp = os.path.join(root, "docs.tmp")
     shutil.rmtree(docs_tmp, ignore_errors=True)
     # a generation whose adjustments net to zero still commits its (empty)
     # delta_termdf directory
     os.makedirs(staging_path(root, "delta_termdf"))
-    report = sc.accumulator((frozenset(), 0), StagedParam())
-    n_parts = max(2, min(n_shards, sc.defaultParallelism))
-    encode_postings(
+    n_parts = max(2, min(n_shards, spark.sparkContext.defaultParallelism))
+    report = encode_postings(
         None, rows.repartition(n_parts, "shard"),
-        staging_path(root, "delta_postings"),
-        staging=Staging(staging_root(root), docs_tmp, report,
+        staging=Staging(staging_root(root), docs_tmp,
                         os.path.join(root, "docs"),
-                        os.path.join(root, "errors", f"part-{uuid4().hex}")))
-    shards, n_bad = report.value
-    return sorted(shards), n_bad
+                        os.path.join(root, "errors", f"part-{uuid4().hex}")),
+    ).collect()
+    return (sorted(r.shard for r in report if r.changed),
+            sum(r.n_bad for r in report))
 
 
 def stage_update_delta(
     spark: SparkSession,
     root: str,
-    fused: DataFrame,
+    pages: DataFrame,
     n_shards: int,
 ) -> tuple[list, int]:
     """Stage one UPDATE generation under <root>/delta_staging/ and its
     merged docs shards under <root>/docs.tmp/; returns (changed shards,
     quarantined pages recorded in errors/).
 
-    ``fused``: the incoming pages as the extract kernel emits them, good
-    and quarantined rows alike (build.build_docs_and_tf_safe): the good
-    ones are NEW rows, with their tf_pairs as ``terms``/``tfs``, the others
-    BAD. The kernel drops the pages its existence probe skips; a live row
-    whose url a kept NEW row carries is the shadowed version — its stored
-    text re-tokenizes to the terms the base counts, its doc_len leaves the
-    shard subtotals.
+    ``pages``: the incoming raw pages (url, warc_ts, lang, html) with the
+    index's ``doc_id`` (build.doc_id_expr of its mode). They ride the
+    staging job as NEW rows of JVM columns only; the kernel drops the
+    pages its existence probe skips and extracts the rest (a page whose
+    extraction fails is quarantined). A live row whose url a kept page
+    carries is the shadowed version — its stored text re-tokenizes to the
+    terms the base counts, its doc_len leaves the shard subtotals.
     """
-    return _stage(spark, root, fused.select(
-        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
-        "doc_len", F.when(F.col("error").isNull(), NEW).otherwise(BAD)
-        .alias("kind"), "url", "text",
-        F.unix_micros("warc_ts").alias("warc_us"), "lang",
-        F.col("tf_pairs.term").alias("terms"),
-        F.col("tf_pairs.tf").alias("tfs"), "error",
+    return _stage(spark, root, pages.select(
+        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id", "url",
+        F.unix_micros("warc_ts").alias("warc_us"), "lang", "html",
+        F.lit(NEW).alias("kind"),
     ), n_shards)
 
 
@@ -259,28 +248,24 @@ def stage_delete_delta(
     """Stage one DELETE generation: the update's job with the doomed
     ``urls`` as GONE rows instead of pages — doclen tombstones (doc_len =
     -1) plus delta_termdf decrements from the doomed docs' stored text.
-    No postings — deletion is pure masking until compaction folds it into
-    the base. warc_us is 0, not null: pandas turns an integer column
-    holding a null into float64."""
-    gone = urls.select(doc_id_expr(doc_id_mode).alias("doc_id"), "url").select(
-        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
-        F.lit(-1).alias("doc_len"), F.lit(GONE).alias("kind"), "url",
-        F.lit(None).cast("string").alias("text"),
+    No postings (no NEW rows) — deletion is pure masking until compaction
+    folds it into the base. warc_us is 0, not null: pandas turns an
+    integer column holding a null into float64."""
+    return _stage(spark, root, urls.select(
+        doc_id_expr(doc_id_mode).alias("doc_id"), "url").select(
+        shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id", "url",
         F.lit(0).cast("long").alias("warc_us"),
         F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("array<string>").alias("terms"),
-        F.lit(None).cast("array<int>").alias("tfs"),
-        F.lit(None).cast("string").alias("error"),
-    )
-    out = _stage(spark, root, gone, n_shards)
-    shutil.rmtree(staging_path(root, "delta_postings"))
-    return out
+        F.lit(None).cast("binary").alias("html"),
+        F.lit(GONE).alias("kind"),
+    ), n_shards)
 
 
 def staged_shard_deltas(root: str, shards) -> dict:
     """shard → (Δn_docs, Δtotal_tokens) of the staged generation, from the
     counters the staging kernel wrote. Every affected shard must have its
-    counters, its delta_doclen file and its staged docs part: a missing
+    counters, its delta_doclen file, its staged docs part and, when its
+    counters report posting blocks, its delta_postings part: a missing
     one means the executors wrote where the driver cannot see (the index
     root must be a shared filesystem), so this raises — before any marker
     — instead of defaulting a subtotal to 0."""
@@ -289,16 +274,19 @@ def staged_shard_deltas(root: str, shards) -> dict:
         part = os.path.join(f"shard={int(s)}", "part-0.parquet")
         counters = os.path.join(staging_root(root), "counters",
                                 f"shard_{int(s)}.json")
-        files = (counters,
-                 os.path.join(staging_path(root, "delta_doclen"), part),
-                 os.path.join(root, "docs.tmp", part))
+        rec = {}
+        if os.path.exists(counters):
+            with open(counters) as f:
+                rec = json.load(f)
+        tables = ["delta_doclen"] + (
+            ["delta_postings"] if rec.get("blocks") else [])
+        files = [counters, os.path.join(root, "docs.tmp", part)] + [
+            os.path.join(staging_path(root, t), part) for t in tables]
         if not all(os.path.exists(f) for f in files):
             raise RuntimeError(
                 f"staging kernel output for shard {s} is missing under "
                 f"{root}; the index root must "
                 "be a filesystem shared by driver and executors"
             )
-        with open(counters) as f:
-            rec = json.load(f)
         out[int(s)] = (int(rec["n_docs"]), int(rec["total_tokens"]))
     return out

@@ -53,7 +53,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from . import deltas as _deltas
-from .build import build_docs_and_tf_safe, shard_of, split_quarantine
+from .build import (build_docs_and_tf_safe, doc_id_expr, shard_of,
+                    split_quarantine)
 from .store import (
     Fold,
     PhysicalIndex,
@@ -731,19 +732,19 @@ def update_index(
 ) -> PhysicalIndex:
     """Incremental index update: re-index only what changed.
 
-    1. ONE staging job (deltas.stage_update_delta): its map stage
-       extracts every incoming page through the build's fused kernel
-       (build.build_docs_and_tf_safe: one Arrow pass, bad pages
-       quarantined) and sends it to the kernel task of the shard its
-       (mode-recorded) id maps to. Each task reads its own shard's live
-       docs, runs the existence probe (ExistState — NotExist/ExistOlder
-       kept, ExistSame/ExistNewer dropped, quarantined pages too), and
-       the one encode kernel writes the delta generation (deltas.py:
-       postings in the base's codec, doclen rows, signed term-df, the
-       shard's subtotal change), the merged docs part and the kept
-       quarantined pages' errors/ part. Unchanged docs are never
-       re-tokenized or re-encoded, and a shard without an incoming page
-       is never read;
+    1. ONE staging job (deltas.stage_update_delta): its map stage, which
+       runs no Python, sends each raw incoming page to the kernel task of
+       the shard its (mode-recorded) id maps to. Each task reads its own
+       shard's live docs, runs the existence probe (ExistState —
+       NotExist/ExistOlder kept, ExistSame/ExistNewer dropped), extracts
+       only the kept pages through the one extract kernel
+       (build.extract_batch; a page whose extraction fails is
+       quarantined), and the one encode kernel writes the delta
+       generation (deltas.py: postings in the base's codec, doclen rows,
+       signed term-df, the shard's subtotal change), the merged docs part
+       and the quarantined pages' errors/ part, and returns one report
+       row. Unchanged docs are never re-tokenized or re-encoded, and a
+       shard without an incoming page is never read;
     2. commit under the marker protocol (_commit_delta_mutation) with no
        Spark job: unchanged docs shards hard-linked, the error counter
        recounted with pyarrow, stats.json (shard_stats + the staged
@@ -773,9 +774,10 @@ def update_index(
     stats = read_stats(root)
     # ids derive the way THIS index was built (hash ids over a
     # host_locality index would re-index a url under a second id)
-    fused = build_docs_and_tf_safe(new_pages, stats.get("doc_id_mode", "hash"))
+    pages = new_pages.withColumn(
+        "doc_id", doc_id_expr(stats.get("doc_id_mode", "hash")))
     with _described(spark, "update_index: stage"):
-        staged = _deltas.stage_update_delta(spark, root, fused,
+        staged = _deltas.stage_update_delta(spark, root, pages,
                                             int(stats["n_shards"]))
     return _commit_delta_mutation(
         spark, root, stats, "update_index", staged, run_id, input_snapshot,

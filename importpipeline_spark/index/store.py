@@ -61,10 +61,10 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..text.tokenizer import ANALYZER_VERSION, tokenize_series
+from . import build as _build
 from .build import K1, B
 from .codec import BLOCK_SIZE, encode_shard_blocks, to_u64
 
@@ -89,10 +89,17 @@ DOCS_SCHEMA = (
 # terms/ file count: compaction and the build write the same layout
 DICT_FILES = 4
 
-_POSTING_COLS = [
-    "term", "shard", "block_id", "n", "min_doc", "max_doc",
-    "docs_enc", "tfs_enc", "max_tf", "min_dl",
-]
+# POSTINGS_SCHEMA's Arrow types; a staging kernel's postings part has them
+# less the shard (its directory names it), as a partitionBy("shard") write
+_POSTINGS_ARROW = pa.schema([
+    ("term", pa.string()), ("shard", pa.int32()), ("block_id", pa.int32()),
+    ("n", pa.int32()), ("min_doc", pa.int64()), ("max_doc", pa.int64()),
+    ("docs_enc", pa.binary()), ("tfs_enc", pa.binary()),
+    ("max_tf", pa.int32()), ("min_dl", pa.int32()),
+])
+
+# the row each staging kernel task returns for its shard
+STAGED_REPORT = "shard int, changed boolean, n_bad int"
 
 
 def _write_part(table: pa.Table, d: str, name: str = "part-0.parquet",
@@ -117,9 +124,9 @@ def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
     os.replace(tmp, os.path.join(counters_dir, f"shard_{shard}.json"))
 
 
-# kinds of a staging encode's rows (deltas.py builds them): an update's
-# incoming pages (NEW, or BAD when extraction quarantined them) and the urls
-# a delete dooms (GONE)
+# kinds of a staging encode's rows: an update's incoming pages (NEW, or BAD
+# once the kernel's extraction quarantined them) and the urls a delete
+# dooms (GONE)
 NEW, GONE, BAD = 0, 1, 2
 
 # docs/ in DOCS_SCHEMA's types, as a staging task reads its shard's part(s)
@@ -130,26 +137,15 @@ _DOCS_ARROW = pa.schema([
 ])
 
 
-class StagedParam(AccumulatorParam):
-    """Accumulates (staged shards, quarantined rows) across kernel tasks."""
-
-    def zero(self, value):
-        return frozenset(), 0
-
-    def addInPlace(self, a, b):
-        return a[0] | b[0], a[1] + b[1]
-
-
 class Staging(NamedTuple):
     """A delta generation's staging kernel reads each shard's live rows in
-    ``live`` (the docs table) and writes each changed shard's delta_doclen,
-    delta_termdf and counters under ``root`` (the staging root), its merged
-    docs part under ``docs``, its quarantined pages as ``errors``-<shard>
-    (a call-unique prefix in errors/), and reports to ``report`` (a
-    StagedParam accumulator) the changed shards and quarantined rows."""
+    ``live`` (the docs table) and writes each changed shard's
+    delta_postings, delta_doclen, delta_termdf and counters under ``root``
+    (the staging root), its merged docs part under ``docs`` and its
+    quarantined pages as ``errors``-<shard> (a call-unique prefix in
+    errors/); each task returns its shard's STAGED_REPORT row."""
     root: str
     docs: str
-    report: Accumulator
     live: str
     errors: str
 
@@ -176,15 +172,15 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     With ``counters_dir`` the kernel writes the shard's counters (n_docs,
     total_tokens, blocks, postings, terms). Given a ``staging`` there is
     no tf side: the kernel reads the shard's live docs itself
-    (_live_docs). A Staging's dl side carries one shard's incoming rows of
-    every ``kind`` (NEW, BAD, GONE) with the docs columns: the kernel
-    drops the pages the existence probe skips (_probe), encodes the NEW
-    rows from their term counts (_staged_tf) and stages the shard's delta
-    tables, merged docs part and quarantine records beside the postings
-    (_stage_delta; each term's run length is its +df there — one tf row
-    per (doc, term) pair). A Fold's dl side is the shard id: the kernel
-    encodes every live doc re-tokenized (_tf_of_text) and writes the
-    doc_id-sorted doclen part before the counters.
+    (_live_docs). A Staging's dl side carries one shard's raw pages (NEW)
+    or a delete's urls (GONE): the kernel drops the pages the existence
+    probe skips (_probe), extracts the rest (_extracted), encodes the good
+    ones from their term counts (_staged_tf), stages the shard's delta
+    postings, tables, merged docs part and quarantine records
+    (_stage_delta; a term's run length is its +df) and returns its
+    STAGED_REPORT row, not the blocks. A Fold's dl side is the shard id:
+    the kernel encodes every live doc re-tokenized (_tf_of_text) and
+    writes the doc_id-sorted doclen part before the counters.
     Every side file is written executor-side (_write_part). The index
     root must be a filesystem the driver and executors share, as every
     driver-side rename of executor-written parquet already requires.
@@ -198,13 +194,13 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
         if isinstance(staging, Fold):
             dl_pdf = _tf_of_text(live)
         else:
-            rows = _probe(dl_pdf, live)
+            rows = _extracted(_probe(dl_pdf, live))
             dl_pdf = rows[rows["kind"].to_numpy() == NEW]
         tf_pdf = _staged_tf(dl_pdf)
     terms = np.empty(0, dtype=object)
     run_starts = np.empty(0, dtype=np.int64)
     if tf_pdf.empty:
-        out = pd.DataFrame(columns=_POSTING_COLS)
+        out = pd.DataFrame(columns=_POSTINGS_ARROW.names)
     else:
         u = to_u64(tf_pdf["doc_id"].to_numpy(dtype=np.int64))
         tfs = tf_pdf["tf"].to_numpy(dtype=np.int64)
@@ -255,7 +251,9 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
     if isinstance(staging, Staging):
         df = pd.Series(np.diff(np.append(run_starts, len(terms))),
                        index=terms[run_starts], dtype=np.int64)
-        _stage_delta(staging, shard, df, rows, live)
+        changed, n_bad = _stage_delta(staging, shard, out, df, rows, live)
+        return pd.DataFrame({"shard": [shard], "changed": [changed],
+                             "n_bad": [n_bad]})
     return out
 
 
@@ -289,21 +287,33 @@ def _probe(rows: pd.DataFrame, live: pd.DataFrame) -> pd.DataFrame:
     return rows[keep]
 
 
+def _extracted(rows: pd.DataFrame) -> pd.DataFrame:
+    """The probe-kept ``rows`` with each NEW page's ``html`` replaced by
+    what the one extract kernel (build.extract_batch) makes of it: text,
+    doc_len, error and the term counts as ``terms``/``tfs`` arrays (the
+    shape _staged_tf takes). A page whose extraction raised is BAD from
+    here on; GONE rows get doc_len -1 and nothing else."""
+    new = rows["kind"].to_numpy() == NEW
+    ex = _build.extract_batch(rows["html"][new]).set_axis(
+        rows.index[new]).reindex(rows.index)
+    pairs = [p if isinstance(p, list) else [] for p in ex["tf_pairs"]]
+    return rows.drop(columns="html").assign(
+        kind=np.where(ex["error"].notna(), BAD, rows["kind"]),
+        text=ex["text"], error=ex["error"],
+        doc_len=ex["doc_len"].fillna(-1).astype(np.int64),
+        terms=[np.array([t for t, _ in p], dtype=object) for p in pairs],
+        tfs=[np.fromiter((n for _, n in p), np.int64, len(p))
+             for p in pairs])
+
+
 def _staged_tf(new_pdf: pd.DataFrame) -> pd.DataFrame:
     """(doc_id, term, tf) rows of the NEW rows' ``terms``/``tfs`` arrays
-    (the fused kernel's tf_pairs; null for a doc with no tokens)."""
-    has = np.array([t is not None and len(t) > 0 for t in new_pdf["terms"]],
-                   dtype=bool)
-    terms = [t for t, h in zip(new_pdf["terms"], has) if h]
-    if not terms:
-        return pd.DataFrame({"doc_id": np.empty(0, np.int64),
-                             "term": np.empty(0, object),
-                             "tf": np.empty(0, np.int64)})
+    (empty for a doc with no tokens)."""
     return pd.DataFrame({
-        "doc_id": np.repeat(new_pdf["dl_doc_id"].to_numpy(np.int64)[has],
-                            [len(t) for t in terms]),
-        "term": np.concatenate(terms),
-        "tf": np.concatenate([t for t, h in zip(new_pdf["tfs"], has) if h]),
+        "doc_id": np.repeat(new_pdf["dl_doc_id"].to_numpy(np.int64),
+                            [len(t) for t in new_pdf["terms"]]),
+        "term": np.concatenate([np.empty(0, object), *new_pdf["terms"]]),
+        "tf": np.concatenate([np.empty(0, np.int64), *new_pdf["tfs"]]),
     })
 
 
@@ -319,22 +329,25 @@ def _tf_of_text(live: pd.DataFrame) -> pd.DataFrame:
         tfs=[np.fromiter(c.values(), np.int64, len(c)) for c in counts])
 
 
-def _stage_delta(staging: Staging, shard: int, df: pd.Series,
-                 rows: pd.DataFrame, live: pd.DataFrame) -> None:
+def _stage_delta(staging: Staging, shard: int, blocks: pd.DataFrame,
+                 df: pd.Series, rows: pd.DataFrame,
+                 live: pd.DataFrame) -> tuple[bool, int]:
     """One shard's share of a delta generation, from the incoming ``rows``
-    the probe kept and the shard's ``live`` docs: the BAD rows go to its
-    errors/ part; the live rows whose url a NEW row carries (an update) or
-    a GONE row names (a delete) are its OLD rows. A shard with neither new
-    nor old rows gets nothing more. Otherwise the kernel writes under
-    ``staging``: ``delta_doclen`` (the new rows, plus a doc_len = -1
+    the probe kept and the shard's ``live`` docs; returns (changed,
+    quarantined rows). The BAD rows go to its errors/ part; the live rows
+    whose url a NEW row carries (an update) or a GONE row names (a delete)
+    are its OLD rows. A shard with neither new nor old rows gets nothing
+    more. Otherwise the kernel writes under ``staging``: ``delta_postings``
+    (the NEW rows' posting ``blocks``, if any, in POSTINGS_SCHEMA's types
+    less the shard); ``delta_doclen`` (the new rows, plus a doc_len = -1
     tombstone per row a delete dooms, sorted by doc_id); ``delta_termdf``
     (``df`` — +1 per new (doc, term) — minus 1 per distinct term of each
     re-tokenized old text, netted, zeros dropped, sorted by term; the same
     pinned analyzer as indexing, so the decrements equal what the base
     counts); ``counters/shard_N.json`` (the shard's (Δn_docs,
-    Δtotal_tokens), tombstones counting 0); and the shard's merged docs
-    part — live rows minus old plus new, in DOCS_SCHEMA's types. The
-    counters go last, so a shard with counters has every file."""
+    Δtotal_tokens), tombstones counting 0, and blocks); and the shard's
+    merged docs part — live rows minus old plus new, in DOCS_SCHEMA's
+    types. The counters go last, so a shard with counters has every file."""
     kind = rows["kind"].to_numpy()
     new_pdf = rows[kind == NEW]
     bad = rows[kind == BAD]
@@ -353,10 +366,14 @@ def _stage_delta(staging: Staging, shard: int, df: pd.Series,
         }), os.path.dirname(staging.errors),
             f"{os.path.basename(staging.errors)}-{shard}.parquet",
             use_deprecated_int96_timestamps=True)
-    staging.report.add((frozenset([shard] if changed else []), len(bad)))
     if not changed:
-        return
+        return False, len(bad)
     part = f"shard={shard}"
+    if len(blocks):
+        _write_part(pa.Table.from_pandas(blocks, _POSTINGS_ARROW,
+                                         preserve_index=False)
+                    .drop_columns("shard"),
+                    os.path.join(staging.root, "delta_postings", part))
     doclen = pd.concat([
         new_pdf[["dl_doc_id", "doc_len"]],
         live[doomed][["dl_doc_id"]].assign(doc_len=-1),
@@ -397,7 +414,9 @@ def _stage_delta(staging: Staging, shard: int, df: pd.Series,
         "n_docs": len(new_pdf) - len(old_pdf),
         "total_tokens": int(new_len.sum())
         - int(old_pdf["doc_len"].to_numpy(dtype=np.int64).sum()),
+        "blocks": len(blocks),
     }, os.path.join(staging.root, "counters"), shard)
+    return True, len(bad)
 
 
 def tf_from_pairs(df: DataFrame) -> DataFrame:
@@ -422,13 +441,14 @@ def encode_postings(tf: DataFrame | None, dl: DataFrame,
 
     ``counters_dir``: per-shard counters (_encode_shard).
     ``staging``: a delta generation's Staging. ``tf`` is then None and
-    ``dl`` — the only side — holds just the generation's incoming rows,
-    each also with its ``kind``, docs columns (url, text, warc_us =
-    warc_ts in epoch microseconds, lang), ``error`` and, for a NEW row,
-    ``terms``/``tfs`` arrays. The same job probes each shard's live docs
-    and stages its delta_doclen, delta_termdf, counters, merged docs part
-    and quarantine records (_stage_delta); no live docs row crosses the
-    exchange, and the kernel's input is never computed twice.
+    ``dl`` — the only side — holds just the generation's incoming rows as
+    JVM columns (so its map stage evaluates no Python): shard, doc_id,
+    ``kind``, url, warc_us (warc_ts in epoch microseconds), lang and html
+    (null for a delete). The plan returns a STAGED_REPORT row per shard
+    with incoming rows (``path`` is unused): its task probes the shard's
+    live docs, extracts the kept pages and writes the shard's delta files,
+    merged docs part and quarantine records (_stage_delta); no live docs
+    row crosses the exchange, and the kernel's input is computed once.
     Or ``staging``: a Fold. ``tf`` is then None and ``dl`` is one
     ``shard`` row per shard to fold, each in its own partition: the kernel
     maps over it (no exchange, no docs scan in the plan) and each task
@@ -456,12 +476,12 @@ def encode_postings(tf: DataFrame | None, dl: DataFrame,
         ).groupBy("dl_shard")).applyInPandas(
             lambda l, r: _encode_shard(l, r, counters_dir), POSTINGS_SCHEMA)
     else:
-        out = dl.select(
+        return dl.select(
             F.col("shard").alias("dl_shard"),
-            F.col("doc_id").alias("dl_doc_id"), "doc_len", "kind", "url",
-            "text", "warc_us", "lang", "terms", "tfs", "error",
+            F.col("doc_id").alias("dl_doc_id"), "kind", "url", "warc_us",
+            "lang", "html",
         ).groupBy("dl_shard").applyInPandas(
-            lambda r: _encode_shard(None, r, None, staging), POSTINGS_SCHEMA)
+            lambda r: _encode_shard(None, r, None, staging), STAGED_REPORT)
     if path is not None:
         out.write.mode("overwrite").partitionBy("shard").parquet(path)
     return out

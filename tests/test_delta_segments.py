@@ -1052,8 +1052,9 @@ def test_quarantined_update_runs_no_extra_job(spark, tmp_path):
 def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
                                                    monkeypatch):
     """The commit takes each affected shard's new subtotals from the
-    counters the staging kernel writes beside its delta_doclen file and
-    its merged docs part. When any of the three is missing for a shard —
+    counters the staging kernel writes beside its delta_doclen file, its
+    merged docs part and (its counters reporting posting blocks) its
+    delta_postings part. When any of the four is missing for a shard —
     what an index root the driver and executors do not share looks like —
     the update raises before the marker instead of counting the shard as
     unchanged or publishing a docs table without it: stats.json is
@@ -1063,7 +1064,7 @@ def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
 
     pages = gen_pages_df(spark, 120, seed=5, partitions=4)
     real = smod._encode_shard
-    for dropped in ("counters", "delta_doclen", "docs"):
+    for dropped in ("counters", "delta_doclen", "docs", "delta_postings"):
         root = str(tmp_path / dropped)
         write_index(spark, pages, root, n_shards=4)
         with open(os.path.join(root, "stats.json")) as f:
@@ -1078,6 +1079,9 @@ def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
                                          "shard_0.json"),
                 "delta_doclen": os.path.join(staging.root, "delta_doclen",
                                              "shard=0", "part-0.parquet"),
+                "delta_postings": os.path.join(
+                    staging.root, "delta_postings", "shard=0",
+                    "part-0.parquet"),
                 "docs": os.path.join(staging.docs, "shard=0",
                                      "part-0.parquet"),
             }[_dropped]

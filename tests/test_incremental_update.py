@@ -662,6 +662,83 @@ def test_update_kernel_probe_matches_classify_snapshot(spark, tmp_path):
     assert [r.url for r in err.collect()] == [f"{fresh.url}/bad"]
 
 
+def test_update_kernel_extracts_only_probe_kept_pages(tmp_path,
+                                                      monkeypatch):
+    """The staging kernel probes before it extracts: of one shard's raw
+    incoming pages, only the NotExist and ExistOlder ones reach the one
+    extract kernel (build.extract_batch), never the ExistSame or
+    ExistNewer ones. A page whose extraction raises is recorded in
+    errors/ only when the probe keeps it. Driven in-process on one
+    shard's live docs part, with no Spark job."""
+    import os
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from importpipeline_spark.index import build, store
+
+    hour = 3_600_000_000
+    live = {"u/older": 1, "u/same": 2, "u/newer": 3, "u/same-bad": 4}
+    d = tmp_path / "docs" / "shard=0"
+    d.mkdir(parents=True)
+    pq.write_table(pa.table({
+        "url": list(live),
+        "warc_ts": pa.array([10 * hour] * 4, pa.int64()).cast(
+            pa.timestamp("us", tz="UTC")),
+        "lang": ["en"] * 4,
+        "text": [f"stored {u}" for u in live],
+        "doc_len": pa.array([2] * 4, pa.int32()),
+        "doc_id": pa.array(list(live.values()), pa.int64()),
+    }), str(d / "part-0.parquet"))
+    deep = ("<html><body>" + "<div>" * 30000 + "x" + "</div>" * 30000
+            + "</body></html>").encode()
+    incoming = [  # url, warc_ts in hours, html
+        ("u/new", 10, b"fresh page"),          # NotExist
+        ("u/older", 11, b"recrawled page"),    # ExistOlder
+        ("u/same", 10, b"same page"),          # ExistSame
+        ("u/newer", 9, b"stale page"),         # ExistNewer
+        ("u/new-bad", 10, deep),               # NotExist, quarantined
+        ("u/same-bad", 10, deep),              # ExistSame, never extracted
+    ]
+    rows = pd.DataFrame({
+        "dl_shard": np.zeros(len(incoming), np.int32),
+        "dl_doc_id": np.array([live.get(u, 10 + i) for i, (u, _, _)
+                               in enumerate(incoming)], np.int64),
+        "kind": np.full(len(incoming), store.NEW),
+        "url": [u for u, _, _ in incoming],
+        "warc_us": np.array([h * hour for _, h, _ in incoming], np.int64),
+        "lang": ["en"] * len(incoming),
+        "html": [h for _, _, h in incoming],
+    })
+    seen = []
+    real = build.extract_batch
+
+    def spy(html):
+        seen.extend(html)
+        return real(html)
+
+    monkeypatch.setattr(build, "extract_batch", spy)
+    staging = store.Staging(str(tmp_path / "staging"),
+                            str(tmp_path / "docs.tmp"),
+                            str(tmp_path / "docs"),
+                            str(tmp_path / "errors" / "part-x"))
+    report = store._encode_shard(None, rows, None, staging)
+    assert report.to_dict("records") == [
+        {"shard": 0, "changed": True, "n_bad": 1}]
+    assert sorted(seen) == sorted([b"fresh page", b"recrawled page", deep])
+    err = pq.read_table(str(tmp_path / "errors"))
+    assert err["url"].to_pylist() == ["u/new-bad"]
+    docs = pq.read_table(str(tmp_path / "docs.tmp" / "shard=0")).to_pandas()
+    assert dict(zip(docs["url"], docs["text"])) == {
+        "u/new": "fresh page", "u/older": "recrawled page",
+        "u/same": "stored u/same", "u/newer": "stored u/newer",
+        "u/same-bad": "stored u/same-bad"}
+    assert os.path.exists(tmp_path / "staging" / "delta_postings"
+                          / "shard=0" / "part-0.parquet")
+
+
 def test_mutation_reads_only_its_own_shards(spark, tmp_path):
     """Each staging task reads only its own shard's docs: a docs file
     corrupted in a shard no incoming url maps to breaks neither an update

@@ -187,3 +187,44 @@ def test_docs_schema_is_pinned(spark, tmp_path):
         [(u,) for u in doomed], "url string"), run_id="d1")
     left = {r.url for r in pinned_equals_inferred().collect()}
     assert len(left) == 56 and not left & set(doomed)
+
+def test_delta_postings_types_match_the_base(spark, tmp_path):
+    """The staging kernel writes each changed shard's delta postings part
+    with pyarrow; read back by Spark (postings_live_df) and by the local
+    searcher's pyarrow read (serve._read_delta_table), they carry
+    POSTINGS_SCHEMA's types, exactly as the Spark-written base does, and
+    no file holds a ``shard`` column (its directory names it)."""
+    from pyspark.sql.types import StructType
+
+    from importpipeline_spark.index.serve import _read_delta_table
+    from importpipeline_spark.index.store import POSTINGS_SCHEMA, open_index
+
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, N, seed=7, partitions=4)
+    write_index(spark, pages, root, n_shards=SHARDS)
+    update_index(spark, root, _recrawl(spark), run_id="t1",
+                 input_snapshot="t1")
+    pidx = open_index(root)
+    want = StructType.fromDDL(POSTINGS_SCHEMA)
+    live = pidx.postings_live_df(spark)
+    assert live.where("seg_gen > 0").count() > 0
+    got = {f.name: f.dataType for f in live.schema}
+    assert got == {**{f.name: f.dataType for f in want},
+                   "seg_gen": got["seg_gen"]}
+    base = {f.name: f.dataType for f in pidx.postings_df(spark).schema}
+    assert base == {f.name: f.dataType for f in want}
+
+    files = glob.glob(os.path.join(root, "delta_postings", "gen=*",
+                                   "shard=*", "*.parquet"))
+    assert files
+    base_types = pq.read_schema(glob.glob(os.path.join(
+        root, "postings", "shard=*", "*.parquet"))[0]).remove_metadata()
+    for p in files:
+        assert pq.read_schema(p).remove_metadata() == base_types, p
+        assert "shard" not in pq.read_schema(p).names, p
+    local = _read_delta_table(root, "delta_postings", pidx.delta_gens())
+    base_local = pq.read_table(glob.glob(os.path.join(
+        root, "postings", "shard=*", "*.parquet"))[0]).to_pandas()
+    assert len(local)
+    assert (local.drop(columns="seg_gen").dtypes.to_dict()
+            == base_local.dtypes.to_dict())

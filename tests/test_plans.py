@@ -251,32 +251,45 @@ def test_build_outputs_share_one_exchange(spark):
 
 
 def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
-    """An update's staging job is one staged query: the incoming pages'
-    extract, ONE exchange (the repartition by shard) and the grouped
-    kernel. No docs scan and no join is in the plan — each kernel task
-    reads and probes its own shard's docs — and no live docs row crosses
-    the exchange."""
+    """An update's staging job is one staged query over the raw incoming
+    pages: ONE exchange (the repartition by shard) and the grouped kernel,
+    its only Python node — the map stage evaluates no Python (no
+    MapInPandas extract, no Python UDF), since the kernel extracts the
+    pages its probe keeps. No docs scan and no join is in the plan — each
+    kernel task reads and probes its own shard's docs — and no live docs
+    row crosses the exchange."""
     import re
 
     from importpipeline_spark.index import deltas
-    from importpipeline_spark.index.build import build_docs_and_tf_safe
-    from importpipeline_spark.index.pagesgen import gen_pages_df
-    from importpipeline_spark.index.store import encode_postings
+    from importpipeline_spark.index.build import doc_id_expr
+    from importpipeline_spark.index.pagesgen import PAGES_SCHEMA, gen_page
+    from importpipeline_spark.index.store import (
+        STAGED_REPORT,
+        encode_postings,
+    )
 
     seen = []
-    monkeypatch.setattr(deltas, "encode_postings",
-                        lambda tf, dl, path, staging: seen.append(
-                            (dl, staging)))
-    fused = build_docs_and_tf_safe(gen_pages_df(spark, 40, seed=5), "hash")
-    assert deltas.stage_update_delta(spark, str(tmp_path), fused, 8) == (
+
+    def record(tf, dl, staging):
+        seen.append((dl, staging))
+        return spark.createDataFrame([], STAGED_REPORT)
+
+    monkeypatch.setattr(deltas, "encode_postings", record)
+    rows = [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+            for p in (gen_page(i, 5) for i in range(40))]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA).withColumn(
+        "doc_id", doc_id_expr("hash"))
+    assert deltas.stage_update_delta(spark, str(tmp_path), pages, 8) == (
         [], 0)
-    (rows, staging), = seen
-    plan = plan_of(encode_postings(None, rows, None, staging=staging))
-    exchanges = re.findall(r"^\(\d+\) (\w*Exchange\w*)", plan, re.M)
-    assert exchanges == ["Exchange"], plan
+    (dl, staging), = seen
+    plan = plan_of(encode_postings(None, dl, staging=staging))
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert [n for n in nodes if "Exchange" in n] == ["Exchange"], plan
     assert "hashpartitioning(shard" in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
-    assert "Join" not in plan and "Scan parquet" not in plan, plan
+    assert [n for n in nodes if "Python" in n or "Pandas" in n] == [
+        "FlatMapGroupsInPandas"], plan
+    for node in ("MapInPandas", "ArrowEvalPython", "Join", "Scan parquet"):
+        assert node not in plan, (node, plan)
 
 
 def test_fold_is_one_map_over_shard_ids(spark, tmp_path, monkeypatch):
