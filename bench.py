@@ -73,7 +73,7 @@ def _pick_sweep_queries(idx_root: str) -> dict:
 
     def rng_of(t):
         st, en = s._t_start[t], s._t_end[t]
-        return int(s._min_u[st]), int(s._max_u[en - 1])
+        return int(s._store.min_u[st]), int(s._store.max_u[en - 1])
 
     # generated (content) words end in a digit — excludes cross-language
     # stopwords from the mid/rare picks

@@ -7,8 +7,8 @@ blocks, with per-block max TF and max BM25 score for block-max WAND pruning.
 
 All encode/decode paths are numpy-vectorized — no per-value Python loops —
 because they run inside Arrow UDFs and on the serving hot path. Encoding
-makes one vector pass per possible varint byte (≤10); decoding is one pass
-over the stream.
+makes one vector pass per possible varint byte (≤10), and so does decoding,
+over a whole Arrow column of blocks (``decode_blocks``), checked per block.
 
 doc keys are uint64 ``u = bits(doc_id) XOR 1<<63`` (order-preserving for
 signed doc_id), so deltas are non-negative and shard-local.
@@ -19,6 +19,7 @@ from __future__ import annotations
 from typing import List, Tuple
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 _SIGN = np.uint64(1 << 63)
@@ -63,43 +64,82 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Decode a LEB128 varint stream → uint64 array (vectorized, one pass:
-    each byte's 7 payload bits are shifted by 7 × its position inside its
-    value, then OR-reduced per value — OR is exact, unlike a float sum).
+def _varint_values(b: np.ndarray, off: np.ndarray, counts=None) -> np.ndarray:
+    """Decode varint blocks stored back to back: block i is
+    ``b[off[i]:off[i+1]]`` (``off[0] == 0``, ``off[-1] == len(b)``) →
+    every block's values as one flat uint64 array. One vector pass per byte
+    position (≤ 10), each over the values that have that byte: its 7
+    payload bits are OR-ed in at 7 × the position. Temporaries are per
+    value, not per byte, which keeps the peak memory of a whole-snapshot
+    decode small.
 
     Hard errors (not asserts: stripped under python -O) — a truncated or
     corrupt postings buffer must fail loudly, never silently mis-score: a
-    stream that ends inside a value, a value longer than the 10 bytes a
-    uint64 needs, or a value count other than ``count``."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    n_bytes = len(b)
-    if n_bytes == 0:
+    block that ends inside a value (even one the next block's bytes would
+    complete), a value longer than the 10 bytes a uint64 needs, or a block
+    whose value count is not its ``counts`` entry."""
+    if len(b) == 0:
         vals = np.empty(0, dtype=np.uint64)
+        ends = vals
     else:
         ends = np.flatnonzero(b < 0x80)
-        if len(ends) == 0 or ends[-1] != n_bytes - 1:
+        # each non-empty block's last byte ends a value, so no value runs
+        # across a block boundary or off the end of the stream
+        last = off[1:][off[1:] > off[:-1]] - 1
+        if (b[last] >= 0x80).any():
             raise ValueError("varint stream ends inside a value")
-        if len(ends) == n_bytes:  # every value is one byte (e.g. most tfs)
+        if len(ends) == len(b):  # every value is one byte (e.g. most tfs)
             vals = b.astype(np.uint64)
         else:
             starts = np.empty(len(ends), dtype=np.intp)
             starts[0] = 0
             starts[1:] = ends[:-1] + 1
             lengths = ends - starts + 1
-            if lengths.max() > 10:
+            max_len = int(lengths.max())
+            if max_len > 10:
                 raise ValueError("varint value longer than 10 bytes")
-            shift = np.arange(n_bytes, dtype=np.uint64)
-            shift -= np.repeat(starts, lengths).astype(np.uint64)
-            shift *= np.uint64(7)
-            vals = np.bitwise_or.reduceat(
-                (b & 0x7F).astype(np.uint64) << shift, starts
+            vals = (b[starts] & 0x7F).astype(np.uint64)
+            for k in range(1, max_len):
+                m = np.flatnonzero(lengths > k)
+                vals[m] |= ((b[starts[m] + k] & 0x7F).astype(np.uint64)
+                            << np.uint64(7 * k))
+    if counts is not None:
+        got = np.diff(np.searchsorted(ends, off))
+        bad = np.flatnonzero(got != counts)
+        if len(bad):
+            i = int(bad[0])
+            raise ValueError(
+                f"varint block {i} has {got[i]} values, expected {counts[i]}"
             )
-    if count is not None and len(vals) != count:
-        raise ValueError(
-            f"varint stream has {len(vals)} values, expected {count}"
-        )
     return vals
+
+
+def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
+    """Decode one LEB128 varint stream → uint64 array (vectorized), with
+    the hard errors of ``_varint_values``; ``count`` is the expected number
+    of values."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    return _varint_values(b, np.array([0, len(b)]),
+                          None if count is None else np.array([count]))
+
+
+def _binary_column(col) -> Tuple[np.ndarray, np.ndarray]:
+    """An Arrow binary column → (its value bytes, per-row byte offsets
+    rebased to 0), read straight from the Arrow buffers: no per-row Python
+    ``bytes`` is created."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if len(col) == 0:
+        return np.empty(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    if col.null_count:
+        raise ValueError("posting block column holds nulls")
+    _, off_buf, data_buf = col.buffers()
+    off_t = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    off = np.frombuffer(off_buf, dtype=off_t)[
+        col.offset:col.offset + len(col) + 1].astype(np.int64)
+    data = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
+            else np.empty(0, dtype=np.uint8))
+    return data[off[0]:off[-1]], off - off[0]
 
 
 def encode_blocks(
@@ -146,13 +186,27 @@ def encode_blocks(
     return rows
 
 
-def decode_block(docs_enc: bytes, tfs_enc: bytes, min_doc_u_bits: int, n: int):
-    """→ (doc_u uint64 array, tf uint64 array)."""
-    deltas = varint_decode(docs_enc, n)
-    base = np.int64(min_doc_u_bits).view(np.uint64)
-    doc_u = base + np.cumsum(deltas, dtype=np.uint64)
-    tfs = varint_decode(tfs_enc, n)
-    return doc_u, tfs
+def decode_blocks(docs, tfs, ns: np.ndarray, min_u: np.ndarray):
+    """Decode a whole column of blocks in one vectorized pass.
+
+    ``docs``/``tfs`` are the Arrow binary columns ``docs_enc``/``tfs_enc``
+    (Array or ChunkedArray), ``ns`` each block's posting count and
+    ``min_u`` its first doc key (uint64). Returns (doc_u uint64, tf uint64,
+    post_off): every block's postings back to back, block i at
+    ``post_off[i]:post_off[i+1]``. Each block is checked on its own
+    (``_varint_values``'s hard errors), not only the concatenated stream."""
+    ns = np.asarray(ns, dtype=np.int64)
+    post_off = np.zeros(len(ns) + 1, dtype=np.int64)
+    np.cumsum(ns, out=post_off[1:])
+    deltas = _varint_values(*_binary_column(docs), ns)
+    tf = _varint_values(*_binary_column(tfs), ns)
+    # a block's keys are its min key plus the running sum of its deltas
+    # (delta0 = 0): one cumsum over all blocks, rebased per block (uint64
+    # arithmetic wraps, so the rebase is exact)
+    doc_u = np.cumsum(deltas, out=deltas)
+    before = np.concatenate((np.zeros(1, dtype=np.uint64), doc_u))[post_off[:-1]]
+    doc_u += np.repeat(np.asarray(min_u, dtype=np.uint64) - before, ns)
+    return doc_u, tf, post_off
 
 
 def encode_shard_blocks(

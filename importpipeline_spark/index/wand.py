@@ -22,22 +22,28 @@ in geometrically growing CHUNKS (coalesced into contiguous doc ranges, one
 vectorized accumulation per chunk — an interval-at-a-time loop measured 2-6×
 slower than exhaustive scoring on flat-bound corpora); the running top-k
 threshold θ is re-derived between chunks and everything bounding below it is
-skipped, including whole undecoded blocks (bounds carry a 1+1e-12 margin
+skipped, including whole unscored blocks (bounds carry a 1+1e-12 margin
 against float summation-order effects).
 
-Accumulation is by dense doc ordinal: decoding a block maps each posting's
-doc to its index in the shard's sorted doclen keys (the lookup that fetches
-its doc length anyway), and per-doc scores are summed in a float64 buffer
-with one slot per doc — direct addressing, with no sort, hash or np.unique.
-Parts are added one at a time in ascending term order, so each doc's sum is
-strictly sequential in that order — bit-identical to the exhaustive oracle —
-and only the touched slots are read back and re-zeroed. Top-k is a
-partition at the k-th score plus a lexsort of the entries at or above it;
-ordinal order is doc_id order, so ties break (score DESC, doc_id ASC).
+Decoding is one vectorized pass when a shard's index is built
+(_ShardIndex): every candidate block's varints, doc keys, delta-generation
+masking, doc ordinals and BM25 contributions at once, into a flat posting
+store where a block — or a whole term's run of blocks — is one slice. A
+posting's doc ordinal is its doc's index in the shard's sorted doclen keys
+(the lookup that fetches its doc length anyway).
+
+Accumulation is by dense doc ordinal: per-doc scores are summed in a
+float64 buffer with one slot per doc — direct addressing, with no sort,
+hash or np.unique. Parts are added one at a time in ascending term order,
+so each doc's sum is strictly sequential in that order — bit-identical to
+the exhaustive oracle — and only the touched slots are read back and
+re-zeroed. Top-k is a partition at the k-th score plus a lexsort of the
+entries at or above it; ordinal order is doc_id order, so ties break
+(score DESC, doc_id ASC).
 
 The batch path scores a whole query *set* in one index pass: per shard, all
-queries share the block arrays and the decode cache, so a hot term decoded
-for one query is free for the rest.
+queries share one decoded store, so each block is decoded once for all of
+them.
 """
 
 from __future__ import annotations
@@ -48,11 +54,14 @@ from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .build import K1, B
-from .codec import from_u64, to_u64, varint_decode
+# perfbench's traced serve run counts calls of wand.varint_decode as
+# per-block decodes; none remain, as this module decodes via decode_blocks
+from .codec import decode_blocks, from_u64, to_u64, varint_decode  # noqa: F401
 from .search import analyze_query
 from .store import PhysicalIndex, read_dictionary
 
@@ -108,23 +117,28 @@ def _lucene_idf(df: int, n: int) -> float:
 
 
 class _ShardIndex:
-    """Decoded view of one shard's candidate postings + doclen lookup, with a
-    block decode cache and a dense score buffer shared across queries."""
+    """One shard's candidate blocks, decoded once into a flat posting store:
+    per posting its doc ordinal (index into the sorted doclen keys) and its
+    BM25 contribution, block ``bi`` at ``starts[bi]:ends[bi]``; plus the
+    block metadata the sweep prunes on and a dense score buffer."""
 
     def __init__(self, post_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                  tcode_map: Dict[str, int], idf_arr: np.ndarray,
                  avgdl: float, k1: float, b: float):
         dl_u, dl_v, tomb_u, tomb_g = resolve_doclen(dl_pdf)
+        tcodes = post_pdf["term"].map(tcode_map).to_numpy(dtype=np.int64)
+        order = np.argsort(tcodes, kind="stable")  # a term's blocks adjacent
+        post_pdf = post_pdf.iloc[order]
         gens = None
-        if "seg_gen" in post_pdf.columns and tomb_u is not None:
+        if "seg_gen" in post_pdf.columns:
             gens = post_pdf["seg_gen"].to_numpy(dtype=np.int64)
         self._init(
             min_u=post_pdf["min_doc"].to_numpy(dtype=np.int64).view(np.uint64),
             max_u=post_pdf["max_doc"].to_numpy(dtype=np.int64).view(np.uint64),
             ns=post_pdf["n"].to_numpy(dtype=np.int64),
-            tcodes=post_pdf["term"].map(tcode_map).to_numpy(dtype=np.int64),
-            docs_enc=post_pdf["docs_enc"].to_numpy(dtype=object),
-            tfs_enc=post_pdf["tfs_enc"].to_numpy(dtype=object),
+            tcodes=tcodes[order],
+            docs_enc=pa.array(post_pdf["docs_enc"], type=pa.binary()),
+            tfs_enc=pa.array(post_pdf["tfs_enc"], type=pa.binary()),
             max_tf=post_pdf["max_tf"].to_numpy(dtype=np.float64),
             min_dl=post_pdf["min_dl"].to_numpy(dtype=np.float64),
             dl_u=dl_u, dl_v=dl_v,
@@ -134,45 +148,60 @@ class _ShardIndex:
 
     @classmethod
     def from_arrays(cls, **kw) -> "_ShardIndex":
-        """Construct straight from preloaded numpy arrays (serving path —
-        avoids any per-query pandas work)."""
+        """Construct straight from preloaded arrays and Arrow columns (the
+        serving path — no pandas)."""
         self = cls.__new__(cls)
         self._init(**kw)
         return self
 
     def _init(self, *, min_u, max_u, ns, tcodes, docs_enc, tfs_enc,
               max_tf, min_dl, dl_u, dl_v, idf_arr, avgdl, k1, b,
-              block_keys=None, raw_cache=None, term_cache=None,
-              gens=None, tomb_u=None, tomb_g=None, acc=None):
-        # delta-segment state: per-block generation + the shadowed-doc
-        # lookup (docs owned by a generation > 0; see resolve_doclen).
-        # None on a pure-base index — decode() takes the unmasked fast path.
-        self.gens = gens
-        self.tomb_u = tomb_u if tomb_u is not None and len(tomb_u) else None
-        self.tomb_g = tomb_g
-        # optional cross-query raw-decode cache (serving path): maps an
-        # external stable block key → (doc ordinal, tf, dl); contributions
-        # are recomputed per query (idf/stats may differ) but varint decode
-        # + doclen lookup — the expensive part — happens once per block ever.
-        # Ordinals index dl_u, so a cache is only valid for one dl_u (one
-        # searcher snapshot).
-        self._block_keys = block_keys
-        self._raw_cache = raw_cache
-        # optional cross-query TERM-RUN cache (serving path): concatenated
-        # (doc ordinal, contrib) for a whole term's block run. Contributions
-        # are constants of the index snapshot (idf/stats fixed per
-        # searcher), so caching them is exactly recomputation; ~500
-        # per-block Python calls per head query collapse to one dict hit
-        # per term (r8).
-        self._term_cache = term_cache
+              gens=None, tomb_u=None, tomb_g=None):
+        """The one decode pass, over every block: varint → doc keys →
+        owner-generation masking → doc ordinal → BM25 contribution.
+
+        Blocks must come grouped by term code with each term's blocks
+        adjacent, so a term's postings are one slice of the store
+        (decode_run). Contributions are elementwise — the same float
+        operations in the same order for every posting — so no value
+        depends on which other blocks share the pass, and the serving,
+        distributed and batch paths score bit-identically."""
+        doc_u, tf, off = decode_blocks(docs_enc, tfs_enc, ns, min_u)
+        if tomb_u is not None and len(tomb_u):
+            # delta-segment masking: drop postings of docs owned by a NEWER
+            # generation than their block's (the live version — if any — is
+            # scored from the owner generation's block; a deleted doc has no
+            # live block at all). gens None: every block is base (gen 0).
+            # Masking precedes the doclen lookup: shadowed docs are absent
+            # from dl_u.
+            g = 0 if gens is None else np.repeat(gens, ns)
+            pos = np.minimum(np.searchsorted(tomb_u, doc_u), len(tomb_u) - 1)
+            keep = ~((tomb_u[pos] == doc_u) & (tomb_g[pos] > g))
+            if not keep.all():
+                doc_u, tf = doc_u[keep], tf[keep]
+                off = np.concatenate(([0], np.cumsum(keep)))[off]
+        self.starts, self.ends = off[:-1], off[1:]
+        self.ords = np.searchsorted(dl_u, doc_u)
+        del doc_u
+        tf = tf.astype(np.float64)
+        # idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)), evaluated in that
+        # association (+ and × operands swapped only, which IEEE keeps
+        # exact) and in place, so the pass holds few posting-sized arrays
+        den = dl_v[self.ords]
+        den *= b
+        den /= avgdl
+        den += 1.0 - b
+        den *= k1
+        den += tf
+        tf *= np.repeat(idf_arr[tcodes], self.ends - self.starts)
+        tf *= k1 + 1.0
+        tf /= den
+        self.contrib = tf
         self.dl_u = dl_u
-        self.dl_v = dl_v
         self.min_u = min_u
         self.max_u = max_u
         self.ns = ns
         self.tcodes = tcodes
-        self.docs_enc = docs_enc
-        self.tfs_enc = tfs_enc
         self.max_tf = max_tf
         self.min_dl = min_dl
         self.idf_arr = idf_arr
@@ -180,13 +209,24 @@ class _ShardIndex:
         self.k1 = k1
         self.b = b
         # dense per-doc score buffer, one float64 slot per doc ordinal (index
-        # into dl_u), all zero between accumulations (see _accumulate); the
-        # serving path passes one buffer owned by its searcher
-        self.acc = np.zeros(len(dl_u)) if acc is None else acc
-        self._decoded: Dict[int, tuple] = {}
-        # set by _score_all: every selected block was decoded, so the
-        # pruning stats count them all without per-block bookkeeping
-        self.scored_all = False
+        # into dl_u), all zero between accumulations (see _accumulate);
+        # views from select() share it, so one store scores one query at a
+        # time
+        self.acc = np.zeros(len(dl_u))
+        # the blocks the last sweep scored (set by _sweep / _score_all)
+        self.scored = None
+
+    def select(self, rows: np.ndarray) -> "_ShardIndex":
+        """A view of blocks ``rows`` (whole terms, in store order) sharing
+        this store's postings, doclen keys and score buffer — the serving
+        path's per-query index, built with no decode."""
+        view = object.__new__(_ShardIndex)
+        view.__dict__.update(self.__dict__)
+        view.__dict__.pop("ub", None)
+        for name in _BLOCK_FIELDS:
+            setattr(view, name, getattr(self, name)[rows])
+        view.scored = None
+        return view
 
     @cached_property
     def ub(self) -> np.ndarray:
@@ -203,70 +243,19 @@ class _ShardIndex:
     def decode(self, bi: int) -> Tuple[np.ndarray, np.ndarray]:
         """Block ``bi`` → (doc ordinal, contrib): each live posting's index
         into dl_u (ascending, like the doc ids) and its BM25 contribution."""
-        got = self._decoded.get(bi)
-        if got is not None:
-            return got
-        raw = None
-        key = None
-        if self._raw_cache is not None:
-            key = int(self._block_keys[bi])
-            raw = self._raw_cache.get(key)
-        if raw is None:
-            deltas = varint_decode(self.docs_enc[bi], int(self.ns[bi]))
-            du = self.min_u[bi] + np.cumsum(deltas, dtype=np.uint64)
-            tf = varint_decode(self.tfs_enc[bi], int(self.ns[bi])).astype(np.float64)
-            if self.tomb_u is not None:
-                # delta-segment masking: drop docs owned by a NEWER
-                # generation than this block's (their live version — if any
-                # — is scored from the owner generation's block; a deleted
-                # doc has no live block at all). Masking precedes the
-                # doclen lookup: shadowed docs are absent from dl_u.
-                g = int(self.gens[bi]) if self.gens is not None else 0
-                pos = np.searchsorted(self.tomb_u, du)
-                pos_c = np.minimum(pos, len(self.tomb_u) - 1)
-                shadowed = (self.tomb_u[pos_c] == du) & (self.tomb_g[pos_c] > g)
-                if shadowed.any():
-                    keep = ~shadowed
-                    du, tf = du[keep], tf[keep]
-            ords = np.searchsorted(self.dl_u, du)
-            dl = self.dl_v[ords]
-            if self._raw_cache is not None:
-                self._raw_cache[key] = (ords, tf, dl)
-        else:
-            ords, tf, dl = raw
-        idf = self.idf_arr[self.tcodes[bi]]
-        contrib = (
-            idf * tf * (self.k1 + 1.0)
-            / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-        )
-        self._decoded[bi] = (ords, contrib)
-        return self._decoded[bi]
+        s, e = self.starts[bi], self.ends[bi]
+        return self.ords[s:e], self.contrib[s:e]
 
     def decode_run(self, rows: np.ndarray):
-        """Concatenated (doc ordinal, contrib) for a run of same-term blocks
-        in ascending block order — identical to decoding each block and
-        concatenating (which is what it does on a cache miss). Cached
-        cross-query when a term_cache is attached (the serving path)."""
-        key = None
-        if self._term_cache is not None and self._block_keys is not None \
-                and len(rows):
-            key = (int(self._block_keys[rows[0]]),
-                   int(self._block_keys[rows[-1]]), len(rows))
-            got = self._term_cache.get(key)
-            if got is not None:
-                return got
-        o_parts, c_parts = [], []
-        for bi in rows:
-            o, contrib = self.decode(int(bi))
-            o_parts.append(o)
-            c_parts.append(contrib)
-        out = (
-            np.concatenate(o_parts) if o_parts else np.empty(0, dtype=np.intp),
-            np.concatenate(c_parts) if c_parts else np.empty(0, dtype=np.float64),
-        )
-        if key is not None:
-            self._term_cache[key] = out
-        return out
+        """(doc ordinal, contrib) of a run of adjacent blocks of one term —
+        one slice of the store."""
+        s, e = self.starts[rows[0]], self.ends[rows[-1]]
+        return self.ords[s:e], self.contrib[s:e]
+
+
+# the per-block arrays select() gathers for a view
+_BLOCK_FIELDS = ("min_u", "max_u", "ns", "tcodes", "max_tf", "min_dl",
+                 "starts", "ends")
 
 
 def _accumulate(o_parts, c_parts, acc):
@@ -325,10 +314,8 @@ def _score_all(si: _ShardIndex, sel: np.ndarray, k: int):
     sel_o = sel[order]
     tc_o = si.tcodes[sel_o]
     # one decode_run per TERM (contiguous same-tcode run, block order kept by
-    # the stable sort): term runs are sorted disjoint doc sequences, so the
-    # concatenation per term equals the old per-block append order exactly —
-    # and the serving path's term cache turns ~hundreds of per-block decode
-    # calls per head query into one dict hit per term
+    # the stable sort): a term's blocks are adjacent in the store, so its
+    # postings are one slice
     runs = np.nonzero(np.concatenate(([True], tc_o[1:] != tc_o[:-1])))[0]
     ends = np.concatenate((runs[1:], [len(sel_o)]))
     o_parts, c_parts = [], []
@@ -336,7 +323,7 @@ def _score_all(si: _ShardIndex, sel: np.ndarray, k: int):
         o, contrib = si.decode_run(sel_o[a:b])
         o_parts.append(o)
         c_parts.append(contrib)
-    si.scored_all = True
+    si.scored = sel
     ords, scores = _topk(*_accumulate(o_parts, c_parts, si.acc), k)
     return si.dl_u[ords], scores
 
@@ -372,6 +359,7 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
     local candidates exist — exactness is preserved because every skipped
     doc's score ≤ its interval bound < theta0 ≤ the global k-th score."""
     if len(sel) == 0:
+        si.scored = sel
         return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
     if int(si.ns[sel].sum()) <= _EXHAUSTIVE_CUTOFF:
         return _score_all(si, sel, k)
@@ -395,6 +383,7 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
     top_scores = np.empty(0, dtype=np.float64)
     theta = -np.inf
     block_order = np.argsort(tc, kind="stable")  # ascending term order
+    scored = np.zeros(len(sel), dtype=bool)
     pos = 0
     chunk = _CHUNK0
     while pos < n_pos_iv:
@@ -430,12 +419,14 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
         part_t = None
         for x in block_order:
             # metadata reject: block entirely outside this chunk's runs —
-            # this is where pruning skips DECODES, not just score work
+            # this is where pruning skips a block's scoring, not just part
+            # of it
             r0 = int(np.searchsorted(run_hi, min_u[x], side="right"))
             r1 = int(np.searchsorted(run_lo, max_u[x], side="right"))
             if r0 >= r1:
                 continue
             o, contrib = si.decode(int(sel[x]))
+            scored[x] = True
             if tc[x] != part_t:
                 part_t = tc[x]
                 o_parts.append([])
@@ -459,6 +450,7 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
                 theta = top_scores[-1]
         pos += take
         chunk *= _CHUNK_GROWTH
+    si.scored = sel[scored]
     return si.dl_u[top_ords], top_scores
 
 
@@ -490,8 +482,8 @@ def make_wand_batch_kernel(
     k1: float = K1,
     b: float = B,
 ):
-    """Per-shard kernel scoring a whole query set in one pass; the decode
-    cache is shared, so hot terms are decoded once per shard for all queries."""
+    """Per-shard kernel scoring a whole query set in one pass over one
+    decoded store, so each block is decoded once per shard for all queries."""
     terms_sorted = sorted(idf_map)
     tcode_map = {t: i for i, t in enumerate(terms_sorted)}
     idf_arr = np.array([idf_map[t] for t in terms_sorted], dtype=np.float64)
@@ -634,8 +626,8 @@ def bm25_topk_wand_batch(
 ) -> DataFrame:
     """Whole query set in one index pass → (query_id, doc_id, score, rank).
 
-    One cogroup job total: per shard, every query reuses the same block
-    arrays and decode cache. Global per-query top-k = window rank over
+    One cogroup job total: per shard, every query reuses the same decoded
+    store. Global per-query top-k = window rank over
     ≤ k·shards candidates per query. As in bm25_topk_wand, the dictionary
     lookup runs here (``query: dictionary``) and the kernel job at the
     caller's action.

@@ -1,13 +1,14 @@
 """Codec round-trips + known-byte goldens (SURVEY.md §5 rebuild test plan)."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from importpipeline_spark.index.codec import (
     BLOCK_SIZE,
-    decode_block,
+    decode_blocks,
     encode_blocks,
     from_u64,
     to_u64,
@@ -117,17 +118,17 @@ def test_block_roundtrip():
     dls = rng.integers(10, 500, size=len(u)).astype(np.int64)
     rows = encode_blocks(u, tfs, dls)
     assert len(rows) == (len(u) + BLOCK_SIZE - 1) // BLOCK_SIZE
-    got_u, got_tf = [], []
-    for (bid, n, mn, mx, de, te, mtf, mdl) in rows:
-        du, dt = decode_block(de, te, mn, n)
-        assert int(du[0].astype(np.int64).view(np.int64)) == np.int64(mn).view(np.int64)
-        got_u.append(du)
-        got_tf.append(dt)
+    _, ns, mins, _, des, tes, mtfs, _ = zip(*rows)
+    got_u, got_tf, off = decode_blocks(
+        pa.array(des, pa.binary()), pa.array(tes, pa.binary()),
+        np.array(ns), np.array(mins, dtype=np.int64).view(np.uint64))
+    assert np.array_equal(np.diff(off), ns)
+    for i, (mn, mtf) in enumerate(zip(mins, mtfs)):
+        assert got_u[off[i]].view(np.int64) == mn
         # block-max metadata correct
-        assert mtf == int(dt.max())
-    got_u = np.concatenate(got_u)
+        assert mtf == int(got_tf[off[i]:off[i + 1]].max())
     assert np.array_equal(got_u, u)
-    assert np.array_equal(np.concatenate(got_tf), tfs)
+    assert np.array_equal(got_tf, tfs)
 
 
 def test_vectorized_shard_encode_identical():
@@ -173,3 +174,52 @@ def test_block_metadata_bounds():
     assert rows[0][7] == int(dls[BLOCK_SIZE - 1])
     assert rows[-1][6] == int(tfs[-1])
     assert rows[-1][7] == int(dls[-1])
+
+
+def test_multiblock_decode_refuses_corrupt_blocks(spark, tmp_path):
+    """decode_blocks checks every block on its own, so each corruption below
+    raises ValueError although the concatenated stream is well-formed; and
+    a searcher over a postings part with one truncated docs_enc fails at
+    open instead of mis-scoring."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from importpipeline_spark.index.pagesgen import gen_pages_df
+    from importpipeline_spark.index.serve import LocalSearcher
+    from importpipeline_spark.index.store import write_index
+
+    def decode(blocks, ns):
+        col = pa.array(blocks, pa.binary())
+        return decode_blocks(col, col, np.array(ns),
+                             np.zeros(len(ns), dtype=np.uint64))
+
+    # well-formed: 5 | 300 | 7 as two blocks of 2 and 1 values
+    u, tf, off = decode([b"\x05\xac\x02", b"\x07"], [2, 1])
+    assert tf.tolist() == [5, 300, 7] and off.tolist() == [0, 2, 3]
+    # block 0 ends inside 300, block 1 completes it (stream: 5, 300, 7)
+    with pytest.raises(ValueError, match="inside a value"):
+        decode([b"\x05\xac", b"\x02\x07"], [2, 1])
+    # a block holding n + 1 values next to one holding n - 1 (total right)
+    with pytest.raises(ValueError, match="block 0 has 3 values, expected 2"):
+        decode([b"\x01\x02\x03", b"\x04"], [2, 2])
+    with pytest.raises(ValueError, match="block 0 has 1 values, expected 2"):
+        decode([b"\x01", b"\x02\x03\x04"], [2, 2])
+    # a value longer than 10 bytes
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        decode([b"\x01", b"\xff" * 10 + b"\x01"], [1, 1])
+
+    root = str(tmp_path / "idx")
+    write_index(spark, gen_pages_df(spark, 60, seed=3, partitions=2), root,
+                n_shards=2)
+    LocalSearcher(root)
+    part = sorted(glob.glob(os.path.join(root, "postings", "shard=*",
+                                         "*.parquet")))[0]
+    t = pq.read_table(part)
+    rows = t.to_pylist()
+    i = next(j for j, r in enumerate(rows) if r["n"] >= 2)
+    rows[i]["docs_enc"] = rows[i]["docs_enc"][:-1]
+    pq.write_table(pa.Table.from_pylist(rows, t.schema), part)
+    with pytest.raises(ValueError):
+        LocalSearcher(root)

@@ -222,7 +222,8 @@ def test_delta_postings_types_match_the_base(spark, tmp_path):
     for p in files:
         assert pq.read_schema(p).remove_metadata() == base_types, p
         assert "shard" not in pq.read_schema(p).names, p
-    local = _read_delta_table(root, "delta_postings", pidx.delta_gens())
+    local = _read_delta_table(root, "delta_postings",
+                              pidx.delta_gens()).to_pandas()
     base_local = pq.read_table(glob.glob(os.path.join(
         root, "postings", "shard=*", "*.parquet"))[0]).to_pandas()
     assert len(local)

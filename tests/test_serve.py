@@ -3,6 +3,7 @@ plus the randomized WAND-vs-oracle fuzz sweep."""
 
 import time
 
+import numpy as np
 import pytest
 
 from importpipeline_spark.index.build import build_logical_index
@@ -42,9 +43,10 @@ def test_local_serving_bit_identical(served, query):
 
 
 def test_repeat_query_identical_through_caches(served):
-    """r8: the cross-query raw/term-run caches must make repeated queries
-    byte-identical (results AND pruning-stats accounting) — a cache that
-    drifted would surface here before it surfaced in the bench."""
+    """A searcher reused across queries answers a repeated query
+    byte-identically (results AND pruning-stats accounting): every query
+    reads slices of the posting store decoded at open, so no per-query
+    state — the shared score buffer included — may leak into the next."""
     searcher, oracle = served
     for query in ("the", "the ebakaba8 equababa1", "of and"):
         first = searcher.search(query, k=10)
@@ -53,6 +55,76 @@ def test_repeat_query_identical_through_caches(served):
         stats2 = dict(searcher.last_stats)
         assert first == again == oracle.topk(analyze_query(query), k=10)
         assert stats1 == stats2
+
+
+def _array_bytes(searcher) -> int:
+    """nbytes of every array a searcher holds, in its decoded store and in
+    any dict, list or tuple of either."""
+    def walk(v):
+        if isinstance(v, np.ndarray):
+            return v.nbytes
+        if isinstance(v, dict):
+            v = v.values()
+        return sum(map(walk, v)) if isinstance(v, (list, tuple, type(
+            {}.values()))) else 0
+
+    return walk(vars(searcher)) + walk(vars(searcher._store))
+
+
+def test_no_decode_at_query_time_and_no_memory_growth(served, monkeypatch):
+    """Every vocabulary term streamed through one searcher: no varint decode
+    runs after open, the searcher's arrays keep their size (no cache grows),
+    and the answers equal a fresh searcher's."""
+    from importpipeline_spark.index import codec, wand
+
+    searcher, _ = served
+    root = searcher.pidx.root
+    s = LocalSearcher(root)
+    vocab = sorted(s._df)
+    before = _array_bytes(s)
+    keys = set(vars(s)) | {f"_store.{k}" for k in vars(s._store)}
+    calls = []
+    for mod, name in ((wand, "varint_decode"), (codec, "_varint_values")):
+        orig = getattr(mod, name)
+        monkeypatch.setattr(mod, name, lambda *a, _f=orig, _n=name, **kw: (
+            calls.append(_n), _f(*a, **kw))[1])
+    got = [s.search(t, k=10) for t in vocab]
+    assert calls == []
+    assert _array_bytes(s) == before
+    assert set(vars(s)) | {f"_store.{k}" for k in vars(s._store)} == keys
+    monkeypatch.undo()
+    fresh = LocalSearcher(root)
+    want = [fresh.search(t, k=10) for t in reversed(vocab)][::-1]
+    assert got == want
+    assert sum(map(len, got)) > len(vocab)
+
+
+def test_all_deleted_index_answers_empty(spark, tmp_path):
+    """Every doc deleted: the searcher opens through its one path (all
+    postings masked), answers [] with zeroed stats, and the distributed
+    WAND path agrees."""
+    from importpipeline_spark.index.segments import delete_from_index
+    from importpipeline_spark.index.store import open_index
+    from importpipeline_spark.index.wand import bm25_topk_wand
+
+    root = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 40, seed=9, partitions=2)
+    write_index(spark, pages, root, n_shards=2)
+    live = LocalSearcher(root)
+    queries = ["the", "the of and", sorted(live._df)[-1]]
+    assert all(live.search(q, k=5) for q in queries)
+    delete_from_index(spark, root, pages.select("url"), run_id="dall",
+                      input_snapshot="dall", compact_after=None)
+    s = LocalSearcher(root)
+    pidx = open_index(root)
+    assert pidx.stats["n_docs"] == 0 and pidx.stats["delta_gens"]
+    assert len(s._store.ords) == 0
+    for q in queries:
+        assert s.search(q, k=5) == []
+        assert s.last_stats == {"blocks_total": 0, "blocks_decoded": 0,
+                                "postings_total": 0, "postings_decoded": 0}
+        assert bm25_topk_wand(spark, pidx, q, k=5).collect() == []
+
 
 def test_local_serving_latency(served):
     searcher, _ = served
