@@ -72,16 +72,18 @@ def _pick_sweep_queries(idx_root: str) -> dict:
     head = max(tdf, key=lambda t: (tdf[t], t))
 
     def rng_of(t):
-        st, en = s._t_start[t], s._t_end[t]
+        # the doc range of term t's blocks (rows t_blk[c]:t_blk[c+1])
+        c = s._code[t]
+        st, en = s._store.t_blk[c], s._store.t_blk[c + 1]
         return int(s._store.min_u[st]), int(s._store.max_u[en - 1])
 
     # generated (content) words end in a digit — excludes cross-language
     # stopwords from the mid/rare picks
-    synth = [t for t in tdf if t and t[-1].isdigit() and t in s._t_start]
+    synth = [t for t in tdf if t and t[-1].isdigit() and t in s._code]
     if not synth:
         # real-text corpus with no generated vocabulary: every term is a
         # candidate (df targets still pick discriminative terms)
-        synth = [t for t in tdf if t in s._t_start]
+        synth = [t for t in tdf if t in s._code]
     narrow_w = 1 << 41  # ≲ two host ranges under the 40-bit locality field
     narrow = [t for t in synth if rng_of(t)[1] - rng_of(t)[0] < narrow_w]
     narrow_set = set(narrow)  # hoisted: an in-comprehension set() rebuild

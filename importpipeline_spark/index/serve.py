@@ -5,11 +5,13 @@ huge indexes; for interactive serving of a memory-resident index, Spark's
 per-query job overhead (~seconds) dominates. ``LocalSearcher`` loads the
 posting store once (pyarrow, no Spark jobs) and decodes it at open in ONE
 vectorized pass into a flat posting store: per posting its doc ordinal and
-BM25 contribution, a term's postings one slice (wand._ShardIndex). Queries
-then run in pure numpy with the SAME ``_ShardIndex``/``_sweep`` kernels the
-distributed path uses — so results are bit-identical by construction, at
-millisecond latency — and decode nothing: a searcher's memory is what its
-open allocated, however many queries or distinct terms it serves.
+BM25 contribution, a term's postings one slice (wand._ShardIndex). A query
+is then its sorted term codes: it runs in pure numpy with the SAME
+``_sweep`` kernel the distributed path uses — so results are bit-identical
+by construction, at sub-millisecond latency — slicing each term's whole
+posting run from the store. It decodes nothing and builds no per-query view
+of the store: a searcher's memory is what its open allocated, however many
+queries or distinct terms it serves.
 
 Because doc-range shards are disjoint and ordered, all shards flatten into
 ONE sweep space: the concatenated doclen arrays stay globally sorted and
@@ -115,7 +117,6 @@ class LocalSearcher:
                 terms = pd.concat([terms, adj.to_pandas()])
                 terms = terms.groupby("term", sort=False)["df"].sum()
                 terms = terms[terms > 0].reset_index()
-        self._df = dict(zip(terms["term"], terms["df"].astype(int)))
 
         # flatten all shards (disjoint, ordered doc ranges) into one space;
         # delta segments (LSM update path) join it tagged with their
@@ -143,16 +144,22 @@ class LocalSearcher:
 
         # blocks sorted by term (stable: doc order kept per term); a term's
         # code is its rank in the sorted vocabulary, so code order is term
-        # order, and its blocks are rows _t_start[t]:_t_end[t]
+        # order and the store's per-term offsets are indexed by code
         post = post.take(pc.sort_indices(post, [("term", "ascending")]))
         coded = post["term"].combine_chunks().dictionary_encode()
         tcodes = coded.indices.to_numpy().astype(np.int64)
-        vocab = coded.dictionary.to_pylist()
-        run_off = np.searchsorted(tcodes, np.arange(len(vocab) + 1)).tolist()
-        self._t_start = dict(zip(vocab, run_off[:-1]))
-        self._t_end = dict(zip(vocab, run_off[1:]))
-        idf_arr = np.array([_lucene_idf(self._df.get(t, 0), self.n)
-                            for t in vocab], dtype=np.float64)
+        vocab = coded.dictionary.to_numpy(zero_copy_only=False)
+        at = pd.Index(terms["term"]).get_indexer(vocab)
+        # df per code; at == -1 (no live df) picks the appended 0
+        self._dfs = np.append(terms["df"].to_numpy(np.int64), 0)[at]
+        # a term whose every posting is masked has blocks but no live df:
+        # it gets no code, so it matches nothing
+        live = np.flatnonzero(self._dfs > 0)
+        self._code = dict(zip(vocab[live].tolist(), live.tolist()))
+        # idf per distinct df, by the same math.log as _lucene_idf everywhere
+        uniq, inv = np.unique(self._dfs, return_inverse=True)
+        idf_arr = np.array([_lucene_idf(d, self.n) for d in uniq.tolist()],
+                           dtype=np.float64)[inv]
 
         # the one decode pass: every block → (doc ordinal, contribution)
         dl_u, dl_v, tomb_u, tomb_g = resolve_doclen(dl)
@@ -172,10 +179,17 @@ class LocalSearcher:
         )
         self.last_stats = dict(_NO_STATS)
 
+    @property
+    def _df(self) -> dict:
+        """{term: live df} over the terms that have a code."""
+        return {t: int(self._dfs[c]) for t, c in self._code.items()}
+
     def search(self, query: str, k: int = 10) -> List[Tuple[int, float]]:
         """→ [(doc_id, score)], ranked (score DESC, doc_id ASC); bit-identical
         to bm25_topk_wand / the exhaustive oracle.
 
+        A query is its sorted term codes: _sweep slices each term's whole
+        posting run from the store, so no per-query block view is built.
         After each call ``last_stats`` holds the query's pruning accounting:
         its terms' candidate blocks/postings (``*_total``) vs the blocks the
         kernel scored and their postings (``*_decoded``: the interval sweep
@@ -183,24 +197,17 @@ class LocalSearcher:
         threshold; the exhaustive branch scores all of them). Nothing is
         decoded at query time — the store was decoded at open — so
         "decoded" counts blocks scored."""
-        terms = sorted({t for t in analyze_query(query) if t in self._df})
-        si = self._make_shard_index(terms) if terms and self.n else None
-        if si is None:
+        codes = self._make_shard_index(analyze_query(query))
+        if codes is None:
             self.last_stats = dict(_NO_STATS)
             return []
-        docs, scores = _sweep(si, np.arange(len(si.ns)), k)
-        self.last_stats = {
-            "blocks_total": int(len(si.ns)),
-            "blocks_decoded": len(si.scored),
-            "postings_total": int(si.ns.sum()),
-            "postings_decoded": int(si.ns[si.scored].sum()),
-        }
+        docs, scores = _sweep(self._store, codes, k)
+        self.last_stats = self._store.stats
         return list(zip(from_u64(docs).tolist(), scores.tolist()))
 
     def _make_shard_index(self, terms: List[str]):
-        """The single flattened sweep space for a sorted term list: a view of
-        the store's blocks of those terms (shared with tests that drive
-        _sweep directly, e.g. with theta0)."""
-        rows = [np.arange(self._t_start[t], self._t_end[t])
-                for t in terms if t in self._t_start]
-        return self._store.select(np.concatenate(rows)) if rows else None
+        """A query's terms → their sorted, distinct codes in the store (the
+        sweep's unit; tests drive _sweep with them directly, e.g. with
+        theta0), or None when no term has a live df."""
+        code = self._code
+        return sorted({code[t] for t in terms if t in code}) or None

@@ -119,15 +119,16 @@ def _lucene_idf(df: int, n: int) -> float:
 class _ShardIndex:
     """One shard's candidate blocks, decoded once into a flat posting store:
     per posting its doc ordinal (index into the sorted doclen keys) and its
-    BM25 contribution, block ``bi`` at ``starts[bi]:ends[bi]``; plus the
-    block metadata the sweep prunes on and a dense score buffer."""
+    BM25 contribution, block ``bi`` at ``starts[bi]:ends[bi]`` and term
+    code ``c`` at ``t_post[c]:t_post[c+1]``; plus the block metadata the
+    sweep prunes on and a dense score buffer."""
 
     def __init__(self, post_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
                  tcode_map: Dict[str, int], idf_arr: np.ndarray,
                  avgdl: float, k1: float, b: float):
         dl_u, dl_v, tomb_u, tomb_g = resolve_doclen(dl_pdf)
         tcodes = post_pdf["term"].map(tcode_map).to_numpy(dtype=np.int64)
-        order = np.argsort(tcodes, kind="stable")  # a term's blocks adjacent
+        order = np.argsort(tcodes, kind="stable")  # _init's term-code order
         post_pdf = post_pdf.iloc[order]
         gens = None
         if "seg_gen" in post_pdf.columns:
@@ -160,13 +161,17 @@ class _ShardIndex:
         """The one decode pass, over every block: varint → doc keys →
         owner-generation masking → doc ordinal → BM25 contribution.
 
-        Blocks must come grouped by term code with each term's blocks
-        adjacent, so a term's postings are one slice of the store
-        (decode_run). Contributions are elementwise — the same float
-        operations in the same order for every posting — so no value
+        Blocks must come sorted ascending by term code (``tcodes``, codes
+        indexing ``idf_arr``), so term c's blocks are rows
+        ``t_blk[c]:t_blk[c+1]``, its postings the store slice
+        ``t_post[c]:t_post[c+1]`` and its stored posting count
+        ``t_n[c+1] - t_n[c]``. Contributions are elementwise — the same
+        float operations in the same order for every posting — so no value
         depends on which other blocks share the pass, and the serving,
         distributed and batch paths score bit-identically."""
         doc_u, tf, off = decode_blocks(docs_enc, tfs_enc, ns, min_u)
+        self.t_blk = np.searchsorted(tcodes, np.arange(len(idf_arr) + 1))
+        self.t_n = off[self.t_blk]
         if tomb_u is not None and len(tomb_u):
             # delta-segment masking: drop postings of docs owned by a NEWER
             # generation than their block's (the live version — if any — is
@@ -181,6 +186,7 @@ class _ShardIndex:
                 doc_u, tf = doc_u[keep], tf[keep]
                 off = np.concatenate(([0], np.cumsum(keep)))[off]
         self.starts, self.ends = off[:-1], off[1:]
+        self.t_post = off[self.t_blk]
         self.ords = np.searchsorted(dl_u, doc_u)
         del doc_u
         tf = tf.astype(np.float64)
@@ -209,24 +215,11 @@ class _ShardIndex:
         self.k1 = k1
         self.b = b
         # dense per-doc score buffer, one float64 slot per doc ordinal (index
-        # into dl_u), all zero between accumulations (see _accumulate);
-        # views from select() share it, so one store scores one query at a
-        # time
+        # into dl_u), all zero between accumulations (see _accumulate); every
+        # query of a store shares it, so one store scores one query at a time
         self.acc = np.zeros(len(dl_u))
-        # the blocks the last sweep scored (set by _sweep / _score_all)
-        self.scored = None
-
-    def select(self, rows: np.ndarray) -> "_ShardIndex":
-        """A view of blocks ``rows`` (whole terms, in store order) sharing
-        this store's postings, doclen keys and score buffer — the serving
-        path's per-query index, built with no decode."""
-        view = object.__new__(_ShardIndex)
-        view.__dict__.update(self.__dict__)
-        view.__dict__.pop("ub", None)
-        for name in _BLOCK_FIELDS:
-            setattr(view, name, getattr(self, name)[rows])
-        view.scored = None
-        return view
+        # the last sweep's pruning accounting (set by _sweep)
+        self.stats = None
 
     @cached_property
     def ub(self) -> np.ndarray:
@@ -246,16 +239,10 @@ class _ShardIndex:
         s, e = self.starts[bi], self.ends[bi]
         return self.ords[s:e], self.contrib[s:e]
 
-    def decode_run(self, rows: np.ndarray):
-        """(doc ordinal, contrib) of a run of adjacent blocks of one term —
-        one slice of the store."""
-        s, e = self.starts[rows[0]], self.ends[rows[-1]]
+    def decode_run(self, s: int, e: int):
+        """(doc ordinal, contrib) of a whole term's postings ``s:e`` (its
+        ``t_post`` bounds) — one slice of the store."""
         return self.ords[s:e], self.contrib[s:e]
-
-
-# the per-block arrays select() gathers for a view
-_BLOCK_FIELDS = ("min_u", "max_u", "ns", "tcodes", "max_tf", "min_dl",
-                 "starts", "ends")
 
 
 def _accumulate(o_parts, c_parts, acc):
@@ -305,25 +292,17 @@ def _topk(ords: np.ndarray, scores: np.ndarray, k: int):
     return ords[top], scores[top]
 
 
-def _score_all(si: _ShardIndex, sel: np.ndarray, k: int):
-    """Fully-vectorized exhaustive scoring of the selected blocks — faster
-    than interval pruning when the candidate set is modest or bounds are
-    flat (uniform head-term disjunctions). Bit-identical accumulation: one
-    part per term, added in ascending term order (_accumulate)."""
-    order = np.argsort(si.tcodes[sel], kind="stable")
-    sel_o = sel[order]
-    tc_o = si.tcodes[sel_o]
-    # one decode_run per TERM (contiguous same-tcode run, block order kept by
-    # the stable sort): a term's blocks are adjacent in the store, so its
-    # postings are one slice
-    runs = np.nonzero(np.concatenate(([True], tc_o[1:] != tc_o[:-1])))[0]
-    ends = np.concatenate((runs[1:], [len(sel_o)]))
+def _score_all(si: _ShardIndex, codes, k: int):
+    """Fully-vectorized exhaustive scoring of the terms ``codes`` (sorted,
+    distinct) — faster than interval pruning when the candidate set is
+    modest or bounds are flat (uniform head-term disjunctions).
+    Bit-identical accumulation: one part per term — its whole posting run,
+    one slice of the store — added in ascending term order (_accumulate)."""
     o_parts, c_parts = [], []
-    for a, b in zip(runs, ends):
-        o, contrib = si.decode_run(sel_o[a:b])
+    for c in codes:
+        o, contrib = si.decode_run(si.t_post[c], si.t_post[c + 1])
         o_parts.append(o)
         c_parts.append(contrib)
-    si.scored = sel
     ords, scores = _topk(*_accumulate(o_parts, c_parts, si.acc), k)
     return si.dl_u[ords], scores
 
@@ -349,20 +328,29 @@ _CHUNK_GROWTH = 4
 _MIN_SKIP_FRAC = 0.3
 
 
-def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
-    """Interval-sweep top-k over a subset of blocks (one query's terms).
-    Returns (doc_u uint64[], score float64[]), ≤ k entries, ranked.
+def _sweep(si: _ShardIndex, codes, k: int, theta0: float = -np.inf):
+    """Interval-sweep top-k over the blocks of the terms ``codes`` (one
+    query's term codes, sorted and distinct). Returns (doc_u uint64[],
+    score float64[]), ≤ k entries, ranked, and leaves the query's pruning
+    accounting in ``si.stats``: its terms' blocks and stored postings
+    (``*_total``) and those the kernel scored (``*_decoded``).
 
     ``theta0``: an externally-known lower bound on the global k-th score
     (e.g. from already-swept shards). Intervals bounded below theta0 can
     never contribute a global top-k doc, so they are skipped even before k
     local candidates exist — exactness is preserved because every skipped
     doc's score ≤ its interval bound < theta0 ≤ the global k-th score."""
-    if len(sel) == 0:
-        si.scored = sel
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
-    if int(si.ns[sel].sum()) <= _EXHAUSTIVE_CUTOFF:
-        return _score_all(si, sel, k)
+    t_blk, t_n = si.t_blk, si.t_n
+    blocks = postings = 0
+    for c in codes:  # a query's 1-3 terms: Python ints beat array ops here
+        blocks += int(t_blk[c + 1] - t_blk[c])
+        postings += int(t_n[c + 1] - t_n[c])
+    if postings <= _EXHAUSTIVE_CUTOFF:
+        si.stats = {"blocks_total": blocks, "blocks_decoded": blocks,
+                    "postings_total": postings, "postings_decoded": postings}
+        return _score_all(si, codes, k)
+    # the query's block rows, term-ascending (each term's run in block order)
+    sel = np.concatenate([np.arange(t_blk[c], t_blk[c + 1]) for c in codes])
     min_u, max_u, ms = si.min_u[sel], si.max_u[sel], si.ub[sel]
     tc = si.tcodes[sel]
     points = np.unique(np.concatenate([min_u, max_u + np.uint64(1)]))
@@ -382,7 +370,6 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
     top_ords = np.empty(0, dtype=np.intp)
     top_scores = np.empty(0, dtype=np.float64)
     theta = -np.inf
-    block_order = np.argsort(tc, kind="stable")  # ascending term order
     scored = np.zeros(len(sel), dtype=bool)
     pos = 0
     chunk = _CHUNK0
@@ -417,7 +404,7 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
         # are disjoint doc sets, so they join into one part per term.
         o_parts, c_parts = [], []
         part_t = None
-        for x in block_order:
+        for x in range(len(sel)):
             # metadata reject: block entirely outside this chunk's runs —
             # this is where pruning skips a block's scoring, not just part
             # of it
@@ -450,7 +437,10 @@ def _sweep(si: _ShardIndex, sel: np.ndarray, k: int, theta0: float = -np.inf):
                 theta = top_scores[-1]
         pos += take
         chunk *= _CHUNK_GROWTH
-    si.scored = sel[scored]
+    si.stats = {"blocks_total": blocks,
+                "blocks_decoded": int(np.count_nonzero(scored)),
+                "postings_total": postings,
+                "postings_decoded": int(si.ns[sel[scored]].sum())}
     return si.dl_u[top_ords], top_scores
 
 
@@ -468,7 +458,7 @@ def make_wand_kernel(
                 {"doc_id": "int64", "score": "float64"}
             )
         si = _ShardIndex(post_pdf, dl_pdf, tcode_map, idf_arr, avgdl, k1, b)
-        docs, scores = _sweep(si, np.arange(len(post_pdf)), k)
+        docs, scores = _sweep(si, range(len(idf_arr)), k)
         return pd.DataFrame({"doc_id": from_u64(docs), "score": scores})
 
     return kernel
@@ -487,8 +477,8 @@ def make_wand_batch_kernel(
     terms_sorted = sorted(idf_map)
     tcode_map = {t: i for i, t in enumerate(terms_sorted)}
     idf_arr = np.array([idf_map[t] for t in terms_sorted], dtype=np.float64)
-    q_tcodes = {
-        qid: {tcode_map[t] for t in ts if t in tcode_map}
+    q_codes = {
+        qid: sorted({tcode_map[t] for t in ts if t in tcode_map})
         for qid, ts in query_terms.items()
     }
 
@@ -496,11 +486,10 @@ def make_wand_batch_kernel(
         out_q, out_d, out_s = [], [], []
         if not post_pdf.empty and not dl_pdf.empty:
             si = _ShardIndex(post_pdf, dl_pdf, tcode_map, idf_arr, avgdl, k1, b)
-            for qid, tcset in q_tcodes.items():
-                if not tcset:
+            for qid, codes in q_codes.items():
+                if not codes:
                     continue
-                sel = np.nonzero(np.isin(si.tcodes, list(tcset)))[0]
-                docs, scores = _sweep(si, sel, k)
+                docs, scores = _sweep(si, codes, k)
                 out_q.extend([qid] * len(docs))
                 out_d.extend(from_u64(docs).tolist())
                 out_s.extend(scores.tolist())

@@ -1,9 +1,13 @@
 """LocalSearcher: driver-local serving must be bit-identical to the oracle,
 plus the randomized WAND-vs-oracle fuzz sweep."""
 
+import glob
+import os
 import time
+from collections import Counter
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 
 from importpipeline_spark.index.build import build_logical_index
@@ -126,6 +130,135 @@ def test_all_deleted_index_answers_empty(spark, tmp_path):
         assert bm25_topk_wand(spark, pidx, q, k=5).collect() == []
 
 
+@pytest.fixture(scope="module")
+def delta_served(spark, tmp_path_factory):
+    """A 4-shard index with two update generations and a delete generation.
+    Gen 1 adds two pages: "zzgone"'s only posting and "zzkept"'s. Gen 2
+    recrawls a quarter of the pages with their text cut in half, so the
+    older postings of those docs are masked. Gen 3 deletes 20 pages and the
+    "zzgone" page, so "zzgone" keeps its postings but has no live df."""
+    from pyspark.sql import functions as F
+
+    from importpipeline_spark.index.pagesgen import PAGES_SCHEMA
+    from importpipeline_spark.index.segments import (
+        delete_from_index,
+        update_index,
+    )
+
+    root = str(tmp_path_factory.mktemp("deltaserve"))
+    pages = gen_pages_df(spark, 250, seed=13, partitions=4)
+    write_index(spark, pages, root, n_shards=4)
+    ts = pages.first().warc_ts
+    new = spark.createDataFrame([
+        (f"http://zz.example/{w}", ts, f"{w} the of".encode(), f"{w} the of",
+         "en") for w in ("zzgone", "zzkept")
+    ], PAGES_SCHEMA)
+    update_index(spark, root, new, run_id="g1", input_snapshot="g1",
+                 compact_after=None)
+    recrawl = (
+        pages.where(F.xxhash64("url") % 4 == 0)
+        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 5 HOURS"))
+        .withColumn("text", F.expr("substring(text, 1, int(length(text) / 2))"))
+        .withColumn("html", F.encode("text", "utf-8"))
+    )
+    update_index(spark, root, recrawl, run_id="g2", input_snapshot="g2",
+                 compact_after=None)
+    doomed = pages.orderBy("url").limit(20).select("url").unionByName(
+        spark.createDataFrame([("http://zz.example/zzgone",)], "url string"))
+    pidx = delete_from_index(spark, root, doomed, run_id="g3",
+                             input_snapshot="g3", compact_after=None)
+    assert pidx.stats["delta_gens"] == [1, 2, 3]
+    return root
+
+
+def _posting_counts(root):
+    """Straight from the parquet files → (blocks per term, Σ n per term,
+    live df per term): postings of the base and of every live generation,
+    df of the base terms/ plus every live delta_termdf row, kept where > 0."""
+    from importpipeline_spark.index.store import open_index
+
+    pidx = open_index(root)
+
+    def files(table, base):
+        return sorted(glob.glob(os.path.join(base, "**", "*.parquet"),
+                                recursive=True)) + [
+            f for g in pidx.stats["delta_gens"]
+            for f in sorted(glob.glob(os.path.join(
+                root, table, f"gen={g}", "**", "*.parquet"), recursive=True))]
+
+    blocks, posts, df = Counter(), Counter(), Counter()
+    for f in files("delta_postings", pidx.postings_path):
+        t = pq.read_table(f, columns=["term", "n"]).to_pydict()
+        for term, n in zip(t["term"], t["n"]):
+            blocks[term] += 1
+            posts[term] += n
+    for f in files("delta_termdf", pidx.terms_path):
+        t = pq.read_table(f, columns=["term", "df"]).to_pydict()
+        for term, d in zip(t["term"], t["df"]):
+            df[term] += d
+    return blocks, posts, {t: d for t, d in df.items() if d > 0}
+
+
+def test_last_stats_count_live_terms_postings(delta_served, monkeypatch):
+    """On a delta index, last_stats equals a count made from the postings
+    files: the blocks and Σ n of the query's live-df terms, base plus live
+    generations. Both branches run; k exceeds the corpus, so the forced
+    sweep prunes nothing and scores every block as the exhaustive branch
+    does, with the same answers. A term whose every posting is masked
+    counts nothing and answers []."""
+    from importpipeline_spark.index import wand as wand_mod
+
+    blocks, posts, live = _posting_counts(delta_served)
+    assert blocks["zzgone"] > 0 and "zzgone" not in live
+    queries = sorted(blocks) + ["the zzgone", "zzkept of and", "zzoovterm",
+                                "the zzoovterm"]
+    k = 1000
+    s = LocalSearcher(delta_served)
+
+    def want_stats(q):
+        ts = {t for t in analyze_query(q) if t in live}
+        b, p = sum(blocks[t] for t in ts), sum(posts[t] for t in ts)
+        return {"blocks_total": b, "blocks_decoded": b,
+                "postings_total": p, "postings_decoded": p}
+
+    answers = {}
+    for q in queries:
+        answers[q] = s.search(q, k)
+        assert s.last_stats == want_stats(q), q
+        assert bool(answers[q]) == (want_stats(q)["blocks_total"] > 0), q
+    assert answers["zzgone"] == []
+    monkeypatch.setattr(wand_mod, "_EXHAUSTIVE_CUTOFF", 0)
+    for q in queries:
+        assert s.search(q, k) == answers[q], q
+        assert s.last_stats == want_stats(q), q
+
+
+def test_batch_kernel_matches_searcher_on_delta_index(spark, delta_served):
+    """bm25_topk_wand_batch over update and delete generations equals
+    LocalSearcher for every query: single terms, a term in one shard only
+    next to one in every shard (an empty code run inside most shards), a
+    fully masked term and an OOV term."""
+    from importpipeline_spark.index.store import open_index
+    from importpipeline_spark.index.wand import bm25_topk_wand_batch
+
+    blocks, _, live = _posting_counts(delta_served)
+    assert blocks["zzkept"] == 1  # one block: one shard holds it
+    by_df = sorted(live, key=lambda t: (live[t], t))
+    rare, mid = by_df[:3], by_df[len(by_df) // 2]
+    queries = ["the", "zzkept", "zzkept the", f"zzkept {mid}",
+               f"the of {rare[0]}", "zzgone", "zzgone of", "zzoovterm",
+               f"zzoovterm {mid}", *rare, mid, " ".join(rare)]
+    rows = bm25_topk_wand_batch(spark, open_index(delta_served),
+                                list(enumerate(queries)), k=10).collect()
+    got = {}
+    for r in sorted(rows, key=lambda r: (r.query_id, r.rank)):
+        got.setdefault(r.query_id, []).append((r.doc_id, r.score))
+    s = LocalSearcher(delta_served)
+    for qid, q in enumerate(queries):
+        assert got.get(qid, []) == s.search(q, k=10), q
+    assert got.get(queries.index("zzkept"))
+
+
 def test_local_serving_latency(served):
     searcher, _ = served
     searcher.search("the of", k=10)  # warm
@@ -202,26 +335,23 @@ def test_fuzz_sweep_branch_vs_oracle(spark, tmp_path_factory, monkeypatch):
 
     # theta0 exactness: skipping intervals bounded below an external k-th
     # score bound must not change the result set it can still contribute to
-    import numpy as np
-
     from importpipeline_spark.index.wand import _sweep
 
     for q in ["the of", "the ebakaba8 equababa1", "der die und"]:
-        terms = sorted({t for t in analyze_query(q) if t in searcher._df})
-        si = searcher._make_shard_index(terms)
-        assert si is not None
-        sel = np.arange(len(si.ns))
-        base_d, base_s = _sweep(si, sel, 10)
+        codes = searcher._make_shard_index(analyze_query(q))
+        assert codes is not None
+        si = searcher._store
+        base_d, base_s = _sweep(si, codes, 10)
         assert len(base_s) == 10
         # theta0 = exact k-th score → identical output
-        d2, s2 = _sweep(si, sel, 10, theta0=float(base_s[-1]))
+        d2, s2 = _sweep(si, codes, 10, theta0=float(base_s[-1]))
         assert d2.tolist() == base_d.tolist()
         assert s2.tolist() == base_s.tolist()
         # theta0 between ranks: every doc scoring ≥ theta0 must survive, in
         # identical order with identical scores (docs below theta0 may or may
         # not appear — their intervals are prunable, that's the point)
         theta_mid = float(base_s[4])
-        d4, s4 = _sweep(si, sel, 10, theta0=theta_mid)
+        d4, s4 = _sweep(si, codes, 10, theta0=theta_mid)
         keep = int((base_s >= theta_mid).sum())
         assert d4[:keep].tolist() == base_d[:keep].tolist()
         assert s4[:keep].tolist() == base_s[:keep].tolist()
