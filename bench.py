@@ -348,17 +348,16 @@ def scaling_resumable(n_docs: int, out_root: str = "/tmp/bench_scaling_res",
 
 Same protocol (interleaved, per-level min, concurrent raw-CPU ceiling), same
 input ({n_docs} docs, 64 shards), but timing `build_index_resumable` — the
-per-segment-lineage crash-safe path (phase A fused+overlapped, phase B =
-batches of 2×parallelism segments per cogroup job):
+per-segment-lineage crash-safe path (one staged query: map-side extract,
+one shard exchange, one kernel task per shard writing all of its files):
 
 | pair (N → 4N) | build sec | docs/sec | raw efficiency | raw-CPU ceiling | ceiling-normalized |
 |---|---|---|---|---|---|
 | local[{pair[0]}] → local[{pair[1]}] | {r0['build_sec']} → {r1['build_sec']} | {r0['docs_per_sec']} → {r1['docs_per_sec']} | **{m['eff']:.3f}** | {m['calib']['ceiling']:.3f} | {m['eff_norm']:.3f} |
 
-The crash-safe path scales with cores because every phase is either a
-K-parallel cogroup batch or a concurrently-submitted write; its lineage
-commits are per-batch driver-side renames (O(n_shards) file ops, no Spark
-barrier).
+The crash-safe path scales with cores because its extract and its shard
+kernels run as parallel tasks; its lineage commits are driver-side renames
+(O(n_shards) file ops, no Spark barrier).
 
 Round-4 path changes folded the per-batch counter job and the dictionary's
 full posting re-read into the encode pass itself (sidecar counters + cached

@@ -5,8 +5,9 @@ record fields and writes into a destination field; nested sub-categories are
 evaluated on match (/root/reference/ImportPipeline/Categorizer/Catergory.cs:32-141).
 Selectors: string equality/regex (CategorySelectorString.cs), int/double
 exact + ranges, ``or``/``and``/``not`` combinators
-(Categorizer/CatergorySelector.cs:65-107), array fields match if any element
-matches (CatergorySelector.cs:114-121).
+(Categorizer/CatergorySelector.cs:65-107) — equality and the combinators
+are plain Column operators (``==``, ``|``, ``&``, ``~``) — and array fields
+match if any element matches (CatergorySelector.cs:114-121).
 
 Spark mapping: selectors are Column predicates (``F.exists`` for arrays);
 category application is one chained ``F.when`` expression per collection —
@@ -24,11 +25,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 
 # ---- selectors ----
-
-def sel_string_eq(col: str, value: str, case_insensitive: bool = True) -> Column:
-    c = F.col(col)
-    return F.lower(c) == value.lower() if case_insensitive else c == value
-
 
 def sel_regex(col: str, pattern: str) -> Column:
     return F.col(col).rlike(pattern)
@@ -48,24 +44,6 @@ def sel_range(col: str, lo=None, hi=None) -> Column:
 def sel_any_element(arr_col: str, pred_fn) -> Column:
     """Array field: match if any element matches (CatergorySelector.cs:114-121)."""
     return F.exists(F.col(arr_col), pred_fn)
-
-
-def sel_and(*preds: Column) -> Column:
-    out = preds[0]
-    for p in preds[1:]:
-        out = out & p
-    return out
-
-
-def sel_or(*preds: Column) -> Column:
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
-
-
-def sel_not(pred: Column) -> Column:
-    return ~pred
 
 
 # ---- categories ----

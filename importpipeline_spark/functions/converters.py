@@ -128,10 +128,6 @@ def to_double(c: Column, group_sep: str = ",", decimal_sep: str = ".") -> Column
     return cleaned.cast("double")
 
 
-def to_string(c: Column) -> Column:
-    return c.cast("string")
-
-
 # ---- url/json ----
 
 def url_encode(c: Column) -> Column:

@@ -523,10 +523,3 @@ def get_abstract_from_text(
     if best_sentence < 0:
         best_sentence = (max_length - 1) if best_word < 0 else best_word
     return text[:best_sentence] + " …"
-
-
-def get_abstract(html: str, max_length: int, delta: int) -> Optional[str]:
-    """GetAbstract — HtmlProcessor.cs:267-270 (extract truncated, then cut)."""
-    return get_abstract_from_text(
-        extract_text(html, max_length + delta), max_length, delta
-    )

@@ -245,12 +245,13 @@ def build_docs_and_tf_safe(pages: DataFrame,
     """The build's extract pass: extract_batch over each Arrow batch of
     ``pages`` (one JVM↔Python round-trip, not three chained UDFs); doc_id
     is added JVM-side. Output: url, warc_ts, lang, text, doc_len,
-    tf_pairs, error, doc_id — one row per page; tf is a JVM-side explode
-    of tf_pairs (store.tf_from_pairs), and split_quarantine separates the
-    good rows from the error records. An update's staging kernel calls
-    extract_batch itself, after its existence probe. Stored docs are
-    never re-extracted: a fold or a delta staging re-tokenizes their text
-    in its encode task (store._tf_of_text, store._stage_delta).
+    tf_pairs, error, doc_id — one row per page, error rows included; the
+    build splits tf_pairs into term and tf arrays JVM-side and its shard
+    kernel quarantines the error rows (segments._build). An update's
+    staging kernel calls extract_batch itself, after its existence probe.
+    Stored docs are never re-extracted: a fold or a delta staging
+    re-tokenizes their text in its encode task (store._tf_of_text,
+    store._stage_delta).
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -261,21 +262,6 @@ def build_docs_and_tf_safe(pages: DataFrame,
     return pages.mapInPandas(run, schema=_FUSED_SAFE_SCHEMA).withColumn(
         "doc_id", doc_id_expr(doc_id_mode)
     )
-
-
-def split_quarantine(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(docs, errors) of build_docs_and_tf_safe's output, or of any
-    relation derived from it that keeps url + error: docs = the good rows
-    without ``error``; errors = quarantine records (url, stage, error, ts),
-    the same fields as build_docs_safe's."""
-    errors = fused.where(F.col("error").isNotNull()).select(
-        "url",
-        F.lit("extract").alias("stage"),
-        F.col("error").alias("error"),
-        F.current_timestamp().alias("ts"),
-    )
-    docs = fused.where(F.col("error").isNull()).drop("error")
-    return docs, errors
 
 
 def build_doclen(docs: DataFrame) -> DataFrame:

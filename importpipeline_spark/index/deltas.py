@@ -73,7 +73,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from concurrent.futures import wait
 from uuid import uuid4
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -82,13 +81,6 @@ from .build import doc_id_expr, shard_of
 from .store import GONE, NEW, Staging, encode_postings
 
 DELTA_TABLES = ("delta_postings", "delta_doclen", "delta_termdf")
-
-
-def join_all(futs) -> list:
-    """Results of ``futs`` once every one has settled; the first failure
-    is raised only then, so no job is left running behind it."""
-    wait(futs)
-    return [f.result() for f in futs]
 
 
 def gen_path(root: str, table: str, gen: int) -> str:
@@ -204,10 +196,9 @@ def _stage(spark: SparkSession, root: str, rows: DataFrame,
     os.makedirs(staging_path(root, "delta_termdf"))
     n_parts = max(2, min(n_shards, spark.sparkContext.defaultParallelism))
     report = encode_postings(
-        None, rows.repartition(n_parts, "shard"),
-        staging=Staging(staging_root(root), docs_tmp,
-                        os.path.join(root, "docs"),
-                        os.path.join(root, "errors", f"part-{uuid4().hex}")),
+        rows.repartition(n_parts, "shard"),
+        Staging(staging_root(root), docs_tmp, os.path.join(root, "docs"),
+                os.path.join(root, "errors", f"part-{uuid4().hex}")),
     ).collect()
     return (sorted(r.shard for r in report if r.changed),
             sum(r.n_bad for r in report))

@@ -10,28 +10,23 @@ gate Datasources/StreamDatasourceBase.cs:110-134) as the update kernel's
 per-shard probe (store._probe; classify_snapshot is its oracle).
 
 Build shape (the one build — store.write_index is this on an empty root):
-  phase A (once per run): ONE fused Arrow pass (extract + tokenize + per-doc
-  term counts, bad pages quarantined) whose output, error rows included, is
-  repartitioned by doc-range shard and persisted — the build's only corpus
-  exchange. docs, doclen, errors and the per-shard stats derive from that
-  cache with no further exchange, as concurrent jobs beside phase B;
-  stats.json, written once they finish, marks phase A done.
-  phase B (resumable loop): segments (= doc-range shards) are encoded in
-  BATCHES of ``batch_size`` per Spark job — one cogroup keyed by shard over
-  the same cache (no exchange), so a batch of K segments runs as K parallel
-  tasks, while each segment still commits its postings and lineage row
-  (resume granularity stays per-segment). A restarted run reads
-  the lineage, skips finished segments, and folds only the missing ones
-  from the stored docs' text (_fold: one job per batch, each task reading
-  and re-tokenizing its own shard's docs) — final index bit-identical to
-  an uninterrupted run, including kills mid-batch (files land before
-  lineage; an un-lineaged segment is deterministically re-encoded on
-  resume). Verified in tests. A crash re-runs phase A only if one of its
-  jobs had not succeeded, or without a docs table (``write_docs=False``).
-  Finally the dictionary derives from the committed postings' block counts
-  (df = Σ n) — on every run, including a resume with nothing left to
-  encode. The build's Spark jobs are described ``build: extract`` (phase
-  A), ``build: encode`` (the batches) and ``build: dictionary``.
+ONE staged query per run, the shape of the update's staging and of the
+fold. pages get their doc_id and doc-range shard JVM-side; only the
+shards left to do pass (every shard on a fresh build, the unfinished
+ones on a resume); the extract pass (build.build_docs_and_tf_safe) runs
+map-side; the rows, quarantined pages included, are repartitioned by
+shard — the build's only corpus exchange — and one kernel task per shard
+(store.encode_postings given a store.Build) writes the shard's postings,
+doclen and docs parts, counters and errors/ part (_build). Then each
+segment (= doc-range shard) is swapped in and lineage-committed
+(_commit_segment): files land before lineage, so a kill anywhere leaves
+finished segments skipped and the rest deterministically re-extracted
+on resume — the final index row-identical to an uninterrupted run
+(verified in tests). Every run then derives the dictionary from the
+committed postings' block counts (df = Σ n), including a resume with
+nothing left to encode, and writes stats.json last from the committed
+segments (the build's commit point). The build's Spark jobs are
+described ``build: encode`` (the staged query) and ``build: dictionary``.
 
 Errors are quarantined per record (mirrors ESEndpoint.SaveError,
 Endpoints/ESEndpoint.cs:457-471) into <root>/errors/.
@@ -43,19 +38,17 @@ import glob
 import json
 import os
 import shutil
-import sys
 from contextlib import contextmanager
 from datetime import datetime, timezone
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.util import inheritable_thread_target
 
 from . import deltas as _deltas
-from .build import (build_docs_and_tf_safe, doc_id_expr, shard_of,
-                    split_quarantine)
+from .build import build_docs_and_tf_safe, doc_id_expr, shard_of
 from .store import (
+    Build,
     Fold,
     PhysicalIndex,
     _derive_dictionary,
@@ -63,13 +56,11 @@ from .store import (
     encode_postings,
     index_stats,
     read_stats,
-    shard_totals,
-    tf_from_pairs,
     totals_fields,
     write_stats,
 )
 
-# where an encode job (build batch, resume or compaction fold) writes its
+# where an encode job (a build or a compaction's fold) writes its
 # segments' files before each segment's commit swaps them into place
 _ENCODE_TMP = "encode_tmp"
 
@@ -103,23 +94,27 @@ def _seg_dir(root: str) -> str:
     return os.path.join(root, "segments")
 
 
-def _read_counters(tmp: str, seg: int, fold: bool) -> dict:
-    """Segment ``seg``'s counters as its encode task wrote them under
-    ``tmp``. A cogroup encode runs no task for a doc range without docs:
-    there a missing file means zeros, unless the segment has postings.
-    Otherwise (a fold task writes them for every shard) it raises: the
-    executors wrote where the driver cannot see."""
-    p = os.path.join(tmp, "counters", f"shard_{seg}.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    if fold or glob.glob(os.path.join(tmp, "postings", f"shard={seg}",
-                                      "*.parquet")):
-        raise RuntimeError(
-            f"segment {seg} has no counters at {p}; the index root must be "
-            "a filesystem shared by driver and executors")
-    return dict.fromkeys(
-        ("n_docs", "total_tokens", "blocks", "postings", "terms"), 0)
+def _read_counters(tmp: str, shards, report) -> dict:
+    """shard → counters of ``shards`` as their encode tasks wrote them
+    under ``tmp``. ``report`` holds the row of every task that ran: a
+    build runs none for a doc range without pages, whose counters are
+    zeros. A task's missing file raises: the executors wrote where the
+    driver cannot see."""
+    ran = {int(r.shard) for r in report}
+    out = {}
+    for s in shards:
+        p = os.path.join(tmp, "counters", f"shard_{s}.json")
+        if s not in ran:
+            out[s] = dict.fromkeys(
+                ("n_docs", "total_tokens", "blocks", "postings", "terms"), 0)
+        elif os.path.exists(p):
+            with open(p) as f:
+                out[s] = json.load(f)
+        else:
+            raise RuntimeError(
+                f"segment {s} has no counters at {p}; the index root must "
+                "be a filesystem shared by driver and executors")
+    return out
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
@@ -133,25 +128,28 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
     return spark.read.schema(SEGMENTS_SCHEMA).json(p)
 
 
+def _lineage_rows(root: str) -> list[dict]:
+    p = _seg_dir(root)
+    if not os.path.exists(p):
+        return []
+    rows = []
+    for f in os.listdir(p):
+        if f.endswith(".json"):
+            with open(os.path.join(p, f)) as fh:
+                rows.append(json.load(fh))
+    return rows
+
+
 def _finished_segments(root: str, input_snapshot: str | None = None) -> set[int]:
     """Segment ids whose lineage row says status=ok — restricted to rows built
     from the SAME input_snapshot when one is given. A lineage row from a
     different snapshot must not be treated as done: resuming over different
     input would otherwise silently produce a mixed stale/fresh index."""
-    p = _seg_dir(root)
-    done = set()
-    if not os.path.exists(p):
-        return done
-    for f in os.listdir(p):
-        if f.endswith(".json"):
-            with open(os.path.join(p, f)) as fh:
-                row = json.load(fh)
-            if row.get("status") != "ok":
-                continue
-            if input_snapshot is not None and row.get("input_snapshot") != input_snapshot:
-                continue
-            done.add(int(row["segment_id"]))
-    return done
+    return {
+        int(row["segment_id"]) for row in _lineage_rows(root)
+        if row.get("status") == "ok" and input_snapshot in (
+            None, row.get("input_snapshot"))
+    }
 
 
 def _append_lineage(root: str, row: dict) -> None:
@@ -166,13 +164,15 @@ def _append_lineage(root: str, row: dict) -> None:
 
 
 def _commit_segment(root: str, seg: int, tables, m: dict, run_id: str,
-                    input_snapshot: str, started: str, **metrics) -> None:
-    """The one segment commit (build batches, resume, compaction): move
-    ``seg``'s shard dir of each of ``tables`` from _ENCODE_TMP over the
-    live one (a shard without data gets an empty dir) FIRST, then write
-    its lineage row with the encode's counters ``m`` and any extra
-    ``metrics`` — a kill between the two just re-encodes the segment
-    (deterministic, so the bytes are identical)."""
+                    input_snapshot: str, started: str,
+                    doc_id_mode: str | None = None, **metrics) -> None:
+    """The one segment commit (build, resume, compaction): move ``seg``'s
+    shard dir of each of ``tables`` from _ENCODE_TMP over the live one (a
+    shard without data gets an empty dir) FIRST, then write its lineage
+    row with the encode's counters ``m``, any extra ``metrics`` and, from
+    a build, the ``doc_id_mode`` its ids derive from — a kill between the
+    two just re-encodes the segment (deterministic, so the rows are
+    identical)."""
     for table in tables:
         src = os.path.join(root, _ENCODE_TMP, table, f"shard={seg}")
         dst = os.path.join(root, table, f"shard={seg}")
@@ -189,6 +189,7 @@ def _commit_segment(root: str, seg: int, tables, m: dict, run_id: str,
         # ImportReport.cs:92-209)
         "metrics": {"blocks": m["blocks"], "distinct_terms": m["terms"],
                     **metrics},
+        **({"doc_id_mode": doc_id_mode} if doc_id_mode else {}),
     })
 
 
@@ -196,8 +197,8 @@ def _fold(spark, root: str, shards, want: dict) -> dict:
     """Re-encode ``shards`` from their stored docs in ONE Spark job with
     no exchange: one task per shard (store.encode_postings given a
     store.Fold) reads its own docs/shard=N with pyarrow, re-tokenizes it
-    and writes under _ENCODE_TMP its postings (through Spark's writer),
-    its doc_id-sorted doclen part and its counters.
+    and writes under _ENCODE_TMP its postings and doc_id-sorted doclen
+    parts and its counters.
     Returns shard → counters, each checked against ``want`` (shard_stats
     subtotals; an emptied shard is absent there): a mismatch, or a missing
     counters or doclen file, raises before anything is swapped."""
@@ -206,13 +207,11 @@ def _fold(spark, root: str, shards, want: dict) -> dict:
     ids = spark.range(len(shards), numPartitions=len(shards)).select(
         F.element_at(F.array(*map(F.lit, shards)),
                      F.col("id").cast("int") + 1).alias("shard"))
-    encode_postings(None, ids, os.path.join(tmp, "postings"),
-                    os.path.join(tmp, "counters"),
-                    Fold(os.path.join(root, "docs"),
-                         os.path.join(tmp, "doclen")))
-    out = {}
+    report = encode_postings(
+        ids, Fold(os.path.join(root, "docs"), tmp)).collect()
+    out = _read_counters(tmp, shards, report)
     for s in shards:
-        m = out[s] = _read_counters(tmp, s, fold=True)
+        m = out[s]
         if not os.path.exists(os.path.join(
                 tmp, "doclen", f"shard={s}", "part-0.parquet")):
             raise RuntimeError(f"segment {s} has no doclen part under {tmp}")
@@ -224,28 +223,74 @@ def _fold(spark, root: str, shards, want: dict) -> dict:
     return out
 
 
-def _sharded_fused(pages: DataFrame, n_shards: int, doc_id_mode: str,
-                   write_docs: bool):
-    """The build's one corpus exchange: the fused kernel's output, error
-    rows included, hash-repartitioned by doc-range shard and persisted.
-    Returns ``(sharded, docs, errors)``: the cache (the caller unpersists
-    it) and its good rows / quarantine records (build.split_quarantine).
-    Every fresh-run output derives from the cache with no further exchange:
-    the docs/doclen/errors writes and the stats run over its partitioning,
-    and each batch's cogroup sides inherit HashPartitioning(shard) so their
-    exchanges are elided (pinned in tests/test_plans.py). With
-    ``write_docs=False`` only the skinny projection is cached — the text
-    never shuffles."""
-    fused = build_docs_and_tf_safe(pages, doc_id_mode)
-    if not write_docs:
-        fused = fused.select("url", "doc_id", "doc_len", "tf_pairs", "error")
-    sharded = (
-        fused.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
-        .repartition(n_shards, "shard")
-        .persist()
-    )
-    docs, errors = split_quarantine(sharded)
-    return sharded, docs, errors
+def _build(spark, pages: DataFrame, root: str, todo, n_shards: int,
+           doc_id_mode: str, write_docs: bool) -> dict:
+    """Encode the ``todo`` shards of ``pages`` in ONE staged query: the
+    shard filter runs JVM-side before the extract pass, so only their
+    pages are extracted; the extracted rows — quarantined pages included,
+    the text only with ``write_docs`` — are repartitioned by shard (an
+    explicit count, which AQE does not coalesce), and one kernel task per
+    shard (store.encode_postings given a store.Build) writes under
+    _ENCODE_TMP the shard's postings, doclen and docs parts and counters,
+    and its quarantined pages as errors/part-build-<shard>.parquet.
+    Returns shard → counters."""
+    tmp = os.path.join(root, _ENCODE_TMP)
+    shutil.rmtree(tmp, ignore_errors=True)
+    fused = build_docs_and_tf_safe(
+        pages.where(shard_of(doc_id_expr(doc_id_mode), n_shards).isin(todo)),
+        doc_id_mode)
+    # a page without text has no tf_pairs: it gets no terms
+    pairs = F.coalesce("tf_pairs", F.array())
+    cols = [shard_of(F.col("doc_id"), n_shards).alias("shard"), "doc_id",
+            "url", "doc_len", "error", pairs.getField("term").alias("terms"),
+            pairs.getField("tf").alias("tfs")]
+    if write_docs:
+        cols += [F.unix_micros("warc_ts").alias("warc_us"), "lang", "text"]
+    report = encode_postings(
+        fused.select(*cols).repartition(n_shards, "shard"),
+        Build(tmp, os.path.join(root, "errors", "part-build"), write_docs),
+    ).collect()
+    return _read_counters(tmp, todo, report)
+
+
+def _committed_shard_stats(root: str, n_shards: int) -> dict:
+    """shard → (n_docs, total_tokens) of the committed segments, from
+    their doclen parts read with pyarrow (no Spark job); a shard without
+    docs is absent, as stats.json's shard_stats leave it out."""
+    out = {}
+    for s in range(n_shards):
+        n = t = 0
+        for f in glob.glob(os.path.join(root, "doclen", f"shard={s}",
+                                        "*.parquet")):
+            dl = pq.read_table(f, columns=["doc_len"])["doc_len"]
+            n, t = n + len(dl), t + (pc.sum(dl).as_py() or 0)
+        if n:
+            out[s] = (n, t)
+    return out
+
+
+def _resumable_stats(root: str, input_snapshot: str,
+                     doc_id_mode: str) -> dict | None:
+    """The stats.json of a build that already finished at ``root``, or
+    None. A resume must continue the same build: ValueError when that
+    stats.json — or, before it lands, a committed segment's lineage row —
+    records another input_snapshot or doc_id_mode (resuming over other
+    input or other ids would mix stale and fresh segments)."""
+    stats = (read_stats(root)
+             if os.path.exists(os.path.join(root, "stats.json")) else None)
+    for rec in [stats] if stats else _lineage_rows(root):
+        if rec.get("input_snapshot") != input_snapshot:
+            raise ValueError(
+                f"index at {root} was built from input_snapshot="
+                f"{rec.get('input_snapshot')!r}, not {input_snapshot!r}; "
+                "use update_index for incremental changes or a fresh root"
+            )
+        if rec.get("doc_id_mode", doc_id_mode) != doc_id_mode:
+            raise ValueError(
+                f"index at {root} was built with doc_id_mode="
+                f"{rec['doc_id_mode']!r}, not {doc_id_mode!r}"
+            )
+    return stats
 
 
 def build_index_resumable(
@@ -256,193 +301,52 @@ def build_index_resumable(
     run_id: str = "run1",
     input_snapshot: str = "snap1",
     fail_after_segment: int | None = None,
-    batch_size: int | None = None,
     doc_id_mode: str = "hash",
     write_docs: bool = True,
 ) -> PhysicalIndex:
-    """Segmented, resumable physical index build.
+    """Segmented, resumable physical index build (the module docstring's
+    Build shape).
 
-    ``fail_after_segment`` injects a crash between segment commits (tests
-    only; with batching this exercises the mid-batch kill window — some of a
-    batch's segments lineage-committed, the rest not).
-    ``batch_size`` = segments encoded per Spark job (default: two per core
-    of the session's defaultParallelism); each job runs its batch as
-    parallel per-shard tasks. Re-invoking with the same root resumes: phase
-    A is recomputed only if its outputs are missing; finished segments
-    (lineage status=ok for the same input_snapshot) are skipped.
+    ``fail_after_segment`` injects a crash right after the commit of the
+    segment at that (0-based) position among those left to do (tests only:
+    some segments lineage-committed, the rest encoded but not swapped in). Re-invoking with the same root resumes:
+    finished segments (lineage status=ok for the same input_snapshot) are
+    skipped, and only the others' pages are extracted again; a root built
+    from another input_snapshot or doc_id_mode is refused (ValueError).
     ``write_docs=False`` skips the docs table (a serving-only index; it
-    cannot take updates, and a resume re-runs phase A).
+    cannot take updates).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     os.makedirs(root, exist_ok=True)
-    docs_path = os.path.join(root, "docs")
-    phase_a_done = (os.path.exists(os.path.join(root, "stats.json"))
-                    and os.path.exists(docs_path))
-    stats = None
-    if phase_a_done:
-        stats = read_stats(root)
-        if stats.get("input_snapshot") != input_snapshot:
-            raise ValueError(
-                f"index at {root} was built from input_snapshot="
-                f"{stats.get('input_snapshot')!r}, not {input_snapshot!r}; "
-                "use update_index for incremental changes or a fresh root"
-            )
-        if stats["doc_id_mode"] != doc_id_mode:
-            raise ValueError(
-                f"index at {root} was built with doc_id_mode="
-                f"{stats['doc_id_mode']!r}, not {doc_id_mode!r}"
-            )
-
-    sharded = None
-    pool = None
-    phase_a_futures = None
-    if not phase_a_done:
-        sharded, docs, errors = _sharded_fused(pages, n_shards, doc_id_mode,
-                                               write_docs)
-        # phase B's encode sides: tf is a JVM explode of the cached tf_pairs
-        # (no second Python pass; cheaper per batch than caching the
-        # exploded relation)
-        tf = tf_from_pairs(docs)
-        dl = docs.select("shard", "doc_id", "doc_len")
-
-        # the phase-A outputs are independent jobs over the cache AND
-        # independent of phase B's posting batches: submit them
-        # concurrently (job submission is thread-safe; the exchange's map
-        # stage runs once and is shared) and only JOIN them after the batch
-        # loop. stats.json — the phase-A-done marker — is written last; a
-        # crash before it simply reruns phase A on resume, while
-        # already-lineaged segments stay skipped.
-        def _w_docs():
-            # docs/shard=N/, so later update/delete merges stage per shard
-            # (COW hard links for untouched shards)
-            (
-                docs.drop("tf_pairs")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(docs_path)
-            )
-
-        def _w_errors() -> int:
-            errors.write.mode("overwrite").parquet(os.path.join(root, "errors"))
-            # run-level error counter (ImportReport.cs:92-209 'errors') of
-            # the quarantine just written
-            return _count_error_urls(root)
-
-        def _w_doclen():
-            (
-                # the writer's own sort by the partition column replaces
-                # a doc_id-only sort: lead with shard so the files keep it
-                dl.sortWithinPartitions("shard", "doc_id")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(os.path.join(root, "doclen"))
-            )
-
-        # shard totals and the error count first: _finalize_phase_a reads
-        # them by position
-        pool = ThreadPoolExecutor(max_workers=4)
-
-        def _extract(fn, *args):
-            return pool.submit(_phase(spark, "build", "extract", fn, *args))
-
-        phase_a_futures = [
-            _extract(shard_totals, dl),
-            _extract(_w_errors),
-            _extract(_w_doclen),
-        ] + ([_extract(_w_docs)] if write_docs else [])
-
-    tmp = os.path.join(root, _ENCODE_TMP)
-
-    def _finalize_phase_a(block: bool) -> dict | None:
-        """Join the concurrent phase-A jobs and write stats.json (the
-        phase-A-done marker). With block=False, only finalizes if every
-        future already finished — called between batches so the marker lands
-        as early as possible (a crash after it never re-extracts on resume).
-        """
-        if not (block or all(f.done() for f in phase_a_futures)):
-            return None
-        try:
-            _deltas.join_all(phase_a_futures)
-        finally:
-            pool.shutdown()
-        s = index_stats(
-            phase_a_futures[0].result(), n_shards, doc_id_mode,
-            run_id=run_id,
-            input_snapshot=input_snapshot,
-            n_errors=phase_a_futures[1].result(),
+    stats = _resumable_stats(root, input_snapshot, doc_id_mode)
+    done = _finished_segments(root, input_snapshot)
+    todo = [s for s in range(n_shards) if s not in done]
+    if todo:
+        started = datetime.now(timezone.utc).isoformat()
+        with _described(spark, "build: encode"):
+            counters = _build(spark, pages, root, todo, n_shards,
+                              doc_id_mode, write_docs)
+        tables = ["postings", "doclen"] + (["docs"] if write_docs else [])
+        for pos, seg in enumerate(todo):
+            _commit_segment(root, seg, tables, counters[seg], run_id,
+                            input_snapshot, started, doc_id_mode)
+            if fail_after_segment is not None and pos >= fail_after_segment:
+                raise RuntimeError(f"injected failure after segment {seg}")
+        shutil.rmtree(os.path.join(root, _ENCODE_TMP), ignore_errors=True)
+    # every segment is committed: the dictionary derives from their
+    # postings (also on a resume with nothing left to encode)
+    with _described(spark, "build: dictionary"):
+        _derive_dictionary(spark, root, os.path.join(root, "terms"))
+    if stats is None or todo:
+        # the build's commit point, written last (a finished build's
+        # stats.json, which updates may have moved on since, stays): the
+        # run-level error counter (ImportReport.cs:92-209 'errors') counts
+        # the quarantine
+        stats = index_stats(
+            _committed_shard_stats(root, n_shards), n_shards, doc_id_mode,
+            run_id=run_id, input_snapshot=input_snapshot,
+            n_errors=_count_error_urls(root),
         )
-        write_stats(root, s)
-        return s
-
-    # EVERYTHING phase-B runs inside one guard: any exit, success or
-    # failure, first joins the concurrent phase-A futures (a caller that
-    # immediately resumes must not race still-running background writes)
-    # and releases the cache.
-    pos = 0
-    try:
-        # phase B: per-segment postings (segment == doc-range shard); only
-        # segments recorded ok FOR THIS INPUT SNAPSHOT count as finished
-        done = _finished_segments(root, input_snapshot)
-        todo = [s for s in range(n_shards) if s not in done]
-        if batch_size is None:
-            # two task waves per batch job: keeps every core busy with
-            # straggler absorption while halving the commit barriers
-            batch_size = max(1, 2 * spark.sparkContext.defaultParallelism)
-        shutil.rmtree(tmp, ignore_errors=True)
-        for start in range(0, len(todo), batch_size):
-            batch = todo[start:start + batch_size]
-            started = datetime.now(timezone.utc).isoformat()
-            # ONE encode job for the whole batch, its K segments as K
-            # parallel tasks that also write their counters: a fresh run
-            # cogroups the phase-A cache, a resume folds stored docs
-            with _described(spark, "build: encode"):
-                if sharded is None:
-                    counters = _fold(spark, root, batch, stats["shard_stats"])
-                    tables = ["postings", "doclen"]
-                else:
-                    encode_postings(
-                        tf.where(F.col("shard").isin(batch)),
-                        dl.where(F.col("shard").isin(batch)),
-                        os.path.join(tmp, "postings"),
-                        counters_dir=os.path.join(tmp, "counters"),
-                    )
-                    counters = {s: _read_counters(tmp, s, fold=False)
-                                for s in batch}
-                    tables = ["postings"]
-            for seg in batch:
-                _commit_segment(root, seg, tables, counters[seg], run_id,
-                                input_snapshot, started)
-                if fail_after_segment is not None and pos >= fail_after_segment:
-                    raise RuntimeError(f"injected failure after segment {seg}")
-                pos += 1
-            if stats is None:
-                stats = _finalize_phase_a(block=False)
-        shutil.rmtree(tmp, ignore_errors=True)
-        # every segment is committed: the dictionary derives from their
-        # postings (also on a resume with nothing left to encode)
-        with _described(spark, "build: dictionary"):
-            _derive_dictionary(spark, root, os.path.join(root, "terms"))
-    finally:
-        # join the concurrent phase-A jobs BEFORE leaving (even on the
-        # crash path: a caller that immediately resumes must not race
-        # still-running background writes), then release the cache —
-        # crash/resume cycles must not accumulate pinned corpus copies
-        if stats is None and phase_a_futures is not None:
-            if sys.exc_info()[1] is not None:
-                # an exception is in flight: join quietly (shutdown waits
-                # for every future) so it propagates unmasked. Phase A is
-                # still marked done when all of its jobs succeeded, so
-                # the resume folds the missing segments from docs/ instead
-                # of re-extracting; otherwise phase A reruns
-                pool.shutdown()
-                if not any(f.exception() for f in phase_a_futures):
-                    _finalize_phase_a(block=True)
-            else:
-                stats = _finalize_phase_a(block=True)
-        if sharded is not None:
-            sharded.unpersist()
-
+        write_stats(root, stats)
     return PhysicalIndex(root=root, stats=stats)
 
 
@@ -555,16 +459,6 @@ def _described(spark, desc: str):
         yield
     finally:
         sc.setJobDescription(prev)
-
-
-def _phase(spark, op: str, phase: str, fn, *args):
-    """``fn(*args)`` as a thread target whose Spark jobs keep the calling
-    thread's (thread-local) job group and are described ``<op>: <phase>``."""
-    @inheritable_thread_target(spark)
-    def run():
-        with _described(spark, f"{op}: {phase}"):
-            return fn(*args)
-    return run
 
 
 def recover_update(spark: SparkSession, root: str) -> bool:

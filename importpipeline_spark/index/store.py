@@ -4,10 +4,10 @@ Layout (parquet; Iceberg-ready — the same frames can go to ``writeTo`` on a
 cluster with an Iceberg catalog):
 
     <root>/docs/        doc_id, url, warc_ts, text, doc_len, lang
-                        (partitioned by shard — an update or delete's
-                        staging kernel writes each changed shard's
-                        part-0.parquet and the rest are hard-linked;
-                        read with DOCS_SCHEMA)
+                        (partitioned by shard: one part-0.parquet per
+                        shard from the build's kernel, or an update or
+                        delete's for each changed shard, the rest
+                        hard-linked; read with DOCS_SCHEMA)
     <root>/doclen/      shard, doc_id, doc_len            (partitioned by shard,
                         sorted by doc_id within files)
     <root>/postings/    term, block_id, n, min_doc, max_doc, docs_enc,
@@ -32,19 +32,21 @@ cluster with an Iceberg catalog):
 
 Every built index has this layout: write_index is the resumable build
 (segments.build_index_resumable) on an empty root. ``docs/`` is absent
-when the build ran with ``write_docs=False``. A fold (compaction, a
-resume) re-encodes each shard from its own docs/ part(s): encode_postings.
+when the build ran with ``write_docs=False``. Every base and delta part is
+written by the one shard kernel (_encode_shard), one task per shard: the
+build's from the shard's extracted pages, a fold's (compaction) from the
+shard's own docs/ part(s), a staging's from the incoming rows.
 
 Replaces the ES index + mapping template of the reference
 (Endpoints/ESIndexDefinitions.cs:312-541). The "optimize to N segments" step
-(ESIndexDefinitions.cs:452-458) maps to sortWithinPartitions + per-shard file
-coalescing at write time.
+(ESIndexDefinitions.cs:452-458) maps to one file per table and shard, as
+Lucene's segment flush writes all of a segment's files in one pass.
 
-Skew story: the build groups by (term, shard) — shard is a doc-range salt, so
-a head term's postings are split across all shards and no single task sees
-more than one shard of any term (two-level: per-shard encode here, shard-local
-WAND + k-row global merge at query time). Shard count is the knob that holds
-at 1000× data: shards scale with corpus size, per-shard group size stays
+Skew story: the build groups by shard — a doc-range salt, so a head term's
+postings are split across all shards and no single task sees more than one
+shard of any term (two-level: per-shard encode here, shard-local WAND +
+k-row global merge at query time). Shard count is the knob that holds at
+1000× data: shards scale with corpus size, per-shard group size stays
 bounded by the doc-range width.
 """
 
@@ -89,16 +91,17 @@ DOCS_SCHEMA = (
 # terms/ file count: compaction and the build write the same layout
 DICT_FILES = 4
 
-# POSTINGS_SCHEMA's Arrow types; a staging kernel's postings part has them
-# less the shard (its directory names it), as a partitionBy("shard") write
+# POSTINGS_SCHEMA's Arrow types less the shard, as every postings part
+# (base or delta) stores them: its directory names the shard
 _POSTINGS_ARROW = pa.schema([
-    ("term", pa.string()), ("shard", pa.int32()), ("block_id", pa.int32()),
+    ("term", pa.string()), ("block_id", pa.int32()),
     ("n", pa.int32()), ("min_doc", pa.int64()), ("max_doc", pa.int64()),
     ("docs_enc", pa.binary()), ("tfs_enc", pa.binary()),
     ("max_tf", pa.int32()), ("min_dl", pa.int32()),
 ])
 
-# the row each staging kernel task returns for its shard
+# the row each kernel task returns for its shard (only a staging task's
+# reports whether the shard changed and how many pages it quarantined)
 STAGED_REPORT = "shard int, changed boolean, n_bad int"
 
 
@@ -129,12 +132,27 @@ def _write_counters(rec: dict, counters_dir: str, shard: int) -> None:
 # dooms (GONE)
 NEW, GONE, BAD = 0, 1, 2
 
-# docs/ in DOCS_SCHEMA's types, as a staging task reads its shard's part(s)
+# docs/ in DOCS_SCHEMA's types, as a kernel task reads its shard's part(s)
 _DOCS_ARROW = pa.schema([
     ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
     ("lang", pa.string()), ("text", pa.string()), ("doc_len", pa.int32()),
     ("doc_id", pa.int64()),
 ])
+
+# postings parts get dictionary pages on their integer columns only: the
+# terms and the codec's byte strings barely repeat within a shard
+_POSTINGS_DICT = ["block_id", "n", "min_doc", "max_doc", "max_tf", "min_dl"]
+
+
+class Build(NamedTuple):
+    """A build's kernel task gets one shard's extracted pages and writes
+    under ``root`` (the encode root) the shard's postings, doclen and, with
+    ``docs``, docs parts and its counters, and its quarantined pages as
+    ``errors``-<shard> (a per-shard name, so re-extracting the shard
+    replaces them)."""
+    root: str
+    errors: str
+    docs: bool
 
 
 class Staging(NamedTuple):
@@ -143,7 +161,7 @@ class Staging(NamedTuple):
     delta_postings, delta_doclen, delta_termdf and counters under ``root``
     (the staging root), its merged docs part under ``docs`` and its
     quarantined pages as ``errors``-<shard> (a call-unique prefix in
-    errors/); each task returns its shard's STAGED_REPORT row."""
+    errors/)."""
     root: str
     docs: str
     live: str
@@ -152,63 +170,81 @@ class Staging(NamedTuple):
 
 class Fold(NamedTuple):
     """A fold's kernel task reads its shard's docs in ``live`` (the docs
-    table) and writes its doclen part under ``doclen``."""
+    table) and writes under ``root`` (the encode root) the shard's postings
+    and doclen parts and its counters."""
     live: str
-    doclen: str
+    root: str
 
 
-def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
-                  counters_dir: str | None = None,
-                  staging: Staging | Fold | None = None) -> pd.DataFrame:
-    """Cogrouped kernel: one doc-range shard's entire sub-index in one pass.
+def _encode_shard(rows: pd.DataFrame,
+                  mode: Build | Staging | Fold) -> pd.DataFrame:
+    """The one shard kernel: one doc-range shard's entire sub-index in one
+    task, which writes every file the shard owns itself (_write_part) and
+    returns the shard's STAGED_REPORT row.
 
-    One task per shard (not per term!): the tf rows are lexsorted by
-    (term, doc_u) and encoded per-term run. A per-(term,shard) grouped-map
-    would create |vocab|×|shards| tiny pandas groups — measured 3 orders of
-    magnitude slower at small scale and pure overhead at any scale. Shard
-    count is the parallelism/memory knob: each task holds one doc-range's
-    postings (bounded by shard width), which is what holds at 1000× data.
+    One task per shard (not per term!): the shard's tf rows are lexsorted
+    by (term, doc_u) and encoded per-term run (_encode_blocks). A
+    per-(term,shard) grouped-map would create |vocab|×|shards| tiny pandas
+    groups — measured 3 orders of magnitude slower at small scale and pure
+    overhead at any scale. Shard count is the parallelism/memory knob: each
+    task holds one doc-range's postings (bounded by shard width), which is
+    what holds at 1000× data.
 
-    With ``counters_dir`` the kernel writes the shard's counters (n_docs,
-    total_tokens, blocks, postings, terms). Given a ``staging`` there is
-    no tf side: the kernel reads the shard's live docs itself
-    (_live_docs). A Staging's dl side carries one shard's raw pages (NEW)
-    or a delete's urls (GONE): the kernel drops the pages the existence
-    probe skips (_probe), extracts the rest (_extracted), encodes the good
-    ones from their term counts (_staged_tf), stages the shard's delta
-    postings, tables, merged docs part and quarantine records
-    (_stage_delta; a term's run length is its +df) and returns its
-    STAGED_REPORT row, not the blocks. A Fold's dl side is the shard id:
-    the kernel encodes every live doc re-tokenized (_tf_of_text) and
-    writes the doc_id-sorted doclen part before the counters.
-    Every side file is written executor-side (_write_part). The index
-    root must be a filesystem the driver and executors share, as every
-    driver-side rename of executor-written parquet already requires.
+    What ``rows`` holds depends on ``mode``:
+    - Build: the shard's extracted pages (shard, doc_id, url, doc_len,
+      their term counts as ``terms``/``tfs`` arrays, error and, with
+      ``mode.docs``, warc_us, lang and text). The quarantined ones go to
+      the shard's errors/ part; the good ones are encoded into its base
+      parts (_write_base).
+    - Fold: the shard id. The task reads the shard's live docs
+      (_live_docs), re-tokenizes them (_tf_of_text) and writes the base
+      parts but docs.
+    - Staging: one shard's raw pages (NEW) or a delete's urls (GONE). The
+      task drops the pages the existence probe skips (_probe), extracts the
+      rest (_extracted), encodes the good ones and stages the shard's delta
+      postings, tables, merged docs part and quarantine records
+      (_stage_delta; a term's run length is its +df).
+    The index root must be a filesystem the driver and executors share, as
+    every driver-side rename of executor-written parquet already requires.
     """
-    if staging is None:
-        shard = int(
-            (tf_pdf["shard"] if len(tf_pdf) else dl_pdf["dl_shard"]).iloc[0])
+    shard = int(rows["shard"].iloc[0])
+    changed, n_bad = True, 0
+    if isinstance(mode, Staging):
+        live = _live_docs(mode.live, shard)
+        rows = _extracted(_probe(rows, live))
+        new = rows[rows["kind"].to_numpy() == NEW]
+    elif isinstance(mode, Fold):
+        new = _tf_of_text(_live_docs(mode.live, shard))
     else:
-        shard = int(dl_pdf["dl_shard"].iloc[0])
-        live = _live_docs(staging.live, shard)
-        if isinstance(staging, Fold):
-            dl_pdf = _tf_of_text(live)
-        else:
-            rows = _extracted(_probe(dl_pdf, live))
-            dl_pdf = rows[rows["kind"].to_numpy() == NEW]
-        tf_pdf = _staged_tf(dl_pdf)
-    terms = np.empty(0, dtype=object)
+        bad = rows["error"].notna().to_numpy()
+        _write_errors(rows[bad], mode.errors, shard)
+        new = rows[~bad]
+    blocks, df = _encode_blocks(new)
+    if isinstance(mode, Staging):
+        changed, n_bad = _stage_delta(mode, shard, blocks, df, rows, live)
+    else:
+        _write_base(mode.root, shard, blocks, new,
+                    isinstance(mode, Build) and mode.docs)
+    return pd.DataFrame({"shard": [shard], "changed": [changed],
+                         "n_bad": [n_bad]})
+
+
+def _encode_blocks(docs: pd.DataFrame) -> tuple[pd.DataFrame, pd.Series]:
+    """The posting blocks (_POSTINGS_ARROW's columns) of ``docs`` — doc_id,
+    doc_len and each doc's term counts as ``terms``/``tfs`` arrays — and
+    each term's df (its run length), encoded in one vectorized pass."""
+    tf_pdf = _staged_tf(docs)
+    terms = tf_pdf["term"].to_numpy(dtype=object)
     run_starts = np.empty(0, dtype=np.int64)
-    if tf_pdf.empty:
-        out = pd.DataFrame(columns=_POSTINGS_ARROW.names)
+    if not len(terms):
+        blocks = pd.DataFrame(columns=_POSTINGS_ARROW.names)
     else:
         u = to_u64(tf_pdf["doc_id"].to_numpy(dtype=np.int64))
         tfs = tf_pdf["tf"].to_numpy(dtype=np.int64)
-        terms = tf_pdf["term"].to_numpy(dtype=object)
-        dlu = to_u64(dl_pdf["dl_doc_id"].to_numpy(dtype=np.int64))
+        dlu = to_u64(docs["doc_id"].to_numpy(dtype=np.int64))
         dorder = np.argsort(dlu)
         dlu = dlu[dorder]
-        dlv = dl_pdf["doc_len"].to_numpy(dtype=np.int64)[dorder]
+        dlv = docs["doc_len"].to_numpy(dtype=np.int64)[dorder]
         dls = dlv[np.searchsorted(dlu, u)]
         # sort by (term, doc_u); encode the whole shard in one vectorized pass
         order = np.lexsort((u, terms))
@@ -220,56 +256,101 @@ def _encode_shard(tf_pdf: pd.DataFrame, dl_pdf: pd.DataFrame,
          docs_enc, tfs_enc, max_tf, min_dl) = encode_shard_blocks(
             u, tfs, dls, run_starts, BLOCK_SIZE
         )
-        out = pd.DataFrame(
-            {
-                "term": terms[run_starts[run_of_block]],
-                "shard": np.full(len(block_id), shard, dtype=np.int32),
-                "block_id": block_id.astype(np.int32),
-                "n": ns.astype(np.int32),
-                "min_doc": min_doc,
-                "max_doc": max_doc,
-                "docs_enc": docs_enc,
-                "tfs_enc": tfs_enc,
-                "max_tf": max_tf.astype(np.int32),
-                "min_dl": min_dl.astype(np.int32),
-            }
-        )
-    if isinstance(staging, Fold):
-        doclen = dl_pdf.sort_values("dl_doc_id", kind="stable")
+        blocks = pd.DataFrame({
+            "term": terms[run_starts[run_of_block]],
+            "block_id": block_id.astype(np.int32),
+            "n": ns.astype(np.int32),
+            "min_doc": min_doc,
+            "max_doc": max_doc,
+            "docs_enc": docs_enc,
+            "tfs_enc": tfs_enc,
+            "max_tf": max_tf.astype(np.int32),
+            "min_dl": min_dl.astype(np.int32),
+        })
+    df = pd.Series(np.diff(np.append(run_starts, len(terms))),
+                   index=terms[run_starts], dtype=np.int64)
+    return blocks, df
+
+
+def _write_postings(blocks: pd.DataFrame, d: str) -> None:
+    """Posting ``blocks`` as ``d``/part-0.parquet in _POSTINGS_ARROW's
+    types (base and delta parts alike)."""
+    _write_part(pa.Table.from_pandas(blocks, _POSTINGS_ARROW,
+                                     preserve_index=False),
+                d, use_dictionary=_POSTINGS_DICT)
+
+
+def _write_docs(docs: pd.DataFrame, d: str) -> None:
+    """Docs rows (url, warc_us — warc_ts in epoch micros —, lang, text,
+    doc_len, doc_id) as ``d``/part-0.parquet in DOCS_SCHEMA's types."""
+    _write_part(pa.table({
+        "url": pa.array(docs["url"], pa.string()),
+        "warc_ts": pa.Array.from_pandas(docs["warc_us"], type=pa.int64())
+        .cast(pa.timestamp("us", tz="UTC")),
+        "lang": pa.array(docs["lang"], pa.string()),
+        "text": pa.array(docs["text"], pa.string()),
+        "doc_len": pa.array(docs["doc_len"].to_numpy(dtype=np.int64),
+                            pa.int32()),
+        "doc_id": pa.array(docs["doc_id"].to_numpy(dtype=np.int64)),
+    }), d,
+        # no text min/max: pyarrow repeats whole page texts in the page
+        # header and the footer (KBs per part); nothing prunes on text
+        write_statistics=["url", "warc_ts", "lang", "doc_len", "doc_id"])
+
+
+def _write_errors(bad: pd.DataFrame, prefix: str, shard: int) -> None:
+    """Quarantine records (url, stage, error, ts) of the ``bad`` rows, if
+    any, as ``prefix``-<shard>.parquet; ts as a Spark write stores it."""
+    if len(bad):
         _write_part(pa.table({
-            "doc_id": pa.array(doclen["dl_doc_id"].to_numpy(dtype=np.int64)),
-            "doc_len": pa.array(doclen["doc_len"].to_numpy(dtype=np.int32)),
-        }), os.path.join(staging.doclen, f"shard={shard}"))
-    if counters_dir is not None:
-        _write_counters({
-            "blocks": int(len(out)),
-            "postings": int(out["n"].sum()) if len(out) else 0,
-            "terms": int(out["term"].nunique()) if len(out) else 0,
-            "n_docs": int(len(dl_pdf)),
-            "total_tokens": int(dl_pdf["doc_len"].sum()),
-        }, counters_dir, shard)
-    if isinstance(staging, Staging):
-        df = pd.Series(np.diff(np.append(run_starts, len(terms))),
-                       index=terms[run_starts], dtype=np.int64)
-        changed, n_bad = _stage_delta(staging, shard, out, df, rows, live)
-        return pd.DataFrame({"shard": [shard], "changed": [changed],
-                             "n_bad": [n_bad]})
-    return out
+            "url": pa.array(bad["url"], pa.string()),
+            "stage": pa.array(["extract"] * len(bad), pa.string()),
+            "error": pa.array(bad["error"], pa.string()),
+            "ts": pa.array([pd.Timestamp.now(tz="UTC")] * len(bad),
+                           pa.timestamp("us", tz="UTC")),
+        }), os.path.dirname(prefix),
+            f"{os.path.basename(prefix)}-{shard}.parquet",
+            use_deprecated_int96_timestamps=True)
+
+
+def _write_base(root: str, shard: int, blocks: pd.DataFrame,
+                docs: pd.DataFrame, with_docs: bool) -> None:
+    """One shard's base parts under ``root``: postings (when it has
+    blocks), doclen and, ``with_docs``, docs — both sorted by doc_id — and
+    last its counters (n_docs, total_tokens, blocks, postings, terms), so a
+    shard with counters has every file."""
+    part = f"shard={shard}"
+    docs = docs.sort_values("doc_id", kind="stable")
+    if len(blocks):
+        _write_postings(blocks, os.path.join(root, "postings", part))
+    _write_part(pa.table({
+        "doc_id": pa.array(docs["doc_id"].to_numpy(dtype=np.int64)),
+        "doc_len": pa.array(docs["doc_len"].to_numpy(dtype=np.int32)),
+    }), os.path.join(root, "doclen", part))
+    if with_docs:
+        _write_docs(docs, os.path.join(root, "docs", part))
+    _write_counters({
+        "blocks": len(blocks),
+        "postings": int(blocks["n"].sum()) if len(blocks) else 0,
+        "terms": int(blocks["term"].nunique()) if len(blocks) else 0,
+        "n_docs": len(docs),
+        "total_tokens": int(docs["doc_len"].sum()),
+    }, os.path.join(root, "counters"), shard)
 
 
 def _live_docs(docs: str, shard: int) -> pd.DataFrame:
     """The shard's live docs rows, read executor-side from every part of
-    ``docs/shard=N`` in DOCS_SCHEMA's types, named as the staging rows
-    name them (warc_ts as epoch micros ``warc_us``, doc_id as
-    ``dl_doc_id``). A shard with no directory has no docs; an unreadable
-    part raises."""
+    ``docs/shard=N`` in DOCS_SCHEMA's types, warc_ts as epoch micros
+    ``warc_us``. A shard with no directory, or an empty one (a build's
+    shard without pages), has no docs; an unreadable part raises."""
     d = os.path.join(docs, f"shard={shard}")
     t = (pq.read_table(d, columns=_DOCS_ARROW.names,
                        coerce_int96_timestamp_unit="us")
-         if os.path.isdir(d) else _DOCS_ARROW.empty_table())
+         if os.path.isdir(d) and any(not f.startswith((".", "_"))
+                                     for f in os.listdir(d))
+         else _DOCS_ARROW.empty_table())
     us = t["warc_ts"].cast(_DOCS_ARROW.field("warc_ts").type).cast(pa.int64())
-    return t.set_column(1, "warc_us", us).rename_columns(
-        ["url", "warc_us", "lang", "text", "doc_len", "dl_doc_id"]).to_pandas()
+    return t.set_column(1, "warc_us", us).to_pandas()
 
 
 def _probe(rows: pd.DataFrame, live: pd.DataFrame) -> pd.DataFrame:
@@ -307,10 +388,10 @@ def _extracted(rows: pd.DataFrame) -> pd.DataFrame:
 
 
 def _staged_tf(new_pdf: pd.DataFrame) -> pd.DataFrame:
-    """(doc_id, term, tf) rows of the NEW rows' ``terms``/``tfs`` arrays
+    """(doc_id, term, tf) rows of the docs' ``terms``/``tfs`` arrays
     (empty for a doc with no tokens)."""
     return pd.DataFrame({
-        "doc_id": np.repeat(new_pdf["dl_doc_id"].to_numpy(np.int64),
+        "doc_id": np.repeat(new_pdf["doc_id"].to_numpy(np.int64),
                             [len(t) for t in new_pdf["terms"]]),
         "term": np.concatenate([np.empty(0, object), *new_pdf["terms"]]),
         "tf": np.concatenate([np.empty(0, np.int64), *new_pdf["tfs"]]),
@@ -321,7 +402,7 @@ def _tf_of_text(live: pd.DataFrame) -> pd.DataFrame:
     """``live`` docs rows with each stored text's term counts as
     ``terms``/``tfs`` arrays (the shape _staged_tf takes): the pinned
     analyzer the build ran (tokenize_series), so a fold encodes exactly
-    what the build's fused kernel counted."""
+    what the build's extract pass counted."""
     counts = [Counter(t) if isinstance(t, list) else Counter()
               for t in tokenize_series(live["text"].astype(object))]
     return live.assign(
@@ -338,16 +419,15 @@ def _stage_delta(staging: Staging, shard: int, blocks: pd.DataFrame,
     whose url a NEW row carries (an update) or a GONE row names (a delete)
     are its OLD rows. A shard with neither new nor old rows gets nothing
     more. Otherwise the kernel writes under ``staging``: ``delta_postings``
-    (the NEW rows' posting ``blocks``, if any, in POSTINGS_SCHEMA's types
-    less the shard); ``delta_doclen`` (the new rows, plus a doc_len = -1
-    tombstone per row a delete dooms, sorted by doc_id); ``delta_termdf``
-    (``df`` — +1 per new (doc, term) — minus 1 per distinct term of each
-    re-tokenized old text, netted, zeros dropped, sorted by term; the same
-    pinned analyzer as indexing, so the decrements equal what the base
-    counts); ``counters/shard_N.json`` (the shard's (Δn_docs,
-    Δtotal_tokens), tombstones counting 0, and blocks); and the shard's
-    merged docs part — live rows minus old plus new, in DOCS_SCHEMA's
-    types. The counters go last, so a shard with counters has every file."""
+    (the NEW rows' posting ``blocks``, if any); ``delta_doclen`` (the new
+    rows, plus a doc_len = -1 tombstone per row a delete dooms, sorted by
+    doc_id); ``delta_termdf`` (``df`` — +1 per new (doc, term) — minus 1
+    per distinct term of each re-tokenized old text, netted, zeros
+    dropped, sorted by term; the same pinned analyzer as indexing, so the
+    decrements equal what the base counts); ``counters/shard_N.json`` (the
+    shard's (Δn_docs, Δtotal_tokens), tombstones counting 0, and blocks);
+    and the shard's merged docs part — live rows minus old plus new. The
+    counters go last, so a shard with counters has every file."""
     kind = rows["kind"].to_numpy()
     new_pdf = rows[kind == NEW]
     bad = rows[kind == BAD]
@@ -355,31 +435,19 @@ def _stage_delta(staging: Staging, shard: int, blocks: pd.DataFrame,
     is_old = doomed | live["url"].isin(new_pdf["url"]).to_numpy()
     old_pdf = live[is_old]
     changed = len(new_pdf) + len(old_pdf) > 0
-    if len(bad):
-        # build.split_quarantine's columns, ts as a Spark write stores it
-        _write_part(pa.table({
-            "url": pa.array(bad["url"], pa.string()),
-            "stage": pa.array(["extract"] * len(bad), pa.string()),
-            "error": pa.array(bad["error"], pa.string()),
-            "ts": pa.array([pd.Timestamp.now(tz="UTC")] * len(bad),
-                           pa.timestamp("us", tz="UTC")),
-        }), os.path.dirname(staging.errors),
-            f"{os.path.basename(staging.errors)}-{shard}.parquet",
-            use_deprecated_int96_timestamps=True)
+    _write_errors(bad, staging.errors, shard)
     if not changed:
         return False, len(bad)
     part = f"shard={shard}"
     if len(blocks):
-        _write_part(pa.Table.from_pandas(blocks, _POSTINGS_ARROW,
-                                         preserve_index=False)
-                    .drop_columns("shard"),
-                    os.path.join(staging.root, "delta_postings", part))
+        _write_postings(blocks,
+                        os.path.join(staging.root, "delta_postings", part))
     doclen = pd.concat([
-        new_pdf[["dl_doc_id", "doc_len"]],
-        live[doomed][["dl_doc_id"]].assign(doc_len=-1),
-    ]).sort_values("dl_doc_id", kind="stable")
+        new_pdf[["doc_id", "doc_len"]],
+        live[doomed][["doc_id"]].assign(doc_len=-1),
+    ]).sort_values("doc_id", kind="stable")
     _write_part(pa.table({
-        "doc_id": pa.array(doclen["dl_doc_id"].to_numpy(dtype=np.int64)),
+        "doc_id": pa.array(doclen["doc_id"].to_numpy(dtype=np.int64)),
         "doc_len": pa.array(doclen["doc_len"].to_numpy(dtype=np.int64),
                             pa.int32()),
     }), os.path.join(staging.root, "delta_doclen", part))
@@ -395,20 +463,8 @@ def _stage_delta(staging: Staging, shard: int, blocks: pd.DataFrame,
             "term": pa.array(adj.index, pa.string()),
             "df": pa.array(adj.to_numpy(), pa.int64()),
         }), os.path.join(staging.root, "delta_termdf", part))
-    docs = pd.concat([live[~is_old], new_pdf])
-    _write_part(pa.table({
-        "url": pa.array(docs["url"], pa.string()),
-        "warc_ts": pa.Array.from_pandas(docs["warc_us"], type=pa.int64())
-        .cast(pa.timestamp("us", tz="UTC")),
-        "lang": pa.array(docs["lang"], pa.string()),
-        "text": pa.array(docs["text"], pa.string()),
-        "doc_len": pa.array(docs["doc_len"].to_numpy(dtype=np.int64),
-                            pa.int32()),
-        "doc_id": pa.array(docs["dl_doc_id"].to_numpy(dtype=np.int64)),
-    }), os.path.join(staging.docs, part),
-        # no text min/max: pyarrow repeats whole page texts in the page
-        # header and the footer (KBs per part); nothing prunes on text
-        write_statistics=["url", "warc_ts", "lang", "doc_len", "doc_id"])
+    _write_docs(pd.concat([live[~is_old], new_pdf]),
+                os.path.join(staging.docs, part))
     new_len = new_pdf["doc_len"].to_numpy(dtype=np.int64)
     _write_counters({
         "n_docs": len(new_pdf) - len(old_pdf),
@@ -419,72 +475,31 @@ def _stage_delta(staging: Staging, shard: int, blocks: pd.DataFrame,
     return True, len(bad)
 
 
-def tf_from_pairs(df: DataFrame) -> DataFrame:
-    """(shard, doc_id, term, tf) rows from the fused pass's ``tf_pairs``
-    column — a JVM-side explode, no second Python pass."""
-    return df.select(
-        "shard", "doc_id", F.explode("tf_pairs").alias("p")
-    ).select(
-        "shard", "doc_id",
-        F.col("p.term").alias("term"), F.col("p.tf").alias("tf"),
-    )
+def encode_postings(rows: DataFrame, mode: Build | Staging | Fold) -> DataFrame:
+    """The one posting writer: the plan whose tasks run the shard kernel
+    (_encode_shard) in ``mode`` over ``rows``, one STAGED_REPORT row per
+    shard; each task writes its shard's files itself, so the caller only
+    collects the reports (the plan alone runs nothing).
 
-
-def encode_postings(tf: DataFrame | None, dl: DataFrame,
-                    path: str | None = None,
-                    counters_dir: str | None = None,
-                    staging: Staging | Fold | None = None) -> DataFrame:
-    """The one posting writer: encode ``tf`` (shard, doc_id, term, tf)
-    against ``dl`` (shard, doc_id, doc_len) per shard and, with ``path``,
-    write the blocks partitioned by shard. Returns the encode plan (with
-    ``path=None`` nothing runs — plan inspection only).
-
-    ``counters_dir``: per-shard counters (_encode_shard).
-    ``staging``: a delta generation's Staging. ``tf`` is then None and
-    ``dl`` — the only side — holds just the generation's incoming rows as
-    JVM columns (so its map stage evaluates no Python): shard, doc_id,
-    ``kind``, url, warc_us (warc_ts in epoch microseconds), lang and html
-    (null for a delete). The plan returns a STAGED_REPORT row per shard
-    with incoming rows (``path`` is unused): its task probes the shard's
-    live docs, extracts the kept pages and writes the shard's delta files,
-    merged docs part and quarantine records (_stage_delta); no live docs
-    row crosses the exchange, and the kernel's input is computed once.
-    Or ``staging``: a Fold. ``tf`` is then None and ``dl`` is one
-    ``shard`` row per shard to fold, each in its own partition: the kernel
-    maps over it (no exchange, no docs scan in the plan) and each task
-    re-encodes its shard from the shard's stored docs.
-
-    The dl side's key columns are BOTH renamed (dl_shard, dl_doc_id): tf
-    and dl usually share a parent, and Spark's ambiguous-self-join analysis
-    rejects the cogroup when the two sides share a column's exprId (it
-    surfaces when the parent contains a join); alias-aware output
-    partitioning still elides the exchange when that parent is already
-    hash-partitioned by shard (pinned in tests/test_plans.py). The output is
-    written with NO projection in between: Spark 4.1's optimizer would push
-    a .drop/.select through FlatMapCoGroupsInPandas and strip needed
-    columns from the cogroup INPUT pdfs (observed: doc_id vanishing from
-    the dl side)."""
-    if isinstance(staging, Fold):
-        out = dl.mapInPandas(lambda batches: (
-            _encode_shard(None, pd.DataFrame({"dl_shard": [s]}),
-                          counters_dir, staging)
-            for pdf in batches for s in pdf["shard"]), POSTINGS_SCHEMA)
-    elif staging is None:
-        out = tf.groupBy("shard").cogroup(dl.select(
-            F.col("shard").alias("dl_shard"),
-            F.col("doc_id").alias("dl_doc_id"), "doc_len",
-        ).groupBy("dl_shard")).applyInPandas(
-            lambda l, r: _encode_shard(l, r, counters_dir), POSTINGS_SCHEMA)
-    else:
-        return dl.select(
-            F.col("shard").alias("dl_shard"),
-            F.col("doc_id").alias("dl_doc_id"), "kind", "url", "warc_us",
-            "lang", "html",
-        ).groupBy("dl_shard").applyInPandas(
-            lambda r: _encode_shard(None, r, None, staging), STAGED_REPORT)
-    if path is not None:
-        out.write.mode("overwrite").partitionBy("shard").parquet(path)
-    return out
+    Given a Build or a Staging, ``rows`` is already repartitioned by
+    ``shard`` (the query's one exchange; the grouping reuses its
+    partitioning) and the kernel runs once per shard group:
+    - Build: the shard's extracted pages (build.build_docs_and_tf_safe's
+      output as _encode_shard takes it);
+    - Staging: just a delta generation's incoming rows as JVM columns (so
+      its map stage evaluates no Python): shard, doc_id, ``kind``, url,
+      warc_us (warc_ts in epoch microseconds), lang and html (null for a
+      delete). No live docs row crosses the exchange: each task probes its
+      shard's live docs itself.
+    Given a Fold, ``rows`` is one ``shard`` row per shard to fold, each in
+    its own partition: the kernel maps over it (no exchange, no docs scan
+    in the plan) and each task re-encodes its shard from its stored docs."""
+    if isinstance(mode, Fold):
+        return rows.mapInPandas(lambda batches: (
+            _encode_shard(pd.DataFrame({"shard": [s]}), mode)
+            for pdf in batches for s in pdf["shard"]), STAGED_REPORT)
+    return rows.groupBy("shard").applyInPandas(
+        lambda pdf: _encode_shard(pdf, mode), STAGED_REPORT)
 
 
 def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -717,9 +732,7 @@ def write_index(
     whatever ``root`` held — deltas, lineage, an older build — is removed
     first, so the result equals a build into a new directory. Bad pages are
     quarantined into ``errors/`` and every segment is lineage-committed,
-    like any other build. There is nothing to resume, so the whole encode
-    is one batch (the default batches of 2×parallelism segments double a
-    64-shard build of 4,000 pages on 4 cores).
+    like any other build.
     ``doc_id_mode="host_locality"`` selects host-clustered doc ids (the
     index-sorting analogue — see build.doc_id_expr) for web corpora where
     block-max pruning should bite.
@@ -729,18 +742,9 @@ def write_index(
     shutil.rmtree(root, ignore_errors=True)
     return build_index_resumable(
         spark, pages, root, n_shards=n_shards, run_id="full",
-        input_snapshot="full", batch_size=n_shards,
-        doc_id_mode=doc_id_mode, write_docs=write_docs,
+        input_snapshot="full", doc_id_mode=doc_id_mode,
+        write_docs=write_docs,
     )
-
-
-def shard_totals(df: DataFrame) -> dict:
-    """Per-shard (n_docs, total_tokens) of a (shard, doc_len) relation —
-    the ``shard_stats`` subtotals that updates refresh per affected shard."""
-    rows = df.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("t")
-    ).collect()
-    return {int(r.shard): (int(r.n), int(r.t or 0)) for r in rows}
 
 
 def totals_fields(shard_stats: dict) -> dict:

@@ -28,14 +28,6 @@ def token_count(text_col) -> Column:
     return F.when(t == "", 0).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def bpe_ish_token_count(text_col) -> Column:
-    """BPE-ish regex token count: words, numbers, and punctuation runs as
-    separate tokens (a deterministic proxy for subword counting)."""
-    return F.size(
-        F.regexp_extract_all(text_col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
-    )
-
-
 def lang_id_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """N-gram/marker-count heuristic language ID. Adds ``lang_pred``.
 

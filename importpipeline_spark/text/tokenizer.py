@@ -63,9 +63,3 @@ def normalize_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     Converters/NormalizeConverter.cs:41-67)."""
     for s in batches:
         yield strip_diacritics(s)
-
-
-def normalize_term(term: str) -> str:
-    """Query-side single-term normalization — must match tokenize_* exactly."""
-    toks = tokenize_scalar(term)
-    return toks[0] if toks else ""

@@ -533,9 +533,9 @@ def test_compaction_kill_refuses_readers_until_recovered(spark, tmp_path):
 
 def test_compaction_checks_fold_output_before_swap(spark, tmp_path,
                                                   monkeypatch):
-    """Each fold task writes its shard's doclen part, then its counters
-    (n_docs, total_tokens, blocks, postings, terms), which stand in for a
-    shard_totals rescan. When the driver cannot find a shard's counters
+    """Each fold task writes its shard's postings and doclen parts, then
+    its counters (n_docs, total_tokens, blocks, postings, terms), which
+    stand in for a rescan of the folded docs. When the driver cannot find a shard's counters
     or doclen part — what an index root the driver and executors do not
     share looks like — or its counters differ from stats.json's
     shard_stats, compact_deltas raises before any base file is swapped:
@@ -550,8 +550,8 @@ def test_compaction_checks_fold_output_before_swap(spark, tmp_path,
     write_index(spark, corpus, full_root, n_shards=4)
     want = _base_tables(full_root)
 
-    def off_by_one(counters_dir, staging, shard):
-        p = os.path.join(counters_dir, f"shard_{shard}.json")
+    def off_by_one(fold, shard):
+        p = os.path.join(fold.root, "counters", f"shard_{shard}.json")
         with open(p) as f:
             rec = json.load(f)
         rec["total_tokens"] += 1
@@ -559,10 +559,10 @@ def test_compaction_checks_fold_output_before_swap(spark, tmp_path,
             json.dump(rec, f)
 
     tampers = {
-        "has no counters": lambda counters_dir, staging, shard: os.remove(
-            os.path.join(counters_dir, f"shard_{shard}.json")),
-        "has no doclen part": lambda counters_dir, staging, shard: os.remove(
-            os.path.join(staging.doclen, f"shard={shard}", "part-0.parquet")),
+        "has no counters": lambda fold, shard: os.remove(
+            os.path.join(fold.root, "counters", f"shard_{shard}.json")),
+        "has no doclen part": lambda fold, shard: os.remove(os.path.join(
+            fold.root, "doclen", f"shard={shard}", "part-0.parquet")),
         "shard_stats": off_by_one,
     }
     real = smod._encode_shard
@@ -573,11 +573,10 @@ def test_compaction_checks_fold_output_before_swap(spark, tmp_path,
         victim = min(dmod.shard_gen_map(root))
         base = {t: _inodes(root, t) for t in ("postings", "doclen")}
 
-        def tampered(tf_pdf, dl_pdf, counters_dir, staging, _tamper=tamper,
-                     _victim=victim):
-            out = real(tf_pdf, dl_pdf, counters_dir, staging)
-            if int(dl_pdf["dl_shard"].iloc[0]) == _victim:
-                _tamper(counters_dir, staging, _victim)
+        def tampered(rows, fold, _tamper=tamper, _victim=victim):
+            out = real(rows, fold)
+            if int(rows["shard"].iloc[0]) == _victim:
+                _tamper(fold, _victim)
             return out
 
         monkeypatch.setattr(smod, "_encode_shard", tampered)
@@ -897,10 +896,10 @@ def _jobs_by_description(spark, group):
 def test_compaction_and_resume_job_budgets(spark, tmp_path):
     """compact_deltas runs its fold (``compact_deltas: stage``) and the
     base dictionary (``compact_deltas: publish``) and nothing else: no
-    docs scan, doclen write or shard_totals job. A build killed after 3
-    of its 8 segments, with batch_size=3, resumes in one fold job per
-    batch of missing segments plus the dictionary: phase A, whose jobs
-    had all finished, is not re-run."""
+    docs scan or doclen write. A build killed after 3 of its 8 segments
+    resumes in the build's own staged query, over the missing segments'
+    pages only (at most 2 ``build: encode`` jobs: its map and kernel
+    stages), plus the dictionary."""
     sc = spark.sparkContext
     root = str(tmp_path / "idx")
     pages = gen_pages_df(spark, 200, seed=7, partitions=4)
@@ -920,15 +919,16 @@ def test_compaction_and_resume_job_budgets(spark, tmp_path):
     rroot = str(tmp_path / "resumed")
     with pytest.raises(RuntimeError, match="injected failure"):
         seg.build_index_resumable(spark, pages, rroot, n_shards=8,
-                                  batch_size=3, fail_after_segment=2)
+                                  fail_after_segment=2)
     sc.setJobGroup("resume_all", "resume")
     try:
-        seg.build_index_resumable(spark, pages, rroot, n_shards=8,
-                                  batch_size=3)
+        seg.build_index_resumable(spark, pages, rroot, n_shards=8)
     finally:
         _clear_job_group(spark)
-    assert _jobs_by_description(spark, "resume_all") == {
-        "build: encode": 2, "build: dictionary": _DICTIONARY_JOBS}
+    got = _jobs_by_description(spark, "resume_all")
+    assert set(got) == {"build: encode", "build: dictionary"}, got
+    assert got["build: encode"] <= 2, got
+    assert got["build: dictionary"] == _DICTIONARY_JOBS, got
 
 
 def test_delta_publish_runs_no_spark_job(spark, tmp_path):
@@ -1071,9 +1071,8 @@ def test_missing_kernel_output_fails_before_marker(spark, tmp_path,
             stats_before = f.read()
         tree_before = _dir_tree(root)
 
-        def drop_shard0_output(tf_pdf, dl_pdf, counters_dir, staging,
-                               _dropped=dropped):
-            out = real(tf_pdf, dl_pdf, counters_dir, staging)
+        def drop_shard0_output(rows, staging, _dropped=dropped):
+            out = real(rows, staging)
             p = {
                 "counters": os.path.join(staging.root, "counters",
                                          "shard_0.json"),

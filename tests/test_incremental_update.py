@@ -500,7 +500,7 @@ def test_legacy_format_is_refused(spark, tmp_path):
                                  input_snapshot="l1"),
             lambda: delete_from_index(spark, root, upd.select("url")),
             lambda: compact_deltas(spark, root),
-            # a resume over the same root (phase A done) reads stats first
+            # a resume over a finished root reads stats.json first
             lambda: build_index_resumable(spark, pages, root, n_shards=4),
         ]
         for call in calls:
@@ -703,8 +703,8 @@ def test_update_kernel_extracts_only_probe_kept_pages(tmp_path,
         ("u/same-bad", 10, deep),              # ExistSame, never extracted
     ]
     rows = pd.DataFrame({
-        "dl_shard": np.zeros(len(incoming), np.int32),
-        "dl_doc_id": np.array([live.get(u, 10 + i) for i, (u, _, _)
+        "shard": np.zeros(len(incoming), np.int32),
+        "doc_id": np.array([live.get(u, 10 + i) for i, (u, _, _)
                                in enumerate(incoming)], np.int64),
         "kind": np.full(len(incoming), store.NEW),
         "url": [u for u, _, _ in incoming],
@@ -724,7 +724,7 @@ def test_update_kernel_extracts_only_probe_kept_pages(tmp_path,
                             str(tmp_path / "docs.tmp"),
                             str(tmp_path / "docs"),
                             str(tmp_path / "errors" / "part-x"))
-    report = store._encode_shard(None, rows, None, staging)
+    report = store._encode_shard(rows, staging)
     assert report.to_dict("records") == [
         {"shard": 0, "changed": True, "n_bad": 1}]
     assert sorted(seen) == sorted([b"fresh page", b"recrawled page", deep])

@@ -6,18 +6,25 @@
   the one source of the base df);
 - ``terms/`` equals the (term, df, shards) reference built from
   ``postings/``;
-- every ``doclen/shard=N`` file is sorted by doc_id.
+- every ``postings/shard=N`` file is sorted by (term, block_id), and per
+  (shard, term) the blocks cover disjoint doc ranges of at most
+  BLOCK_SIZE postings each;
+- every ``doclen/shard=N`` file is sorted by doc_id, and with ``docs/``
+  each shard's doclen doc ids are exactly its docs' ids;
+- no ``encode_tmp/`` is left behind.
 """
 
 import glob
 import os
 import shutil
 
+import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from importpipeline_spark.index.codec import BLOCK_SIZE
 from importpipeline_spark.index.pagesgen import gen_pages_df
 from importpipeline_spark.index.segments import (
     build_index_resumable,
@@ -69,11 +76,36 @@ def _check_invariants(root):
     )
     assert got_terms == ref_terms
 
+    for p in glob.glob(os.path.join(root, "postings", "shard=*",
+                                    "*.parquet")):
+        t = pq.read_table(p).to_pandas()
+        key = list(zip(t["term"], t["block_id"]))
+        assert key == sorted(key) and len(set(key)) == len(key), p
+        assert ((t["n"] >= 1) & (t["n"] <= BLOCK_SIZE)).all(), p
+        # min_doc/max_doc hold the unsigned doc keys' bits
+        lo = t["min_doc"].to_numpy(np.int64).view(np.uint64)
+        hi = t["max_doc"].to_numpy(np.int64).view(np.uint64)
+        assert (lo <= hi).all(), p
+        for term, rows in t.groupby("term").indices.items():
+            # blocks of one term follow each other in doc order
+            assert (lo[rows][1:] > hi[rows][:-1]).all(), (p, term)
+
     doclen = glob.glob(os.path.join(root, "doclen", "shard=*", "*.parquet"))
     assert doclen
     for p in doclen:
         ids = pq.read_table(p, columns=["doc_id"])["doc_id"].to_numpy()
         assert (ids[1:] >= ids[:-1]).all(), p
+    if os.path.isdir(os.path.join(root, "docs")):
+        for s in range(int(stats["n_shards"])):
+            ids = {}
+            for table in ("doclen", "docs"):
+                parts = glob.glob(os.path.join(root, table, f"shard={s}",
+                                               "*.parquet"))
+                ids[table] = sorted(
+                    i for p in parts for i in
+                    pq.read_table(p, columns=["doc_id"])["doc_id"].to_pylist())
+            assert ids["doclen"] == ids["docs"], s
+    assert not os.path.exists(os.path.join(root, "encode_tmp"))
     return stats
 
 
@@ -88,15 +120,27 @@ def _write_index(spark, pages, root):
     write_index(spark, pages, root, n_shards=SHARDS)
 
 
+def _write_index_no_docs(spark, pages, root):
+    write_index(spark, pages, root, n_shards=SHARDS, write_docs=False)
+
+
 def _resumable_clean(spark, pages, root):
-    build_index_resumable(spark, pages, root, n_shards=SHARDS, batch_size=3)
+    build_index_resumable(spark, pages, root, n_shards=SHARDS)
 
 
 def _resumable_killed_resumed(spark, pages, root):
     with pytest.raises(RuntimeError, match="injected failure"):
         build_index_resumable(spark, pages, root, n_shards=SHARDS,
-                              batch_size=3, fail_after_segment=4)
-    build_index_resumable(spark, pages, root, n_shards=SHARDS, batch_size=3)
+                              fail_after_segment=4)
+    build_index_resumable(spark, pages, root, n_shards=SHARDS)
+
+
+def _killed_after_first_segment(spark, pages, root):
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index_resumable(spark, pages, root, n_shards=SHARDS,
+                              fail_after_segment=0)
+    assert not os.path.exists(os.path.join(root, "stats.json"))
+    build_index_resumable(spark, pages, root, n_shards=SHARDS)
 
 
 def _resumable_noop_resume(spark, pages, root):
@@ -128,7 +172,8 @@ def _compaction(spark, pages, root):
 
 
 @pytest.mark.parametrize("writer", [
-    _write_index, _resumable_clean, _resumable_killed_resumed,
+    _write_index, _write_index_no_docs, _resumable_clean,
+    _resumable_killed_resumed, _killed_after_first_segment,
     _resumable_noop_resume, _delete_then_compact, _compaction,
 ], ids=lambda f: f.__name__.lstrip("_"))
 def test_base_writer_invariants(spark, tmp_path, writer):
@@ -136,8 +181,12 @@ def test_base_writer_invariants(spark, tmp_path, writer):
     root = str(tmp_path / "idx")
     writer(spark, pages, root)
     stats = _check_invariants(root)
-    docs = spark.read.parquet(os.path.join(root, "docs"))
-    assert stats["n_docs"] == docs.count() >= N
+    if writer is _write_index_no_docs:
+        assert not os.path.exists(os.path.join(root, "docs"))
+        assert stats["n_docs"] == N
+    else:
+        docs = spark.read.parquet(os.path.join(root, "docs"))
+        assert stats["n_docs"] == docs.count() >= N
 
 
 def test_docs_schema_is_pinned(spark, tmp_path):

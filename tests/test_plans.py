@@ -177,77 +177,51 @@ def test_minhash_verification_single_shingle_pass(spark):
     release_cache(got)
 
 
-def _nodes_above_cache(df):
-    """Physical-plan node names from the root down to (and including) the
-    first InMemoryTableScan on each branch — i.e. everything OUTSIDE the
-    cached subtree. An Exchange here means the cache's partitioning was not
-    reused."""
-    node = df._jdf.queryExecution().executedPlan()
-    if node.nodeName() == "AdaptiveSparkPlan":
-        node = node.initialPlan()
-    names = []
+def test_build_outputs_share_one_exchange(spark, tmp_path, monkeypatch):
+    """The build is one staged query, with and without the docs table:
+    the extract pass (MapInPandas) runs map-side, ONE exchange (the
+    repartition by shard) carries its rows to the grouped shard kernel —
+    the only Python node above it — and nothing is cached or cogrouped.
+    Without docs the text never crosses the exchange; a regression
+    re-introduces a full-text shuffle or a second corpus pass at 100 TB."""
+    import re
 
-    def rec(n):
-        nm = n.nodeName()
-        names.append(nm)
-        if "InMemoryTableScan" in nm:
-            return
-        ch = n.children()
-        for i in range(ch.size()):
-            rec(ch.apply(i))
+    from importpipeline_spark.index import segments
+    from importpipeline_spark.index.pagesgen import PAGES_SCHEMA, gen_page
+    from importpipeline_spark.index.store import (
+        STAGED_REPORT,
+        encode_postings,
+    )
 
-    rec(node)
-    return names
-
-
-def test_build_outputs_share_one_exchange(spark):
-    """r6 (VERDICT r5 #2): the build's outputs — postings cogroup (whole
-    and batch-filtered), docs table, doclen, errors — all derive from ONE
-    corpus-volume exchange (the shard repartition that feeds the cache).
-    The plans are taken from the relation the build itself caches
-    (segments._sharded_fused), with and without the docs table. The
-    cogroup's two sides and every write must sit directly on the cached
-    partitioning with no further Exchange; a regression re-introduces a
-    full-text shuffle per output at 100 TB."""
-    from importpipeline_spark.index.pagesgen import gen_pages_df
-    from importpipeline_spark.index.segments import _sharded_fused
-    from importpipeline_spark.index.store import encode_postings, tf_from_pairs
-
-    pages = gen_pages_df(spark, 200, seed=5)
+    # pages from local rows: their scan runs no Python of its own
+    pages = spark.createDataFrame(
+        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+         for p in (gen_page(i, 5) for i in range(40))], PAGES_SCHEMA)
     for write_docs in (True, False):
-        sharded, docs, errors = _sharded_fused(pages, 4, "hash", write_docs)
-        try:
-            sharded.count()
-            dl = docs.select("shard", "doc_id", "doc_len")
-            cg = _nodes_above_cache(encode_postings(tf_from_pairs(docs), dl))
-            assert "FlatMapCoGroupsInPandas" in cg, cg
-            assert sum("InMemoryTableScan" in n for n in cg) == 2, cg
-            assert not any("Exchange" in n for n in cg), cg
+        seen = []
 
-            # one phase-B batch: both sides filtered to the batch's shards
-            batch = F.col("shard").isin([0, 2])
-            cg_batch = _nodes_above_cache(encode_postings(
-                tf_from_pairs(docs).where(batch), dl.where(batch)
-            ))
-            assert "FlatMapCoGroupsInPandas" in cg_batch, cg_batch
-            assert sum("InMemoryTableScan" in n for n in cg_batch) == 2, \
-                cg_batch
-            assert not any("Exchange" in n for n in cg_batch), cg_batch
+        def record(rows, mode):
+            seen.append((rows, mode))
+            return spark.createDataFrame([], STAGED_REPORT)
 
-            if write_docs:
-                docs_write = _nodes_above_cache(docs.drop("tf_pairs"))
-                assert not any("Exchange" in n for n in docs_write), \
-                    docs_write
-            else:
-                assert "text" not in sharded.columns
-
-            dl_write = _nodes_above_cache(dl.sortWithinPartitions("doc_id"))
-            assert not any("Exchange" in n for n in dl_write), dl_write
-
-            err_write = _nodes_above_cache(errors)
-            assert not any("Exchange" in n for n in err_write), err_write
-        finally:
-            sharded.unpersist()
+        monkeypatch.setattr(segments, "encode_postings", record)
+        segments._build(spark, pages, str(tmp_path / str(write_docs)),
+                        [0, 1, 2, 3], 4, "hash", write_docs)
+        monkeypatch.undo()
+        (rows, mode), = seen
+        assert mode.docs == write_docs
+        assert ("text" in rows.columns) == write_docs
+        plan = plan_of(encode_postings(rows, mode))
+        nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+        assert [n for n in nodes if "Exchange" in n] == ["Exchange"], plan
+        assert "hashpartitioning(shard" in plan, plan
+        python = [n for n in nodes if "Python" in n or "Pandas" in n]
+        # formatted plans number their nodes from the leaves up
+        assert python == ["MapInPandas", "FlatMapGroupsInPandas"], plan
+        assert nodes.index("MapInPandas") < nodes.index(
+            "Exchange") < nodes.index("FlatMapGroupsInPandas"), plan
+        for node in ("InMemory", "CoGroup", "Join"):
+            assert node not in plan, (node, plan)
 
 
 def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
@@ -270,8 +244,8 @@ def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
 
     seen = []
 
-    def record(tf, dl, staging):
-        seen.append((dl, staging))
+    def record(rows, staging):
+        seen.append((rows, staging))
         return spark.createDataFrame([], STAGED_REPORT)
 
     monkeypatch.setattr(deltas, "encode_postings", record)
@@ -282,7 +256,7 @@ def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
     assert deltas.stage_update_delta(spark, str(tmp_path), pages, 8) == (
         [], 0)
     (dl, staging), = seen
-    plan = plan_of(encode_postings(None, dl, staging=staging))
+    plan = plan_of(encode_postings(dl, staging))
     nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
     assert [n for n in nodes if "Exchange" in n] == ["Exchange"], plan
     assert "hashpartitioning(shard" in plan, plan
@@ -293,11 +267,11 @@ def test_mutation_staging_is_one_staged_query(spark, tmp_path, monkeypatch):
 
 
 def test_fold_is_one_map_over_shard_ids(spark, tmp_path, monkeypatch):
-    """A fold (compaction, or a build's resume) is one map over the shard
-    ids to fold, one per partition: no Spark-side docs scan, no Python UDF
-    evaluation, no cogroup and no exchange in the plan — each kernel task
-    reads and re-tokenizes its own shard's docs with pyarrow — and a
-    multi-shard fold runs in more than one task."""
+    """A fold (compaction) is one map over the shard ids to fold, one per
+    partition: no Spark-side docs scan, no Python UDF evaluation, no
+    cogroup and no exchange in the plan — each kernel task reads and
+    re-tokenizes its own shard's docs with pyarrow — and a multi-shard
+    fold runs in more than one task."""
     import re
 
     from importpipeline_spark.index import segments
@@ -312,9 +286,9 @@ def test_fold_is_one_map_over_shard_ids(spark, tmp_path, monkeypatch):
     write_index(spark, gen_pages_df(spark, 120, seed=5), root, n_shards=4)
     seen = []
 
-    def record(tf, dl, path, counters_dir, staging):
-        seen.append((dl, staging))
-        return encode_postings(tf, dl, path, counters_dir, staging)
+    def record(ids, fold):
+        seen.append((ids, fold))
+        return encode_postings(ids, fold)
 
     monkeypatch.setattr(segments, "encode_postings", record)
     sc = spark.sparkContext
@@ -327,7 +301,7 @@ def test_fold_is_one_map_over_shard_ids(spark, tmp_path, monkeypatch):
         sc.setJobDescription(None)
     assert sorted(counters) == [0, 1, 2, 3]
     (ids, fold), = seen
-    plan = plan_of(encode_postings(None, ids, None, None, fold))
+    plan = plan_of(encode_postings(ids, fold))
     assert len(re.findall(r"^\(\d+\) \w*Exchange", plan, re.M)) <= 1, plan
     assert "MapInPandas" in plan, plan
     for node in ("Scan parquet", "EvalPython", "CoGroup", "Join"):

@@ -39,15 +39,12 @@ def _postings_frame(root):
 def test_kill_and_resume_bit_identical(spark, tmp_path):
     pages = gen_pages_df(spark, N, seed=42, partitions=4)
 
-    # clean build uses small batches (8 shards → 3 jobs of 3/3/2 parallel
-    # tasks); the crash build uses the default one-big-batch — bit-identity
-    # across the two also proves batching never changes the bytes
     clean_root = str(tmp_path / "clean")
-    build_index_resumable(spark, pages, clean_root, n_shards=8, batch_size=3)
+    build_index_resumable(spark, pages, clean_root, n_shards=8)
 
-    # default batch covers the mid-batch kill window: the injected failure
-    # fires after 3 of the batch's 8 segments committed lineage, leaving
-    # already-encoded files for the rest that resume must redo/commit
+    # the injected failure fires after 3 of the 8 segments committed
+    # lineage, leaving already-encoded files for the rest that the resume
+    # must redo and commit
     crash_root = str(tmp_path / "crash")
     with pytest.raises(RuntimeError, match="injected failure"):
         build_index_resumable(
@@ -56,8 +53,7 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     # only some segments finished
     lin = read_lineage(spark, crash_root)
     assert 0 < lin.count() < 8
-    # resume completes the rest without redoing phase A (all of its jobs
-    # finished before the kill)
+    # resume re-extracts and commits only the unfinished segments
     pidx = build_index_resumable(spark, pages, crash_root, n_shards=8)
     assert read_lineage(spark, crash_root).count() == 8
 
@@ -69,8 +65,7 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     assert [bytes(x) for x in a.docs_enc] == [bytes(x) for x in b.docs_enc]
     assert [bytes(x) for x in a.tfs_enc] == [bytes(x) for x in b.tfs_enc]
 
-    # doclen rows (phase A's: the kill leaves phase A done, so the resume
-    # folds the missing segments from docs/ without re-extracting)
+    # doclen rows
     def _doclen(root):
         return {d: pd.read_parquet(os.path.join(root, "doclen", d))
                 .to_dict("list")
@@ -142,6 +137,64 @@ def test_resume_rejects_different_input(spark, tmp_path):
         build_index_resumable(spark, pages, root, n_shards=4, input_snapshot="snapB")
 
 
+def test_killed_resume_rejects_different_doc_id_mode(spark, tmp_path):
+    """Before stats.json lands (it is written last), the committed
+    segments' lineage rows record the doc_id_mode their ids derive from: a
+    killed build resumed under another mode raises instead of mixing hash
+    and host_locality ids in one index, with or without docs/."""
+    pages = gen_pages_df(spark, 80, seed=42, partitions=2)
+    for write_docs in (True, False):
+        root = str(tmp_path / f"idx{int(write_docs)}")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            build_index_resumable(spark, pages, root, n_shards=4,
+                                  fail_after_segment=0,
+                                  write_docs=write_docs)
+        assert not os.path.exists(os.path.join(root, "stats.json"))
+        with pytest.raises(ValueError, match="doc_id_mode"):
+            build_index_resumable(spark, pages, root, n_shards=4,
+                                  doc_id_mode="host_locality",
+                                  write_docs=write_docs)
+        with pytest.raises(ValueError, match="input_snapshot"):
+            build_index_resumable(spark, pages, root, n_shards=4,
+                                  input_snapshot="other",
+                                  write_docs=write_docs)
+
+
+def test_resumed_quarantine_equals_uninterrupted(spark, tmp_path):
+    """A resumed build's errors/ holds the same rows as an uninterrupted
+    build's (ts aside): each shard's quarantined pages land under a
+    per-shard name, so re-extracting an unfinished shard replaces its
+    records instead of adding a second copy — also when the kill came
+    after every kernel task had written them."""
+    deep = ("<html><body>" + "<div>" * 30000 + "x" + "</div>" * 30000
+            + "</body></html>").encode()
+    bad = spark.createDataFrame(
+        [(f"http://bad{i}.example/p", deep) for i in range(6)],
+        "url string, html binary",
+    ).select("url", F.current_timestamp().alias("warc_ts"), "html",
+             F.lit("en").alias("lang"))
+    pages = gen_pages_df(spark, 80, seed=42, partitions=2).select(
+        "url", "warc_ts", "html", "lang").unionByName(bad)
+
+    def errors(root):
+        t = pd.read_parquet(os.path.join(root, "errors"))
+        return sorted(zip(t["url"], t["stage"], t["error"]))
+
+    clean = str(tmp_path / "clean")
+    want = build_index_resumable(spark, pages, clean, n_shards=4)
+    assert want.stats["n_errors"] == 6 and len(errors(clean)) == 6
+    for kill in (0, 2):
+        root = str(tmp_path / f"killed{kill}")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            build_index_resumable(spark, pages, root, n_shards=4,
+                                  fail_after_segment=kill)
+        got = build_index_resumable(spark, pages, root, n_shards=4)
+        assert errors(root) == errors(clean), kill
+        assert got.stats["n_errors"] == 6
+        assert {k: v for k, v in got.stats.items() if k != "run_id"} == {
+            k: v for k, v in want.stats.items() if k != "run_id"}
+
+
 def test_exist_state_classification(spark):
     old = spark.createDataFrame(
         [("u1", "2024-01-01 00:00:00"), ("u2", "2024-01-02 00:00:00"),
@@ -187,24 +240,31 @@ def test_all_quarantined_build_completes_empty(spark, tmp_path):
 
 def test_build_jobs_carry_phase_descriptions(spark, tmp_path):
     """Every Spark job of a write_index is described by its build phase —
-    ``build: extract`` (phase A), ``build: encode`` (the posting batches)
-    or ``build: dictionary`` — so the event log attributes each job to a
-    layer."""
+    ``build: encode`` (the one staged query: extract, exchange and shard
+    kernel) or ``build: dictionary`` — so the event log attributes each job
+    to a layer. The build is that one query: at most 2 encode jobs (its
+    map and kernel stages) plus the dictionary's 4, with and without the
+    docs table."""
     from importpipeline_spark.index.store import write_index
 
     sc = spark.sparkContext
     pages = gen_pages_df(spark, 120, seed=5, partitions=4)
-    sc.setJobGroup("write_index_phases", "undescribed")
-    try:
-        write_index(spark, pages, str(tmp_path / "idx"), n_shards=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    status = sc._jsc.sc().statusStore()
-    descs = []
-    for job_id in sc.statusTracker().getJobIdsForGroup("write_index_phases"):
-        d = status.job(job_id).description()
-        descs.append(d.get() if d.isDefined() else None)
-    assert set(descs) == {"build: extract", "build: encode",
-                          "build: dictionary"}, descs
+    for write_docs in (True, False):
+        group = f"write_index_phases_{int(write_docs)}"
+        sc.setJobGroup(group, "undescribed")
+        try:
+            write_index(spark, pages, str(tmp_path / group), n_shards=4,
+                        write_docs=write_docs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        status = sc._jsc.sc().statusStore()
+        descs = {}
+        for job_id in sc.statusTracker().getJobIdsForGroup(group):
+            d = status.job(job_id).description()
+            d = d.get() if d.isDefined() else None
+            descs[d] = descs.get(d, 0) + 1
+        assert set(descs) == {"build: encode", "build: dictionary"}, descs
+        assert descs["build: encode"] <= 2, descs
+        assert descs["build: dictionary"] == 4, descs
